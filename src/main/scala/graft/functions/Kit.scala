@@ -61,6 +61,16 @@ object Kit {
   def inSeasonMonday(d: Column): Column =
     month(d).isin(8, 9, 10, 11, 12, 1) && dayofweek(d) === 2
 
+  /** `from_json(c, schema)` built as the Catalyst expression itself.
+    * The `functions.from_json` overloads ship the schema as a string
+    * literal that analysis parses back into a `DataType` on every plan;
+    * here the `DataType` goes straight in (same expression, same
+    * result). */
+  def fromJson(c: Column, schema: DataType): Column =
+    org.apache.spark.sql.GraftExpr.column(
+      org.apache.spark.sql.catalyst.expressions.JsonToStructs(
+        schema, Map.empty, org.apache.spark.sql.GraftExpr.expression(c)))
+
   /** Native-codegen dot product over two BIGINT arrays (see
     * [[DotProductI64]]) — the similarity hot loop. */
   def dotI64(a: Column, b: Column): Column =

@@ -32,7 +32,7 @@ object Parsers {
   def weatherRows(pages: DataFrame): DataFrame =
     pages.select(
       col("key").as("zip_code"),
-      from_json(col("body"), weatherSchema).as("j"))
+      Kit.fromJson(col("body"), weatherSchema).as("j"))
       .select(
         col("zip_code"),
         Kit.asDate(col("j.forecast.forecastday").getItem(0).getField("date"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.Kit
 import graft.sources.Tables
 
 /** Window functions, row shaping, and the scalar kit in anger (SURVEY §2.5,
@@ -265,7 +266,7 @@ object Shaping {
       |  json_extract(props, '$.missing') IS NOT NULL AS has_missing
       |FROM events""") { (s, dir) =>
     import s.implicits._
-    val m = from_json($"props",
+    val m = Kit.fromJson($"props",
       org.apache.spark.sql.types.MapType(StringType, LongType))
     // loadSpread: per-row JSON parse into a typed map is the whole query
     Tables.loadSpread(s, dir, "events").select(

@@ -5,26 +5,39 @@ import java.nio.file.{Files, Path, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
+import org.apache.spark.sql.types.{DataType, StructType}
+
+/** The read schema a version records: exactly what a `mergeSchema`
+  * read of its whole file list infers (data columns, then the
+  * path-inferred partition columns, all nullable). `uniform` holds when
+  * every file carries exactly the data columns of `read` — then any
+  * SUBSET of the files reads with the same data columns too; a version
+  * whose files differ (field addition) only vouches for the whole list. */
+final case class TableSchema(read: StructType, uniform: Boolean)
+
 /** One committed table version: the ordered list of data files (paths
   * relative to the table directory) that constitute the table, the
   * partition-column chain its layout is keyed by, — for commits made
   * by an idempotent writer (streaming micro-batches) — the writer
-  * transaction id `app:batchId` that produced it, and the table's
+  * transaction id `app:batchId` that produced it, the table's
   * ZONE-MAP columns with per-file min/max values (as cast-to-string,
   * cast-back-exactly values, one pair per stats column in `statsCols`
-  * order; files without an entry are never pruned). */
+  * order; files without an entry are never pruned), and the version's
+  * recorded read schema (None: readers infer it from the files). */
 final case class Manifest(version: Long, partitionCols: Seq[String],
                           files: Seq[String],
                           txnId: Option[String] = None,
                           statsCols: Seq[String] = Seq.empty,
-                          fileStats: Map[String, Seq[(String, String)]] = Map.empty)
+                          fileStats: Map[String, Seq[(String, String)]] = Map.empty,
+                          schema: Option[TableSchema] = None)
 
 /** What a commit publishes (everything of a [[Manifest]] but the version,
   * which the log assigns). */
 final case class ManifestData(partitionCols: Seq[String],
                               files: Seq[String],
                               statsCols: Seq[String] = Seq.empty,
-                              fileStats: Map[String, Seq[(String, String)]] = Map.empty)
+                              fileStats: Map[String, Seq[(String, String)]] = Map.empty,
+                              schema: Option[TableSchema] = None)
 
 /** Minimal versioned-manifest commit log — the atomicity layer under
   * [[Warehouse]]. The reference lands batches through BigQuery load jobs,
@@ -68,6 +81,32 @@ final case class ManifestData(partitionCols: Seq[String],
   * head's delta chain blocks log pruning, so a retention-zero vacuum
   * always collapses the log to one self-contained manifest.
   *
+  * == Recorded schema (format v4) ==
+  *
+  * Every v4 manifest carries a `schema=` header: the version's read
+  * schema as `StructType.json`, prefixed `uniform ` or `merged ` (see
+  * [[TableSchema]]), or empty when none is recorded. Readers plan with
+  * it directly — no footer read, no schema-merge job — which is how a
+  * catalog serves schemas as metadata (the reference's BigQuery tables,
+  * Delta's `metaData` action). [[Warehouse]] derives it at commit time,
+  * against the racing head inside the retry loop, without a job:
+  *
+  *   - CARRY the head's schema when the written data columns equal its
+  *     data columns (names, order, types; nullability ignored), the
+  *     partition columns and their path-inferred types are unchanged,
+  *     and either the head is uniform or no file was removed (a merge
+  *     of sorted footers that already yields S still yields S when more
+  *     S-shaped files join, wherever they sort);
+  *   - when the new version lists ONLY this commit's files (new table,
+  *     overwrite, full rewrite), take the writer's data schema plus
+  *     Spark's path-only partition inference over the new files;
+  *   - otherwise (a shape change, a pre-v4 head) infer ONCE, at commit,
+  *     with the same `mergeSchema` read a reader would have run.
+  *
+  * Mixed-layout versions (flat and `col=value` files together) record
+  * nothing: their read is a per-layout union readers keep inferring.
+  * v2/v3 manifests stay readable and record nothing either.
+  *
   * Driver-memory envelope: the RESOLVED file list (and the zone-map
   * stats) still materialize on the driver — ~100 bytes/file, i.e. ~100 MB
   * at a million files, the same metadata-plane envelope Delta accepts
@@ -78,12 +117,38 @@ final case class ManifestData(partitionCols: Seq[String],
 object TxnLog {
 
   // v2: added the stats= header line; v3: added the base= header line
-  // (delta manifests). The magic is the FORMAT version — a reader of this
-  // code refuses a manifest written by a NEWER format outright instead of
-  // misparsing its header lines as file paths; v2 files remain readable
-  // (headerless snapshot form).
+  // (delta manifests); v4: added the schema= header line. The magic is
+  // the FORMAT version — a reader of this code refuses a manifest written
+  // by a NEWER format outright instead of misparsing its header lines as
+  // file paths; v2 (headerless snapshot form) and v3 files remain
+  // readable and record no schema.
   private val MagicV2 = "graft-manifest-v2"
-  private val Magic = "graft-manifest-v3"
+  private val MagicV3 = "graft-manifest-v3"
+  private val Magic = "graft-manifest-v4"
+
+  /** Header lines of each readable format, by magic. */
+  private def headerLines(magic: String): Option[Int] = magic match {
+    case Magic   => Some(6)
+    case MagicV3 => Some(5)
+    case MagicV2 => Some(4)
+    case _       => None
+  }
+
+  private def schemaLine(s: Option[TableSchema]): String =
+    "schema=" + s.fold("")(t =>
+      (if (t.uniform) "uniform " else "merged ") + t.read.json)
+
+  private def parseSchema(line: String, version: Long,
+                          tableDir: Path): Option[TableSchema] =
+    line.stripPrefix("schema=").split(" ", 2) match {
+      case Array("") => None
+      case Array(kind @ ("uniform" | "merged"), json) =>
+        Some(TableSchema(DataType.fromJson(json).asInstanceOf[StructType],
+          kind == "uniform"))
+      case _ => throw new IllegalStateException(
+        s"corrupt schema= header in v$version of $tableDir")
+    }
+
   private val NameRe = raw"v(\d{12})\.manifest".r
 
   /** Every Nth version is a full snapshot; versions in between are deltas
@@ -139,13 +204,14 @@ object TxnLog {
                                        removes: Seq[String])
 
   /** A manifest's HEADER alone — version, partition/stats columns, txn
-    * id, and the delta base pointer — readable without touching the
-    * body. At a million files a snapshot manifest's body is ~100 MB of
-    * text; chain walks that only need to FIND the nearest checkpoint
-    * must not pay that parse. */
+    * id, the delta base pointer and the recorded schema — readable
+    * without touching the body. At a million files a snapshot manifest's
+    * body is ~100 MB of text; chain walks that only need to FIND the
+    * nearest checkpoint must not pay that parse. */
   final case class ManifestHeader(version: Long, partitionCols: Seq[String],
                                   txnId: Option[String],
-                                  statsCols: Seq[String], base: Option[Long])
+                                  statsCols: Seq[String], base: Option[Long],
+                                  schema: Option[TableSchema])
 
   private def parseBase(s: String, version: Long, tableDir: Path): Option[Long] =
     s match {
@@ -167,9 +233,8 @@ object TxnLog {
       manifestPath(tableDir, version), StandardCharsets.UTF_8)) { r =>
       def ln(): String = Option(r.readLine()).getOrElse("")
       val magic = ln()
-      val v3 = magic == Magic
-      require(v3 || magic == MagicV2,
-        s"unrecognized manifest header in v$version of $tableDir")
+      val nHeader = headerLines(magic).getOrElse(throw new IllegalArgumentException(
+        s"unrecognized manifest header in v$version of $tableDir"))
       val part = ln().stripPrefix("partition=") match {
         case "" => Seq.empty[String]
         case s  => s.split(",").toSeq
@@ -183,8 +248,10 @@ object TxnLog {
         case s  => s.split(",").toSeq
       }
       val base =
-        if (!v3) None else parseBase(ln().stripPrefix("base="), version, tableDir)
-      ManifestHeader(version, part, txn, stats, base)
+        if (nHeader < 5) None else parseBase(ln().stripPrefix("base="), version, tableDir)
+      val schema =
+        if (nHeader < 6) None else parseSchema(ln(), version, tableDir)
+      ManifestHeader(version, part, txn, stats, base, schema)
     }
 
   /** One delta's operations, exposed for checkpoint-based resolution:
@@ -223,9 +290,9 @@ object TxnLog {
   private def readRaw(tableDir: Path, version: Long): RawManifest = {
     val lines = Files.readAllLines(
       manifestPath(tableDir, version), StandardCharsets.UTF_8).asScala.toSeq
-    val v3 = lines.headOption.contains(Magic)
-    require(v3 || lines.headOption.contains(MagicV2),
-      s"unrecognized manifest header in v$version of $tableDir")
+    val nHeader = lines.headOption.flatMap(headerLines).getOrElse(
+      throw new IllegalArgumentException(
+        s"unrecognized manifest header in v$version of $tableDir"))
     val partitionCols = lines(1).stripPrefix("partition=") match {
       case "" => Seq.empty
       case s  => s.split(",").toSeq
@@ -241,11 +308,13 @@ object TxnLog {
     // the base monotonicity guard in parseBase (base < version) is what
     // makes every chain walk strictly decreasing and thus terminating
     val base =
-      if (!v3) None else parseBase(lines(4).stripPrefix("base="), version, tableDir)
+      if (nHeader < 5) None else parseBase(lines(4).stripPrefix("base="), version, tableDir)
+    val schema =
+      if (nHeader < 6) None else parseSchema(lines(5), version, tableDir)
     // file lines: `path` or `path\tmin\tmax[\tmin\tmax…]` (one zone-map
     // pair per stats column); in a delta manifest adds are `+`-prefixed
     // and removes `-`-prefixed
-    val body = lines.drop(if (v3) 5 else 4).filter(_.nonEmpty)
+    val body = lines.drop(nHeader).filter(_.nonEmpty)
     val (addLines, removeLines) =
       if (base.isEmpty) (body, Seq.empty[String])
       else {
@@ -268,7 +337,7 @@ object TxnLog {
         a.head -> a.tail.grouped(2).map(p => (p(0), p(1))).toSeq
     }.toMap
     RawManifest(
-      Manifest(version, partitionCols, files, txn, statsCols, stats),
+      Manifest(version, partitionCols, files, txn, statsCols, stats, schema),
       base, removeLines)
   }
 
@@ -360,7 +429,8 @@ object TxnLog {
       s"partition=${m.partitionCols.mkString(",")}",
       s"txn=${m.txnId.getOrElse("")}",
       s"stats=${m.statsCols.mkString(",")}",
-      baseLine) ++
+      baseLine,
+      schemaLine(m.schema)) ++
       fileLines).mkString("\n")
     val tmp = Files.createTempFile(ld, ".tmp-", ".manifest")
     try {
@@ -415,8 +485,8 @@ object TxnLog {
 
   /** Commit loop: rebuild the manifest against the latest committed state
     * until the publish wins. `build` receives the current manifest (None
-    * for a first commit) and returns (partitionCols, files) for the next
-    * version. Returns the committed manifest. `forceSnapshot` makes the
+    * for a first commit) and returns the next version's content (its
+    * schema included: derived against THIS head, never a stale one). Returns the committed manifest. `forceSnapshot` makes the
     * committed manifest self-contained regardless of the
     * [[SnapshotEvery]] cadence — vacuum's checkpoint lever. */
   def commit(tableDir: Path, txnId: Option[String] = None,
@@ -430,7 +500,7 @@ object TxnLog {
       val next = Manifest(cur.map(_.version + 1).getOrElse(1L),
         d.partitionCols, d.files, txnId, d.statsCols,
         // never carry stats for files not in this version
-        d.fileStats.filter(kv => present(kv._1)))
+        d.fileStats.filter(kv => present(kv._1)), d.schema)
       if (tryCommit(tableDir, next, cur, forceSnapshot))
         committed = Some(next)
     }

@@ -2,15 +2,19 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** How a batch lands in its target table — the reference's write
   * dispositions re-expressed for a parquet warehouse:
   *
   *   - [[SinkPolicy.Append]]: `WRITE_APPEND` + `ALLOW_FIELD_ADDITION`
   *     (`functions/utils/datasources.py:55-59,554-563,754-767,799-805`).
-  *     New columns are allowed; readers see them via `mergeSchema`.
+  *     New columns are allowed; the commit records the widened schema
+  *     (inferred once, with `mergeSchema`) and readers plan with it.
   *   - [[SinkPolicy.Overwrite]]: truncate-replace (`WRITE_TRUNCATE`,
   *     `datasources.py:362-366,440-444`). The reference truncates twice
   *     (explicit `TRUNCATE TABLE` + `WRITE_TRUNCATE`, SURVEY §4.1) — here
@@ -91,14 +95,15 @@ final case class Warehouse(spark: SparkSession, root: String) {
   /** Read the current committed snapshot of a table. The file list is
     * resolved ONCE, here — the returned DataFrame keeps answering from
     * this version even if commits land (or compaction rewrites files)
-    * while it is being consumed. `mergeSchema` makes column additions
-    * from later appends visible — the read-side half of
-    * `ALLOW_FIELD_ADDITION`. Tables written by pre-manifest layouts are
-    * still readable (plain directory scan). */
+    * while it is being consumed. The version's recorded schema (see
+    * [[TxnLog]]) carries column additions from later appends — the
+    * read-side half of `ALLOW_FIELD_ADDITION` — so planning the read
+    * starts no job. Tables written by pre-manifest layouts are still
+    * readable (plain directory scan, schema inferred). */
   def read(table: String): DataFrame = {
     val dir = tableDir(table)
     TxnLog.current(dir) match {
-      case Some(m) => readSnapshot(dir, table, m.version, m.files)
+      case Some(m) => readSnapshot(dir, table, m.version, m.files, schemaFor(m, m.files))
       case None =>
         // pre-manifest layout: read only files an external writer left —
         // never a crashed commit's txn-prefixed orphans (those are
@@ -128,7 +133,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
   def readVersion(table: String, version: Long): DataFrame = {
     val dir = tableDir(table)
     val m = TxnLog.readVersion(dir, version)
-    readSnapshot(dir, table, version, m.files)
+    readSnapshot(dir, table, version, m.files, schemaFor(m, m.files))
   }
 
   /** ZONE-MAP pruned range read: resolve the current snapshot, drop every
@@ -213,10 +218,9 @@ final case class Warehouse(spark: SparkSession, root: String) {
     // schema, not a failed read. The residual predicate is built from the
     // READ frame's schema — partition columns exist only there (they are
     // directory segments, not footer columns).
-    val out =
-      if (survivors.isEmpty) readSnapshot(dir, table, m.version, m.files)
-        .limit(0)
-      else readSnapshot(dir, table, m.version, m.files.filter(survivors))
+    val files = if (survivors.isEmpty) m.files else m.files.filter(survivors)
+    val all = readSnapshot(dir, table, m.version, files, schemaFor(m, files))
+    val out = if (survivors.isEmpty) all.limit(0) else all
     out.where(boxPartsPred(ranges, parts, out.schema))
   }
 
@@ -240,6 +244,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
       require(hdr.partitionCols.contains(c),
         s"$table is not partitioned by $c (partition columns: ${hdr.partitionCols.mkString(",")})")
     }
+    val sub = schemaFor(hdr.partitionCols, hdr.schema, whole = false)
     // partition-identity pruning composes with the zone maps INSIDE the
     // same executor-side filter: the checkpoint row's `partition` map is
     // the file's col=value identity, and a partition equality becomes
@@ -268,11 +273,11 @@ final case class Warehouse(spark: SparkSession, root: String) {
         val out =
           if (paths.isEmpty) {
             val m = TxnLog.readVersion(dir, head)
-            readSnapshot(dir, table, head, m.files).limit(0)
-          } else readSnapshot(dir, table, head, paths)
+            readSnapshot(dir, table, head, m.files, schemaFor(m, m.files)).limit(0)
+          } else readSnapshot(dir, table, head, paths, sub)
         out.where(boxPartsPred(ranges, parts, out.schema))
       case Some(pf) =>
-        val schema = readSnapshot(dir, table, head, Seq(pf)).schema
+        val schema = readSnapshot(dir, table, head, Seq(pf), sub).schema
         val survive =
           if (ranges.isEmpty) lit(true)
           else ranges.map { case (c, lo, hi) =>
@@ -285,8 +290,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
           .select("path").collect().map(_.getString(0)).toSeq
         val pred = boxPartsPred(ranges, parts, schema)
         if (survivors.isEmpty)
-          readSnapshot(dir, table, head, Seq(pf)).limit(0).where(pred)
-        else readSnapshot(dir, table, head, survivors).where(pred)
+          readSnapshot(dir, table, head, Seq(pf), sub).limit(0).where(pred)
+        else readSnapshot(dir, table, head, survivors, sub).where(pred)
     }
   }
 
@@ -330,7 +335,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
               map_contains_key(col("mins"), lit(c)) }.reduce(_ && _)
             metaP.filter(withStats).select("path")
               .head(1).headOption.map(_.getString(0))
-              .map(f => readSnapshot(dir, table, head, Seq(f)).schema)
+              .map(f => readSnapshot(dir, table, head, Seq(f),
+                schemaFor(hdr.partitionCols, hdr.schema, whole = false)).schema)
           }
         if (needProbe && probedSchema.isEmpty)
           // no partition survivor carries stats for the ranged columns
@@ -475,9 +481,9 @@ final case class Warehouse(spark: SparkSession, root: String) {
     val m = TxnLog.current(dir).getOrElse(
       sys.error(s"no such table: $table (no committed manifest)"))
     val survivors = prunedFilesInSet(m, table, column, values)
-    if (survivors.isEmpty)
-      readSnapshot(dir, table, m.version, m.files.take(1)).limit(0)
-    else readSnapshot(dir, table, m.version, survivors)
+    val files = if (survivors.isEmpty) m.files.take(1) else survivors
+    val out = readSnapshot(dir, table, m.version, files, schemaFor(m, files))
+    if (survivors.isEmpty) out.limit(0) else out
   }
 
   /** The file-skipping half of [[readInSet]], exposed for plan/test
@@ -555,7 +561,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
       m: Manifest): org.apache.spark.sql.types.StructType = {
     val probe = m.files.find(m.fileStats.contains)
       .map(Seq(_)).getOrElse(m.files)
-    readSnapshot(dir, table, m.version, probe).schema
+    readSnapshot(dir, table, m.version, probe, schemaFor(m, probe)).schema
   }
 
   /** Per-file (min, max) of each of `columns` over freshly written
@@ -564,12 +570,12 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * strings (lossless round-trip casts). A file where ANY stats column
     * is all-NULL gets no entry at all and is therefore never pruned —
     * the conservative representation for the aligned-pairs format. */
-  private def collectStats(dir: Path, files: Seq[String],
+  private def collectStats(dir: Path, files: Seq[String], written: StructType,
       columns: Seq[String]): Map[String, Seq[(String, String)]] = {
     val aggs = columns.flatMap(c => Seq(
       min(col(c)).cast("string").as(s"mn_$c"),
       max(col(c)).cast("string").as(s"mx_$c")))
-    val rows = readSnapshot(dir, "<stats>", -1L, files)
+    val rows = readSnapshot(dir, "<stats>", -1L, files, Some(written))
       .groupBy(input_file_name().as("f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -592,15 +598,18 @@ final case class Warehouse(spark: SparkSession, root: String) {
 
   /** The one snapshot-reading code path (current read, time travel,
     * legacy fallback): an explicit pinned file list with `basePath` so
-    * `col=value` dirs stay partition columns, `mergeSchema` for field
-    * addition. */
+    * `col=value` dirs stay partition columns. With a `schema` (see
+    * [[schemaFor]]) the read is planned from it — no footer read, no
+    * job; without one, `mergeSchema` infers it from every footer (one
+    * job), which is what field addition needs. */
   private def readSnapshot(dir: Path, table: String, version: Long,
-                           files: Seq[String]): DataFrame = {
+                           files: Seq[String],
+                           schema: Option[StructType] = None): DataFrame = {
     require(files.nonEmpty, s"$table v$version lists no files")
-    def read(fs: Seq[String]): DataFrame = spark.read
-      .option("mergeSchema", "true")
-      .option("basePath", dir.toString)
-      .parquet(fs.map(f => dir.resolve(f).toString): _*)
+    def read(fs: Seq[String]): DataFrame =
+      schema.fold(spark.read.option("mergeSchema", "true"))(spark.read.schema(_))
+        .option("basePath", dir.toString)
+        .parquet(fs.map(f => dir.resolve(f).toString): _*)
     // MIXED-LAYOUT transition: a table that gained partition columns
     // mid-life lists both flat (pre-partitioning) and col=value files.
     // One basePath read over both fails partition discovery
@@ -612,6 +621,78 @@ final case class Warehouse(spark: SparkSession, root: String) {
     val (part, flat) = files.partition(TxnLog.partitionSegments(_).nonEmpty)
     if (part.isEmpty || flat.isEmpty) read(files)
     else read(part).unionByName(read(flat), allowMissingColumns = true)
+  }
+
+  private def mixedLayout(files: Seq[String]): Boolean = {
+    val (part, flat) = files.partition(TxnLog.partitionSegments(_).nonEmpty)
+    part.nonEmpty && flat.nonEmpty
+  }
+
+  /** The schema to plan a read of `files` — all or some of a version's
+    * files — with, when the version's recorded schema vouches for them:
+    * the whole list reads with the recorded schema; a subset of a
+    * UNIFORM version reads with its data columns, the subset's partition
+    * columns inferred from its paths exactly as a `mergeSchema` read of
+    * it would. A subset of a merged version may predate a field
+    * addition, so it keeps inferring (None). */
+  private def schemaFor(partitionCols: Seq[String], recorded: Option[TableSchema],
+                        whole: Boolean): Option[StructType] =
+    recorded.collect {
+      case TableSchema(s, _) if whole => s
+      case TableSchema(s, true) =>
+        StructType(s.filterNot(f => partitionCols.contains(f.name)))
+    }
+
+  private def schemaFor(m: Manifest, files: Seq[String]): Option[StructType] =
+    schemaFor(m.partitionCols, m.schema, files.size == m.files.size)
+
+  /** Read schema of freshly written `files`: `df`'s columns minus
+    * `partCols` are the data columns, the partition columns come from
+    * Spark's inference over the paths. No footer read, no job; a flat
+    * write has no partition columns, so it needs no read resolution
+    * either (~20 ms each). */
+  private def writtenSchema(dir: Path, files: Seq[String], df: DataFrame,
+                            partCols: Seq[String]): StructType = {
+    val data = StructType(df.schema.filterNot(f => partCols.contains(f.name)))
+    if (files.isEmpty) StructType(Nil) // nothing written: nothing to vouch for
+    else if (partCols.isEmpty) org.apache.spark.sql.GraftExpr.nullable(data)
+    else readSnapshot(dir, "<written>", -1L, files, Some(data)).schema
+  }
+
+  /** Infer ONCE, at commit: the `mergeSchema` read a reader would
+    * otherwise run on every read. Mixed layouts record nothing (their
+    * read is a per-layout union), and so does a failed inference
+    * (incompatible files), so readers fail exactly as they would have. */
+  private def inferredSchema(dir: Path, files: Seq[String]): Option[TableSchema] =
+    if (mixedLayout(files)) None
+    else try Some(TableSchema(readSnapshot(dir, "<schema>", -1L, files).schema,
+      uniform = false))
+    catch { case NonFatal(_) => None }
+
+  /** The schema the next version records, derived against the racing
+    * `head` (the rules are [[TxnLog]]'s "Recorded schema"): `files` is
+    * the next version's list, `newFiles` this commit's share of it and
+    * `written` their [[writtenSchema]]. */
+  private def nextSchema(dir: Path, head: Option[Manifest],
+                         partCols: Seq[String], files: Seq[String],
+                         newFiles: Seq[String],
+                         written: StructType): Option[TableSchema] = {
+    def parts(s: StructType) = s.filter(f => partCols.contains(f.name))
+    def data(s: StructType) = s.filterNot(f => partCols.contains(f.name))
+    val fresh = newFiles.toSet
+    // the paths must yield exactly the declared partition columns, or a
+    // subset read could not split data from partition columns
+    if (files.isEmpty) None
+    else if (mixedLayout(files) ||
+        written.fieldNames.toSeq.takeRight(partCols.size) != partCols)
+      inferredSchema(dir, files)
+    else if (files.forall(fresh)) Some(TableSchema(written, uniform = true))
+    else head.flatMap { h =>
+      val kept = files.toSet
+      h.schema.filter(s => h.partitionCols == partCols &&
+        data(s.read) == data(written) && parts(s.read) == parts(written) &&
+        (s.uniform || h.files.forall(kept)))
+    }.orElse(inferredSchema(dir, files))
   }
 
   /** The commit history of a table, oldest first: version, commit time,
@@ -688,8 +769,9 @@ final case class Warehouse(spark: SparkSession, root: String) {
     }
     val (newFiles, n) = writeTxn(dir, df, partCols)
     if (n == 0) return LoadResult(table, "skipped-empty", 0L)
+    val written = writtenSchema(dir, newFiles, df, partCols)
     val newStats =
-      if (effStats.nonEmpty) collectStats(dir, newFiles, effStats)
+      if (effStats.nonEmpty) collectStats(dir, newFiles, written, effStats)
       else Map.empty[String, Seq[(String, String)]]
     CrashHooks.beforeManifestCommit(table)
     val committed = TxnLog.commit(dir, txnId) { cur =>
@@ -709,7 +791,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
       // simply carry no stats (never pruned) until rewritten
       val inherited = cur.filter(_.statsCols == effStats)
         .map(_.fileStats).getOrElse(Map.empty)
-      ManifestData(partCols, files, effStats, inherited ++ newStats)
+      ManifestData(partCols, files, effStats, inherited ++ newStats,
+        nextSchema(dir, cur, partCols, files, newFiles, written))
     }
     maybeCheckpoint(dir, committed)
     CrashHooks.afterCommit(table)
@@ -773,7 +856,10 @@ final case class Warehouse(spark: SparkSession, root: String) {
     if (added.isEmpty) {
       // schema from the current snapshot, zero rows
       read(table).limit(0)
-    } else readSnapshot(tableDir(table), table, toVersion, added)
+    } else {
+      val m = TxnLog.readVersion(tableDir(table), toVersion)
+      readSnapshot(tableDir(table), table, toVersion, added, schemaFor(m, added))
+    }
   }
 
   /** Keyed UPSERT — `MERGE INTO table USING df ON keys WHEN MATCHED
@@ -812,13 +898,17 @@ final case class Warehouse(spark: SparkSession, root: String) {
     val curOpt = TxnLog.current(dir)
     if (curOpt.isEmpty) return load(table, df, SinkPolicy.Append, txnId)
     val cur = curOpt.get
-    val batch = df.persist() // read 4×: dup check, probe, anti-join, land
+    val batch = df.persist() // read 4×: key census, probe, anti-join, land
     try {
       require(keyCols.forall(batch.columns.contains),
         s"batch lacks key column(s) ${keyCols.filterNot(batch.columns.contains).mkString(",")}")
       val batchKeys = batch.select(keyCols.map(col): _*)
-      require(batchKeys.groupBy(keyCols.map(col): _*)
-        .count().where($"count" > 1).isEmpty,
+      // ONE aggregate answers both the duplicate-key verdict (the largest
+      // per-key count) and the merged-row count (their sum)
+      val census = batchKeys.groupBy(keyCols.map(col): _*).count()
+        .agg(max($"count"), sum($"count")).head()
+      val mergedRows = if (census.isNullAt(1)) 0L else census.getLong(1)
+      require(census.isNullAt(0) || census.getLong(0) <= 1,
         s"batch has duplicate keys on (${keyCols.mkString(",")}) — " +
           "latest-wins is undefined within one batch")
       val existing = read(table) // pinned to `cur`
@@ -855,7 +945,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
       val survivors =
         if (affectedRel.isEmpty) None
         else {
-          val aff = readSnapshot(dir, table, cur.version, affectedRel)
+          val aff = readSnapshot(dir, table, cur.version, affectedRel,
+            schemaFor(cur, affectedRel))
           Some(aff.join(batchKeys, keyCond(aff, batchKeys), "left_anti"))
         }
       val toWrite = survivors
@@ -863,8 +954,10 @@ final case class Warehouse(spark: SparkSession, root: String) {
         .getOrElse(batch)
       val (newFiles, n) = writeTxn(dir, toWrite, cur.partitionCols)
       if (n == 0) return LoadResult(table, "skipped-empty", 0L)
+      val written = writtenSchema(dir, newFiles, toWrite, cur.partitionCols)
       val newStats =
-        if (cur.statsCols.nonEmpty) collectStats(dir, newFiles, cur.statsCols)
+        if (cur.statsCols.nonEmpty)
+          collectStats(dir, newFiles, written, cur.statsCols)
         else Map.empty[String, Seq[(String, String)]]
       val committed = TxnLog.commit(dir, txnId) { now =>
         if (now.map(_.version) != Some(cur.version))
@@ -873,15 +966,15 @@ final case class Warehouse(spark: SparkSession, root: String) {
               s"v${now.map(_.version).getOrElse(0L)}); re-run")
         val files = TxnLog.mergeRewrite(affectedRel, cur.files, newFiles).get
         ManifestData(cur.partitionCols, files, cur.statsCols,
-          (cur.fileStats -- affectedRel) ++ newStats)
+          (cur.fileStats -- affectedRel) ++ newStats,
+          nextSchema(dir, now, cur.partitionCols, files, newFiles, written))
       }
       maybeCheckpoint(dir, committed)
       // rows = rows the CALLER merged (same contract as load's landed-row
       // count), not the rewrite volume — the carried-over survivors of
-      // affected files are an implementation detail of copy-on-write.
-      // Cheap: `batch` is persisted and already materialized above.
+      // affected files are an implementation detail of copy-on-write
       LoadResult(table, s"upserted(rewrote=${affectedRel.size} files)",
-        batch.count())
+        mergedRows)
     } finally batch.unpersist()
   }
 
@@ -1041,8 +1134,10 @@ final case class Warehouse(spark: SparkSession, root: String) {
   private def publishRewrite(dir: Path, table: String, cur: Manifest,
                              shaped: DataFrame, label: String): LoadResult = {
     val (newFiles, n) = writeTxn(dir, shaped, cur.partitionCols)
+    val written = writtenSchema(dir, newFiles, shaped, cur.partitionCols)
     val newStats =
-      if (cur.statsCols.nonEmpty) collectStats(dir, newFiles, cur.statsCols)
+      if (cur.statsCols.nonEmpty)
+        collectStats(dir, newFiles, written, cur.statsCols)
       else Map.empty[String, Seq[(String, String)]]
     val committed = TxnLog.commit(dir) { now =>
       val head = now.map(_.files).getOrElse(Seq.empty)
@@ -1058,7 +1153,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
       val inherited = now.filter(_.statsCols == cur.statsCols)
         .map(_.fileStats).getOrElse(Map.empty)
       ManifestData(cur.partitionCols, merged, cur.statsCols,
-        inherited ++ newStats)
+        inherited ++ newStats,
+        nextSchema(dir, now, cur.partitionCols, merged, newFiles, written))
     }
     maybeCheckpoint(dir, committed)
     LoadResult(table, label, n)
@@ -1103,9 +1199,9 @@ final case class Warehouse(spark: SparkSession, root: String) {
           // rebuilt against the latest head in case a writer races us —
           // checkpointing must never roll back a concurrent commit
           now.map(m => ManifestData(m.partitionCols, m.files, m.statsCols,
-              m.fileStats))
+              m.fileStats, m.schema))
             .getOrElse(ManifestData(cur.partitionCols, cur.files,
-              cur.statsCols, cur.fileStats)))
+              cur.statsCols, cur.fileStats, cur.schema)))
         // a vacuum checkpoint is exactly the log-collapse point: publish
         // the parquet form too, whatever the version's cadence position
         maybeCheckpoint(dir, ck, force = true)
@@ -1246,7 +1342,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
   /** A table written by a pre-manifest layout (plain parquet dir, or an
     * external writer) is adopted on first touch: its existing files
     * become version 1, partition columns inferred from their `col=value`
-    * directory chain. Idempotent; no data moves. */
+    * directory chain, read schema inferred once (here, not per read).
+    * Idempotent; no data moves. */
   private def adoptLegacyLayout(dir: Path): Unit =
     if (TxnLog.current(dir).isEmpty) {
       // txn-prefixed names and staging dirs are leftovers of a crashed
@@ -1254,7 +1351,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
       val files = TxnLog.legacyFiles(dir)
       if (files.nonEmpty) {
         val cols = TxnLog.partitionSegments(files.head).map(_.split("=", 2)(0))
-        TxnLog.commit(dir)(_ => ManifestData(cols, files))
+        TxnLog.commit(dir)(_ => ManifestData(cols, files,
+          schema = inferredSchema(dir, files)))
       }
     }
 

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.functions.Kit
+
 /** The push-event ingestion path (S10) — the reference's
   * `websitehits_pipeline`: a publisher pushes messages whose `data` field
   * is base64-encoded JSON rows, each message is decoded and appended with
@@ -42,7 +44,7 @@ object PushEvents {
     * exploded typed rows — shared by the stream and any batch backfill. */
   def decode(payloads: DataFrame): DataFrame =
     payloads
-      .select(from_json(unbase64(col("value")).cast("string"),
+      .select(Kit.fromJson(unbase64(col("value")).cast("string"),
         ArrayType(hitSchema)).as("rows"))
       .select(explode(col("rows")).as("hit"))
       .select("hit.*")

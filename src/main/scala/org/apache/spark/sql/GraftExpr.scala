@@ -10,4 +10,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftExpr {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `s` with every field nullable at every depth — what a file-source
+    * read reports for a data schema (`StructType.asNullable` is
+    * `private[spark]`). */
+  def nullable(s: types.StructType): types.StructType = s.asNullable
 }
