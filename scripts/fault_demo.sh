@@ -13,8 +13,10 @@ KILL_MS="${1:-6000}"
 N="${2:-400000}"
 sbt -batch package
 JAR="$(ls target/scala-2.13/*.jar | head -1)"
+# spark.jars ships the graft classes to the executor JVMs, as in
+# scripts/verify_local_cluster.sh
 for mode in local reliable; do
-  SPARK_SCALA_VERSION=2.13 SPARK_GRAFT_JAR="$JAR" \
+  SPARK_SCALA_VERSION=2.13 SPARK_GRAFT_EXTRA_CONF="spark.jars=$JAR" \
     sbt -batch "runMain graft.FaultDemo $mode $KILL_MS $N" 2>&1 \
     | grep -E '"metric"|\[fault\]' || true
 done

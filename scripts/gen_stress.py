@@ -134,8 +134,8 @@ def main():
     }), f"{out}/embeddings.parquet")
     # ground-truth planted pairs (round 9): written AFTER all rng draws,
     # so documents/embeddings stay byte-identical to every prior round's
-    # fixtures; recall harnesses (PqScale, SemdedupScale) read these
-    # instead of re-deriving plants from thresholds
+    # fixtures; recall measurements (STRESS_r09 §6) read these instead
+    # of re-deriving plants from thresholds
     pq.write_table(pa.table({
         "copy_id": pa.array([a for a, _ in vec_plants], pa.int64()),
         "src_id": pa.array([b for _, b in vec_plants], pa.int64()),

@@ -2,6 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
+import graft.ops.QueryDef
+
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line on raw stdout (plus bench_result.json as a file
   * fallback) for the driver to parse.
@@ -18,6 +20,10 @@ import java.nio.file.{Files, Paths}
   * its clean median. External load inflates wall while leaving this
   * process's CPU time flat, so `cpu/wall` collapsing together with a
   * high loadavg identifies contamination without a re-run.
+  *
+  * Failures are loud: a query that throws in the warm-up or any timed run
+  * reads `"failed: <first error line>"` in the file's `"status"` map, and
+  * the stdout line carries the `"failed"` count.
   */
 object Bench {
   private def loadavg(): String =
@@ -43,57 +49,74 @@ object Bench {
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     } catch { case _: Throwable => Map.empty }
 
+  /** One timed query: median and per-run walls, mean process-CPU seconds
+    * per run, and the first error any run (or the warm-up) raised. */
+  final case class Timing(name: String, median: Double, runs: Seq[Double],
+                          cpuSec: Double, error: Option[String]) {
+    def status: String = error.fold("ok")("failed: " + _)
+  }
+
+  /** Runs `d` once at `dir` through the noop sink and drops the query's
+    * internal stage-table caches; returns the first line of the error if
+    * it threw. */
+  def runOnce(spark: SparkSession, d: QueryDef, dir: String): Option[String] =
+    try {
+      d.fn(spark, dir).write.format("noop").mode("overwrite").save()
+      None
+    } catch { case e: Throwable =>
+      val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+      Some(msg.linesIterator.nextOption().getOrElse("").take(300))
+    } finally spark.catalog.clearCache()
+
+  /** The timed loop of one query. A throwing run still records its wall
+    * (so `value` keeps its meaning) but marks the query failed. */
+  def time(spark: SparkSession, d: QueryDef, dir: String,
+           reps: Int = REPS): Timing = {
+    var cpuSec = 0.0
+    var error = Option.empty[String]
+    val runs = (1 to reps).map { _ =>
+      val t0 = System.nanoTime()
+      val c0 = processCpuNanos()
+      // internal stage-table caches count toward the query's own time
+      // and are dropped before the next run starts
+      val err = runOnce(spark, d, dir)
+      val c1 = processCpuNanos()
+      err.foreach(m => System.err.println(s"[bench] ${d.name} failed: $m"))
+      error = error.orElse(err)
+      if (c0 >= 0 && c1 >= 0) cpuSec += (c1 - c0) / 1e9
+      (System.nanoTime() - t0) / 1e9
+    }
+    Timing(d.name, runs.sorted.apply(reps / 2), runs, cpuSec / reps, error)
+  }
+
+  // Median of three timed runs per query: single-run totals on this
+  // shared machine spread ±2.4× with concurrent load (48.1 s vs 102.9 s
+  // vs 43.3 s on identical round-2 code), which no 2×-baseline gate can
+  // adjudicate. The median discards one arbitrarily-inflated run per
+  // query; per-run values are kept in the JSON for transparency.
+  val REPS = 3
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // CosTopK-family aggregations hold 10^3-10^5 groups per task; the
-      // 128-row default falls back to sort-based aggregation (and its
-      // spill cascade) on every such query - see CosTopK scaladoc
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = HarnessSession.envCpus
+    val spark = HarnessSession.build(cpus)
     // Warmup: run every query once at the smoke scale so whole-stage
     // codegen is compiled before anything is timed. Otherwise JIT
     // compilation cost (seconds, and nondeterministic in placement) lands
     // on whichever query runs first with a given plan shape, swamping the
     // numbers the measurement exists to produce.
     val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory)
-      SparkEntry.defs.foreach { d =>
-        try d.fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        finally spark.catalog.clearCache()
-      }
-    // Median of three timed runs per query: single-run totals on this
-    // shared machine spread ±2.4× with concurrent load (48.1 s vs 102.9 s
-    // vs 43.3 s on identical round-2 code), which no 2×-baseline gate can
-    // adjudicate. The median discards one arbitrarily-inflated run per
-    // query; per-run values are kept in the JSON for transparency.
-    val REPS = 3
+    val warmErrors: Map[String, String] =
+      if (!new java.io.File(warmDir).isDirectory) Map.empty
+      else SparkEntry.defs.flatMap { d =>
+        val err = runOnce(spark, d, warmDir)
+        err.foreach(m => System.err.println(s"[bench] ${d.name} warm-up failed: $m"))
+        err.map(d.name -> _)
+      }.toMap
     val loadBefore = loadavg()
     val results = SparkEntry.defs.map { d =>
-      var cpuSec = 0.0
-      val runs = (1 to REPS).map { _ =>
-        val t0 = System.nanoTime()
-        val c0 = processCpuNanos()
-        try d.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] ${d.name} failed: ${e.getMessage}")
-        }
-        // internal stage-table caches count toward the query's own time
-        // and are dropped before the next run starts
-        finally spark.catalog.clearCache()
-        val c1 = processCpuNanos()
-        if (c0 >= 0 && c1 >= 0) cpuSec += (c1 - c0) / 1e9
-        (System.nanoTime() - t0) / 1e9
-      }
-      (d.name, runs.sorted.apply(REPS / 2), runs, cpuSec / REPS)
+      val t = time(spark, d, sfDir)
+      t.copy(error = warmErrors.get(d.name).orElse(t.error))
     }
     val loadAfter = loadavg()
     // The 3x-suspect gate only means something when the clean reference
@@ -112,10 +135,10 @@ object Bench {
     val clean =
       if (protocolMatch) cleanMedians("bench_clean.json") else Map.empty[String, Double]
     val suspects = results.collect {
-      case (name, med, _, _) if clean.get(name).exists(c => c > 0 && med > 3 * c) =>
+      case Timing(name, med, _, _, _) if clean.get(name).exists(c => c > 0 && med > 3 * c) =>
         name
     }
-    val total = results.map(_._2).sum
+    val total = results.map(_.median).sum
     def fmt(d: Double): String = BigDecimal(d)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     // Self-adjudicated total (round-11): the raw total with each
@@ -127,20 +150,25 @@ object Bench {
     // ride alongside: external load inflates wall but not this process's
     // CPU, so cpu ≪ wall per suspect corroborates the substitution.
     val suspectSet = suspects.toSet
-    val valueCleanSubst = results.map { case (name, med, _, _) =>
+    val valueCleanSubst = results.map { case Timing(name, med, _, _, _) =>
       if (suspectSet.contains(name)) clean(name) else med
     }.sum
     // Full-precision medians + all per-run values go to the file.
-    val fullQs = results.map { case (k, med, _, _) => s"\"" + k + "\":" + med }
+    val fullQs = results.map { case Timing(k, med, _, _, _) => s"\"" + k + "\":" + med }
       .mkString("{", ",", "}")
-    val perRun = results.map { case (k, _, rs, _) =>
+    val perRun = results.map { case Timing(k, _, rs, _, _) =>
       s"\"" + k + "\":" + rs.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val cpuQs = results.map { case (k, _, _, cpu) => s"\"" + k + "\":" + fmt(cpu) }
+    val cpuQs = results.map { case Timing(k, _, _, cpu, _) => s"\"" + k + "\":" + fmt(cpu) }
       .mkString("{", ",", "}")
     val suspectArr = suspects.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // Per-query verdict: a failed query's wall stays in `value` (the
+    // anchor stays comparable) but can no longer pass as a fast one.
+    val statusQs = results.map(t => s"\"" + t.name + "\":" + Verify.jsonString(t.status))
+      .mkString("{", ",", "}")
+    val failed = results.count(_.error.isDefined)
     val loadMeta =
-      s""""loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","cpu_sec":$cpuQs,"load_suspect":$suspectArr"""
+      s""""loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","cpu_sec":$cpuQs,"load_suspect":$suspectArr,"status":$statusQs,"failed":$failed"""
     Files.writeString(
       Paths.get("bench_result.json"),
       s"""{"metric":"total","value":$total,"value_clean_subst":${fmt(valueCleanSubst)},"unit":"sec","protocol":"median-of-$REPS","cpus":$cpus,"queries":$fullQs,"runs":$perRun,$loadMeta,"sf":"$sfDir"}""" + "\n")
@@ -155,7 +183,7 @@ object Bench {
     // capped so a badly loaded box (r10 saw 20 suspects) can't blow the
     // tail window on its own — the full map is always in the file.
     val suspectCpu = results.collect {
-      case (name, med, _, cpu) if suspectSet.contains(name) => (name, med, cpu)
+      case Timing(name, med, _, cpu, _) if suspectSet.contains(name) => (name, med, cpu)
     }.sortBy(-_._2)
     val suspectCpuShown = suspectCpu.take(12)
     val suspectCpuJson = suspectCpuShown
@@ -170,10 +198,10 @@ object Bench {
         .mkString("{", ",", "}")
       val om = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
       val ld =
-        s""","loadavg":"$loadBefore;$loadAfter","load_suspect":${suspects.length},"suspect_cpu":$suspectCpuJson$suspectOm"""
+        s""","failed":$failed,"loadavg":"$loadBefore;$loadAfter","load_suspect":${suspects.length},"suspect_cpu":$suspectCpuJson$suspectOm"""
       s"""{"metric":"total","value":${fmt(total)},"value_clean_subst":${fmt(valueCleanSubst)},"unit":"sec","protocol":"median-of-$REPS","cpus":$cpus,"queries":$m$om$ld,"sf":"$sfDir"}"""
     }
-    val bySlow = results.map { case (k, med, _, _) => (k, med) }
+    val bySlow = results.map(t => (t.name, t.median))
       .sortBy(-_._2)
     var keep = bySlow.length
     while (keep > 1 && line(bySlow.take(keep), bySlow.length - keep).length > budget)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ops.{Components, LoopState}
 
 /** Executor-loss fault injection for the iterative loops — the measured
@@ -21,7 +19,8 @@ import graft.ops.{Components, LoopState}
   *     answer).
   *
   * Run via `scripts/fault_demo.sh` (needs SPARK_SCALA_VERSION for the
-  * executor launcher, same as verify_local_cluster.sh). Prints one
+  * executor launcher and `SPARK_GRAFT_EXTRA_CONF="spark.jars=<jar>"` to
+  * ship the graft classes, same as verify_local_cluster.sh). Prints one
   * JSON line per mode. */
 object FaultDemo {
 
@@ -42,21 +41,11 @@ object FaultDemo {
     require(mode == "local" || mode == "reliable", s"bad mode: $mode")
     val killAfterMs = args.lift(1).map(_.toLong).getOrElse(6000L)
     val n = args.lift(2).map(_.toLong).getOrElse(400000L)
-    val builder = SparkSession.builder()
-      .master("local-cluster[2,2,1024]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // CosTopK-family aggregations hold 10^3-10^5 groups per task; the
-      // 128-row default falls back to sort-based aggregation (and its
-      // spill cascade) on every such query - see CosTopK scaladoc
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.ui.enabled", "false")
-      .config("spark.jars", sys.env.getOrElse("SPARK_GRAFT_JAR", ""))
-    val spark =
-      (if (mode == "reliable")
-        builder.config(LoopState.CheckpointDirConf,
-          java.nio.file.Files.createTempDirectory("graft-fault-ckpt").toString)
-      else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = HarnessSession.build(cpus = "8",
+      master = Some("local-cluster[2,2,1024]"), logLevel = "ERROR")
+    // LoopState reads the checkpoint dir from the session conf per loop
+    if (mode == "reliable") spark.conf.set(LoopState.CheckpointDirConf,
+      java.nio.file.Files.createTempDirectory("graft-fault-ckpt").toString)
     import spark.implicits._
 
     // a single n-vertex chain: the worst diameter shape (forces the full

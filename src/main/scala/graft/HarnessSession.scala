@@ -2,39 +2,68 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared SparkSession builder for the scale-harness mains (GateScale,
-  * TextGateScale, …) — one place for the repo's measurement protocol
-  * (32 shuffle partitions, the ObjectHashAggregate fallback threshold,
-  * UTC, nanos-as-long) plus the two env dials the evidence runs need:
+/** The one SparkSession builder of the mains (Bench, Verify, Dev, Plans,
+  * FaultDemo, StreamFaultDemo) — one place for the repo's measurement
+  * protocol (`local[cpus]`, cpus shuffle partitions, the
+  * ObjectHashAggregate fallback threshold, UTC, nanos-as-long) plus the
+  * two env dials the evidence runs need:
   *
   *   - `SPARK_GRAFT_MASTER` — e.g. `local-cluster[2,4,2048]` for the
   *     process-separated executor sweeps (round-8 discipline: custom
   *     expressions, stage tables, and gate state must cross a real JVM
   *     boundary at least once per round);
   *   - `SPARK_GRAFT_EXTRA_CONF` — `k=v;k=v`, used by the local-cluster
-  *     runs to ship the packaged jar (`spark.jars=…`) to executors.
+  *     runs to ship the packaged jar (`spark.jars=…`) to executors and by
+  *     the constrained-memory runs to squeeze the memory pool.
+  *
+  * Bench and Verify both call [[build]] with the same arguments, so with
+  * the dials unset their confs are identical by construction
+  * (HarnessSessionSpec pins the pairs).
   */
 object HarnessSession {
-  def build(defaultMaster: String = "local[32]"): SparkSession = {
-    val b0 = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", defaultMaster))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val b = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
-      .foldLeft(b0) { (acc, kv) =>
-        kv.split("=", 2) match {
-          case Array(k, v) => acc.config(k, v)
-          case _ => sys.error(
-            s"SPARK_GRAFT_EXTRA_CONF entry is not key=value: '$kv'")
-        }
+
+  /** `SPARK_GRAFT_CPUS` (default 4): the task slots of `local[cpus]` and
+    * the shuffle partition count. */
+  def envCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The session conf as ordered (key, value) pairs — later pairs win.
+    * `master` replaces the default `local[cpus]` (FaultDemo's
+    * local-cluster); `SPARK_GRAFT_MASTER` in `env` replaces both. */
+  def conf(cpus: String, env: Map[String, String],
+           master: Option[String] = None): Seq[(String, String)] =
+    Seq(
+      "spark.master" -> env.getOrElse("SPARK_GRAFT_MASTER",
+        master.getOrElse(s"local[$cpus]")),
+      "spark.sql.shuffle.partitions" -> cpus,
+      // CosTopK-family aggregations hold 10^3-10^5 groups per task; the
+      // 128-row default falls back to sort-based aggregation (and its
+      // spill cascade) on every such query - see CosTopK scaladoc
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536",
+      "spark.sql.session.timeZone" -> "UTC",
+      // events.parquet carries TIMESTAMP(NANOS); set once at session build
+      // (the ONLY place — Tables.load deliberately performs no session-conf
+      // mutation, which would race under concurrent planners).
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.ui.enabled" -> "false") ++
+      extraConf(env.get("SPARK_GRAFT_EXTRA_CONF"))
+
+  /** Parses `SPARK_GRAFT_EXTRA_CONF`: `;`-separated `key=value` entries,
+    * trimmed, empty entries skipped; the value keeps any further `=`. */
+  def extraConf(spec: Option[String]): Seq[(String, String)] =
+    spec.toSeq.flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => k -> v
+        case _ => sys.error(
+          s"SPARK_GRAFT_EXTRA_CONF entry is not key=value: '$kv'")
       }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    }
+
+  def build(cpus: String = envCpus, master: Option[String] = None,
+            logLevel: String = "WARN"): SparkSession = {
+    val s = conf(cpus, sys.env, master)
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    s.sparkContext.setLogLevel(logLevel)
     s
   }
 }

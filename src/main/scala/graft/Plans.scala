@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: the physical-plan audit of the headline queries,
   * with the scale commentary next to the actual `formatted` explain
   * output. Run: `sbt 'runMain graft.Plans'` (uses sf0.01). */
@@ -335,18 +333,9 @@ object Plans {
         "build."))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // CosTopK-family aggregations hold 10^3-10^5 groups per task; the
-      // 128-row default falls back to sort-based aggregation (and its
-      // spill cascade) on every such query - see CosTopK scaladoc
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // pinned at local[4] (not SPARK_GRAFT_CPUS): the committed plans
+    // record this partitioning
+    val spark = HarnessSession.build(cpus = "4", logLevel = "ERROR")
     val dir = "/root/testdata/sf0.01"
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit of headline queries\n\n")

@@ -42,8 +42,7 @@ object StreamFaultDemo {
 
   /** Deterministic inbox: batch b's events sit in a 5-minute slot at
     * base + b·40 min, so every batch closes the previous sessions of
-    * its users (gap 40 min > session gap 30) — same generator shape as
-    * [[StreamBench]]. */
+    * its users (gap 40 min > session gap 30). */
   private def writeInbox(inbox: java.nio.file.Path): Unit = {
     java.nio.file.Files.createDirectories(inbox)
     val base = 1767225600000L // 2026-01-01T00:00:00Z
@@ -89,13 +88,7 @@ object StreamFaultDemo {
     require(Set("victim", "resume")(mode), s"bad mode: $mode")
     require(Set("before-manifest", "after-commit")(killPoint),
       s"bad kill point: $killPoint")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = HarnessSession.build(cpus = "8", logLevel = "ERROR")
     val inbox = work.resolve("inbox")
     val wh = Warehouse(spark, work.resolve("wh").toString)
     val ckpt = work.resolve("ckpt").toString

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -13,40 +12,28 @@ import java.nio.file.{Files, Paths}
   * (spilled) execution instead of OOMing when the data outgrows memory,
   * which is the contract a 100 TB cluster run depends on. */
 object Verify {
+  /** JSON string literal: escapes backslash, quote, and ALL control chars
+    * (<0x20) — a tab or CR in builder-authored SQL would otherwise make
+    * the driver's json.load fail and silently zero the round's
+    * correctness. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER overrides the in-process master — the
     // local-cluster evidence run (scripts/verify_local_cluster.sh) uses
     // `local-cluster[2,4,N]` to put PROCESS-SEPARATED executors under
     // the whole surface: serialized custom expressions, cross-executor
     // StageLevels capacity probes, BandJoin stage tables, checkpoints.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // CosTopK-family aggregations hold 10^3-10^5 groups per task; the
-      // 128-row default falls back to sort-based aggregation (and its
-      // spill cascade) on every such query - see CosTopK scaladoc
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); set once at session build
-      // (the ONLY place — Tables.load deliberately performs no session-conf
-      // mutation, which would race under concurrent planners).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // Extra confs for constrained/experimental runs: "k=v;k=v".
-    val builder = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
-      .foldLeft(builder0) { (b, kv) =>
-        kv.split("=", 2) match {
-          case Array(k, v) => b.config(k, v)
-          case _ => sys.error(
-            s"SPARK_GRAFT_EXTRA_CONF entry is not key=value: '$kv'")
-        }
-      }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession.build()
     // Spill accounting across the whole run (listener events are async;
     // totals are read after stop(), when the listener bus has drained).
     val memSpilled = new java.util.concurrent.atomic.AtomicLong
@@ -88,20 +75,8 @@ object Verify {
           s"[verify] spill $name mem=${dm} disk=${dd}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     System.err.println(s"[verify] spill TOTAL mem=${memSpilled.get()} " +

@@ -7,11 +7,10 @@ import graft.functions.Kit
 import graft.pipeline.{SinkPolicy, Warehouse}
 
 /** WAREHOUSE-PERSISTED ANN INDEX — the lifecycle form of the IVF-PQ
-  * pipeline. [[Pq.ivfpqRerankTopk]] (and the scale harness's
-  * `ivfpqPhased`) re-derive the index artifacts every run because the
-  * oracle must replay the whole computation; production builds them ONCE
-  * per corpus and amortizes across every query batch and every ingest
-  * batch. This component makes that amortization real library surface
+  * pipeline. [[Pq.ivfpqRerankTopk]] re-derives the index artifacts every
+  * run because the oracle must replay the whole computation; production
+  * builds them ONCE per corpus and amortizes across every query batch and
+  * every ingest batch. This component makes that amortization real library surface
   * instead of a harness note: the four build-time artifacts land as
   * versioned warehouse tables and every later operation reads them back —
   * the full-width corpus is touched only by exact re-rank fetches.

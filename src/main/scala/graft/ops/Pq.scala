@@ -408,7 +408,7 @@ object Pq {
     * can't stay resident): an arrival batch is deduplicated against the
     * EXISTING corpus using only its 4 B/vector code table and IVF cell
     * assignment, the two artifacts production stores once per corpus
-    * (see [[ivfpqPhased]]). Per arrival:
+    * (see [[AnnIndex]], which stores them). Per arrival:
     *
     *   1. probe the existing corpus's top-2 IVF cells (centroids and
     *      codebook are built from EXISTING rows only — the index knows
@@ -597,62 +597,6 @@ object Pq {
         expr("transform(qe, (x, i) -> x + CASE WHEN i % 2 = 0 " +
           "THEN CAST(800000 AS BIGINT) ELSE CAST(0 AS BIGINT) END)").as("qe"))
     near.union(fresh).withColumn("nrm", Kit.dotI64($"qe", $"qe"))
-  }
-
-  /** Phase-decomposed IVF-PQ for the scale harness ([[graft.PqScale]]):
-    * materializes the INGEST-side artifacts — the code table and the
-    * IVF cell assignment, both stored once per corpus in production —
-    * separately from the QUERY-side work (probe → ADC shortlist → exact
-    * re-rank), so the measured walls match the production amortization
-    * instead of re-charging every query batch for encoding. Returns
-    * (phase, seconds, rows) in execution order; same results as
-    * [[ivfpqRerankTopk]] (the registered form deliberately charges
-    * everything to one wall — that is the oracle-checked end-to-end
-    * cost). */
-  def ivfpqPhased(s: SparkSession, dir: String)
-      : (Seq[(String, Double, Long)], DataFrame) = {
-    import s.implicits._
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-    val base = Similarity.quantized(s, dir)
-    val n = base.count()
-    val (enc, encSec) = timed {
-      val cb = sampledCodebook(base, pqCbm(n))
-      val c = encode(base, cb).persist(); (cb, c, c.count())
-    }
-    val (cb, codes, nCodes) = enc
-    val (asgCnt, asgSec) = timed {
-      val (assign, _) =
-        Similarity.ivfAssignProbes(base, Similarity.ivfModulus(n), 25, 2)
-      val a = assign.persist(); (a, a.count())
-    }
-    val (assign, nAssign) = asgCnt
-    val ((result, nOut), qSec) = timed {
-      val (_, probes) =
-        Similarity.ivfAssignProbes(base, Similarity.ivfModulus(n), 25, 2)
-      val cand = probes.join(assign, Seq("cell"))
-        .where($"vec_id" =!= $"qid")
-        .select($"qid", $"vec_id".as("cid"))
-      val short = cand
-        .join(codes.withColumnRenamed("vec_id", "cid"), Seq("cid"))
-        .join(luts(base.where($"vec_id" % 25 === 0), cb), Seq("qid"))
-        .select($"qid", $"cid",
-          (-adcD2($"codes", $"luts")).cast(DoubleType).as("nega"))
-        .groupBy($"qid")
-        .agg(Kit.cosTopK($"nega", $"cid", 20).as("top"))
-        .select($"qid", explode($"top").as("t"))
-        .select($"qid", $"t.cid".as("cid"))
-      val out = Similarity.scoreCandidates(short, base, k = 5)
-        .select($"qid", $"cid", Kit.quantize($"cos", 6).as("cos_q6"))
-        .persist()
-      (out, out.count())
-    }
-    (Seq(
-      ("ingest_encode", encSec, nCodes),
-      ("ingest_assign", asgSec, nAssign),
-      ("query_probe_adc_rerank", qSec, nOut)), result)
   }
 
   val all: Seq[QueryDef] = Seq(pqTopk, ivfpqRerankTopk, pqIngestDedup)
