@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -20,7 +22,12 @@ import graft.ops.QueryDef
   * process CPU. It prints one JSON line per query, with every named
   * `observe()` metric (candidate volumes, gate counters) and the `skew`
   * flag — whether AQE split a skewed join in the executed plan — both
-  * read from the last run's QueryExecution by one listener.
+  * read from the last run's QueryExecution by one listener. It also
+  * counts, for the cold run and per timed run, the generated classes
+  * compiled (`compiles`: Spark's `CodegenMetrics` delta — the cold run's
+  * figure is the query's class census, the timed runs' what the
+  * 100-entry codegen cache failed to keep) and the Spark jobs started
+  * (`jobs`, build-time gates and collects included).
   *
   * `plan` prints each query's `explain("formatted")`; given an output dir
   * and suffix it writes `<outDir>/<query>_<suffix>.txt` instead (the
@@ -94,16 +101,30 @@ object Dev {
                    defs: Seq[QueryDef]): Unit = {
     val capture = new WriteCapture
     spark.listenerManager.register(capture)
+    // Job starts reach this listener on the listener bus's shared queue,
+    // ahead of the write's end event that releases `capture.await`, so a
+    // count read after the await includes every job of the runs.
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
+    def counts() =
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, jobs.get)
     def num(x: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, x)
     defs.foreach { d =>
       capture.arm(1)
+      val c0 = counts()
       val cold = Bench.time(spark, d, sfDir, reps = 1)
       // the cold write's event must land before the timed ones are counted
       capture.await(cold.error.isDefined)
+      val c1 = counts()
       capture.arm(Bench.REPS)
       val t = Bench.time(spark, d, sfDir)
       val error = cold.error.orElse(t.error)
       val seen = capture.await(t.error.isDefined) && error.isEmpty
+      val c2 = counts()
+      def perRun(a: Long, b: Long) = num((b - a).toDouble / Bench.REPS)
       val metrics = (if (seen) capture.metrics else Map.empty[String, Row])
         .toSeq.sortBy(_._1).flatMap { case (name, row) =>
           row.schema.fieldNames.map { f =>
@@ -122,6 +143,10 @@ object Dev {
         "\"median_sec\":" + num(t.median),
         "\"runs\":" + t.runs.map(num).mkString("[", ",", "]"),
         "\"cpu_sec\":" + num(t.cpuSec),
+        "\"cold_compiles\":" + (c1._1 - c0._1),
+        "\"cold_jobs\":" + (c1._2 - c0._2),
+        "\"compiles\":" + perRun(c1._1, c2._1),
+        "\"jobs\":" + perRun(c1._2, c2._2),
         "\"skew\":" + (seen && capture.skew),
         "\"metrics\":" + metrics.mkString("{", ",", "}")).mkString("{", ",", "}"))
     }

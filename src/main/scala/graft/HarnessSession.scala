@@ -58,12 +58,26 @@ object HarnessSession {
       }
     }
 
+  /** The session, with the log level lowered BEFORE the context starts:
+    * `sparkContext.setLogLevel` after `getOrCreate()` let ~40 start-up
+    * INFO lines through ahead of every main's output, and the
+    * `spark.log.level` conf still lets the first three through. */
   def build(cpus: String = envCpus, master: Option[String] = None,
             logLevel: String = "WARN"): SparkSession = {
-    val s = conf(cpus, sys.env, master)
+    StartupLog.lower(logLevel)
+    conf(cpus, sys.env, master)
       .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
-    s.sparkContext.setLogLevel(logLevel)
-    s
+  }
+
+  private object StartupLog extends org.apache.spark.internal.Logging {
+    /** Sets up Spark's logging as the first SparkContext would (its
+      * default log4j2 profile when none is configured), then lowers the
+      * root level, which the context's start-up leaves alone. */
+    def lower(level: String): Unit = {
+      initializeLogIfNecessary(false)
+      org.apache.logging.log4j.core.config.Configurator.setRootLevel(
+        org.apache.logging.log4j.Level.toLevel(level))
+    }
   }
 }

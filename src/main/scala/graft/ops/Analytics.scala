@@ -392,20 +392,33 @@ object Analytics {
 
   /** Point-in-time (temporal) dimension join — "which regime was this
     * key in when the fact happened": every lineitem shipment looked up
-    * against the customer's [[scdType2]] priority interval containing
-    * its ship day. THE correctness-critical warehouse join (joining
-    * facts to a dimension's CURRENT row silently rewrites history).
+    * against the customer's order-priority interval (the [[scdType2]]
+    * dimension) containing its ship day. THE correctness-critical
+    * warehouse join (joining facts to a dimension's CURRENT row silently
+    * rewrites history).
     *
-    * Scale shape: NOT an interval join. State changes and probes union
-    * into one stream, one window per custkey carries the last-seen
-    * priority forward (state rows sort before probes on ties, making
-    * valid_from inclusive), probes keep the carried value — a single
-    * shuffle on the key, O(facts + changes), the same as-of discipline
-    * as asof_click_view applied to dimension lookup. Zero-width
-    * intervals (two priority flips on one day) are dropped up front:
-    * they can match no instant, and removing them makes valid_from
-    * unique per key so the window order is total. The oracle runs the
-    * textbook interval join instead — different algorithm, same rows. */
+    * Scale shape: NOT an interval join, and no dimension build. Each
+    * order is a state row (custkey, day, tag 0, o_orderdate, o_orderkey,
+    * priority); the probes are (custkey, ship day, tag 1). One window
+    * per custkey, ordered by (day, tag, o_orderdate, o_orderkey) — the
+    * oracle's run order within a day — carries the last priority
+    * forward, and probes keep the carried value — a single shuffle on
+    * the key, O(facts + orders), the same as-of discipline as
+    * asof_click_view applied to dimension lookup.
+    *
+    * Equivalence with the oracle's textbook interval join: the SCD2
+    * runs of a customer tile time from its first order on, each run
+    * valid from its first order's day until the next run's. The run
+    * whose interval contains day d is the run holding the LATEST order
+    * (by o_orderdate, then key) dated on or before d: that run starts
+    * no later than d, and the next run starts with a later order, so
+    * after d. A zero-width interval (two priority flips on one day) is
+    * never that run, because a later order on the same day exists. So
+    * the probe takes that order's priority, which is exactly what the
+    * window carries: state rows sort before probes on the same day
+    * (valid_from is inclusive) and in run order within it; a ship day
+    * before the customer's first order carries nothing (NULL, the LEFT
+    * JOIN's miss). */
   val pitDimensionJoin: QueryDef = QueryDef.sql(
     "pit_dimension_join",
     """WITH s AS (
@@ -437,26 +450,27 @@ object Analytics {
       |  ON d.o_custkey = f.custkey AND f.ship_day >= d.valid_from
       |  AND (d.valid_to IS NULL OR f.ship_day < d.valid_to)""") { (s, dir) =>
     import s.implicits._
-    val dim = scd2(t(s, dir, "orders")
-        .select($"o_custkey", $"o_orderkey", $"o_orderdate",
-          $"o_orderpriority"))
-      // zero-width intervals (same-day flips) match no instant
-      .where($"valid_to".isNull || $"valid_to" > $"valid_from")
-      .select($"o_custkey".as("custkey"),
-        to_date($"valid_from").as("day"), $"priority",
-        lit(0).as("tag"))
-    val probes = t(s, dir, "lineitem")
-      .select($"l_orderkey", $"l_linenumber", to_date($"l_shipdate").as("day"))
-      .join(t(s, dir, "orders").select($"o_orderkey", $"o_custkey"),
+    val orders = t(s, dir, "orders")
+    val lineitem = t(s, dir, "lineitem")
+    // each side null-fills the other's payload column at its own type
+    def none(df: DataFrame, c: String) =
+      lit(null).cast(df.schema(c).dataType).as(c)
+    val state = orders.select($"o_custkey".as("custkey"),
+      to_date($"o_orderdate").as("day"), lit(0).as("tag"),
+      $"o_orderdate".as("ts"), $"o_orderkey".as("key"),
+      none(lineitem, "l_linenumber"), $"o_orderpriority".as("priority"))
+    val probes = lineitem
+      .join(orders.select($"o_orderkey", $"o_custkey"),
         $"l_orderkey" === $"o_orderkey")
-      .select($"o_custkey".as("custkey"), $"day", $"l_orderkey",
-        $"l_linenumber", lit(1).as("tag"))
-    val w = Window.partitionBy($"custkey").orderBy($"day", $"tag")
+      .select($"o_custkey".as("custkey"), to_date($"l_shipdate").as("day"),
+        lit(1).as("tag"), $"l_shipdate".as("ts"), $"l_orderkey".as("key"),
+        $"l_linenumber", none(orders, "o_orderpriority").as("priority"))
+    val w = Window.partitionBy($"custkey").orderBy($"day", $"tag", $"ts", $"key")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    dim.unionByName(probes, allowMissingColumns = true)
+    state.unionByName(probes)
       .withColumn("pri_at", last($"priority", ignoreNulls = true).over(w))
       .where($"tag" === 1)
-      .select($"l_orderkey", $"l_linenumber", $"custkey",
+      .select($"key".as("l_orderkey"), $"l_linenumber", $"custkey",
         $"day".as("ship_day"), $"pri_at".as("priority_at_ship"))
   }
 

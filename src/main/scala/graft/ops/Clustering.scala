@@ -52,64 +52,12 @@ object Clustering {
     * final centroids. `quantized` must carry int64 vectors of equal
     * dimension. */
   def kmeansCentroids(quantized: DataFrame, k: Int,
-                      iters: Int): Seq[Seq[Long]] = {
-    val s = quantized.sparkSession
-    import s.implicits._
-    // reuse the caller's cached (vec_id, qe, nrm) frame if it has one —
-    // re-persisting a superset here would double-cache the corpus
-    val base0 =
-      if (quantized.columns.contains("nrm")) quantized
-      else quantized.withColumn("nrm", Kit.dotI64($"qe", $"qe"))
-    val ownCache =
-      base0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val base = if (ownCache) base0.persist() else base0
-    try {
-      // deterministic farthest-first init (no RNG), TWO passes total
-      // regardless of k: seed with the lowest vec_id, then ONE scan
-      // collects the 16·k points farthest from the seed (ties to lowest
-      // vec_id) as a candidate pool, and the remaining k−1 seeds are
-      // chosen by exact greedy farthest-first over that pool DRIVER-SIDE
-      // (≤ 16·k tiny vectors — local arithmetic). Spreads seeds across
-      // the data's modes like the classic k−1-scan farthest-first, but
-      // init cost no longer multiplies the corpus scan by k (at 100 TB,
-      // 2 scans instead of k+1). When the corpus is smaller than the
-      // pool — every unit-test fixture — the pool IS the corpus and the
-      // result is exact farthest-first, unchanged.
-      val seed: Seq[Long] =
-        base.orderBy($"vec_id").limit(1).select($"qe").as[Seq[Long]].head()
-      val pool: Seq[(Long, Seq[Long])] = base
-        .select($"vec_id", $"qe", dist2($"qe", $"nrm", seed).as("d"))
-        .orderBy($"d".desc, $"vec_id".asc).limit(16 * k)
-        .select($"vec_id", $"qe").as[(Long, Seq[Long])].collect().toSeq
-      def sqDist(a: Seq[Long], b: Seq[Long]): Long = {
-        var acc = 0L; var i = 0
-        val n = math.min(a.length, b.length)
-        while (i < n) { val d = a(i) - b(i); acc += d * d; i += 1 }
-        acc
-      }
-      var centroids: Seq[Seq[Long]] = Seq(seed)
-      while (centroids.size < k && pool.nonEmpty) {
-        // the pool point farthest from its nearest chosen centroid,
-        // ties to the lowest vec_id — the same rule the per-scan
-        // farthest-first applied
-        val next = pool
-          .map { case (id, v) => (centroids.map(sqDist(v, _)).min, id, v) }
-          .reduceLeft((x, y) =>
-            if (y._1 > x._1 || (y._1 == x._1 && y._2 < x._2)) y else x)
-        centroids = centroids :+ next._3
-      }
-      // Gate-sized corpora run the Lloyd rounds on the driver (r12):
-      // each distributed round is a full job whose RESULT is collected
-      // to the driver anyway (the next round's centroids are literals),
-      // so at fixture scale the loop is iters × job latency over data
-      // that fits in a few MB. The local rounds are the identical
-      // integer arithmetic ([[lloydLocal]] — parity spec-pinned); past
-      // the gate the distributed loop below is unchanged.
-      if (base.count() <= LocalTrainGate)
-        centroids = lloydLocal(
-          base.select($"qe").as[Seq[Long]].collect().map(_.toArray),
-          centroids, iters)
-      else for (_ <- 1 to iters) {
+                      iters: Int): Seq[Seq[Long]] =
+    trainFarthestFirst(quantized, k, iters) { (base, init) =>
+      val s = base.sparkSession
+      import s.implicits._
+      var centroids = init
+      for (_ <- 1 to iters) {
         // one narrow shuffle: (cluster, pos, value) partial-sums map-side
         // to ≤ k·dim rows per partition before moving
         val sums = base
@@ -129,10 +77,140 @@ object Clustering {
         centroids = centroids.indices.map(i => sums.getOrElse(i, centroids(i)))
       }
       centroids
-    } finally { if (ownCache) base.unpersist(); () }
+    }
+
+  /** `quantized` with its cached squared norm column `nrm`. */
+  private def withNrm(quantized: DataFrame): DataFrame =
+    if (quantized.columns.contains("nrm")) quantized
+    else quantized.withColumn("nrm",
+      Kit.dotI64(col("qe"), col("qe")))
+
+  /** The shared trainer of [[kmeansCentroids]] and [[kmeansCentroidsJoin]]:
+    * deterministic farthest-first init (no RNG), then `iters` Lloyd
+    * rounds. Init is TWO passes regardless of k: seed with the lowest
+    * vec_id, then ONE scan takes the 16·k points farthest from the seed
+    * (ties to lowest vec_id) as a candidate pool, and the remaining k−1
+    * seeds are chosen by exact greedy farthest-first over that pool
+    * DRIVER-SIDE ([[farthestFirst]]). Spreads seeds across the data's
+    * modes like the classic k−1-scan farthest-first, but init cost no
+    * longer multiplies the corpus scan by k (at 100 TB, 2 scans instead
+    * of k+1). When the corpus is smaller than the pool — every unit-test
+    * fixture — the pool IS the corpus and the result is exact
+    * farthest-first.
+    *
+    * Gate-sized corpora ([[LocalTrainGate]], one [[DriverLocal.rowsUpTo]]
+    * job) run ALL of it on the collected rows: seed, pool
+    * ([[seedPoolLocal]] — the same i64 arithmetic and ties as
+    * [[seedPoolDistributed]]) and the Lloyd rounds ([[lloydLocal]]),
+    * since every distributed round ends in a driver collect of k
+    * centroids anyway. Past the gate the corpus is cached (unless the
+    * caller already did) for the distributed seed and pool scans and
+    * `distributed`'s rounds. */
+  private def trainFarthestFirst(quantized: DataFrame, k: Int, iters: Int)(
+      distributed: (DataFrame, Seq[Seq[Long]]) => Seq[Seq[Long]]
+  ): Seq[Seq[Long]] = {
+    val base0 = withNrm(quantized)
+    val s = base0.sparkSession
+    import s.implicits._
+    DriverLocal.rowsUpTo(base0.select($"vec_id", $"qe").as[(Long, Seq[Long])],
+      LocalTrainGate) match {
+      case Some(rows) =>
+        val (seed, pool) = seedPoolLocal(rows, k)
+        lloydLocal(rows.map(_._2.toArray), farthestFirst(seed, pool, k),
+          iters)
+      case None =>
+        // reuse the caller's cached (vec_id, qe, nrm) frame if it has one
+        // — re-persisting a superset here would double-cache the corpus
+        val ownCache =
+          base0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+        val base = if (ownCache) base0.persist() else base0
+        try {
+          val (seed, pool) = seedPoolDistributed(base, k)
+          distributed(base, farthestFirst(seed, pool, k))
+        } finally { if (ownCache) base.unpersist(); () }
+    }
   }
 
-  /** Corpus-row bound under which the Lloyd ROUNDS run on the driver:
+  /** The seed (lowest vec_id) and the 16·k pool farthest from it by
+    * `nrm − 2·⟨qe, seed⟩ + |seed|²`, ordered (d desc, vec_id asc) —
+    * two distributed scans of `base` (vec_id, qe, nrm). */
+  private[ops] def seedPoolDistributed(base: DataFrame, k: Int)
+      : (Seq[Long], Seq[(Long, Seq[Long])]) = {
+    val s = base.sparkSession
+    import s.implicits._
+    val seed: Seq[Long] =
+      base.orderBy($"vec_id").limit(1).select($"qe").as[Seq[Long]].head()
+    val pool = base
+      .select($"vec_id", $"qe", dist2($"qe", $"nrm", seed).as("d"))
+      .orderBy($"d".desc, $"vec_id".asc).limit(16 * k)
+      .select($"vec_id", $"qe").as[(Long, Seq[Long])].collect().toSeq
+    (seed, pool)
+  }
+
+  /** [[seedPoolDistributed]] over collected (vec_id, qe) rows: the same
+    * i64 distance (squared norm minus twice the dot over the common
+    * prefix plus the seed's squared norm — [[dist2]]'s arithmetic) and
+    * the same ties (lowest vec_id first). */
+  private[ops] def seedPoolLocal(rows: Array[(Long, Seq[Long])], k: Int)
+      : (Seq[Long], Seq[(Long, Seq[Long])]) = {
+    val seed = rows.minBy(_._1)._2
+    val cNorm = seed.map(v => v * v).sum
+    def d(v: Seq[Long]): Long = {
+      var nrm = 0L; var dot = 0L; var i = 0
+      while (i < v.length) {
+        nrm += v(i) * v(i)
+        if (i < seed.length) dot += v(i) * seed(i)
+        i += 1
+      }
+      nrm - 2L * dot + cNorm
+    }
+    val pool = rows.map(r => (d(r._2), r))
+      .sortWith((x, y) => x._1 > y._1 || (x._1 == y._1 && x._2._1 < y._2._1))
+      .take(16 * k).map(_._2).toSeq
+    (seed, pool)
+  }
+
+  /** Exact greedy farthest-first over the pool, driver-side: starting
+    * from `seed`, repeatedly add the pool point farthest from its
+    * nearest chosen centroid, ties to the lowest vec_id (then pool
+    * order) — the rule the classic per-scan farthest-first applies.
+    * Each pick only compares against the LAST added centroid (cached
+    * running min), so k picks cost O(k·pool), not O(k²·pool). Picked
+    * points stay in the pool (their running min drops to 0), which
+    * keeps the degenerate all-zero-distance pool well-defined. */
+  private[ops] def farthestFirst(seed: Seq[Long],
+      pool: Seq[(Long, Seq[Long])], k: Int): Seq[Seq[Long]] = {
+    def sqDist(a: Seq[Long], b: Seq[Long]): Long = {
+      var acc = 0L; var i = 0
+      val n = math.min(a.length, b.length)
+      while (i < n) { val d = a(i) - b(i); acc += d * d; i += 1 }
+      acc
+    }
+    val pts = pool.toIndexedSeq
+    val minD = pts.map { case (_, v) => sqDist(v, seed) }.toArray
+    var centroids: Seq[Seq[Long]] = Seq(seed)
+    while (centroids.size < k && pts.nonEmpty) {
+      var best = 0
+      var i = 1
+      while (i < pts.length) {
+        if (minD(i) > minD(best) ||
+            (minD(i) == minD(best) && pts(i)._1 < pts(best)._1)) best = i
+        i += 1
+      }
+      val next = pts(best)._2
+      centroids = centroids :+ next
+      i = 0
+      while (i < pts.length) {
+        minD(i) = math.min(minD(i), sqDist(pts(i)._2, next))
+        i += 1
+      }
+    }
+    centroids
+  }
+
+  /** Corpus-row bound under which the Lloyd ROUNDS (and, in
+    * [[trainFarthestFirst]], the init) run on the driver, decided by one
+    * [[DriverLocal.rowsUpTo]] job whose rows they then train on:
     * 16,384 vectors × 64 dims × 8 B ≈ 8 MB collected — the bounded-
     * artifact class of the k-means seed pools (which already collect
     * 16·k rows). Every distributed round ends in a driver collect of
@@ -215,9 +293,7 @@ object Clustering {
                    centroids: Seq[Seq[Long]]): DataFrame = {
     val s = quantized.sparkSession
     import s.implicits._
-    val base =
-      if (quantized.columns.contains("nrm")) quantized
-      else quantized.withColumn("nrm", Kit.dotI64($"qe", $"qe"))
+    val base = withNrm(quantized)
     base.select($"vec_id", nearest($"qe", $"nrm", centroids).as("cluster"))
   }
 
@@ -604,9 +680,7 @@ object Clustering {
     val cdf = centroids.zipWithIndex
       .map { case (c, i) => (i, c, c.map(v => v * v).sum) }
       .toDF("cl", "cqe", "cnrm")
-    val base =
-      if (quantized.columns.contains("nrm")) quantized
-      else quantized.withColumn("nrm", Kit.dotI64($"qe", $"qe"))
+    val base = withNrm(quantized)
     // overflow guard (round-8 ADVICE): the d·S+cl pack is only valid for
     // d ≤ (2⁶³−1−(S−1))/S. Unit-quantized embeddings sit far under that
     // (≈2.6·10¹⁴ vs ≈2.8·10¹⁴ at S=2¹⁵), but non-unit-scaled input would
@@ -644,9 +718,7 @@ object Clustering {
     val cdf = centroids.zipWithIndex
       .map { case (c, i) => (i, c, c.map(v => v * v).sum) }
       .toDF("cl", "cqe", "cnrm")
-    val base =
-      if (quantized.columns.contains("nrm")) quantized
-      else quantized.withColumn("nrm", Kit.dotI64($"qe", $"qe"))
+    val base = withNrm(quantized)
     base.join(broadcast(cdf))
       .select($"vec_id", $"cl".cast("long").as("cll"),
         (-($"nrm" - lit(2L) * Kit.dotI64($"qe", $"cqe") + $"cnrm"))
@@ -663,52 +735,9 @@ object Clustering {
     * per-iteration assignment differs). Identical output to
     * [[kmeansCentroids]] for any k (parity spec at k = 8). */
   def kmeansCentroidsJoin(quantized: DataFrame, k: Int,
-                          iters: Int): Seq[Seq[Long]] = {
-    val s = quantized.sparkSession
-    import s.implicits._
-    val base0 =
-      if (quantized.columns.contains("nrm")) quantized
-      else quantized.withColumn("nrm", Kit.dotI64($"qe", $"qe"))
-    val ownCache =
-      base0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val base = if (ownCache) base0.persist() else base0
-    try {
-      val seed: Seq[Long] =
-        base.orderBy($"vec_id").limit(1).select($"qe").as[Seq[Long]].head()
-      val pool: Seq[(Long, Seq[Long])] = base
-        .select($"vec_id", $"qe", dist2($"qe", $"nrm", seed).as("d"))
-        .orderBy($"d".desc, $"vec_id".asc).limit(16 * k)
-        .select($"vec_id", $"qe").as[(Long, Seq[Long])].collect().toSeq
-      def sqDist(a: Seq[Long], b: Seq[Long]): Long = {
-        var acc = 0L; var i = 0
-        val n = math.min(a.length, b.length)
-        while (i < n) { val d = a(i) - b(i); acc += d * d; i += 1 }
-        acc
-      }
-      var centroids: Seq[Seq[Long]] = Seq(seed)
-      // greedy farthest-first over the pool, driver-side: each pick only
-      // compares against the LAST added centroid's distances (cached
-      // running min), so k picks cost O(k·pool) not O(k²·pool)
-      val minD = scala.collection.mutable.Map.empty[Long, Long]
-      pool.foreach { case (id, v) => minD(id) = sqDist(v, seed) }
-      val byId = pool.toMap
-      while (centroids.size < k && minD.nonEmpty) {
-        val (nextId, _) = minD.toSeq
-          .reduceLeft((x, y) =>
-            if (y._2 > x._2 || (y._2 == x._2 && y._1 < x._1)) y else x)
-        val next = byId(nextId)
-        centroids = centroids :+ next
-        // picked points are NOT removed (their running min drops to 0) —
-        // bit-identical to kmeansCentroids' fresh-min scan, including
-        // the degenerate all-zero-distance pool
-        minD.keys.foreach { id =>
-          val d = sqDist(byId(id), next)
-          if (d < minD(id)) minD(id) = d
-        }
-      }
-      lloydJoin(base, centroids, iters)
-    } finally { if (ownCache) base.unpersist(); () }
-  }
+                          iters: Int): Seq[Seq[Long]] =
+    trainFarthestFirst(quantized, k, iters)(
+      lloydJoinDistributed(_, _, iters))
 
   /** The Lloyd half of the join-based trainers: `iters` assign/update
     * rounds from an arbitrary initial centroid set (the Spark mirror of
@@ -721,10 +750,10 @@ object Clustering {
     // gate-sized corpora: driver-local rounds, identical arithmetic —
     // see [[LocalTrainGate]] / [[lloydLocal]] (every distributed round
     // collects its result to the driver anyway)
-    if (base.count() <= LocalTrainGate)
-      lloydLocal(base.select($"qe").as[Seq[Long]].collect().map(_.toArray),
-        init, iters)
-    else lloydJoinDistributed(base, init, iters)
+    DriverLocal.rowsUpTo(base.select($"qe").as[Seq[Long]], LocalTrainGate) match {
+      case Some(vecs) => lloydLocal(vecs.map(_.toArray), init, iters)
+      case None => lloydJoinDistributed(base, init, iters)
+    }
   }
 
   /** The distributed round loop of [[lloydJoin]] — every corpus past
@@ -763,9 +792,7 @@ object Clustering {
                            iters: Int): Seq[Seq[Long]] = {
     val s = quantized.sparkSession
     import s.implicits._
-    val base0 =
-      if (quantized.columns.contains("nrm")) quantized
-      else quantized.withColumn("nrm", Kit.dotI64($"qe", $"qe"))
+    val base0 = withNrm(quantized)
     val ownCache =
       base0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val base = if (ownCache) base0.persist() else base0
@@ -1095,9 +1122,7 @@ object Clustering {
     val cdf = centroids.zipWithIndex
       .map { case (c, i) => (i, c, c.map(v => v * v).sum) }
       .toDF("cl", "cqe", "cnrm")
-    val base =
-      if (quantized.columns.contains("nrm")) quantized
-      else quantized.withColumn("nrm", Kit.dotI64($"qe", $"qe"))
+    val base = withNrm(quantized)
     base.join(broadcast(cdf))
       .select($"vec_id", $"cl".cast("long").as("cll"),
         (-($"nrm" - lit(2L) * Kit.dotI64($"qe", $"cqe") + $"cnrm"))

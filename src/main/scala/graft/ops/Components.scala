@@ -34,7 +34,8 @@ object Components {
     Tables.load(s, dir, n)
 
   /** Edge-count bound under which [[connectedComponents]] resolves the
-    * labels on the driver instead of running distributed label rounds.
+    * labels on the driver instead of running distributed label rounds,
+    * decided and collected by one [[DriverLocal.rowsUpTo]] job.
     * Same bounded-artifact class as [[PageRank.LocalEdgeGate]] and the
     * k-means seed pools: ≤ 65,536 (src, dst) longs ≈ 1 MB collected.
     * At fixture scale every registered near-dup graph has tens of
@@ -59,24 +60,17 @@ object Components {
     val e = edges.toDF("src", "dst")
     val longIds = e.schema.forall(_.dataType ==
       org.apache.spark.sql.types.LongType)
-    if (longIds) {
-      // One cheap count gates the driver path; the edge frame is
-      // persisted so the count's evaluation of the pair lineage is
-      // reused by whichever path runs (the distributed loop's first
-      // round would materialize it anyway).
-      val lvl = StageLevels.pinned(s)
-      val pinned = e.persist(lvl)
-      if (pinned.count() <= LocalEdgeGate) {
-        val rows = pinned.collect()
-        if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
-          val out = ccLocal(s, rows)
-          pinned.unpersist()
-          return out
-        }
-      }
-      return ccDistributed(pinned, maxIters, unpersistInput = true)
+    if (!longIds) ccDistributed(e, maxIters, unpersistInput = false)
+    // One limit-collect gates the driver path and IS its input
+    // ([[DriverLocal.rowsUpTo]]); only the distributed branch pins the
+    // edge frame its rounds re-read.
+    else DriverLocal.rowsUpTo(e, LocalEdgeGate) match {
+      case Some(rows) if rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)) =>
+        ccLocal(s, rows)
+      case _ =>
+        ccDistributed(e.persist(StageLevels.pinned(s)), maxIters,
+          unpersistInput = true)
     }
-    ccDistributed(e, maxIters, unpersistInput = false)
   }
 
   /** Driver-side union-find for gate-sized graphs: min-id roots with

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.sources.Tables
 
@@ -32,14 +31,11 @@ import graft.sources.Tables
   */
 object PageRank {
 
-  /** PageRank over `edges` (src, dst, w) with damping d6/1e6 (default
-    * 0.85) for a fixed `rounds`. Returns (id, rank_q6) over every vertex
-    * appearing as src or dst. Σ rank_q6 ≤ N·1e6 (truncation + dangling
-    * leak are not redistributed). */
   /** Edge-count bound under which [[pageRank]] runs its fixpoint on the
-    * driver instead of as distributed rounds. The rank iteration is
-    * O(E + V) integer arithmetic per round; when the AGGREGATED edge
-    * list is this small (≤ 65,536 rows ≈ a few MB collected — the same
+    * driver instead of as distributed rounds, decided and collected by
+    * one [[DriverLocal.rowsUpTo]] job. The rank iteration is O(E + V)
+    * integer arithmetic per round; when the AGGREGATED edge list is this
+    * small (≤ 65,536 rows ≈ a few MB collected — the same
     * bounded-artifact class as the k-means seed pools), ten distributed
     * rounds are pure scheduler latency: ~30 jobs over frames smaller
     * than one shuffle block. The local path runs the IDENTICAL
@@ -51,19 +47,20 @@ object PageRank {
     * web-scale doc graphs blow the bound and distribute. */
   private[ops] val LocalEdgeGate = 65536L
 
+  /** PageRank over `edges` (src, dst, w) with damping d6/1e6 (default
+    * 0.85) for a fixed `rounds`. Returns (id, rank_q6) over every vertex
+    * appearing as src or dst. Σ rank_q6 ≤ N·1e6 (truncation + dangling
+    * leak are not redistributed). */
   def pageRank(edges: DataFrame, d6: Long = 850000L,
                rounds: Int = 10): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val e = edges.toDF("src", "dst", "w").persist()
+    val e = edges.toDF("src", "dst", "w")
     // guide §1.2/"the distributed algorithm": don't pay 3 jobs/round on a
-    // bounded graph. count() here is one cheap job over the (already
-    // aggregated, persisted) edge list that every path below re-reads.
-    if (e.count() <= LocalEdgeGate) {
-      val out = pageRankLocal(e, d6, rounds)
-      e.unpersist()
-      out
-    } else pageRankDistributed(e, d6, rounds)
+    // bounded graph. The gate job IS the local path's collect; only the
+    // distributed branch persists the edge list its rounds re-read.
+    DriverLocal.rowsUpTo(localEdges(e), LocalEdgeGate) match {
+      case Some(rows) => pageRankRows(e, rows, d6, rounds)
+      case None => pageRankDistributed(e.persist(), d6, rounds)
+    }
   }
 
   /** The distributed round loop — every graph past [[LocalEdgeGate]].
@@ -119,15 +116,25 @@ object PageRank {
     * recurrence as the distributed loop, in the same truncating 64-bit
     * integer arithmetic (Scala `/` on non-negative longs ≡ Spark `div`),
     * so ranks are bit-equal. One collect of the aggregated edge list
-    * (≤ [[LocalEdgeGate]] rows), zero distributed rounds; the result
+    * (≤ [[LocalEdgeGate]] rows; under [[pageRank]] it is the gate's own
+    * [[DriverLocal.rowsUpTo]] job), zero distributed rounds; the result
     * returns as a local relation. */
   private[ops] def pageRankLocal(e: DataFrame, d6: Long,
-                                 rounds: Int): DataFrame = {
+                                 rounds: Int): DataFrame =
+    pageRankRows(e, localEdges(e).collect(), d6, rounds)
+
+  /** (src, dst, w as i64) — the rows the driver-side fixpoint reads. */
+  private def localEdges(e: DataFrame): DataFrame =
+    e.select(col("src"), col("dst"),
+      col("w").cast(org.apache.spark.sql.types.LongType))
+
+  /** [[pageRankLocal]] over already-collected [[localEdges]] rows of `e`
+    * (whose schema types the output's id column). */
+  private def pageRankRows(e: DataFrame,
+                           rows: Array[org.apache.spark.sql.Row], d6: Long,
+                           rounds: Int): DataFrame = {
     val s = e.sparkSession
-    import s.implicits._
     val idType = e.schema("src").dataType
-    val rows = e.select($"src", $"dst",
-      $"w".cast(org.apache.spark.sql.types.LongType)).collect()
     val edges = rows.map(r => (r.get(0), r.get(1), r.getLong(2)))
     val totw = scala.collection.mutable.HashMap.empty[Any, Long]
     edges.foreach { case (src, _, w) =>
@@ -208,8 +215,10 @@ object PageRank {
         .where($"next_type".isNotNull)
         .groupBy($"event_type".as("src"), $"next_type".as("dst"))
         .agg(count(lit(1)).as("w"))
-      pageRank(edges, rounds = rounds)
-        .orderBy($"rank_q6".desc, $"id")
+      // the vertex set is the event-type vocabulary at any corpus size:
+      // one partition sorts it without a range-partitioning exchange
+      pageRank(edges, rounds = rounds).coalesce(1)
+        .sortWithinPartitions($"rank_q6".desc, $"id")
     }
   }
 

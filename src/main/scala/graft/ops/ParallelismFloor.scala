@@ -94,13 +94,22 @@ object ParallelismFloor {
     * many of those splits can carry rows (see [[rowGroups]]), and the
     * row-group count decides. The footer reads only happen on that
     * few-files branch, so a real corpus of thousands of files (file
-    * count ≥ floor → every file seeds ≥ 1 task) never pays them. */
+    * count ≥ floor → every file seeds ≥ 1 task) never pays them.
+    *
+    * The floor is decided from the file bytes FIRST: a floor of 1 (any
+    * corpus under 2 × `bytesPerTask`, e.g. the sf0.01 embeddings) cannot
+    * fire on a non-empty input, so `df` comes back as is — without
+    * `df.rdd`, which would build the physical plan and compile its
+    * stage, and without footer reads. An empty input (0 splits) is the
+    * one case this skips a repartition for, and it has no rows to
+    * spread. */
   def apply(df: DataFrame, path: String,
             bytesPerTask: Long = 256L << 10): DataFrame = {
     val s = df.sparkSession
     val (bytes, files) = scanStats(s, path)
     val floor = math.min(s.sparkContext.defaultParallelism.toLong,
       math.max(1L, bytes / bytesPerTask)).toInt
+    if (floor <= 1) return df
     val splits = df.rdd.getNumPartitions
     val effective =
       if (splits < floor || files >= floor) splits.toLong

@@ -114,12 +114,22 @@ object Pq {
 
   /** The deterministic sampled codebook: full 64-dim quantized vectors
     * with `vec_id % cbm == 0`, j = rank by vec_id. Bounded driver
-    * collect (≤ 257 rows — same class as the k-means centroid tables). */
-  private[ops] def sampledCodebook(base: DataFrame, cbm: Long): Seq[Seq[Long]] = {
+    * collect (≤ 257 rows — same class as the k-means centroid tables),
+    * so the rank is taken by sorting on the driver: a distributed
+    * `orderBy` would add a range-sampling job and a sort for it. */
+  private[ops] def sampledCodebook(base: DataFrame, cbm: Long): Seq[Seq[Long]] =
+    codebookOf(corpusRows(base.where(col("vec_id") % cbm === 0)).collect(),
+      cbm)
+
+  /** [[sampledCodebook]] over collected (vec_id, qe) rows. */
+  private[ops] def codebookOf(rows: Array[(Long, Seq[Long])],
+                         cbm: Long): Seq[Seq[Long]] =
+    rows.filter(_._1 % cbm == 0).sortBy(_._1).map(_._2).toSeq
+
+  private def corpusRows(base: DataFrame) = {
     val s = base.sparkSession
     import s.implicits._
-    base.where(col("vec_id") % cbm === 0).orderBy("vec_id")
-      .select("qe").as[Seq[Long]].collect().toSeq
+    base.select($"vec_id", $"qe").as[(Long, Seq[Long])]
   }
 
   /** PQ codes: (vec_id, codes ARRAY<INT> length M) — the compressed
@@ -227,7 +237,13 @@ object Pq {
         |QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc_d2, cid) <= 5""".stripMargin) { (s, dir) =>
     import s.implicits._
     val base = Similarity.quantized(s, dir)
-    val cb = sampledCodebook(base, pqCbm(base.count()))
+    // a gate-sized corpus is sized and sampled by ONE collect (the
+    // bounded-artifact class of [[Clustering.LocalTrainGate]]); past it,
+    // a count sizes the distributed sample
+    val cb = DriverLocal.rowsUpTo(corpusRows(base), Clustering.LocalTrainGate) match {
+      case Some(rows) => codebookOf(rows, pqCbm(rows.length))
+      case None => sampledCodebook(base, pqCbm(base.count()))
+    }
     encode(base, cb)
       .crossJoin(broadcast(luts(base.where($"vec_id" % 25 === 0), cb)))
       .where($"vec_id" =!= $"qid")

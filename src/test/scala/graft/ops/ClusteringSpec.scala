@@ -67,4 +67,30 @@ class ClusteringSpec extends SparkTestBase {
     assert(cents.size == 3)
     assert(cents.distinct.size >= 2) // the two populated clusters converged
   }
+
+  test("driver-side seed and pool equal the distributed ones, ties and ragged vectors included") {
+    // vec_id 3 (lowest) seeds at (0, 0); many points sit at EXACTLY the
+    // same distance 25 from it — some shorter or longer than the seed
+    // (the dot runs over the common prefix) — so the 16·k pool cut and
+    // its (d desc, vec_id asc) order fall inside a tie
+    val tied = Seq(Seq(3L, 4L), Seq(4L, 3L), Seq(5L), Seq(0L, 5L, 0L),
+      Seq(-3L, -4L), Seq(0L, 0L, 5L), Seq(-5L, 0L))
+    val far = Seq(Seq(9L, 9L), Seq(-7L, 8L, 1L), Seq(12L))
+    val ids = Seq(41L, 17L, 8L, 33L, 25L, 12L, 50L, 29L, 21L, 10L, 44L, 6L)
+    val vecs = (0 until 40).map(i =>
+      if (i < 30) tied(i % tied.size) else far(i % far.size))
+    val rows = (3L, Seq(0L, 0L)) +: ids.indices.map(i => (ids(i), vecs(i))) ++:
+      (12 until 40).map(i => (100L + (i * 37) % 53, vecs(i)))
+    val base = rows.toDF("vec_id", "qe")
+      .withColumn("nrm", graft.functions.Kit.dotI64($"qe", $"qe"))
+      .repartition(5)
+    for (k <- Seq(1, 2)) {
+      val dist = Clustering.seedPoolDistributed(base, k)
+      val local = Clustering.seedPoolLocal(rows.reverse.toArray, k)
+      assert(local == dist, s"k = $k")
+      assert(Clustering.farthestFirst(local._1, local._2, 3) ==
+        Clustering.farthestFirst(dist._1, dist._2, 3))
+    }
+    assert(Clustering.seedPoolLocal(rows.toArray, 1)._1 == Seq(0L, 0L))
+  }
 }

@@ -62,4 +62,39 @@ class ParallelismFloorSpec extends SparkTestBase {
     val floored = ParallelismFloor(df, s"$dir/t.parquet", bytesPerTask = 4L << 10)
     assert(floored.rdd.getNumPartitions > df.rdd.getNumPartitions)
   }
+
+  test("a floor of 1 returns the same frame without physical planning") {
+    val dir = writeOneFile(2000)
+    val df = spark.read.parquet(s"$dir/t.parquet")
+    // every physical planning pass consults the extra strategies
+    val planned = new java.util.concurrent.atomic.AtomicInteger
+    val probe = new org.apache.spark.sql.execution.SparkStrategy {
+      def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = {
+        planned.incrementAndGet(); Nil
+      }
+    }
+    val prev = spark.experimental.extraStrategies
+    spark.experimental.extraStrategies = prev :+ probe
+    try {
+      // bytesPerTask past the file's size: floor = max(1, bytes / bpt) = 1
+      val floored = ParallelismFloor(df, s"$dir/t.parquet",
+        bytesPerTask = 1L << 30)
+      assert(floored eq df)
+      assert(planned.get == 0, "the floor planned the frame")
+      floored.collect()
+      assert(planned.get > 0, "precondition: the probe sees planning")
+    } finally spark.experimental.extraStrategies = prev
+  }
+
+  test("an empty corpus gives the same (no) rows whatever the floor") {
+    val dir = tmpDir("floor-empty")
+    spark.range(0).selectExpr("id", "cast(id as string) as v")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val df = spark.read.parquet(s"$dir/t.parquet")
+    for (bpt <- Seq(1L << 30, 1L)) { // floor 1, then the full-width cap
+      val floored = ParallelismFloor(df, s"$dir/t.parquet", bytesPerTask = bpt)
+      assert(floored.schema == df.schema)
+      assert(floored.collect().isEmpty, s"bytesPerTask = $bpt")
+    }
+  }
 }

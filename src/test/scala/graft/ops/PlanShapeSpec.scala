@@ -311,4 +311,17 @@ class PlanShapeSpec extends SparkTestBase {
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
     assert(exchanges <= 2, s"expected only the branch spreads, got:\n$p")
   }
+
+  test("pit_dimension_join carries priorities in one window, with no SCD2 build") {
+    val d = graft.SparkEntry.defs.find(_.name == "pit_dimension_join").get
+    val p = d.fn(spark, dir).queryExecution.sparkPlan
+    val windows = p.collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w
+    }
+    assert(windows.size == 1, p.toString)
+    // the interval dimension's run grouping was an aggregate over orders
+    assert(p.collect {
+      case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a
+    }.isEmpty, p.toString)
+  }
 }

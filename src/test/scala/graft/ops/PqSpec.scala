@@ -38,6 +38,19 @@ class PqSpec extends SparkTestBase {
     assert((0L until 500L).count(_ % Pq.pqCbm(500) == 0) == Pq.pqKs(500))
   }
 
+  test("the codebook sampled from collected rows is the distributed one, in order") {
+    val vecs = corpus()
+    // shuffled rows over several partitions: the rank by vec_id must not
+    // depend on arrival order on either side
+    val rows = scala.util.Random.shuffle(vecs.toSeq)
+    val base = rows.toDF("vec_id", "qe").repartition(5)
+    for (cbm <- Seq(1L, Pq.pqCbm(vecs.size), 7L)) {
+      val dist = Pq.sampledCodebook(base, cbm)
+      assert(Pq.codebookOf(rows.toArray, cbm) == dist, s"cbm = $cbm")
+      assert(dist == vecs.toSeq.filter(_._1 % cbm == 0).sortBy(_._1).map(_._2))
+    }
+  }
+
   test("codes are the true per-subspace argmins (ties to lowest j)") {
     val vecs = corpus()
     val base = vecs.toSeq.toDF("vec_id", "qe")
