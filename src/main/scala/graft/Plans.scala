@@ -2,10 +2,38 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.matching.Regex
+
 /** Regenerates PLANS.md: the physical-plan audit of the headline queries,
   * with the scale commentary next to the actual `formatted` explain
-  * output. Run: `sbt 'runMain graft.Plans'` (uses sf0.01). */
+  * output. Run: `sbt 'runMain graft.Plans'` (uses sf0.01). Two runs on
+  * one machine write identical bytes: every plan goes through
+  * [[normalise]], and the queries that store artifacts on first use
+  * (`ann_index_topk`, `flagship_bucketed`) build them afresh each run
+  * under `<java.io.tmpdir>/graft-plans`, which the run clears first. */
 object Plans {
+
+  /** One explain string with its run-dependent tokens made stable:
+    * expression ids (`#123`) and exchange ids (`plan_id=45`) renumbered
+    * from 0 in first-seen order; JVM object hashes of array literals
+    * (`[J@1a2b3c`), lambda class names and the writer's random data-file
+    * names (`<txn8>-part-00000-<uuid>`) replaced by fixed tokens; and the
+    * `tmpRoot` directory written as `<tmp>`. */
+  def normalise(plan: String, tmpRoot: String): String = {
+    def renumber(s: String, re: Regex, token: Int => String): String = {
+      val seen = scala.collection.mutable.HashMap.empty[String, Int]
+      re.replaceAllIn(s, m => Regex.quoteReplacement(
+        token(seen.getOrElseUpdate(m.group(1), seen.size))))
+    }
+    val ids = renumber(plan, "#(\\d+)".r, i => s"#$i")
+    val stable = renumber(ids, "plan_id=(\\d+)".r, i => s"plan_id=$i")
+      .replace(tmpRoot, "<tmp>")
+    val files = "[0-9a-f]{8}-part-(\\d+)-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}".r
+      .replaceAllIn(stable, "txn-part-$1-uuid")
+    val arrays = "\\[([A-Z])@[0-9a-f]+".r.replaceAllIn(files, "[$1@obj")
+    "\\$\\$Lambda[$/]?[\\w/$]*(@[0-9a-f]+)?".r
+      .replaceAllIn(arrays, Regex.quoteReplacement("$$Lambda"))
+  }
 
   private val notes: Seq[(String, String)] = Seq(
     "flagship_missing_stats" ->
@@ -335,6 +363,10 @@ object Plans {
   def main(args: Array[String]): Unit = {
     // pinned at local[4] (not SPARK_GRAFT_CPUS): the committed plans
     // record this partitioning
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"), "graft-plans")
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    Files.createDirectories(tmp)
+    System.setProperty("java.io.tmpdir", tmp.toString)
     val spark = HarnessSession.build(cpus = "4", logLevel = "ERROR")
     val dir = "/root/testdata/sf0.01"
     val sb = new StringBuilder
@@ -359,12 +391,13 @@ checkpointed loop state spills fine; it must not be allowed to squat.
       val d = SparkEntry.defs.find(_.name == name).get
       val df = d.fn(spark, dir)
       sb.append(s"\n## $name\n\n$note\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode).trim)
+      sb.append(normalise(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode).trim, tmp.toString))
       sb.append("\n```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${notes.size} plans)")
     spark.stop()
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 }

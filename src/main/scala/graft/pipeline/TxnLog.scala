@@ -108,11 +108,12 @@ final case class ManifestData(partitionCols: Seq[String],
   * v2/v3 manifests stay readable and record nothing either.
   *
   * Driver-memory envelope: the RESOLVED file list (and the zone-map
-  * stats) still materialize on the driver — ~100 bytes/file, i.e. ~100 MB
-  * at a million files, the same metadata-plane envelope Delta accepts
-  * before its own checkpoint-parquet tricks. Beyond that, compaction
-  * ([[Warehouse.compact]]) is the lever: fewer, larger files shrink the
-  * manifest itself.
+  * stats) materialize on the driver — ~100 bytes/file, i.e. ~100 MB at a
+  * million files, the same metadata-plane envelope Delta accepts. Every
+  * read resolves here, zone-map pruning included ([[Warehouse.readBox]]
+  * and [[Warehouse.pruneBox]] walk the resolved manifest). Beyond that
+  * envelope, compaction ([[Warehouse.compact]]) is the lever: fewer,
+  * larger files shrink the manifest itself.
   */
 object TxnLog {
 
@@ -161,17 +162,11 @@ object TxnLog {
   private def manifestPath(tableDir: Path, version: Long): Path =
     logDir(tableDir).resolve(f"v$version%012d.manifest")
 
-  /** The columnar (parquet) checkpoint sibling of one version's text
-    * manifest — written by [[ManifestCheckpoint]], deleted together with
-    * the manifest by [[deleteVersion]]. A directory of parquet part
-    * files; its EXISTENCE (it is published by atomic rename) marks a
-    * complete checkpoint. */
-  def checkpointDir(tableDir: Path, version: Long): Path =
+  /** Where builds before the text-only log published a parquet
+    * checkpoint of a version (a directory). Nothing writes one now;
+    * [[deleteVersion]] still reclaims a leftover with its manifest. */
+  private[pipeline] def checkpointDir(tableDir: Path, version: Long): Path =
     logDir(tableDir).resolve(f"v$version%012d.checkpoint")
-
-  /** Does `version` carry a complete parquet checkpoint? */
-  def hasCheckpoint(tableDir: Path, version: Long): Boolean =
-    Files.isDirectory(checkpointDir(tableDir, version))
 
   private def claimPath(tableDir: Path, version: Long): Path =
     logDir(tableDir).resolve(f"v$version%012d.claim")
@@ -206,8 +201,8 @@ object TxnLog {
   /** A manifest's HEADER alone — version, partition/stats columns, txn
     * id, the delta base pointer and the recorded schema — readable
     * without touching the body. At a million files a snapshot manifest's
-    * body is ~100 MB of text; chain walks that only need to FIND the
-    * nearest checkpoint must not pay that parse. */
+    * body is ~100 MB of text; [[txnCommitted]]'s per-batch replay check
+    * must not pay that parse. */
   final case class ManifestHeader(version: Long, partitionCols: Seq[String],
                                   txnId: Option[String],
                                   statsCols: Seq[String], base: Option[Long],
@@ -253,39 +248,6 @@ object TxnLog {
         if (nHeader < 6) None else parseSchema(ln(), version, tableDir)
       ManifestHeader(version, part, txn, stats, base, schema)
     }
-
-  /** One delta's operations, exposed for checkpoint-based resolution:
-    * `adds`/`addStats` are the added entries (stats pairs aligned with
-    * THIS manifest's `statsCols`), `removes` the removed paths. */
-  final case class DeltaOps(version: Long, statsCols: Seq[String],
-                            adds: Seq[String],
-                            addStats: Map[String, Seq[(String, String)]],
-                            removes: Seq[String])
-
-  /** Walk the delta chain of `version` down to the nearest version for
-    * which `hasBase` holds (a parquet checkpoint, typically), WITHOUT
-    * ever parsing a snapshot body: only small delta manifests are read
-    * in full; the base version's text manifest is skipped entirely.
-    * Returns (baseVersion, deltas ascending), or None when the chain
-    * bottoms out at a snapshot with no checkpoint — the caller falls
-    * back to driver-side text resolution. This is what keeps the
-    * metadata plane O(change) on the read path at ~10^6 files. */
-  def deltaChainAbove(tableDir: Path, version: Long,
-                      hasBase: Long => Boolean): Option[(Long, List[DeltaOps])] = {
-    var v = version
-    var acc = List.empty[DeltaOps]
-    while (!hasBase(v)) {
-      readHeader(tableDir, v).base match {
-        case None => return None
-        case Some(b) =>
-          val raw = readRaw(tableDir, v)
-          acc = DeltaOps(v, raw.m.statsCols, raw.m.files, raw.m.fileStats,
-            raw.removes) :: acc
-          v = b
-      }
-    }
-    Some((v, acc))
-  }
 
   private def readRaw(tableDir: Path, version: Long): RawManifest = {
     val lines = Files.readAllLines(
@@ -514,10 +476,11 @@ object TxnLog {
     * keeps the walk short. */
   def txnCommitted(tableDir: Path, txnId: String): Boolean =
     versions(tableDir).reverse.exists(v =>
-      readRaw(tableDir, v).m.txnId.contains(txnId))
+      readHeader(tableDir, v).txnId.contains(txnId))
 
   /** Drop one superseded manifest (vacuum's log-pruning half), plus any
-    * fallback-path claim file and parquet checkpoint it left behind. */
+    * fallback-path claim file and older builds' parquet checkpoint it
+    * left behind. */
   def deleteVersion(tableDir: Path, version: Long): Unit = {
     Files.deleteIfExists(manifestPath(tableDir, version))
     Files.deleteIfExists(claimPath(tableDir, version))

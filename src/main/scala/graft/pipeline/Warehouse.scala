@@ -155,8 +155,10 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * (column, lo, hi) range intersects its recorded [min, max] — the
     * compound-predicate payoff of declaring several `statsCols` (a
     * time-and-key box query opens the files in the intersection, not
-    * the union). Pruning stays pure driver-side manifest arithmetic;
-    * the probe file's schema is resolved ONCE for all columns.
+    * the union). The survivors come from [[pruneBox]]'s pruner, pure
+    * driver-side arithmetic over the resolved text manifest: planning
+    * the read starts no Spark job when the version records a uniform
+    * schema (the probe file's schema is then planned, not read).
     *
     * `parts` adds PARTITION-IDENTITY pruning: `(column, value)`
     * equalities on the table's partition columns, composed with the
@@ -172,12 +174,18 @@ final case class Warehouse(spark: SparkSession, root: String) {
     require(ranges.nonEmpty || parts.nonEmpty,
       "readBox needs at least one (column, lo, hi) range or (column, value) partition")
     val dir = tableDir(table)
-    val head = TxnLog.versions(dir).lastOption.getOrElse(
+    val m = TxnLog.current(dir).getOrElse(
       throw new IllegalArgumentException(s"no such table: $table"))
-    distributedManifest(dir, head) match {
-      case Some(meta) => readBoxDistributed(dir, table, head, meta, ranges, parts)
-      case None       => readBoxDriver(dir, table, ranges, parts)
-    }
+    val survivors = pruned(m, table, ranges, parts)
+    // pruning everything is a legitimate answer (query range outside every
+    // file's [min,max]): the result is an EMPTY frame with the table
+    // schema, not a failed read. The residual predicate is built from the
+    // READ frame's schema — partition columns exist only there (they are
+    // directory segments, not footer columns).
+    val files = if (survivors.isEmpty) m.files else survivors
+    val all = readSnapshot(dir, table, m.version, files, schemaFor(m, files))
+    val out = if (survivors.isEmpty) all.limit(0) else all
+    out.where(boxPartsPred(ranges, parts, out.schema))
   }
 
   /** Does `f`'s partition identity admit every `(column, value)`
@@ -188,191 +196,38 @@ final case class Warehouse(spark: SparkSession, root: String) {
         .forall(_ == s"$c=$v")
     }
 
-  /** Driver-side pruning (tables whose chain has no parquet checkpoint):
-    * manifest-string comparison over the resolved text manifest. At
-    * ~10^6 files this is the ~100 MB-envelope path the checkpoint form
-    * exists to supersede; below that it is the cheaper one (no job). */
-  private def readBoxDriver(dir: Path, table: String,
-      ranges: Seq[(String, String, String)],
-      parts: Seq[(String, String)]): DataFrame = {
-    val m = TxnLog.current(dir).getOrElse(
+  /** Surviving file paths of a box query — the pruning half of
+    * [[readBox]], exposed for introspection. The same single driver-side
+    * pruner, so it starts no job either. */
+  def pruneBox(table: String, ranges: Seq[(String, String, String)],
+               parts: Seq[(String, String)] = Nil): Seq[String] = {
+    require(ranges.nonEmpty || parts.nonEmpty,
+      "pruneBox needs at least one (column, lo, hi) range or (column, value) partition")
+    val m = TxnLog.current(tableDir(table)).getOrElse(
       throw new IllegalArgumentException(s"no such table: $table"))
+    pruned(m, table, ranges, parts)
+  }
+
+  /** The one zone-map pruner: the files of `m` (in manifest order) inside
+    * every named partition whose recorded ranges intersect every
+    * `(column, lo, hi)`. One probe-file schema serves every ranged
+    * column. The resolved manifest lives on the driver already (the
+    * envelope [[TxnLog]] documents), so pruning it costs no job. */
+  private def pruned(m: Manifest, table: String,
+                     ranges: Seq[(String, String, String)],
+                     parts: Seq[(String, String)]): Seq[String] = {
     parts.foreach { case (c, _) =>
       require(m.partitionCols.contains(c),
         s"$table is not partitioned by $c (partition columns: ${m.partitionCols.mkString(",")})")
     }
     val pFiles = m.files.filter(partMatches(_, parts))
-    val survivors =
-      if (ranges.isEmpty) pFiles.toSet
-      else {
-        val schema = probeSchema(dir, table, m)
-        ranges
-          .map { case (c, lo, hi) =>
-            prunedFiles(m, table, c, lo, hi, schema(c).dataType).toSet
-          }
-          .reduce(_ intersect _)
-          .intersect(pFiles.toSet)
-      }
-    // pruning everything is a legitimate answer (query range outside every
-    // file's [min,max]): the result is an EMPTY frame with the table
-    // schema, not a failed read. The residual predicate is built from the
-    // READ frame's schema — partition columns exist only there (they are
-    // directory segments, not footer columns).
-    val files = if (survivors.isEmpty) m.files else m.files.filter(survivors)
-    val all = readSnapshot(dir, table, m.version, files, schemaFor(m, files))
-    val out = if (survivors.isEmpty) all.limit(0) else all
-    out.where(boxPartsPred(ranges, parts, out.schema))
-  }
-
-  /** DISTRIBUTED pruning: zone-map file skipping evaluated as a
-    * DataFrame filter over the parquet checkpoint (+ folded deltas) in
-    * executors — the driver materializes only the SURVIVING paths, never
-    * the full file list or its stats. This is what keeps a box query's
-    * metadata cost bounded at ~10^6-file tables. Same semantics as
-    * [[readBoxDriver]]: a file without stats for a ranged column is
-    * never pruned; comparisons are typed via cast (the stats strings are
-    * the documented lossless round-trip forms). */
-  private def readBoxDistributed(dir: Path, table: String, head: Long,
-      meta: DataFrame, ranges: Seq[(String, String, String)],
-      parts: Seq[(String, String)]): DataFrame = {
-    val hdr = TxnLog.readHeader(dir, head)
-    ranges.foreach { case (c, _, _) =>
-      require(hdr.statsCols.contains(c),
-        s"$table carries no zone map for $c (stats columns: ${hdr.statsCols.mkString(",")})")
-    }
-    parts.foreach { case (c, _) =>
-      require(hdr.partitionCols.contains(c),
-        s"$table is not partitioned by $c (partition columns: ${hdr.partitionCols.mkString(",")})")
-    }
-    val sub = schemaFor(hdr.partitionCols, hdr.schema, whole = false)
-    // partition-identity pruning composes with the zone maps INSIDE the
-    // same executor-side filter: the checkpoint row's `partition` map is
-    // the file's col=value identity, and a partition equality becomes
-    // one more conjunct next to the range intersections — one metadata
-    // job either way
-    val metaP =
-      if (parts.isEmpty) meta
-      else meta.filter(parts.map { case (c, v) =>
-        val p = try_element_at(col("partition"), lit(c))
-        p.isNull || p === lit(v)
-      }.reduce(_ && _))
-    // probe-file schema: a file carrying stats for every ranged column
-    // certainly carries the columns themselves (schema-evolution-safe,
-    // same rationale as [[probeSchema]])
-    val withStats =
-      if (ranges.isEmpty) lit(true)
-      else ranges.map { case (c, _, _) =>
-        map_contains_key(col("mins"), lit(c)) }.reduce(_ && _)
-    metaP.filter(withStats).select("path")
-      .head(1).headOption.map(_.getString(0)) match {
-      case None =>
-        // no partition survivor carries stats for the ranged columns —
-        // zone pruning is impossible, but the partition prune still
-        // holds; scan its survivors with the residual predicate
-        val paths = metaP.select("path").collect().map(_.getString(0)).toSeq
-        val out =
-          if (paths.isEmpty) {
-            val m = TxnLog.readVersion(dir, head)
-            readSnapshot(dir, table, head, m.files, schemaFor(m, m.files)).limit(0)
-          } else readSnapshot(dir, table, head, paths, sub)
-        out.where(boxPartsPred(ranges, parts, out.schema))
-      case Some(pf) =>
-        val schema = readSnapshot(dir, table, head, Seq(pf), sub).schema
-        val survive =
-          if (ranges.isEmpty) lit(true)
-          else ranges.map { case (c, lo, hi) =>
-            val dt = schema(c).dataType
-            val mn = try_element_at(col("mins"), lit(c)).cast(dt)
-            val mx = try_element_at(col("maxs"), lit(c)).cast(dt)
-            mn.isNull || (mn <= lit(hi).cast(dt) && mx >= lit(lo).cast(dt))
-          }.reduce(_ && _)
-        val survivors = metaP.filter(survive)
-          .select("path").collect().map(_.getString(0)).toSeq
-        val pred = boxPartsPred(ranges, parts, schema)
-        if (survivors.isEmpty)
-          readSnapshot(dir, table, head, Seq(pf), sub).limit(0).where(pred)
-        else readSnapshot(dir, table, head, survivors, sub).where(pred)
-    }
-  }
-
-  /** Surviving file paths of a box query, distributed when the chain has
-    * a checkpoint — the introspection/benchmark window into the pruning
-    * half of [[readBox]]. `types` preempts the probe-file schema read
-    * when the caller already knows the ranged columns' types. */
-  def pruneBox(table: String, ranges: Seq[(String, String, String)],
-               types: Map[String, org.apache.spark.sql.types.DataType] =
-                 Map.empty,
-               parts: Seq[(String, String)] = Nil): Seq[String] = {
-    require(ranges.nonEmpty || parts.nonEmpty,
-      "pruneBox needs at least one (column, lo, hi) range or (column, value) partition")
-    val dir = tableDir(table)
-    val head = TxnLog.versions(dir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no such table: $table"))
-    distributedManifest(dir, head) match {
-      case Some(meta) =>
-        val hdr = TxnLog.readHeader(dir, head)
-        ranges.foreach { case (c, _, _) =>
-          require(hdr.statsCols.contains(c),
-            s"$table carries no zone map for $c (stats columns: ${hdr.statsCols.mkString(",")})")
-        }
-        parts.foreach { case (c, _) =>
-          require(hdr.partitionCols.contains(c),
-            s"$table is not partitioned by $c (partition columns: ${hdr.partitionCols.mkString(",")})")
-        }
-        // partition ∩ zone-map in ONE executor-side filter (see
-        // readBoxDistributed)
-        val metaP =
-          if (parts.isEmpty) meta
-          else meta.filter(parts.map { case (c, v) =>
-            val p = try_element_at(col("partition"), lit(c))
-            p.isNull || p === lit(v)
-          }.reduce(_ && _))
-        val needProbe = ranges.exists { case (c, _, _) => !types.contains(c) }
-        val probedSchema =
-          if (!needProbe) None
-          else {
-            val withStats = ranges.map { case (c, _, _) =>
-              map_contains_key(col("mins"), lit(c)) }.reduce(_ && _)
-            metaP.filter(withStats).select("path")
-              .head(1).headOption.map(_.getString(0))
-              .map(f => readSnapshot(dir, table, head, Seq(f),
-                schemaFor(hdr.partitionCols, hdr.schema, whole = false)).schema)
-          }
-        if (needProbe && probedSchema.isEmpty)
-          // no partition survivor carries stats for the ranged columns
-          // (and the caller supplied no types): zone pruning is
-          // impossible — the partition prune still applies
-          metaP.select("path").collect().map(_.getString(0)).toSeq
-        else {
-          def dt(c: String) = types.getOrElse(c, probedSchema.get(c).dataType)
-          val survive =
-            if (ranges.isEmpty) lit(true)
-            else ranges.map { case (c, lo, hi) =>
-              val t = dt(c)
-              val mn = try_element_at(col("mins"), lit(c)).cast(t)
-              val mx = try_element_at(col("maxs"), lit(c)).cast(t)
-              mn.isNull || (mn <= lit(hi).cast(t) && mx >= lit(lo).cast(t))
-            }.reduce(_ && _)
-          metaP.filter(survive).select("path").collect().map(_.getString(0)).toSeq
-        }
-      case None =>
-        val m = TxnLog.current(dir).get
-        parts.foreach { case (c, _) =>
-          require(m.partitionCols.contains(c),
-            s"$table is not partitioned by $c (partition columns: ${m.partitionCols.mkString(",")})")
-        }
-        val pFiles = m.files.filter(partMatches(_, parts))
-        if (ranges.isEmpty) pFiles
-        else {
-          // the probe-file footer read only happens when the caller did
-          // not already supply every ranged column's type
-          lazy val schema = probeSchema(dir, table, m)
-          val surviving = ranges.map { case (c, lo, hi) =>
-            prunedFiles(m, table, c, lo, hi,
-              types.getOrElse(c, schema(c).dataType)).toSet
-          }.reduce(_ intersect _)
-          pFiles.filter(surviving.contains)
-        }
+    if (ranges.isEmpty) pFiles
+    else {
+      val schema = probeSchema(tableDir(table), table, m)
+      val surviving = ranges.map { case (c, lo, hi) =>
+        prunedFiles(m, table, c, lo, hi, schema(c).dataType).toSet
+      }.reduce(_ intersect _)
+      pFiles.filter(surviving)
     }
   }
 
@@ -393,38 +248,6 @@ final case class Warehouse(spark: SparkSession, root: String) {
     }
     (rs ++ ps).reduce(_ && _)
   }
-
-  /** Resolve the head's file-level metadata as a DATAFRAME when its
-    * delta chain bottoms out at a parquet checkpoint: checkpoint rows,
-    * minus every path a delta removed, plus the delta adds — the fold
-    * touches O(changed files) on the driver, never the full list. None
-    * when no checkpoint anchors the chain (caller falls back to text
-    * resolution). */
-  private def distributedManifest(dir: Path, head: Long): Option[DataFrame] =
-    TxnLog.deltaChainAbove(dir, head, TxnLog.hasCheckpoint(dir, _)).map {
-      case (base, deltas) =>
-        val ckpt = ManifestCheckpoint.read(spark, dir, base)
-        if (deltas.isEmpty) ckpt
-        else {
-          import spark.implicits._
-          // a path removed anywhere is excluded from the checkpoint; its
-          // latest re-add (the stats-change encoding is remove+add) lives
-          // in `state`; adds also shadow any same-named checkpoint row
-          val excluded = scala.collection.mutable.HashSet.empty[String]
-          val state = scala.collection.mutable.LinkedHashMap
-            .empty[String, CheckpointEntry]
-          deltas.foreach { d =>
-            d.removes.foreach { r => excluded += r; state.remove(r) }
-            ManifestCheckpoint.entriesOf(dir, d.statsCols, d.adds, d.addStats)
-              .foreach { e => excluded += e.path; state.update(e.path, e) }
-          }
-          val kept =
-            if (excluded.isEmpty) ckpt
-            else ckpt.join(excluded.toSeq.toDF("path"), Seq("path"), "left_anti")
-          if (state.isEmpty) kept
-          else kept.unionByName(spark.createDataset(state.values.toSeq).toDF())
-        }
-    }
 
   /** The file-skipping half of [[readBetween]], exposed for plan/test
     * introspection: which files of `m` can contain a row with `column`
@@ -635,16 +458,12 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * columns inferred from its paths exactly as a `mergeSchema` read of
     * it would. A subset of a merged version may predate a field
     * addition, so it keeps inferring (None). */
-  private def schemaFor(partitionCols: Seq[String], recorded: Option[TableSchema],
-                        whole: Boolean): Option[StructType] =
-    recorded.collect {
-      case TableSchema(s, _) if whole => s
-      case TableSchema(s, true) =>
-        StructType(s.filterNot(f => partitionCols.contains(f.name)))
-    }
-
   private def schemaFor(m: Manifest, files: Seq[String]): Option[StructType] =
-    schemaFor(m.partitionCols, m.schema, files.size == m.files.size)
+    m.schema.collect {
+      case TableSchema(s, _) if files.size == m.files.size => s
+      case TableSchema(s, true) =>
+        StructType(s.filterNot(f => m.partitionCols.contains(f.name)))
+    }
 
   /** Read schema of freshly written `files`: `df`'s columns minus
     * `partCols` are the data columns, the partition columns come from
@@ -774,7 +593,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
       if (effStats.nonEmpty) collectStats(dir, newFiles, written, effStats)
       else Map.empty[String, Seq[(String, String)]]
     CrashHooks.beforeManifestCommit(table)
-    val committed = TxnLog.commit(dir, txnId) { cur =>
+    TxnLog.commit(dir, txnId) { cur =>
       val old = cur.map(_.files).getOrElse(Seq.empty)
       val files = policy match {
         case SinkPolicy.Append    => old ++ newFiles
@@ -794,7 +613,6 @@ final case class Warehouse(spark: SparkSession, root: String) {
       ManifestData(partCols, files, effStats, inherited ++ newStats,
         nextSchema(dir, cur, partCols, files, newFiles, written))
     }
-    maybeCheckpoint(dir, committed)
     CrashHooks.afterCommit(table)
     LoadResult(table, policy.toString, n)
   }
@@ -959,7 +777,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
         if (cur.statsCols.nonEmpty)
           collectStats(dir, newFiles, written, cur.statsCols)
         else Map.empty[String, Seq[(String, String)]]
-      val committed = TxnLog.commit(dir, txnId) { now =>
+      TxnLog.commit(dir, txnId) { now =>
         if (now.map(_.version) != Some(cur.version))
           throw new java.util.ConcurrentModificationException(
             s"$table changed during upsert (v${cur.version} -> " +
@@ -969,7 +787,6 @@ final case class Warehouse(spark: SparkSession, root: String) {
           (cur.fileStats -- affectedRel) ++ newStats,
           nextSchema(dir, now, cur.partitionCols, files, newFiles, written))
       }
-      maybeCheckpoint(dir, committed)
       // rows = rows the CALLER merged (same contract as load's landed-row
       // count), not the rewrite volume — the carried-over survivors of
       // affected files are an implementation detail of copy-on-write
@@ -1139,7 +956,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
       if (cur.statsCols.nonEmpty)
         collectStats(dir, newFiles, written, cur.statsCols)
       else Map.empty[String, Seq[(String, String)]]
-    val committed = TxnLog.commit(dir) { now =>
+    TxnLog.commit(dir) { now =>
       val head = now.map(_.files).getOrElse(Seq.empty)
       val merged = TxnLog.mergeRewrite(cur.files, head, newFiles).getOrElse(
         throw new java.util.ConcurrentModificationException(
@@ -1156,7 +973,6 @@ final case class Warehouse(spark: SparkSession, root: String) {
         inherited ++ newStats,
         nextSchema(dir, now, cur.partitionCols, merged, newFiles, written))
     }
-    maybeCheckpoint(dir, committed)
     LoadResult(table, label, n)
   }
 
@@ -1195,16 +1011,13 @@ final case class Warehouse(spark: SparkSession, root: String) {
         .filter(v => !TxnLog.commitTime(dir, v).isAfter(cutoff)).toSet
       if (chain.size > 1 && chain.init.exists(prunable)) {
         val cur = TxnLog.readVersion(dir, head)
-        val ck = TxnLog.commit(dir, cur.txnId, forceSnapshot = true)(now =>
+        TxnLog.commit(dir, cur.txnId, forceSnapshot = true)(now =>
           // rebuilt against the latest head in case a writer races us —
           // checkpointing must never roll back a concurrent commit
           now.map(m => ManifestData(m.partitionCols, m.files, m.statsCols,
               m.fileStats, m.schema))
             .getOrElse(ManifestData(cur.partitionCols, cur.files,
               cur.statsCols, cur.fileStats, cur.schema)))
-        // a vacuum checkpoint is exactly the log-collapse point: publish
-        // the parquet form too, whatever the version's cadence position
-        maybeCheckpoint(dir, ck, force = true)
         versions = TxnLog.versions(dir)
       }
     }
@@ -1254,18 +1067,6 @@ final case class Warehouse(spark: SparkSession, root: String) {
   }
 
   private def path(table: String): String = tableDir(table).toString
-
-  /** Post-commit checkpoint cadence: every [[TxnLog.SnapshotEvery]]-th
-    * version (the text-snapshot boundary) also publishes the parquet
-    * checkpoint; `force` does so regardless (vacuum's log collapse). A
-    * checkpoint is DERIVED state — its write failing must never fail an
-    * already-durable commit, so errors degrade to the text-resolution
-    * fallback instead of surfacing. */
-  private def maybeCheckpoint(dir: Path, m: Manifest,
-                              force: Boolean = false): Unit =
-    if (force || m.version % TxnLog.SnapshotEvery == 0)
-      try ManifestCheckpoint.write(spark, dir, m)
-      catch { case scala.util.control.NonFatal(_) => () }
 
   /** Stream `df` into a hidden staging directory with the landed-row
     * count observed on the same pass, then slot the files into their

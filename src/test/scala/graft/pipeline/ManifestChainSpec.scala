@@ -171,30 +171,20 @@ class ManifestChainSpec extends SparkTestBase {
   private def kbatch(lo: Long, n: Int) =
     (lo until lo + n).map(i => (i, s"r$i")).toDF("k", "payload")
 
-  test("parquet checkpoint publishes on cadence; distributed pruning equals the driver walk") {
+  test("box pruning past a snapshot equals prunedFiles and a full scan") {
     val w = Warehouse(spark, tmpDir("mc8-wh"))
     (0 until 12).foreach(i =>
       w.load("t", kbatch(i * 100L, 100).coalesce(1), SinkPolicy.Append,
         statsCol = Some("k")))
     val dir = Paths.get(w.root, "t")
-    // cadence: the SnapshotEvery-th commit carries the parquet form,
-    // mid-cadence deltas do not
-    assert(TxnLog.hasCheckpoint(dir, TxnLog.SnapshotEvery))
-    assert(!TxnLog.hasCheckpoint(dir, 12L))
-    // checkpoint rows are complete and self-describing
-    val ckpt = ManifestCheckpoint.read(spark, dir, TxnLog.SnapshotEvery)
-    assert(ckpt.count() == 10)
-    assert(ckpt.where($"size".isNull).count() == 0)
-    assert(ckpt.where(org.apache.spark.sql.functions
-      .map_contains_key($"mins", "k")).count() == 10)
-    // distributed resolution (checkpoint + deltas v11, v12) prunes the
-    // SAME files the driver-side text walk does
+    // the head resolves through the v10 snapshot + deltas v11, v12; the
+    // two public pruners agree on it
     val m = TxnLog.current(dir).get
     val driver = w.prunedFiles(m, "t", "k", "150", "450").toSet
-    val dist = w.pruneBox("t", Seq(("k", "150", "450"))).toSet
-    assert(dist == driver, s"distributed $dist != driver $driver")
-    assert(dist.size == 4) // files 1..4 of the disjoint 100-row ranges
-    // the read itself matches a full scan, including post-checkpoint rows
+    val box = w.pruneBox("t", Seq(("k", "150", "450"))).toSet
+    assert(box == driver, s"pruneBox $box != prunedFiles $driver")
+    assert(box.size == 4) // files 1..4 of the disjoint 100-row ranges
+    // the read itself matches a full scan, including the deltas' rows
     val viaBox = w.readBox("t", Seq(("k", "150", "450")))
       .select("k").as[Long].collect().toSet
     val full = w.read("t").where($"k".between(150, 450))
@@ -206,10 +196,10 @@ class ManifestChainSpec extends SparkTestBase {
     assert(w.readBox("t", Seq(("k", "90000", "99999"))).count() == 0)
   }
 
-  test("partition-identity pruning composes with zone maps in both paths") {
+  test("partition-identity pruning composes with zone maps") {
     // partitioned by event_date (RelandByDate), zone maps on k; 12
     // distinct dates -> 12 one-file partitions with disjoint k ranges,
-    // parquet checkpoint at v10 + deltas v11, v12 (distributed path)
+    // snapshot at v10 + deltas v11, v12
     def batch(d: String, lo: Long) = (lo until lo + 100).toDF("k")
       .withColumn("event_date", org.apache.spark.sql.functions.lit(d).cast("date"))
       .coalesce(1)
@@ -218,13 +208,6 @@ class ManifestChainSpec extends SparkTestBase {
       w.load("t", batch(f"2026-01-${i + 1}%02d", i * 100L),
         SinkPolicy.RelandByDate("event_date"), statsCol = Some("k"))
     }
-    val dir = Paths.get(w.root, "t")
-    assert(TxnLog.hasCheckpoint(dir, TxnLog.SnapshotEvery))
-    // the checkpoint rows carry the col=value partition identity
-    val ckpt = ManifestCheckpoint.read(spark, dir, TxnLog.SnapshotEvery)
-    assert(ckpt.where(org.apache.spark.sql.functions
-      .try_element_at($"partition", org.apache.spark.sql.functions.lit("event_date"))
-      .isNotNull).count() == 10)
     // partition-only prune: exactly the one file of the named partition
     val pOnly = w.pruneBox("t", Nil, parts = Seq(("event_date", "2026-01-03")))
     assert(pOnly.size == 1 && pOnly.head.contains("event_date=2026-01-03"))
@@ -244,13 +227,12 @@ class ManifestChainSpec extends SparkTestBase {
       Seq(("event_date", "2026-01-03"))).count() == 11)
     assert(w.readBox("t", Seq(("k", "700", "710")),
       Seq(("event_date", "2026-01-03"))).count() == 0)
-    // DRIVER path (no checkpoint yet): same answers at 5 loads
+    // a short chain (5 loads, no snapshot boundary): same answers
     val w2 = Warehouse(spark, tmpDir("mc12-wh"))
     (0 until 5).foreach { i =>
       w2.load("t", batch(f"2026-01-${i + 1}%02d", i * 100L),
         SinkPolicy.RelandByDate("event_date"), statsCol = Some("k"))
     }
-    assert(!TxnLog.hasCheckpoint(Paths.get(w2.root, "t"), 5L))
     assert(w2.pruneBox("t", Nil, parts = Seq(("event_date", "2026-01-03")))
       .size == 1)
     assert(w2.pruneBox("t", Seq(("k", "250", "260")),
@@ -260,7 +242,7 @@ class ManifestChainSpec extends SparkTestBase {
     assert(w2.readBox("t", Seq(("k", "250", "260")),
       Seq(("event_date", "2026-01-03"))).count() == 11)
     // asking for a partition column the table is not partitioned by is
-    // a loud error in both paths, not a silent full scan
+    // a loud error on both tables, not a silent full scan
     intercept[IllegalArgumentException] {
       w.pruneBox("t", Nil, parts = Seq(("user", "u1")))
     }
@@ -275,14 +257,17 @@ class ManifestChainSpec extends SparkTestBase {
       w.load("t", kbatch(i * 100L, 100).coalesce(1), SinkPolicy.Append,
         statsCol = Some("k")))
     val dir = Paths.get(w.root, "t")
-    assert(TxnLog.hasCheckpoint(dir, 10L))
+    // a parquet checkpoint directory as older builds published beside
+    // every SnapshotEvery-th manifest: vacuum reclaims it with v10
+    val leftover = TxnLog.checkpointDir(dir, 10L)
+    Files.createDirectories(leftover)
+    Files.writeString(leftover.resolve("part-00000.parquet"), "stale")
     w.vacuum("t", retention = java.time.Duration.ZERO)
     val Seq(head) = TxnLog.versions(dir)
-    assert(TxnLog.hasCheckpoint(dir, head),
-      "the collapse point must carry the parquet form")
-    assert(!TxnLog.hasCheckpoint(dir, 10L),
-      "superseded checkpoints are reclaimed with their manifests")
-    // distributed pruning keeps working off the collapsed checkpoint
+    assert(TxnLog.chainVersions(dir, head) == Seq(head))
+    assert(!Files.exists(leftover),
+      "a superseded version's leftover checkpoint is reclaimed with it")
+    // pruning keeps working off the collapsed snapshot
     assert(w.pruneBox("t", Seq(("k", "150", "450"))).size == 4)
     assert(w.readBox("t", Seq(("k", "150", "450"))).count() == 301)
   }

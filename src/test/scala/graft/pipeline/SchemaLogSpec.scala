@@ -107,6 +107,25 @@ class SchemaLogSpec extends SparkTestBase {
     assert(legacyJobs > 0, "a v3 read should infer its schema with a job")
   }
 
+  test("box reads of a table past a snapshot boundary start no job") {
+    val w = Warehouse(spark, tmpDir("schema-box-jobs"))
+    (0 until 12).foreach(i =>
+      w.load("t", (i * 100L until i * 100L + 100).map(k => (k, s"r$k"))
+        .toDF("k", "payload").coalesce(1), SinkPolicy.Append,
+        statsCol = Some("k")))
+    assert(TxnLog.versions(Paths.get(w.root, "t")).size > TxnLog.SnapshotEvery)
+    val ((files, box, between), jobs) = jobsDuring((
+      w.pruneBox("t", Seq(("k", "150", "450"))),
+      w.readBox("t", Seq(("k", "150", "450"))),
+      w.readBetween("t", "k", "1150", "1160")))
+    assert(jobs == 0, s"$jobs job(s) started while planning box reads")
+    assert(files.size == 4)
+    def keys(df: DataFrame) = df.select("k").as[Long].collect().sorted.toSeq
+    val full = w.read("t")
+    assert(keys(box) == keys(full.where($"k".between(150, 450))))
+    assert(keys(between) == keys(full.where($"k".between(1150, 1160))))
+  }
+
   test("each commit shape records exactly the inferred schema") {
     val w = Warehouse(spark, tmpDir("schema-shapes"))
     val t = "t"
