@@ -70,16 +70,18 @@ import org.apache.spark.sql.functions._
   */
 object BandJoin {
 
-  /** Session-tunable geometry (defaults in parentheses): a deployment
-    * facing a known-skewed corpus lowers the threshold; evidence runs
-    * disable salting entirely (threshold Long.MaxValue) to measure the
-    * straggler they are avoiding (STRESS_r06.md does exactly that). */
-  val HotThresholdConf = "spark.graft.lsh.hotThreshold" // (1024)
-  val SaltsConf = "spark.graft.lsh.salts"               // (8)
+  /** Default geometry of [[selfCandidates]]: buckets with more than
+    * `HotThreshold` members are salted across `Salts`² join keys. A
+    * caller facing a known-skewed corpus passes a lower threshold to
+    * the explicit-geometry overload; evidence runs pass Long.MaxValue
+    * to disable salting and measure the straggler it avoids
+    * (STRESS_r06.md does exactly that). */
+  val HotThreshold = 1024L
+  val Salts = 8
 
   /** Distinct undirected candidate pairs (va < vb) from a `(id, band,
-    * k)` band table, salting buckets with more than `hotThreshold`
-    * members across `salts`² join keys. `dedup = false` skips the final
+    * k)` band table, salting buckets with more than [[HotThreshold]]
+    * members across [[Salts]]² join keys. `dedup = false` skips the final
     * distinct — correct ONLY when the band table has a single band per
     * id (one bucket each, so no pair can collide twice); the dedup's
     * shuffle of the full candidate volume is this join's single biggest
@@ -93,12 +95,8 @@ object BandJoin {
     * current callers do); an unpersisted call is correct but pays the
     * band computation up to 3×. See the object scaladoc for the
     * hot-path cache lifecycle. */
-  def selfCandidates(bands: DataFrame, dedup: Boolean = true): DataFrame = {
-    val conf = bands.sparkSession.conf
-    selfCandidates(bands,
-      conf.get(HotThresholdConf, "1024").toLong,
-      conf.get(SaltsConf, "8").toInt, dedup)
-  }
+  def selfCandidates(bands: DataFrame, dedup: Boolean = true): DataFrame =
+    selfCandidates(bands, HotThreshold, Salts, dedup)
 
   /** As [[selfCandidates(bands:org\.apache\.spark\.sql\.DataFrame,dedup:Boolean)*]],
     * with explicit geometry. */

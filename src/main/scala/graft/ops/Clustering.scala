@@ -18,14 +18,16 @@ import graft.sources.Tables
   *   - centroid updates are element-wise INTEGER sums (associative →
   *     order-independent across any partitioning) with integer division;
   *     a double-average would make centroids depend on partition order
-  *   - init is the k lowest vec_ids — reproducible, no RNG
+  *   - init is farthest-first from the lowest vec_id, or the k lowest
+  *     vec_ids for the dynamic-k forms — reproducible, no RNG
   *
-  * Per Lloyd iteration: one broadcast of k centroids out, one shuffle of
-  * map-side-combined (cluster, position) partial sums back — k·dim rows
-  * per partition, independent of corpus size. The corpus itself is
-  * scanned once per iteration and never shuffled. This is the plan
-  * Spark MLlib's KMeans runs, expressed in the engine's own operator
-  * vocabulary (broadcast + partial aggregation), at any scale.
+  * Per distributed Lloyd iteration of [[kmeansCentroids]]: k literal
+  * centroids out, one shuffle of map-side-combined (cluster, position)
+  * partial sums back — k·dim rows per partition, independent of corpus
+  * size. The corpus itself is scanned once per iteration and never
+  * shuffled. This is the plan Spark MLlib's KMeans runs, expressed in
+  * the engine's own operator vocabulary (broadcast + partial
+  * aggregation), at any scale.
   */
 object Clustering {
 
@@ -48,36 +50,25 @@ object Clustering {
     (array_position(ds, array_min(ds)) - 1).cast("int")
   }
 
-  /** Run `iters` Lloyd iterations over (vec_id, qe) rows; returns the
-    * final centroids. `quantized` must carry int64 vectors of equal
-    * dimension. */
+  /** Run `iters` Lloyd iterations over (vec_id, qe) rows from the
+    * deterministic farthest-first init; returns the final centroids.
+    * `quantized` must carry int64 vectors of equal dimension. */
   def kmeansCentroids(quantized: DataFrame, k: Int,
                       iters: Int): Seq[Seq[Long]] =
-    trainFarthestFirst(quantized, k, iters) { (base, init) =>
-      val s = base.sparkSession
-      import s.implicits._
-      var centroids = init
-      for (_ <- 1 to iters) {
-        // one narrow shuffle: (cluster, pos, value) partial-sums map-side
-        // to ≤ k·dim rows per partition before moving
-        val sums = base
-          .select(nearest($"qe", $"nrm", centroids).as("cl"),
-            posexplode($"qe").as(Seq("pos", "v")))
-          .groupBy($"cl", $"pos")
-          .agg(sum($"v").as("sv"), count(lit(1)).as("n"))
-          // `div` is exact integer division — `/` on two longs is DOUBLE
-          // division then truncation, which rounds for |sv| > 2^53 and
-          // would break the all-integer determinism contract above
-          .groupBy($"cl")
-          .agg(array_sort(collect_list(struct($"pos",
-            expr("sv div n").as("cv")))).as("vec"))
-          .select($"cl", expr("transform(vec, x -> x.cv)").as("centroid"))
-          .as[(Int, Seq[Long])].collect().toMap
-        // empty clusters keep their previous centroid
-        centroids = centroids.indices.map(i => sums.getOrElse(i, centroids(i)))
-      }
-      centroids
-    }
+    train(quantized, k, iters, lowId = false)
+
+  /** [[kmeansCentroids]] with LOWEST-vec_id init (cluster i = the
+    * (i+1)-th lowest vec_id's vector) and, past [[LocalTrainGate]], the
+    * broadcast-join labelling of [[kmeansAssignJoin]] — the large-k
+    * form. This init's oracle form stays expressible at DYNAMIC k — one
+    * ROW_NUMBER against a k computed from COUNT(*) — where
+    * farthest-first would need k unrolled CTE picks and therefore a k
+    * frozen at query-definition time. Init choice is orthogonal to what
+    * [[semdedupAdaptive]] verifies (the k-formula, the packed-long
+    * assignment, top-2 probing, the census arithmetic). */
+  def kmeansCentroidsLowId(quantized: DataFrame, k: Int,
+                           iters: Int): Seq[Seq[Long]] =
+    train(quantized, k, iters, lowId = true)
 
   /** `quantized` with its cached squared norm column `nrm`. */
   private def withNrm(quantized: DataFrame): DataFrame =
@@ -85,39 +76,44 @@ object Clustering {
     else quantized.withColumn("nrm",
       Kit.dotI64(col("qe"), col("qe")))
 
-  /** The shared trainer of [[kmeansCentroids]] and [[kmeansCentroidsJoin]]:
-    * deterministic farthest-first init (no RNG), then `iters` Lloyd
-    * rounds. Init is TWO passes regardless of k: seed with the lowest
-    * vec_id, then ONE scan takes the 16·k points farthest from the seed
-    * (ties to lowest vec_id) as a candidate pool, and the remaining k−1
-    * seeds are chosen by exact greedy farthest-first over that pool
-    * DRIVER-SIDE ([[farthestFirst]]). Spreads seeds across the data's
-    * modes like the classic k−1-scan farthest-first, but init cost no
-    * longer multiplies the corpus scan by k (at 100 TB, 2 scans instead
-    * of k+1). When the corpus is smaller than the pool — every unit-test
-    * fixture — the pool IS the corpus and the result is exact
-    * farthest-first.
+  /** The one k-means trainer: an init, then `iters` Lloyd rounds.
+    *
+    * Init is either the k lowest vec_ids (`lowId`) or deterministic
+    * farthest-first (no RNG), which is TWO passes regardless of k: seed
+    * with the lowest vec_id, then ONE scan takes the 16·k points
+    * farthest from the seed (ties to lowest vec_id) as a candidate
+    * pool, and the remaining k−1 seeds are chosen by exact greedy
+    * farthest-first over that pool DRIVER-SIDE ([[farthestFirst]]).
+    * Spreads seeds across the data's modes like the classic k−1-scan
+    * farthest-first, but init cost no longer multiplies the corpus scan
+    * by k (at 100 TB, 2 scans instead of k+1). When the corpus is
+    * smaller than the pool — every unit-test fixture — the pool IS the
+    * corpus and the result is exact farthest-first.
     *
     * Gate-sized corpora ([[LocalTrainGate]], one [[DriverLocal.rowsUpTo]]
-    * job) run ALL of it on the collected rows: seed, pool
-    * ([[seedPoolLocal]] — the same i64 arithmetic and ties as
+    * job) run ALL of it on the collected rows: the init (the k lowest
+    * vec_ids, or [[seedPoolLocal]] — the same i64 arithmetic and ties as
     * [[seedPoolDistributed]]) and the Lloyd rounds ([[lloydLocal]]),
     * since every distributed round ends in a driver collect of k
     * centroids anyway. Past the gate the corpus is cached (unless the
-    * caller already did) for the distributed seed and pool scans and
-    * `distributed`'s rounds. */
-  private def trainFarthestFirst(quantized: DataFrame, k: Int, iters: Int)(
-      distributed: (DataFrame, Seq[Seq[Long]]) => Seq[Seq[Long]]
-  ): Seq[Seq[Long]] = {
+    * caller already did) for the distributed init and
+    * [[lloydDistributed]], labelled by [[joinLabels]] (`lowId`) or
+    * [[nearestLabels]]. */
+  private def train(quantized: DataFrame, k: Int, iters: Int,
+                    lowId: Boolean): Seq[Seq[Long]] = {
     val base0 = withNrm(quantized)
     val s = base0.sparkSession
     import s.implicits._
     DriverLocal.rowsUpTo(base0.select($"vec_id", $"qe").as[(Long, Seq[Long])],
       LocalTrainGate) match {
       case Some(rows) =>
-        val (seed, pool) = seedPoolLocal(rows, k)
-        lloydLocal(rows.map(_._2.toArray), farthestFirst(seed, pool, k),
-          iters)
+        val init =
+          if (lowId) rows.sortBy(_._1).take(k).map(_._2).toSeq
+          else {
+            val (seed, pool) = seedPoolLocal(rows, k)
+            farthestFirst(seed, pool, k)
+          }
+        lloydLocal(rows.map(_._2.toArray), init, iters)
       case None =>
         // reuse the caller's cached (vec_id, qe, nrm) frame if it has one
         // — re-persisting a superset here would double-cache the corpus
@@ -125,10 +121,25 @@ object Clustering {
           base0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
         val base = if (ownCache) base0.persist() else base0
         try {
-          val (seed, pool) = seedPoolDistributed(base, k)
-          distributed(base, farthestFirst(seed, pool, k))
+          val init =
+            if (lowId) lowIdInit(base, k)
+            else {
+              val (seed, pool) = seedPoolDistributed(base, k)
+              farthestFirst(seed, pool, k)
+            }
+          lloydDistributed(base, init, iters)(
+            if (lowId) joinLabels else nearestLabels)
         } finally { if (ownCache) base.unpersist(); () }
     }
+  }
+
+  /** The k lowest vec_ids' vectors in vec_id order — one distributed
+    * top-k over `base` (vec_id, qe). */
+  private[ops] def lowIdInit(base: DataFrame, k: Int): Seq[Seq[Long]] = {
+    val s = base.sparkSession
+    import s.implicits._
+    base.orderBy($"vec_id").limit(k).select($"qe").as[Seq[Long]]
+      .collect().toSeq
   }
 
   /** The seed (lowest vec_id) and the 16·k pool farthest from it by
@@ -138,8 +149,7 @@ object Clustering {
       : (Seq[Long], Seq[(Long, Seq[Long])]) = {
     val s = base.sparkSession
     import s.implicits._
-    val seed: Seq[Long] =
-      base.orderBy($"vec_id").limit(1).select($"qe").as[Seq[Long]].head()
+    val seed = lowIdInit(base, 1).head
     val pool = base
       .select($"vec_id", $"qe", dist2($"qe", $"nrm", seed).as("d"))
       .orderBy($"d".desc, $"vec_id".asc).limit(16 * k)
@@ -154,20 +164,25 @@ object Clustering {
   private[ops] def seedPoolLocal(rows: Array[(Long, Seq[Long])], k: Int)
       : (Seq[Long], Seq[(Long, Seq[Long])]) = {
     val seed = rows.minBy(_._1)._2
-    val cNorm = seed.map(v => v * v).sum
-    def d(v: Seq[Long]): Long = {
-      var nrm = 0L; var dot = 0L; var i = 0
-      while (i < v.length) {
-        nrm += v(i) * v(i)
-        if (i < seed.length) dot += v(i) * seed(i)
-        i += 1
-      }
-      nrm - 2L * dot + cNorm
+    val sd = seed.toArray
+    val cNorm = dotLocal(sd, sd)
+    def d(v0: Seq[Long]): Long = {
+      val v = v0.toArray
+      dotLocal(v, v) - 2L * dotLocal(v, sd) + cNorm
     }
     val pool = rows.map(r => (d(r._2), r))
       .sortWith((x, y) => x._1 > y._1 || (x._1 == y._1 && x._2._1 < y._2._1))
       .take(16 * k).map(_._2).toSeq
     (seed, pool)
+  }
+
+  /** The i64 dot product over the common prefix of `a` and `b` — the
+    * [[graft.functions.DotProductI64]] rule, on the driver. */
+  private def dotLocal(a: Array[Long], b: Array[Long]): Long = {
+    var acc = 0L; var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) { acc += a(i) * b(i); i += 1 }
+    acc
   }
 
   /** Exact greedy farthest-first over the pool, driver-side: starting
@@ -208,8 +223,8 @@ object Clustering {
     centroids
   }
 
-  /** Corpus-row bound under which the Lloyd ROUNDS (and, in
-    * [[trainFarthestFirst]], the init) run on the driver, decided by one
+  /** Corpus-row bound under which [[train]]'s init and Lloyd rounds
+    * run on the driver, decided by one
     * [[DriverLocal.rowsUpTo]] job whose rows they then train on:
     * 16,384 vectors × 64 dims × 8 B ≈ 8 MB collected — the bounded-
     * artifact class of the k-means seed pools (which already collect
@@ -221,30 +236,23 @@ object Clustering {
   private[ops] val LocalTrainGate = 16384L
 
   /** Driver-local Lloyd rounds — the IDENTICAL integer arithmetic as
-    * the distributed loops ([[kmeansCentroids]]' nearest-expression
-    * form and [[lloydJoin]]'s packed-min join form, which are
-    * themselves parity-pinned): squared distance `nrm − 2·⟨v,c⟩ + |c|²`
+    * [[lloydDistributed]] under either labelling ([[nearestLabels]]'
+    * expression form, [[joinLabels]]' packed-min join form): squared
+    * distance `nrm − 2·⟨v,c⟩ + |c|²`
     * with the dot over the common prefix (the [[graft.functions.DotProductI64]]
     * rule), argmin ties to the LOWEST cluster index, per-(cluster,
     * position) i64 sums divided with truncation toward zero (Scala `/`
     * ≡ Spark `div` — the oracle's documented convention), empty
     * clusters keep their previous centroid. ClusteringSpec pins
-    * centroid-for-centroid parity against both distributed forms. */
+    * centroid-for-centroid parity against the distributed loop under
+    * both labellings. */
   private[ops] def lloydLocal(vecs: Array[Array[Long]],
       init: Seq[Seq[Long]], iters: Int): Seq[Seq[Long]] = {
     var centroids: Array[Array[Long]] = init.map(_.toArray).toArray
-    val nrms = vecs.map { v =>
-      var s = 0L; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      s
-    }
+    val nrms = vecs.map(v => dotLocal(v, v))
     for (_ <- 1 to iters) {
       val k = centroids.length
-      val cnorms = centroids.map { c =>
-        var s = 0L; var i = 0
-        while (i < c.length) { s += c(i) * c(i); i += 1 }
-        s
-      }
+      val cnorms = centroids.map(c => dotLocal(c, c))
       // per-cluster, per-position sums and counts (counts per position:
       // bit-exact with the distributed groupBy(cl, pos) on ragged input)
       val dim = vecs.foldLeft(0)((m, v) => math.max(m, v.length))
@@ -257,12 +265,7 @@ object Clustering {
         var bestD = Long.MaxValue
         var c = 0
         while (c < k) {
-          val cc = centroids(c)
-          val n = math.min(v.length, cc.length)
-          var dot = 0L
-          var i = 0
-          while (i < n) { dot += v(i) * cc(i); i += 1 }
-          val d = nrms(vi) - 2L * dot + cnorms(c)
+          val d = nrms(vi) - 2L * dotLocal(v, centroids(c)) + cnorms(c)
           if (d < bestD) { bestD = d; best = c }
           c += 1
         }
@@ -309,24 +312,30 @@ object Clustering {
     * explicit toward-zero CASE; nearest-centroid ties break to the
     * lowest cluster index in both (array_position-first-min ≡
     * ROW_NUMBER ordered by (d, cl)). */
-  private def kmeansOracleSql(k: Int, iters: Int, poolMult: Int): String = {
-    val ctes = Seq.newBuilder[String]
-    def cte(name: String, body: String): Unit =
-      ctes += s"$name AS MATERIALIZED ($body)"
-    cte("q",
-      """SELECT vec_id,
-        |  list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qe
-        |FROM embeddings""".stripMargin)
-    cte("ql",
-      """SELECT vec_id, CAST(i AS INT) AS pos, qe[i+1] AS v
-        |FROM q, UNNEST(range(len(qe))) t(i)""".stripMargin)
-    cte("sd", "SELECT qe FROM q ORDER BY vec_id LIMIT 1")
-    cte("sl",
-      """SELECT CAST(i AS INT) AS pos, qe[i+1] AS v
-        |FROM sd, UNNEST(range(len(qe))) t(i)""".stripMargin)
-    kmeansChain(cte, k, iters, poolMult)
-    ctes.result().mkString("WITH ", ",\n", "") +
+  private def kmeansOracleSql(k: Int, iters: Int, poolMult: Int): String =
+    materialized { cte =>
+      cte("q",
+        """SELECT vec_id,
+          |  list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qe
+          |FROM embeddings""".stripMargin)
+      cte("ql",
+        """SELECT vec_id, CAST(i AS INT) AS pos, qe[i+1] AS v
+          |FROM q, UNNEST(range(len(qe))) t(i)""".stripMargin)
+      cte("sd", "SELECT qe FROM q ORDER BY vec_id LIMIT 1")
+      cte("sl",
+        """SELECT CAST(i AS INT) AS pos, qe[i+1] AS v
+          |FROM sd, UNNEST(range(len(qe))) t(i)""".stripMargin)
+      kmeansChain(cte, k, iters, poolMult)
+    }.mkString("WITH ", ",\n", "") +
       "\nSELECT cl AS cluster, CAST(COUNT(*) AS BIGINT) AS n_vecs FROM af GROUP BY cl"
+
+  /** The CTEs `emit` writes through its `cte(name, body)` argument, in
+    * order, each as `name AS MATERIALIZED (body)`. */
+  private def materialized(
+      emit: ((String, String) => Unit) => Unit): Seq[String] = {
+    val ctes = Seq.newBuilder[String]
+    emit((name, body) => ctes += s"$name AS MATERIALIZED ($body)")
+    ctes.result()
   }
 
   /** The k-means CTE chain shared by [[kmeansOracleSql]] and the
@@ -372,11 +381,7 @@ object Clustering {
   private def lloydChain(cte: (String, String) => Unit, iters: Int,
                          p: String = ""): Unit = {
     for (j <- 1 to iters) {
-      cte(s"${p}a$j",
-        s"""SELECT vec_id, cl FROM (
-           |  SELECT l.vec_id, c.cl, SUM((l.v - c.v)*(l.v - c.v)) AS d
-           |  FROM ${p}ql l JOIN ${p}k${j - 1} c ON l.pos = c.pos GROUP BY l.vec_id, c.cl)
-           |QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cl) = 1""".stripMargin)
+      cte(s"${p}a$j", nearestSql(s"${p}ql", s"${p}k${j - 1}", "= 1"))
       cte(s"${p}s$j",
         s"""SELECT a.cl, l.pos, CAST(SUM(l.v) AS BIGINT) AS sv,
            |  CAST(COUNT(*) AS BIGINT) AS n
@@ -387,13 +392,17 @@ object Clustering {
            |UNION ALL
            |SELECT * FROM ${p}k${j - 1} WHERE cl NOT IN (SELECT cl FROM ${p}s$j)""".stripMargin)
     }
-    cte(s"${p}af",
-      s"""SELECT vec_id, cl FROM (
-         |  SELECT l.vec_id, c.cl, SUM((l.v - c.v)*(l.v - c.v)) AS d
-         |  FROM ${p}ql l JOIN ${p}k$iters c ON l.pos = c.pos GROUP BY l.vec_id, c.cl)
-         |QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cl) = 1""".stripMargin)
-    ()
+    cte(s"${p}af", nearestSql(s"${p}ql", s"${p}k$iters", "= 1"))
   }
+
+  /** Each vector of the long corpus `ql` with its nearest centroids of
+    * `cents` (cl, pos, v): the ROW_NUMBER over (d, cl) satisfies
+    * `rank` ("= 1" for the nearest, ties to the lowest cl). */
+  private def nearestSql(ql: String, cents: String, rank: String): String =
+    s"""SELECT vec_id, cl FROM (
+       |  SELECT l.vec_id, c.cl, SUM((l.v - c.v)*(l.v - c.v)) AS d
+       |  FROM $ql l JOIN $cents c ON l.pos = c.pos GROUP BY l.vec_id, c.cl)
+       |QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cl) $rank""".stripMargin
 
   /** Registered form: k=8, 3 iterations over the embeddings fixture;
     * output is the per-cluster population histogram (compact at any
@@ -430,42 +439,76 @@ object Clustering {
     * over it, then exact intra-cluster pairwise cosine and the
     * keep-lowest-id verdict. */
   private def semdedupOracleSql(k: Int, iters: Int, poolMult: Int,
-                                tau: String): String = {
-    val ctes = Seq.newBuilder[String]
-    def cte(name: String, body: String): Unit =
-      ctes += s"$name AS MATERIALIZED ($body)"
-    cte("ql",
-      "SELECT vec_id, CAST(i - 1 AS INT) AS pos, v FROM flat")
-    cte("sl",
-      """SELECT CAST(i - 1 AS INT) AS pos, v FROM flat
-        |WHERE vec_id = (SELECT MIN(vec_id) FROM flat)""".stripMargin)
-    kmeansChain(cte, k, iters, poolMult)
-    cte("pairs",
-      """SELECT a.vec_id AS va, b.vec_id AS vb
-        |FROM af a JOIN af b ON a.cl = b.cl AND a.vec_id < b.vec_id""".stripMargin)
-    cte("pdots",
-      """SELECT p.va, p.vb, CAST(SUM(fa.v * fb.v) AS BIGINT) AS dot
-        |FROM pairs p
-        |JOIN ql fa ON fa.vec_id = p.va
-        |JOIN ql fb ON fb.vec_id = p.vb AND fb.pos = fa.pos
-        |GROUP BY p.va, p.vb""".stripMargin)
-    cte("drops",
-      s"""SELECT DISTINCT d.vb AS vec_id
-         |FROM pdots d
-         |JOIN norms na ON na.vec_id = d.va
-         |JOIN norms nb ON nb.vec_id = d.vb
-         |WHERE CAST(d.dot AS DOUBLE)
-         |  / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE)))
-         |  >= $tau""".stripMargin)
+                                tau: String): String =
+    semdedupOracle(tau, census = "af") { cte =>
+      cte("sl",
+        """SELECT CAST(i - 1 AS INT) AS pos, v FROM flat
+          |WHERE vec_id = (SELECT MIN(vec_id) FROM flat)""".stripMargin)
+      kmeansChain(cte, k, iters, poolMult)
+      cte("pairs",
+        """SELECT a.vec_id AS va, b.vec_id AS vb
+          |FROM af a JOIN af b ON a.cl = b.cl AND a.vec_id < b.vec_id""".stripMargin)
+    }
+
+  /** The semantic-dedup oracle shared by the three registered forms:
+    * the planted-corpus prefix, the long corpus `ql`, then the CTEs of
+    * `candidates`, which must end in `pairs` (va, vb), and the shared
+    * tail: exact pair dot products (`pdots`), the higher-id side of
+    * every pair at cosine ≥ `tau` (`drops`) and the per-cluster census
+    * over the assignment CTE `census` (vec_id, cl). */
+  private def semdedupOracle(tau: String, census: String)(
+      candidates: ((String, String) => Unit) => Unit): String =
     Similarity.plantedOraclePrefix + ",\n" +
-      ctes.result().mkString(",\n") +
-      """
+      materialized { cte =>
+        cte("ql",
+          "SELECT vec_id, CAST(i - 1 AS INT) AS pos, v FROM flat")
+        candidates(cte)
+        cte("pdots",
+          """SELECT p.va, p.vb, CAST(SUM(fa.v * fb.v) AS BIGINT) AS dot
+            |FROM pairs p
+            |JOIN ql fa ON fa.vec_id = p.va
+            |JOIN ql fb ON fb.vec_id = p.vb AND fb.pos = fa.pos
+            |GROUP BY p.va, p.vb""".stripMargin)
+        cte("drops",
+          s"""SELECT DISTINCT d.vb AS vec_id
+             |FROM pdots d
+             |JOIN norms na ON na.vec_id = d.va
+             |JOIN norms nb ON nb.vec_id = d.vb
+             |WHERE CAST(d.dot AS DOUBLE)
+             |  / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE)))
+             |  >= $tau""".stripMargin)
+      }.mkString(",\n") +
+      s"""
         |SELECT a.cl AS cluster,
         |  CAST(COUNT(*) AS BIGINT) AS n_vecs,
         |  CAST(COALESCE(SUM(CASE WHEN dr.vec_id IS NOT NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_dropped,
         |  CAST(COUNT(*) - SUM(CASE WHEN dr.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-        |FROM af a LEFT JOIN drops dr ON dr.vec_id = a.vec_id
+        |FROM $census a LEFT JOIN drops dr ON dr.vec_id = a.vec_id
         |GROUP BY a.cl""".stripMargin
+
+  /** The adaptive oracles' `kv` CTE: [[semdedupK]]'s k from COUNT(*). */
+  private def semdedupKCte(cte: (String, String) => Unit,
+                           targetFloor: Long): Unit =
+    cte("kv",
+      s"""SELECT GREATEST(8, (n + t - 1) // t) AS k FROM (
+         |  SELECT COUNT(*) AS n,
+         |    GREATEST($targetFloor,
+         |      CAST(CEIL(SQRT(2.0 * COUNT(*))) AS BIGINT)) AS t
+         |  FROM norms)""".stripMargin)
+
+  /** Lowest-vec_id init over the long corpus `${p}ql`: `${p}init`
+    * (vec_id, cl) numbers the first `kv.k` vec_ids of `norms` — `kv`
+    * a one-row CTE, `k` its column — and `${p}k0` (cl, pos, v) holds
+    * their vectors, the initial centroids of [[lloydChain]]. */
+  private def lowIdInitChain(cte: (String, String) => Unit, kv: String,
+                             k: String, p: String = ""): Unit = {
+    cte(s"${p}init",
+      s"""SELECT vec_id, CAST(rn - 1 AS INT) AS cl FROM (
+         |  SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
+         |  FROM norms), $kv
+         |WHERE rn <= $kv.$k""".stripMargin)
+    cte(s"${p}k0",
+      s"SELECT i.cl, l.pos, l.v FROM ${p}ql l JOIN ${p}init i USING (vec_id)")
   }
 
   /** Cosine threshold above which two same-cluster vectors are semantic
@@ -487,58 +530,16 @@ object Clustering {
     * [[kmeansProbeAssign]]'s top-2 multi-probe as ROW_NUMBER ≤ 2 over
     * (d, cl). */
   private def semdedupAdaptiveOracleSql(targetFloor: Long, iters: Int,
-                                        tau: String): String = {
-    val ctes = Seq.newBuilder[String]
-    def cte(name: String, body: String): Unit =
-      ctes += s"$name AS MATERIALIZED ($body)"
-    cte("ql",
-      "SELECT vec_id, CAST(i - 1 AS INT) AS pos, v FROM flat")
-    cte("kv",
-      s"""SELECT GREATEST(8, (n + t - 1) // t) AS k FROM (
-         |  SELECT COUNT(*) AS n,
-         |    GREATEST($targetFloor,
-         |      CAST(CEIL(SQRT(2.0 * COUNT(*))) AS BIGINT)) AS t
-         |  FROM norms)""".stripMargin)
-    cte("init",
-      """SELECT vec_id, CAST(rn - 1 AS INT) AS cl FROM (
-        |  SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-        |  FROM norms), kv
-        |WHERE rn <= kv.k""".stripMargin)
-    cte("k0",
-      "SELECT i.cl, l.pos, l.v FROM ql l JOIN init i USING (vec_id)")
-    lloydChain(cte, iters)
-    cte("p2",
-      s"""SELECT vec_id, cl FROM (
-         |  SELECT l.vec_id, c.cl, SUM((l.v - c.v)*(l.v - c.v)) AS d
-         |  FROM ql l JOIN k$iters c ON l.pos = c.pos GROUP BY l.vec_id, c.cl)
-         |QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cl) <= 2""".stripMargin)
-    cte("pairs",
-      """SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb
-        |FROM p2 a JOIN p2 b ON a.cl = b.cl AND a.vec_id < b.vec_id""".stripMargin)
-    cte("pdots",
-      """SELECT p.va, p.vb, CAST(SUM(fa.v * fb.v) AS BIGINT) AS dot
-        |FROM pairs p
-        |JOIN ql fa ON fa.vec_id = p.va
-        |JOIN ql fb ON fb.vec_id = p.vb AND fb.pos = fa.pos
-        |GROUP BY p.va, p.vb""".stripMargin)
-    cte("drops",
-      s"""SELECT DISTINCT d.vb AS vec_id
-         |FROM pdots d
-         |JOIN norms na ON na.vec_id = d.va
-         |JOIN norms nb ON nb.vec_id = d.vb
-         |WHERE CAST(d.dot AS DOUBLE)
-         |  / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE)))
-         |  >= $tau""".stripMargin)
-    Similarity.plantedOraclePrefix + ",\n" +
-      ctes.result().mkString(",\n") +
-      """
-        |SELECT a.cl AS cluster,
-        |  CAST(COUNT(*) AS BIGINT) AS n_vecs,
-        |  CAST(COALESCE(SUM(CASE WHEN dr.vec_id IS NOT NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_dropped,
-        |  CAST(COUNT(*) - SUM(CASE WHEN dr.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-        |FROM af a LEFT JOIN drops dr ON dr.vec_id = a.vec_id
-        |GROUP BY a.cl""".stripMargin
-  }
+                                        tau: String): String =
+    semdedupOracle(tau, census = "af") { cte =>
+      semdedupKCte(cte, targetFloor)
+      lowIdInitChain(cte, "kv", "k")
+      lloydChain(cte, iters)
+      cte("p2", nearestSql("ql", s"k$iters", "<= 2"))
+      cte("pairs",
+        """SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb
+          |FROM p2 a JOIN p2 b ON a.cl = b.cl AND a.vec_id < b.vec_id""".stripMargin)
+    }
 
   /** SEMANTIC dedup (SemDeDup-style: cluster the embedding space with
     * k-means, then exact pairwise cosine WITHIN each cluster only;
@@ -712,7 +713,15 @@ object Clustering {
     * state per vector, no window sort. Exactness: d ≤ 64·(2·10⁶)² <
     * 2⁵³, so the double-typed score is integer-exact. */
   def kmeansProbeAssign(quantized: DataFrame, centroids: Seq[Seq[Long]],
-                        probes: Int): DataFrame = {
+                        probes: Int): DataFrame =
+    probeAssignScored(quantized, centroids, probes).drop("negd")
+
+  /** [[kmeansProbeAssign]] WITH the negated squared distance `negd` of
+    * each probed centroid — the ranked form distance-bound pruning
+    * composes over. */
+  private def probeAssignScored(quantized: DataFrame,
+                                centroids: Seq[Seq[Long]],
+                                probes: Int): DataFrame = {
     val s = quantized.sparkSession
     import s.implicits._
     val cdf = centroids.zipWithIndex
@@ -726,50 +735,32 @@ object Clustering {
       .groupBy($"vec_id")
       .agg(Kit.cosTopK($"negd", $"cll", probes).as("top"))
       .select($"vec_id", explode($"top").as("t"))
-      .select($"vec_id", $"t.cid".cast("int").as("cluster"))
+      .select($"vec_id", $"t.cid".cast("int").as("cluster"),
+        $"t.cos".as("negd"))
   }
 
-  /** Lloyd iterations with join-based assignment — the large-k form of
-    * [[kmeansCentroids]] (same deterministic farthest-first init over a
-    * 16·k pool, same exact-integer centroid updates; only the
-    * per-iteration assignment differs). Identical output to
-    * [[kmeansCentroids]] for any k (parity spec at k = 8). */
-  def kmeansCentroidsJoin(quantized: DataFrame, k: Int,
-                          iters: Int): Seq[Seq[Long]] =
-    trainFarthestFirst(quantized, k, iters)(
-      lloydJoinDistributed(_, _, iters))
-
-  /** The Lloyd half of the join-based trainers: `iters` assign/update
+  /** The distributed Lloyd loop of [[train]]: `iters` assign/update
     * rounds from an arbitrary initial centroid set (the Spark mirror of
-    * the oracle's [[lloydChain]] — same exact-integer updates, empty
-    * clusters keep their previous centroid). */
-  private def lloydJoin(base: DataFrame, init: Seq[Seq[Long]],
-                        iters: Int): Seq[Seq[Long]] = {
-    val s = base.sparkSession
-    import s.implicits._
-    // gate-sized corpora: driver-local rounds, identical arithmetic —
-    // see [[LocalTrainGate]] / [[lloydLocal]] (every distributed round
-    // collects its result to the driver anyway)
-    DriverLocal.rowsUpTo(base.select($"qe").as[Seq[Long]], LocalTrainGate) match {
-      case Some(vecs) => lloydLocal(vecs.map(_.toArray), init, iters)
-      case None => lloydJoinDistributed(base, init, iters)
-    }
-  }
-
-  /** The distributed round loop of [[lloydJoin]] — every corpus past
-    * [[LocalTrainGate]]. Package-visible so ClusteringSpec can pin
-    * local/distributed parity on the same frame. */
-  private[ops] def lloydJoinDistributed(base: DataFrame,
-      init: Seq[Seq[Long]], iters: Int): Seq[Seq[Long]] = {
+    * the oracle's [[lloydChain]]). `label` gives each vector's cluster
+    * as (cl, qe) rows; then ONE narrow shuffle: (cluster, pos, value)
+    * partial-sums map-side to ≤ k·dim rows per partition before moving.
+    * Exact-integer updates; empty clusters keep their previous
+    * centroid. Package-visible so ClusteringSpec can pin parity with
+    * [[lloydLocal]] under both labellings. */
+  private[ops] def lloydDistributed(base: DataFrame, init: Seq[Seq[Long]],
+      iters: Int)(label: (DataFrame, Seq[Seq[Long]]) => DataFrame)
+      : Seq[Seq[Long]] = {
     val s = base.sparkSession
     import s.implicits._
     var centroids = init
     for (_ <- 1 to iters) {
-      val sums = kmeansAssignJoin(base, centroids)
-        .join(base.select($"vec_id", $"qe"), Seq("vec_id"))
-        .select($"cluster".as("cl"), posexplode($"qe").as(Seq("pos", "v")))
+      val sums = label(base, centroids)
+        .select($"cl", posexplode($"qe").as(Seq("pos", "v")))
         .groupBy($"cl", $"pos")
         .agg(sum($"v").as("sv"), count(lit(1)).as("n"))
+        // `div` is exact integer division — `/` on two longs is DOUBLE
+        // division then truncation, which rounds for |sv| > 2^53 and
+        // would break the all-integer determinism contract above
         .groupBy($"cl")
         .agg(array_sort(collect_list(struct($"pos",
           expr("sv div n").as("cv")))).as("vec"))
@@ -780,28 +771,21 @@ object Clustering {
     centroids
   }
 
-  /** Join-based Lloyd with LOWEST-vec_id init (cluster i = the (i+1)-th
-    * lowest vec_id's vector): the init whose oracle form stays
-    * expressible at DYNAMIC k — one ROW_NUMBER against a k computed from
-    * COUNT(*) — where farthest-first would need k unrolled CTE picks and
-    * therefore a k frozen at query-definition time. Init choice is
-    * orthogonal to what [[semdedupAdaptive]] verifies (the k-formula,
-    * the packed-long assignment, top-2 probing, the census arithmetic);
-    * the scale harness keeps farthest-first for cluster quality. */
-  def kmeansCentroidsLowId(quantized: DataFrame, k: Int,
-                           iters: Int): Seq[Seq[Long]] = {
-    val s = quantized.sparkSession
-    import s.implicits._
-    val base0 = withNrm(quantized)
-    val ownCache =
-      base0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val base = if (ownCache) base0.persist() else base0
-    try {
-      val init = base.orderBy($"vec_id").limit(k)
-        .select($"qe").as[Seq[Long]].collect().toSeq
-      lloydJoin(base, init, iters)
-    } finally { if (ownCache) base.unpersist(); () }
-  }
+  /** [[lloydDistributed]]'s labelling for [[kmeansCentroids]]: the k
+    * literal distances of [[nearest]] in one projection, no shuffle. */
+  private[ops] def nearestLabels(base: DataFrame,
+                                 centroids: Seq[Seq[Long]]): DataFrame =
+    base.select(nearest(col("qe"), col("nrm"), centroids).as("cl"),
+      col("qe"))
+
+  /** [[lloydDistributed]]'s labelling for [[kmeansCentroidsLowId]]:
+    * [[kmeansAssignJoin]]'s broadcast-table assignment joined back to
+    * the vectors — the large-k form (same clusters, ties included). */
+  private[ops] def joinLabels(base: DataFrame,
+                              centroids: Seq[Seq[Long]]): DataFrame =
+    kmeansAssignJoin(base, centroids)
+      .join(base.select(col("vec_id"), col("qe")), Seq("vec_id"))
+      .select(col("cluster").as("cl"), col("qe"))
 
   /** Oracle for [[semdedupTwoLevel]]: the adaptive k-formula (shared
     * arithmetic with [[semdedupAdaptiveOracleSql]]) split into K1 =
@@ -811,72 +795,28 @@ object Clustering {
     * exact int64 in both engines), and the census cell is
     * coarse·K2 + fine. */
   private def semdedupTwoLevelOracleSql(targetFloor: Long, iters: Int,
-                                        tau: String): String = {
-    val ctes = Seq.newBuilder[String]
-    def cte(name: String, body: String): Unit =
-      ctes += s"$name AS MATERIALIZED ($body)"
-    cte("ql",
-      "SELECT vec_id, CAST(i - 1 AS INT) AS pos, v FROM flat")
-    cte("kv",
-      s"""SELECT GREATEST(8, (n + t - 1) // t) AS k FROM (
-         |  SELECT COUNT(*) AS n,
-         |    GREATEST($targetFloor,
-         |      CAST(CEIL(SQRT(2.0 * COUNT(*))) AS BIGINT)) AS t
-         |  FROM norms)""".stripMargin)
-    cte("kv2",
-      """SELECT k, k1, (k + k1 - 1) // k1 AS k2 FROM (
-        |  SELECT k, CAST(CEIL(SQRT(k)) AS BIGINT) AS k1 FROM kv)""".stripMargin)
-    cte("init",
-      """SELECT vec_id, CAST(rn - 1 AS INT) AS cl FROM (
-        |  SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-        |  FROM norms), kv2
-        |WHERE rn <= kv2.k1""".stripMargin)
-    cte("k0",
-      "SELECT i.cl, l.pos, l.v FROM ql l JOIN init i USING (vec_id)")
-    lloydChain(cte, iters)
-    cte("rql",
-      s"""SELECT l.vec_id, l.pos, l.v - c.v AS v
-         |FROM ql l
-         |JOIN af a USING (vec_id)
-         |JOIN k$iters c ON c.cl = a.cl AND c.pos = l.pos""".stripMargin)
-    cte("rinit",
-      """SELECT vec_id, CAST(rn - 1 AS INT) AS cl FROM (
-        |  SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-        |  FROM norms), kv2
-        |WHERE rn <= kv2.k2""".stripMargin)
-    cte("rk0",
-      "SELECT i.cl, l.pos, l.v FROM rql l JOIN rinit i USING (vec_id)")
-    lloydChain(cte, iters, p = "r")
-    cte("cellaf",
-      """SELECT a1.vec_id, CAST(a1.cl * kv2.k2 + a2.cl AS INT) AS cl
-        |FROM af a1 JOIN raf a2 USING (vec_id), kv2""".stripMargin)
-    cte("pairs",
-      """SELECT a.vec_id AS va, b.vec_id AS vb
-        |FROM cellaf a JOIN cellaf b ON a.cl = b.cl AND a.vec_id < b.vec_id""".stripMargin)
-    cte("pdots",
-      """SELECT p.va, p.vb, CAST(SUM(fa.v * fb.v) AS BIGINT) AS dot
-        |FROM pairs p
-        |JOIN ql fa ON fa.vec_id = p.va
-        |JOIN ql fb ON fb.vec_id = p.vb AND fb.pos = fa.pos
-        |GROUP BY p.va, p.vb""".stripMargin)
-    cte("drops",
-      s"""SELECT DISTINCT d.vb AS vec_id
-         |FROM pdots d
-         |JOIN norms na ON na.vec_id = d.va
-         |JOIN norms nb ON nb.vec_id = d.vb
-         |WHERE CAST(d.dot AS DOUBLE)
-         |  / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE)))
-         |  >= $tau""".stripMargin)
-    Similarity.plantedOraclePrefix + ",\n" +
-      ctes.result().mkString(",\n") +
-      """
-        |SELECT a.cl AS cluster,
-        |  CAST(COUNT(*) AS BIGINT) AS n_vecs,
-        |  CAST(COALESCE(SUM(CASE WHEN dr.vec_id IS NOT NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_dropped,
-        |  CAST(COUNT(*) - SUM(CASE WHEN dr.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-        |FROM cellaf a LEFT JOIN drops dr ON dr.vec_id = a.vec_id
-        |GROUP BY a.cl""".stripMargin
-  }
+                                        tau: String): String =
+    semdedupOracle(tau, census = "cellaf") { cte =>
+      semdedupKCte(cte, targetFloor)
+      cte("kv2",
+        """SELECT k, k1, (k + k1 - 1) // k1 AS k2 FROM (
+          |  SELECT k, CAST(CEIL(SQRT(k)) AS BIGINT) AS k1 FROM kv)""".stripMargin)
+      lowIdInitChain(cte, "kv2", "k1")
+      lloydChain(cte, iters)
+      cte("rql",
+        s"""SELECT l.vec_id, l.pos, l.v - c.v AS v
+           |FROM ql l
+           |JOIN af a USING (vec_id)
+           |JOIN k$iters c ON c.cl = a.cl AND c.pos = l.pos""".stripMargin)
+      lowIdInitChain(cte, "kv2", "k2", p = "r")
+      lloydChain(cte, iters, p = "r")
+      cte("cellaf",
+        """SELECT a1.vec_id, CAST(a1.cl * kv2.k2 + a2.cl AS INT) AS cl
+          |FROM af a1 JOIN raf a2 USING (vec_id), kv2""".stripMargin)
+      cte("pairs",
+        """SELECT a.vec_id AS va, b.vec_id AS vb
+          |FROM cellaf a JOIN cellaf b ON a.cl = b.cl AND a.vec_id < b.vec_id""".stripMargin)
+    }
 
   /** The PRODUCTION form of semantic dedup, oracle-checked at fixture
     * scale (round-8 verdict #5): everything the 100 TB scale story
@@ -907,6 +847,12 @@ object Clustering {
   // ---------------------------------------------------------------------
   // Coarse/fine two-level quantizer — past the single-level pack bound
   // ---------------------------------------------------------------------
+
+  /** The measured recall-density floor (STRESS_r12 §5): probe-2×2
+    * census recall holds ≥ 98% at ≥ ~488 vectors/cell and drops below
+    * the bar at ~244; 480 keeps the power-of-two snap's fine end at
+    * the measured-green 488 point (2M → 4,096, 4M → 8,192). */
+  private val LatticeDensityFloor = 480L
 
   /** Corpus-adaptive cell count for the TWO-LEVEL quantizer — the
     * measured-optimal lattice of STRESS_r10 §1, promoted to the
@@ -949,12 +895,6 @@ object Clustering {
     * bound (k ≤ ~10⁹ cells ≈ 10¹² vectors). The registered
     * `semdedup_twolevel` keeps [[semdedupK]]'s oracle-pinned formula
     * byte-identical — this is the harness/production dial. */
-  /** The measured recall-density floor (STRESS_r12 §5): probe-2×2
-    * census recall holds ≥ 98% at ≥ ~488 vectors/cell and drops below
-    * the bar at ~244; 480 keeps the power-of-two snap's fine end at
-    * the measured-green 488 point (2M → 4,096, 4M → 8,192). */
-  private val LatticeDensityFloor = 480L
-
   def semdedupK2(n: Long, minClusterSize: Long = 64L): Int = {
     val balance = math.pow(n / 2.0, 2.0 / 3.0)
     val densityCap = n.toDouble / LatticeDensityFloor
@@ -998,20 +938,21 @@ object Clustering {
     (k1, k2)
   }
 
-  /** The residual corpus: each vector minus its nearest coarse centroid,
-    * with the coarse assignment carried alongside — exact int64
+  /** The residual corpus: each vector minus its coarse centroid under
+    * `asg` (vec_id, cluster) — the nearest ([[kmeansAssignJoin]]) or
+    * each probed one — with the coarse cell carried alongside — exact int64
     * subtraction (`zip_with`), so the fine level trains and assigns in
     * the same integer-deterministic domain as the coarse. Residual
     * magnitudes stay far inside the pack-guard bound for unit-quantized
     * input: |r|² ≤ d(q, nearest coarse) ≤ 4·10¹², so fine distances are
     * ≤ ~1.6·10¹³ vs the 2.8·10¹⁴ guard. */
-  private def residuals(q: DataFrame,
-                        coarse: Seq[Seq[Long]]): DataFrame = {
+  private def residuals(q: DataFrame, coarse: Seq[Seq[Long]],
+                        asg: DataFrame): DataFrame = {
     val s = q.sparkSession
     import s.implicits._
     val cdf = coarse.zipWithIndex.map { case (c, i) => (i, c) }
       .toDF("coarse", "cqe")
-    kmeansAssignJoin(q, coarse).withColumnRenamed("cluster", "coarse")
+    asg.withColumnRenamed("cluster", "coarse")
       .join(q.select($"vec_id", $"qe"), Seq("vec_id"))
       .join(broadcast(cdf), Seq("coarse"))
       .select($"vec_id", $"coarse",
@@ -1044,7 +985,7 @@ object Clustering {
     require(k1 <= 32768 && k2 <= 32768,
       s"two-level split $k1 x $k2 exceeds the per-level pack bound")
     val cs1 = kmeansCentroidsLowId(q, k1, iters)
-    val r = residuals(q, cs1).persist()
+    val r = residuals(q, cs1, kmeansAssignJoin(q, cs1)).persist()
     try (cs1, kmeansCentroidsLowId(r, k2, iters))
     finally { r.unpersist(); () }
   }
@@ -1060,13 +1001,23 @@ object Clustering {
     val s = q.sparkSession
     import s.implicits._
     val k2 = cs2.size
-    val r = residuals(q, cs1).persist()
+    val r = residuals(q, cs1, kmeansAssignJoin(q, cs1)).persist()
     r.select($"vec_id", $"coarse")
       .join(kmeansAssignJoin(r, cs2).withColumnRenamed("cluster", "fine"),
         Seq("vec_id"))
       .select($"vec_id",
         ($"coarse" * k2 + $"fine").cast("int").as("cluster"))
   }
+
+  /** Each vector against each of its top-`probes` coarse cells: the
+    * residual against THAT probed coarse centroid, under the synthetic
+    * id vec_id·K1 + coarse (see [[twoLevelProbeCellAssign]]) —
+    * (vec_id, qe, nrm) rows for a fine assignment. */
+  private def probedResiduals(q: DataFrame, cs1: Seq[Seq[Long]],
+                              probes: Int): DataFrame =
+    residuals(q, cs1, kmeansProbeAssign(q, cs1, probes))
+      .select((col("vec_id") * cs1.size.toLong + col("coarse")).as("vec_id"),
+        col("qe"), col("nrm"))
 
   /** COARSE-level multi-probe for the two-level quantizer — the proper
     * IVF form: each vector explodes into its top-`probes` coarse cells
@@ -1089,49 +1040,14 @@ object Clustering {
   def twoLevelProbeCellAssign(q: DataFrame, cs1: Seq[Seq[Long]],
                               cs2: Seq[Seq[Long]], probes: Int,
                               fineProbes: Int = 1): DataFrame = {
-    val s = q.sparkSession
-    import s.implicits._
     val k1 = cs1.size.toLong
     val k2 = cs2.size
-    val cdf = cs1.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("coarse", "cqe")
-    val probed = kmeansProbeAssign(q, cs1, probes)
-      .withColumnRenamed("cluster", "coarse")
-    val r = probed
-      .join(q.select($"vec_id", $"qe"), Seq("vec_id"))
-      .join(broadcast(cdf), Seq("coarse"))
-      .select(($"vec_id" * k1 + $"coarse").as("vec_id"),
-        expr("zip_with(qe, cqe, (a, b) -> a - b)").as("qe"))
-      .withColumn("nrm", Kit.dotI64($"qe", $"qe"))
+    val r = probedResiduals(q, cs1, probes)
     val fine =
       if (fineProbes == 1) kmeansAssignJoin(r, cs2)
       else kmeansProbeAssign(r, cs2, fineProbes)
     fine.select(expr(s"vec_id div $k1").as("vec_id"),
       expr(s"CAST((vec_id % $k1) * $k2 + cluster AS INT)").as("cluster"))
-  }
-
-  /** Scored variant of [[kmeansProbeAssign]]: the top-`probes` centroids
-    * WITH their negated squared distances — the ranked form
-    * distance-bound pruning composes over. Exactness as there: d < 2⁵³,
-    * so the double-typed score is integer-exact. */
-  private def probeAssignScored(quantized: DataFrame,
-                                centroids: Seq[Seq[Long]],
-                                probes: Int): DataFrame = {
-    val s = quantized.sparkSession
-    import s.implicits._
-    val cdf = centroids.zipWithIndex
-      .map { case (c, i) => (i, c, c.map(v => v * v).sum) }
-      .toDF("cl", "cqe", "cnrm")
-    val base = withNrm(quantized)
-    base.join(broadcast(cdf))
-      .select($"vec_id", $"cl".cast("long").as("cll"),
-        (-($"nrm" - lit(2L) * Kit.dotI64($"qe", $"cqe") + $"cnrm"))
-          .cast(DoubleType).as("negd"))
-      .groupBy($"vec_id")
-      .agg(Kit.cosTopK($"negd", $"cll", probes).as("top"))
-      .select($"vec_id", explode($"top").as("t"))
-      .select($"vec_id", $"t.cid".cast("int").as("cluster"),
-        $"t.cos".as("negd"))
   }
 
   /** [[twoLevelProbeCellAssign]] with RESIDUAL-DISTANCE pruning (round-9
@@ -1166,18 +1082,7 @@ object Clustering {
     import s.implicits._
     val k1 = cs1.size.toLong
     val k2 = cs2.size
-    val cdf = cs1.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("coarse", "cqe")
-    val probed = kmeansProbeAssign(q, cs1, probes)
-      .withColumnRenamed("cluster", "coarse")
-    val r = probed
-      .join(q.select($"vec_id", $"qe"), Seq("vec_id"))
-      .join(broadcast(cdf), Seq("coarse"))
-      .select(($"vec_id" * k1 + $"coarse").as("vec_id"),
-        expr("zip_with(qe, cqe, (a, b) -> a - b)").as("qe"))
-      .withColumn("nrm", Kit.dotI64($"qe", $"qe"))
-    val fine = probeAssignScored(r, cs2, fineProbes)
-    fine
+    probeAssignScored(probedResiduals(q, cs1, probes), cs2, fineProbes)
       .select(expr(s"vec_id div $k1").as("vid"),
         expr(s"CAST((vec_id % $k1) * $k2 + cluster AS INT)").as("cell"),
         $"negd")

@@ -22,7 +22,7 @@ import graft.sources.Tables
   * Banding geometry differs from the document family deliberately:
   * 4 bands × 4 rows, and — unlike the document family — each slot gets
   * its OWN independent hash (a disjoint 32-bit chunk of a
-  * slot-group-keyed md5, [[slotHashSql]]), not an affine transform
+  * slot-group-keyed md5, [[nameBands]]), not an affine transform
   * `(aᵢ·h + bᵢ) mod P` of one shared gram hash. The affine
   * family ([[TextOps.MH_AB]]) was this form's first cut and it is
   * QUADRATIC on names, found by measurement at 1.1M names (round 12):
@@ -77,7 +77,17 @@ object FuzzyBand {
   /** 4 bands × 4 rows over 16 INDEPENDENT per-slot minhash functions. */
   private val FB_BANDS = 4
 
-  /** Per-slot gram hash scheme: slot i reads an 8-hex-char (32-bit)
+  /** (entity_id, band, k) LSH bucket keys from an (entity_id, nm)
+    * frame — character-3-gram shingles, 16 independent per-slot hashes
+    * (scheme below), 16-slot signature, 4-slot band keys.
+    * The name-scale sibling of [[TextOps.minhashBands]], including its
+    * stage-table discipline: the SIGNATURE aggregation is persisted
+    * (every band projection and both self-join sides read it; without
+    * the pin the 4-way band union re-runs the gram/minhash aggregation
+    * per projection — measured ~2× on the registered query), dropped by
+    * the harness clearCache() convention.
+    *
+    * Per-slot gram hash scheme: slot i reads an 8-hex-char (32-bit)
     * chunk of `md5(g || '|' || i/4)` — 4 md5 calls per gram, 4 disjoint
     * chunks each ([[graft.functions.FuzzyBandSig]] is the native
     * one-pass kernel). Disjoint bit-ranges of a cryptographic hash are
@@ -89,16 +99,6 @@ object FuzzyBand {
     * a single-slot tie still needs 3 more independent slot matches to
     * band-collide); one md5 per slot measured 16 md5s/gram ≈ 3 s of
     * fixed cost on the registered query — the chunked form pays 4. */
-
-  /** (entity_id, band, k) LSH bucket keys from an (entity_id, nm)
-    * frame — character-3-gram shingles, 16 independent per-slot hashes
-    * (see [[slotHashSql]]), 16-slot signature, 4-slot band keys.
-    * The name-scale sibling of [[TextOps.minhashBands]], including its
-    * stage-table discipline: the SIGNATURE aggregation is persisted
-    * (every band projection and both self-join sides read it; without
-    * the pin the 4-way band union re-runs the gram/minhash aggregation
-    * per projection — measured ~2× on the registered query), dropped by
-    * the harness clearCache() convention. */
   private[graft] def nameBands(names: DataFrame): DataFrame = {
     val s = names.sparkSession
     import s.implicits._

@@ -16,8 +16,4 @@ object QueryDef {
   def sql(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, fn, Some(oracle.stripMargin.trim))
-
-  /** Non-SQL-expressible op → driver records a weaker rows-only check. */
-  def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
 }

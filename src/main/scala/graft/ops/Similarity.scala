@@ -445,21 +445,6 @@ object Similarity {
       .select($"vec_a", $"vec_b", Kit.quantize($"cos", 6).as("cos_q6"))
   }
 
-  /** RANDOM-PROJECTION LSH near-dup — the recall upgrade over
-    * [[embeddingNeardupStrict]]'s raw-sign-bit bands: 64 dims cap raw
-    * bands at 64 total bits, and 4×16 of them leave ~50% recall at the
-    * cos 0.90 boundary; PROJECTED bits are unlimited, so 8 bands × 16
-    * bits = 128 hyperplanes lift recall to ~99.5% at cos 0.99 / ~67% at
-    * 0.93 while a 16-bit band still collides for only ~2⁻¹⁶ of random
-    * pairs (candidates stay ∝ duplicate density).
-    *
-    * The twist that keeps it ORACLE-REPLAYABLE (the reason §9 deferred
-    * it): the projection matrix is not RNG state — weight w(b,t,d) is
-    * derived from md5("b_t_d") (15 hex digits → int, mod-centred), and
-    * md5 is bit-identical in Spark and DuckDB, so the oracle rebuilds
-    * the same matrix from `range()`s and replays the whole pipeline.
-    * Spark computes the weights ONCE driver-side (same md5) and bakes
-    * them as literal vectors into the native integer dot product. */
   /** Sign-LSH band-count derivation (the S-curve solved for the band
     * count): a pair at cosine θ agrees with one hyperplane with
     * probability p(θ) = 1 − arccos(θ)/π, collides in a B-bit band with
@@ -513,7 +498,23 @@ object Similarity {
     (projBands(0.90, bits, 0.50), bits)
   }
 
-  /** Shared threshold-parameterized random-projection near-dup builder
+  /** RANDOM-PROJECTION LSH near-dup — the recall upgrade over
+    * [[embeddingNeardupStrict]]'s raw-sign-bit bands: 64 dims cap raw
+    * bands at 64 total bits, and 4×16 of them leave ~50% recall at the
+    * cos 0.90 boundary; PROJECTED bits are unlimited, so 8 bands × 16
+    * bits = 128 hyperplanes lift recall to ~99.5% at cos 0.99 / ~67% at
+    * 0.93 while a 16-bit band still collides for only ~2⁻¹⁶ of random
+    * pairs (candidates stay ∝ duplicate density).
+    *
+    * The twist that keeps it ORACLE-REPLAYABLE (the reason §9 deferred
+    * it): the projection matrix is not RNG state — weight w(b,t,d) is
+    * derived from md5("b_t_d") (15 hex digits → int, mod-centred), and
+    * md5 is bit-identical in Spark and DuckDB, so the oracle rebuilds
+    * the same matrix from `range()`s and replays the whole pipeline.
+    * Spark computes the weights ONCE driver-side (same md5) and bakes
+    * them as literal vectors into the native integer dot product.
+    *
+    * This builder makes every threshold-parameterized form of it
     * (Spark pipeline + DuckDB oracle from one geometry): md5-derived
     * projection weights (oracle-replayable), `bands` × `bits` packed
     * sign buckets via the native [[graft.functions.SignProjectI64]],
@@ -772,28 +773,6 @@ object Similarity {
     }
   }
 
-  /** IVF-style ANN top-k — the coarse-quantizer counterpart to the sign-
-    * LSH variant (brief: "an IVF or LSH-bucketed variant as the scale
-    * path"; this engine ships both). Deterministic coarse quantizer so
-    * the DuckDB oracle replays it exactly: centroids = every m-th vector
-    * with m = ⌈√n⌉, each vector is assigned to its max-cosine centroid,
-    * a query probes its 2 nearest cells, and exact cosine re-ranks the
-    * probed candidates to top-5.
-    *
-    * CENTROID COUNT IS ⌈√n⌉ (round 8) — the standard IVF balance:
-    * K ≈ √n cells of ~√n members puts assignment at n·√n dots and
-    * per-query probe work at nprobe·√n, both sub-quadratic. The
-    * round-8 100× run measured what the former fixed divisor (every
-    * 61st vector → K = n/61) does instead: assignment degenerates to
-    * n²/61 dots — 656M at n = 200k, 573 s warm (STRESS_r08.md §4).
-    * The DuckDB oracle computes the same m from COUNT(*). Assignment
-    * and both rankings are [[graft.functions.CosTopK]] aggregations
-    * (k = 1 for assignment), not rank windows — no window shuffle or
-    * per-task sort of the n·K assignment stream.
-    *
-    * At 100 TB: assignment is one broadcast-centroids pass over the
-    * corpus (written as a stage table alongside the embeddings), and a
-    * query touches ~nprobe/√n of the corpus instead of all of it. */
   /** Shared oracle CTE block for the IVF cell structures (the SQL form
     * of [[ivfAssignProbes]] at queryEvery = 25, nprobe = 2) — appended
     * after [[oraclePrefix]] by [[ivfTopk]] and [[Pq]]'s IVF-PQ oracle. */
@@ -821,6 +800,28 @@ object Similarity {
       |  WHERE vec_id % 25 = 0
       |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cent_id) <= 2)""".stripMargin
 
+  /** IVF-style ANN top-k — the coarse-quantizer counterpart to the sign-
+    * LSH variant (brief: "an IVF or LSH-bucketed variant as the scale
+    * path"; this engine ships both). Deterministic coarse quantizer so
+    * the DuckDB oracle replays it exactly: centroids = every m-th vector
+    * with m = ⌈√n⌉, each vector is assigned to its max-cosine centroid,
+    * a query probes its 2 nearest cells, and exact cosine re-ranks the
+    * probed candidates to top-5.
+    *
+    * CENTROID COUNT IS ⌈√n⌉ (round 8) — the standard IVF balance:
+    * K ≈ √n cells of ~√n members puts assignment at n·√n dots and
+    * per-query probe work at nprobe·√n, both sub-quadratic. The
+    * round-8 100× run measured what the former fixed divisor (every
+    * 61st vector → K = n/61) does instead: assignment degenerates to
+    * n²/61 dots — 656M at n = 200k, 573 s warm (STRESS_r08.md §4).
+    * The DuckDB oracle computes the same m from COUNT(*). Assignment
+    * and both rankings are [[graft.functions.CosTopK]] aggregations
+    * (k = 1 for assignment), not rank windows — no window shuffle or
+    * per-task sort of the n·K assignment stream.
+    *
+    * At 100 TB: assignment is one broadcast-centroids pass over the
+    * corpus (written as a stage table alongside the embeddings), and a
+    * query touches ~nprobe/√n of the corpus instead of all of it. */
   val ivfTopk: QueryDef = QueryDef.sql(
     "ivf_topk",
     oraclePrefix + ",\n" + ivfCellsSql +
@@ -962,16 +963,6 @@ object Similarity {
       m, nprobe)
   }
 
-  /** Probe cells for `queries` against an EXPLICIT centroid frame
-    * ((cent_id, ce, cn) — read back from a stored index rather than
-    * re-sampled from the corpus): one broadcast of the centroid table,
-    * CosTopK fold per query, (qid, cell) out — the probe half of
-    * [[ivfAssignProbesFor]] with the centroid SOURCE decoupled, which is
-    * what [[AnnIndex]]'s query path needs (its centroids come from a
-    * warehouse table written at build time; the corpus is never scanned
-    * to find them). Same tie-breaking (cos DESC, cent_id) as everywhere
-    * else, so a stored-index probe reproduces the fresh pipeline's cells
-    * bit-for-bit. */
   /** Repartition `df` so each map task holds well under the object-hash
     * aggregation's 65,536-group fallback threshold during a per-vector
     * fold. A partition with more distinct vec_ids silently converts the
@@ -987,6 +978,16 @@ object Similarity {
     else df.repartition(parts)
   }
 
+  /** Probe cells for `queries` against an EXPLICIT centroid frame
+    * ((cent_id, ce, cn) — read back from a stored index rather than
+    * re-sampled from the corpus): one broadcast of the centroid table,
+    * CosTopK fold per query, (qid, cell) out — the probe half of
+    * [[ivfAssignProbesFor]] with the centroid SOURCE decoupled, which is
+    * what [[AnnIndex]]'s query path needs (its centroids come from a
+    * warehouse table written at build time; the corpus is never scanned
+    * to find them). Same tie-breaking (cos DESC, cent_id) as everywhere
+    * else, so a stored-index probe reproduces the fresh pipeline's cells
+    * bit-for-bit. */
   private[ops] def probeCells(queries: DataFrame, cents: DataFrame,
                               nprobe: Int): DataFrame = {
     val s = queries.sparkSession

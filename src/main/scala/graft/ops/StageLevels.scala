@@ -42,13 +42,21 @@ object StageLevels {
   /** Storage level for pinned loop state / stage tables in `s`'s
     * cluster. Overridable for evidence runs via
     * `spark.graft.pinnedLevel` = `memory_and_disk` | `disk_only`. */
-  def pinned(s: SparkSession): StorageLevel =
+  def pinned(s: SparkSession): StorageLevel = choose(s)(BigInt(0))
+
+  /** The one level decision: the `spark.graft.pinnedLevel` override if
+    * set, else MEMORY_AND_DISK exactly when every executor's pool is at
+    * least [[MinResidentPool]] and the `projected` in-memory bytes fit
+    * half the pools' sum. `projected` is by-name: an override or a
+    * squeezed pool decides without planning the frame it sizes. */
+  private def choose(s: SparkSession)(projected: => BigInt): StorageLevel =
     s.conf.get("spark.graft.pinnedLevel", "") match {
       case "memory_and_disk" => StorageLevel.MEMORY_AND_DISK
       case "disk_only"       => StorageLevel.DISK_ONLY
       case _ =>
         val caps = s.sparkContext.getExecutorMemoryStatus.values.map(_._1)
-        if (caps.nonEmpty && caps.min >= MinResidentPool)
+        if (caps.nonEmpty && caps.min >= MinResidentPool &&
+            projected <= BigInt(caps.sum) / 2)
           StorageLevel.MEMORY_AND_DISK
         else StorageLevel.DISK_ONLY
     }
@@ -58,17 +66,6 @@ object StageLevels {
     * bytes): measured ~5× on the stress corpora; 6 adds margin. */
   val TextStageExpansion: Long = 6L
 
-  /** As [[pinned]], additionally sized against the SOURCE of the stage
-    * tables: an ample pool is still squeezed when the pinned state
-    * itself scales with the corpus. [[pinned]]'s fixed floor was
-    * calibrated for loop STATE (O(nodes) labels — corpus-size-
-    * independent); stage TABLES are O(corpus), and at the 1000× corpus
-    * (5M docs, 755 MB parquet → ~4 GB of deserialized shingle sets)
-    * MEMORY_AND_DISK starved the signature aggregation to
-    * AGGREGATE_OUT_OF_MEMORY on an 8 GiB pool while DISK_ONLY completed
-    * at full width (STRESS_r08.md §13). Catalyst's sizeInBytes for a
-    * file-backed plan is the actual scan bytes; an unknown-size plan
-    * reports defaultSizeInBytes (huge) → conservatively DISK_ONLY. */
   /** Cache-batch companion to the DISK_ONLY choice, round-10 find at the
     * FIFTH stress decade (10M docs): `persist(DISK_ONLY)` still builds
     * SQL-columnar batches IN HEAP before streaming them to disk, and
@@ -105,36 +102,23 @@ object StageLevels {
     * between leaf and frame are ignored, which only ever flips toward
     * the safe disk regime. */
   def pinnedForSource(df: org.apache.spark.sql.DataFrame,
-                      expansion: Long = TextStageExpansion): StorageLevel = {
-    val s = df.sparkSession
-    s.conf.get("spark.graft.pinnedLevel", "") match {
-      case "memory_and_disk" => StorageLevel.MEMORY_AND_DISK
-      case "disk_only"       => StorageLevel.DISK_ONLY
-      case _ =>
-        val caps = s.sparkContext.getExecutorMemoryStatus.values.map(_._1)
-        val projected = df.queryExecution.optimizedPlan.collectLeaves()
-          .map(_.stats.sizeInBytes).sum * expansion
-        if (caps.nonEmpty && caps.min >= MinResidentPool &&
-            projected <= BigInt(caps.sum) / 2)
-          StorageLevel.MEMORY_AND_DISK
-        else StorageLevel.DISK_ONLY
-    }
-  }
+                      expansion: Long = TextStageExpansion): StorageLevel =
+    choose(df.sparkSession)(df.queryExecution.optimizedPlan.collectLeaves()
+      .map(_.stats.sizeInBytes).sum * expansion)
 
+  /** As [[pinned]], additionally sized against the SOURCE of the stage
+    * tables: an ample pool is still squeezed when the pinned state
+    * itself scales with the corpus. [[pinned]]'s fixed floor was
+    * calibrated for loop STATE (O(nodes) labels — corpus-size-
+    * independent); stage TABLES are O(corpus), and at the 1000× corpus
+    * (5M docs, 755 MB parquet → ~4 GB of deserialized shingle sets)
+    * MEMORY_AND_DISK starved the signature aggregation to
+    * AGGREGATE_OUT_OF_MEMORY on an 8 GiB pool while DISK_ONLY completed
+    * at full width (STRESS_r08.md §13). Catalyst's sizeInBytes for a
+    * file-backed plan is the actual scan bytes; an unknown-size plan
+    * reports defaultSizeInBytes (huge) → conservatively DISK_ONLY. */
   def pinnedFor(df: org.apache.spark.sql.DataFrame,
-                expansion: Long = TextStageExpansion): StorageLevel = {
-    val s = df.sparkSession
-    s.conf.get("spark.graft.pinnedLevel", "") match {
-      case "memory_and_disk" => StorageLevel.MEMORY_AND_DISK
-      case "disk_only"       => StorageLevel.DISK_ONLY
-      case _ =>
-        val caps = s.sparkContext.getExecutorMemoryStatus.values.map(_._1)
-        val projected =
-          df.queryExecution.optimizedPlan.stats.sizeInBytes * expansion
-        if (caps.nonEmpty && caps.min >= MinResidentPool &&
-            projected <= BigInt(caps.sum) / 2)
-          StorageLevel.MEMORY_AND_DISK
-        else StorageLevel.DISK_ONLY
-    }
-  }
+                expansion: Long = TextStageExpansion): StorageLevel =
+    choose(df.sparkSession)(
+      df.queryExecution.optimizedPlan.stats.sizeInBytes * expansion)
 }

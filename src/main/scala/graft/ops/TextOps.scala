@@ -477,7 +477,7 @@ object TextOps {
       .where(ub.cast(DoubleType) / ($"na" + $"nb" - ub) >= 0.30)
       .select($"doc_a", $"doc_b")
     val jac = $"n_both".cast(DoubleType) / ($"na" + $"nb" - $"n_both")
-    intersectionSizesHashed(plausible, hsets)
+    intersectionSizes(plausible, hsets)
       .where(jac >= 0.30)
       .select($"doc_a", $"doc_b", Kit.quantize(jac, 6).as("jaccard_q6"))
   }
@@ -500,7 +500,7 @@ object TextOps {
       .where(ub.cast(DoubleType) / least($"na", $"nb") >= 0.80)
       .select($"doc_a", $"doc_b")
     val contain = $"n_both".cast(DoubleType) / least($"na", $"nb")
-    intersectionSizesHashed(plausible, hsets)
+    intersectionSizes(plausible, hsets)
       .where(contain >= 0.80)
       .select($"doc_a", $"doc_b", Kit.quantize(contain, 6).as("containment_q6"))
   }
@@ -642,33 +642,18 @@ object TextOps {
     val s = cand.sparkSession
     import s.implicits._
     val jac = $"n_both".cast(DoubleType) / ($"na" + $"nb" - $"n_both")
-    intersectionSizes(cand, sets)
+    intersectionSizes(cand, sets.select($"doc_id",
+        expr("transform(sset, s -> xxhash64(s))").as("hset")))
       .where(jac >= 0.30)
       .select($"doc_a", $"doc_b", Kit.quantize(jac, 6).as("jaccard_q6"))
   }
 
   /** (doc_a, doc_b, n_both, na, nb) for each candidate pair — the exact
     * set-overlap numbers every verify metric (Jaccard, containment) is a
-    * formula over. */
-  private def intersectionSizes(cand: DataFrame, sets: DataFrame): DataFrame = {
-    val s = cand.sparkSession
-    import s.implicits._
-    val hsets = sets.select($"doc_id",
-      expr("transform(sset, s -> xxhash64(s))").as("hs"))
-    cand
-      .join(hsets.toDF("doc_a", "ha"), Seq("doc_a"))
-      .join(hsets.toDF("doc_b", "hb"), Seq("doc_b"))
-      .select($"doc_a", $"doc_b",
-        size(array_intersect($"ha", $"hb")).cast(LongType).as("n_both"),
-        size($"ha").cast(LongType).as("na"),
-        size($"hb").cast(LongType).as("nb"))
-  }
-
-  /** [[intersectionSizes]] over ALREADY-HASHED sets
-    * ([[shingleHashSets]]' (doc_id, hset)) — no per-side re-hash
-    * transform; the persisted 8-byte arrays join and intersect as-is. */
-  private def intersectionSizesHashed(cand: DataFrame,
-      hsets0: DataFrame): DataFrame = {
+    * formula over — from HASHED sets ((doc_id, hset), e.g.
+    * [[shingleHashSets]]'): the 8-byte arrays join and intersect as-is. */
+  private def intersectionSizes(cand: DataFrame,
+                                hsets0: DataFrame): DataFrame = {
     val s = cand.sparkSession
     import s.implicits._
     val hsets = hsets0.select($"doc_id", $"hset")
@@ -693,14 +678,6 @@ object TextOps {
   }
   private val MH_BANDS = 8 // × 2 rows each
 
-  /** Near-dup detection via MinHash banding — the 100 TB candidate
-    * generator: per-doc 16-slot minhash signature (one groupBy over the
-    * shingle hashes, no shingle self-join at all), band into 8 buckets of
-    * 2 slots, self-join on (band, bucket) — candidate volume is
-    * sum(bucket²) per band, independent of shingle document frequency.
-    * Exact Jaccard over full shingle sets then verifies the 0.30
-    * threshold, so reported pairs are never false positives; banding only
-    * bounds recall (by design, mirrored exactly in the oracle). */
   /** The shingle → hash → signature → band CTE prefix (`tok`/`sh`/`hs`/
     * `sig`/`bands`) shared by every oracle that replays the MinHash band
     * family — [[mhPairsCteSql]]'s verify chain composes on top, and
@@ -758,6 +735,14 @@ object TextOps {
       |  WHERE CAST(n_both AS DOUBLE) / (sa.n + sb.n - n_both) >= 0.30)""".stripMargin
   }
 
+  /** Near-dup detection via MinHash banding — the 100 TB candidate
+    * generator: per-doc 16-slot minhash signature (one groupBy over the
+    * shingle hashes, no shingle self-join at all), band into 8 buckets of
+    * 2 slots, self-join on (band, bucket) — candidate volume is
+    * sum(bucket²) per band, independent of shingle document frequency.
+    * Exact Jaccard over full shingle sets then verifies the 0.30
+    * threshold, so reported pairs are never false positives; banding only
+    * bounds recall (by design, mirrored exactly in the oracle). */
   val minhashLshNeardup: QueryDef =
     QueryDef.sql(
       "minhash_lsh_neardup",

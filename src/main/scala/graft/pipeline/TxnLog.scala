@@ -157,7 +157,6 @@ object TxnLog {
   val SnapshotEvery = 10L
 
   def logDir(tableDir: Path): Path = tableDir.resolve("_log")
-  def dataDir(tableDir: Path): Path = tableDir.resolve("data")
 
   private def manifestPath(tableDir: Path, version: Long): Path =
     logDir(tableDir).resolve(f"v$version%012d.manifest")

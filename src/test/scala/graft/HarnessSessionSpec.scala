@@ -1,9 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The session conf is a pure function of (cpus, env), so these pins
@@ -48,14 +44,11 @@ class HarnessSessionSpec extends AnyFunSuite {
   }
 
   test("no main source but HarnessSession calls SparkSession.builder()") {
-    val root = Paths.get("src", "main", "scala")
-    val files = scala.util.Using.resource(Files.walk(root))(
-      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
+    val files = MainSources.files
     assert(files.size > 10)
     val builder = """SparkSession\s*\.\s*builder\b""".r
-    def code(p: Path): String = Files.readString(p)
-      .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
-    val callers = files.filter(p => builder.findFirstIn(code(p)).isDefined)
+    val callers = files
+      .filter(p => builder.findFirstIn(MainSources.code(p)).isDefined)
       .map(_.getFileName.toString)
     assert(callers == Seq("HarnessSession.scala"))
   }

@@ -151,7 +151,11 @@ class ChunkShardSemdedupSpec extends SparkTestBase {
   test("join-based k-means: assignment and training match the literal form") {
     val q = quantizedFixture()
     val lit = Clustering.kmeansCentroids(q, k = 8, iters = 3)
-    val jn = Clustering.kmeansCentroidsJoin(q, k = 8, iters = 3)
+    // the distributed loop under the join labelling, from the
+    // distributed farthest-first init: the large-k form of the training
+    val (seed, pool) = Clustering.seedPoolDistributed(q, 8)
+    val jn = Clustering.lloydDistributed(q,
+      Clustering.farthestFirst(seed, pool, 8), iters = 3)(Clustering.joinLabels)
     assert(jn === lit) // training parity: identical centroid sequences
     val aLit = Clustering.kmeansAssign(q, lit).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -188,7 +192,7 @@ class ChunkShardSemdedupSpec extends SparkTestBase {
     val n = q.count()
     val k = Clustering.semdedupK(n, targetClusterSize = 64L) // small target → k > 8
     assert(k > 8)
-    val cs = Clustering.kmeansCentroidsJoin(q, k, iters = 3)
+    val cs = Clustering.kmeansCentroids(q, k, iters = 3)
     val census = Clustering
       .semdedupCensus(q, Clustering.kmeansAssignJoin(q, cs), tau = 0.90)
       .collect()
@@ -358,7 +362,7 @@ class ChunkShardSemdedupSpec extends SparkTestBase {
   test("multi-probe census: drops a superset of single-assignment drops") {
     import spark.implicits._
     val q = Similarity.plantedQuantized(spark, sfDir).persist()
-    val cs = Clustering.kmeansCentroidsJoin(q, k = 12, iters = 2)
+    val cs = Clustering.kmeansCentroids(q, k = 12, iters = 2)
     val asg = Clustering.kmeansAssignJoin(q, cs)
     def total(c: Array[org.apache.spark.sql.Row], f: String) =
       c.map(_.getAs[Long](f)).sum

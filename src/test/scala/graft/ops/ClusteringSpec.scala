@@ -40,9 +40,11 @@ class ClusteringSpec extends SparkTestBase {
 
   test("driver-local Lloyd rounds are centroid-identical to distributed") {
     // the r12 LocalTrainGate routes gate-sized corpora to lloydLocal;
-    // its rounds must be BIT-equal to the distributed join loop from
-    // the same init — including a deliberately empty cluster (the far
-    // sentinel init) and a ragged tie landscape
+    // its rounds must be BIT-equal to the distributed loop from the
+    // same init under BOTH labellings (the join form of
+    // kmeansCentroidsLowId, the expression form of kmeansCentroids) —
+    // including a deliberately empty cluster (the far sentinel init)
+    // and a ragged tie landscape
     val base = planted
       .withColumn("nrm", graft.functions.Kit.dotI64(
         org.apache.spark.sql.functions.col("qe"),
@@ -50,13 +52,36 @@ class ClusteringSpec extends SparkTestBase {
       .persist()
     val init = Seq(Seq(0L, 0L), Seq(900L, 50L), Seq(50L, 900L),
       Seq(100000L, 100000L)) // 4th centroid owns nothing
-    val dist = Clustering.lloydJoinDistributed(base, init, iters = 4)
     val local = Clustering.lloydLocal(
       base.select("qe").as[Seq[Long]].collect().map(_.toArray),
       init, iters = 4)
+    for ((name, label) <- Seq(
+        "join" -> (Clustering.joinLabels _),
+        "expression" -> (Clustering.nearestLabels _))) {
+      val dist = Clustering.lloydDistributed(base, init, iters = 4)(label)
+      assert(local == dist, name)
+    }
     base.unpersist()
-    assert(local == dist)
     assert(local(3) == Seq(100000L, 100000L)) // empty cluster kept
+  }
+
+  test("a gate-sized lowest-id init equals the distributed top-k init on shuffled partitions") {
+    // vec_ids arrive out of order across 5 partitions; the driver-side
+    // init (no iterations: the trainer returns its init) must pick the
+    // same k lowest vec_ids, in the same order, as the distributed
+    // orderBy(vec_id).limit(k) — k past the corpus size included
+    val n = 23
+    val rows = (0 until n).map { i =>
+      val id = (i * 7L) % n * 3L + 5L
+      (id, Seq(id * 11 % 13, -id, i.toLong))
+    }
+    val base = rows.toDF("vec_id", "qe").repartition(5)
+    for (k <- Seq(1, 4, n, n + 3)) {
+      val dist = Clustering.lowIdInit(base, k)
+      assert(dist.size == math.min(k, n))
+      assert(Clustering.kmeansCentroidsLowId(base, k, iters = 0) == dist,
+        s"k = $k")
+    }
   }
 
   test("an empty cluster keeps its previous centroid instead of vanishing") {
