@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -102,6 +102,16 @@ object Kit {
       org.apache.spark.sql.GraftExpr.expression(score),
       org.apache.spark.sql.GraftExpr.expression(id),
       k).toAggregateExpression())
+
+  /** The [[cosTopK]] fold as rows: group `df` by `g`, keep the `k` best
+    * (score DESC, id ASC), and explode them into one row per kept pair —
+    * (g, t: STRUCT<cos, cid>), the group column renamed to `out` when
+    * one is given. */
+  def topKRows(df: DataFrame, g: String, score: Column, id: Column, k: Int,
+               out: String = ""): DataFrame =
+    df.groupBy(col(g)).agg(cosTopK(score, id, k).as("top"))
+      .select(if (out.isEmpty) col(g) else col(g).as(out),
+        explode(col("top")).as("t"))
 
   /** Native one-pass MinHash signature (see [[MinHashSig]]) — per set
     * row: one MD5 per element folded into every affine minimum; no

@@ -299,7 +299,7 @@ final case class AnnIndex(wh: Warehouse, name: String) {
       .where($"vec_id" =!= $"qid")
       .select($"qid", $"vec_id".as("cid"), $"codes")
     val short = Pq.adcShortlistCoded(cand, queries, cb, shortlist)
-    Similarity.scoreCandidatesFor(short, corpus, queries, k)
+    Similarity.scoreCandidates(short, corpus, queries, k)
   }
 
   /** Verdict an arrival batch against the stored index —
@@ -398,7 +398,7 @@ final case class AnnIndex(wh: Warehouse, name: String) {
       .where($"vec_id" =!= $"qid")
       .select($"qid", $"vec_id".as("cid"), $"codes")
     val short = Pq.adcShortlistCoded(cand, batch, cb, 4)
-    val best = Similarity.scoreCandidatesFor(short, corpus, batch, k = 1,
+    val best = Similarity.scoreCandidates(short, corpus, batch, k = 1,
       broadcastCand = true)
     Pq.ingestVerdicts(batch, best, threshold)
   }

@@ -94,104 +94,65 @@ object AnnRouter {
     val s = base.sparkSession
     import s.implicits._
     val n = base.count()
-    val branch = choose(n)
-    val viaStore = branch != "exact" &&
+    val viaStore = choose(n) != "exact" &&
       idx.builtN.contains(n) && !idx.needsRebuild()
     if (viaStore)
       idx.topk(base.where($"vec_id" % 25 === 0), base, k = 5)
         .select($"qid", $"cid", Kit.quantize($"cos", 6).as("cos_q6"))
-    else branch match {
-      case "exact" => Similarity.exactTopkFrom(base, 5)
-      case "ivf"   => Similarity.ivfTopkFrom(base, n)
-      case _       => Pq.ivfpqFrom(base, n)
-    }
+    else rederive(base, n)
   }
 
-  val annAutoTopk: QueryDef = QueryDef.sql(
-    "ann_auto_topk",
-    Similarity.oraclePrefix + ",\n" + Similarity.ivfCellsSql + ",\n" +
-      Pq.pqSql +
-      """,
-        |xdots AS (
-        |  SELECT a.vec_id AS qid, b.vec_id AS cid,
-        |    CAST(SUM(a.v * b.v) AS BIGINT) AS dot
-        |  FROM flat a JOIN flat b ON a.i = b.i AND a.vec_id <> b.vec_id
-        |  WHERE a.vec_id % 25 = 0 AND (SELECT n FROM nn) <= 784
-        |  GROUP BY 1, 2),
-        |xsims AS (
-        |  SELECT qid, cid,
-        |    CAST(dot AS DOUBLE)
-        |      / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE))) AS cos
-        |  FROM xdots
-        |  JOIN norms na ON na.vec_id = qid
-        |  JOIN norms nb ON nb.vec_id = cid),
-        |xout AS (
-        |  SELECT qid, cid, CAST(FLOOR(cos * 1000000) AS BIGINT) AS cos_q6
-        |  FROM xsims
-        |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) <= 5),
-        |rcand AS (
-        |  SELECT DISTINCT p.qid, a.vec_id AS cid
-        |  FROM probes p JOIN assign a ON a.cell = p.cell
-        |  WHERE a.vec_id <> p.qid),
-        |idots AS (
-        |  SELECT c.qid, c.cid, CAST(SUM(fa.v * fb.v) AS BIGINT) AS dot
-        |  FROM rcand c
-        |  JOIN flat fa ON fa.vec_id = c.qid
-        |  JOIN flat fb ON fb.vec_id = c.cid AND fb.i = fa.i
-        |  WHERE (SELECT n FROM nn) > 784 AND (SELECT n FROM nn) <= 500000
-        |  GROUP BY 1, 2),
-        |isims AS (
-        |  SELECT qid, cid,
-        |    CAST(dot AS DOUBLE)
-        |      / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE))) AS cos
-        |  FROM idots
-        |  JOIN norms na ON na.vec_id = qid
-        |  JOIN norms nb ON nb.vec_id = cid),
-        |iout AS (
-        |  SELECT qid, cid, CAST(FLOOR(cos * 1000000) AS BIGINT) AS cos_q6
-        |  FROM isims
-        |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) <= 5),
-        |padc AS (
-        |  SELECT c.qid, c.cid, CAST(SUM(l.d2) AS BIGINT) AS adc_d2
-        |  FROM rcand c
-        |  JOIN codes x ON x.vec_id = c.cid
-        |  JOIN qlut l ON l.qid = c.qid AND l.m = x.m AND l.j = x.code
-        |  WHERE (SELECT n FROM nn) > 500000
-        |  GROUP BY 1, 2),
-        |pshort AS (
-        |  SELECT qid, cid FROM padc
-        |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc_d2, cid) <= 20),
-        |prdots AS (
-        |  SELECT s.qid, s.cid, CAST(SUM(fa.v * fb.v) AS BIGINT) AS dot
-        |  FROM pshort s
-        |  JOIN flat fa ON fa.vec_id = s.qid
-        |  JOIN flat fb ON fb.vec_id = s.cid AND fb.i = fa.i
-        |  GROUP BY 1, 2),
-        |prsims AS (
-        |  SELECT qid, cid,
-        |    CAST(dot AS DOUBLE)
-        |      / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE))) AS cos
-        |  FROM prdots
-        |  JOIN norms na ON na.vec_id = qid
-        |  JOIN norms nb ON nb.vec_id = cid),
-        |pout AS (
-        |  SELECT qid, cid, CAST(FLOOR(cos * 1000000) AS BIGINT) AS cos_q6
-        |  FROM prsims
-        |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) <= 5)
-        |SELECT qid, cid, cos_q6 FROM xout
-        |WHERE (SELECT n FROM nn) <= 784
-        |UNION ALL
-        |SELECT qid, cid, cos_q6 FROM iout
-        |WHERE (SELECT n FROM nn) > 784 AND (SELECT n FROM nn) <= 500000
-        |UNION ALL
-        |SELECT qid, cid, cos_q6 FROM pout
-        |WHERE (SELECT n FROM nn) > 500000""".stripMargin) { (s, dir) =>
-    val base = Similarity.quantized(s, dir)
-    val n = base.count()
+  /** The re-deriving branch of [[choose]] over a quantized corpus of
+    * `n` rows — the registered `ann_auto_topk` plan. */
+  private def rederive(base: DataFrame, n: Long): DataFrame =
     choose(n) match {
       case "exact" => Similarity.exactTopkFrom(base, 5)
       case "ivf"   => Similarity.ivfTopkFrom(base, n)
       case _       => Pq.ivfpqFrom(base, n)
+    }
+
+  val annAutoTopk: QueryDef = {
+    val exact = "(SELECT n FROM nn) <= 784"
+    val ivf = "(SELECT n FROM nn) > 784 AND (SELECT n FROM nn) <= 500000"
+    val ivfpq = "(SELECT n FROM nn) > 500000"
+    QueryDef.sql(
+      "ann_auto_topk",
+      Similarity.oraclePrefix + ",\n" + Similarity.ivfCellsSql + ",\n" +
+        Pq.pqSql + ",\n" +
+        Similarity.cosSql("x", None, exact) + ",\n" +
+        Similarity.topkSql("x", 5, out = "xout") +
+        """,
+          |rcand AS (
+          |  SELECT DISTINCT p.qid, a.vec_id AS cid
+          |  FROM probes p JOIN assign a ON a.cell = p.cell
+          |  WHERE a.vec_id <> p.qid),
+          |""".stripMargin +
+        Similarity.cosSql("i", Some(("rcand", "c")), ivf) + ",\n" +
+        Similarity.topkSql("i", 5, out = "iout") +
+        s""",
+          |padc AS (
+          |  SELECT c.qid, c.cid, CAST(SUM(l.d2) AS BIGINT) AS adc_d2
+          |  FROM rcand c
+          |  JOIN codes x ON x.vec_id = c.cid
+          |  JOIN qlut l ON l.qid = c.qid AND l.m = x.m AND l.j = x.code
+          |  WHERE $ivfpq
+          |  GROUP BY 1, 2),
+          |pshort AS (
+          |  SELECT qid, cid FROM padc
+          |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc_d2, cid) <= 20),
+          |""".stripMargin + Similarity.cosSql("pr", Some(("pshort", "s"))) +
+        ",\n" + Similarity.topkSql("pr", 5, out = "pout") +
+        s"""
+          |SELECT qid, cid, cos_q6 FROM xout
+          |WHERE $exact
+          |UNION ALL
+          |SELECT qid, cid, cos_q6 FROM iout
+          |WHERE $ivf
+          |UNION ALL
+          |SELECT qid, cid, cos_q6 FROM pout
+          |WHERE $ivfpq""".stripMargin) { (s, dir) =>
+      val base = Similarity.quantized(s, dir)
+      rederive(base, base.count())
     }
   }
 

@@ -728,13 +728,11 @@ object Clustering {
       .map { case (c, i) => (i, c, c.map(v => v * v).sum) }
       .toDF("cl", "cqe", "cnrm")
     val base = withNrm(quantized)
-    base.join(broadcast(cdf))
+    val scored = base.join(broadcast(cdf))
       .select($"vec_id", $"cl".cast("long").as("cll"),
         (-($"nrm" - lit(2L) * Kit.dotI64($"qe", $"cqe") + $"cnrm"))
           .cast(DoubleType).as("negd"))
-      .groupBy($"vec_id")
-      .agg(Kit.cosTopK($"negd", $"cll", probes).as("top"))
-      .select($"vec_id", explode($"top").as("t"))
+    Kit.topKRows(scored, "vec_id", $"negd", $"cll", probes)
       .select($"vec_id", $"t.cid".cast("int").as("cluster"),
         $"t.cos".as("negd"))
   }
@@ -911,7 +909,7 @@ object Clustering {
     * equal sides at even exponents (4,096 → 64 × 64), coarse = 2 × fine
     * at odd ones (8,192 → 128 × 64) — the coarse side gets the extra
     * factor because coarse probing is what recovers boundary pairs
-    * (see [[kmeansTwoLevelTrainSplit]]). Unlike [[twoLevelSplit]]
+    * (see [[trainLevels]]). Unlike [[twoLevelSplit]]
     * (⌈√k⌉, any k — the registered query's oracle-replayed form), this
     * is the DEFAULT-path factorization for [[semdedupK2]] lattices. */
   def latticeSplit(k: Int): (Int, Int) = {
@@ -969,39 +967,48 @@ object Clustering {
   def kmeansTwoLevelTrain(q: DataFrame, k: Int,
                           iters: Int): (Seq[Seq[Long]], Seq[Seq[Long]]) = {
     val (k1, k2) = twoLevelSplit(k)
-    kmeansTwoLevelTrainSplit(q, k1, k2, iters)
+    val (cs1, cs2, r) = trainLevels(q, k1, k2, iters)
+    r.unpersist()
+    (cs1, cs2)
   }
 
-  /** [[kmeansTwoLevelTrain]] with an EXPLICIT (K1, K2) factorization —
-    * the measurement dial for rectangular lattices (round-11 verdict
-    * #5: does a 128×64 = 8,192 split hold the recall bar at materially
-    * lower census than the frozen 64×64 power-of-4 snap mid-band?).
-    * The coarse side gets the larger factor: coarse probing is what
-    * recovers boundary pairs, so coarse granularity is where extra
-    * cells pay recall, and the fine (residual) codebook stays the
-    * cheaper broadcast. */
-  def kmeansTwoLevelTrainSplit(q: DataFrame, k1: Int, k2: Int,
-                               iters: Int): (Seq[Seq[Long]], Seq[Seq[Long]]) = {
+  /** [[kmeansTwoLevelTrain]] at an EXPLICIT (K1, K2) factorization (the
+    * coarse side gets the larger factor: coarse probing is what recovers
+    * boundary pairs, so coarse granularity is where extra cells pay
+    * recall, and the fine (residual) codebook stays the cheaper
+    * broadcast), also returning the persisted [[coarseResiduals]] the
+    * fine level trained on, so the cell assignment ([[cellsOf]]) reads
+    * that frame instead of rebuilding it. The caller unpersists it. */
+  private def trainLevels(q: DataFrame, k1: Int, k2: Int, iters: Int)
+      : (Seq[Seq[Long]], Seq[Seq[Long]], DataFrame) = {
     require(k1 <= 32768 && k2 <= 32768,
       s"two-level split $k1 x $k2 exceeds the per-level pack bound")
     val cs1 = kmeansCentroidsLowId(q, k1, iters)
-    val r = residuals(q, cs1, kmeansAssignJoin(q, cs1)).persist()
-    try (cs1, kmeansCentroidsLowId(r, k2, iters))
-    finally { r.unpersist(); () }
+    val r = coarseResiduals(q, cs1)
+    val cs2 = try kmeansCentroidsLowId(r, k2, iters)
+      catch { case e: Throwable => r.unpersist(); throw e }
+    (cs1, cs2, r)
   }
 
-  /** Single two-level cell assignment (vec_id, cluster = coarse·K2 +
-    * fine) — both levels broadcast-join packed-long assignments. The
-    * residual frame is referenced twice in the returned plan (coarse
-    * carry + fine assignment), so it is persisted as a stage table —
+  /** The residual corpus under the nearest coarse centroid, persisted
+    * as a stage table: the fine level trains on it and the cell
+    * assignment references it twice (coarse carry + fine assignment) —
     * the repo's harness-clearCache() convention, same as the BandJoin
     * stage tables. */
+  private def coarseResiduals(q: DataFrame, cs1: Seq[Seq[Long]]): DataFrame =
+    residuals(q, cs1, kmeansAssignJoin(q, cs1)).persist()
+
+  /** Single two-level cell assignment (vec_id, cluster = coarse·K2 +
+    * fine) — both levels broadcast-join packed-long assignments. */
   def twoLevelCellAssign(q: DataFrame, cs1: Seq[Seq[Long]],
-                         cs2: Seq[Seq[Long]]): DataFrame = {
-    val s = q.sparkSession
+                         cs2: Seq[Seq[Long]]): DataFrame =
+    cellsOf(coarseResiduals(q, cs1), cs2)
+
+  /** [[twoLevelCellAssign]] over already-built [[coarseResiduals]]. */
+  private def cellsOf(r: DataFrame, cs2: Seq[Seq[Long]]): DataFrame = {
+    val s = r.sparkSession
     import s.implicits._
     val k2 = cs2.size
-    val r = residuals(q, cs1, kmeansAssignJoin(q, cs1)).persist()
     r.select($"vec_id", $"coarse")
       .join(kmeansAssignJoin(r, cs2).withColumnRenamed("cluster", "fine"),
         Seq("vec_id"))
@@ -1106,8 +1113,9 @@ object Clustering {
   /** Train + single assignment — the registered-query form. */
   def semdedupTwoLevelAssign(q: DataFrame, k: Int,
                              iters: Int): DataFrame = {
-    val (cs1, cs2) = kmeansTwoLevelTrain(q, k, iters)
-    twoLevelCellAssign(q, cs1, cs2)
+    val (k1, k2) = twoLevelSplit(k)
+    val (_, cs2, r) = trainLevels(q, k1, k2, iters)
+    cellsOf(r, cs2)
   }
 
   /** Two-level semantic dedup at the PRODUCTION-DEFAULT geometry — the
@@ -1117,10 +1125,11 @@ object Clustering {
     * (n/2)^(2/3) two-level balance), probe-2 at both levels for
     * candidate generation — the configuration measured at ≥98% recall
     * and 0.88× the flat anchor's census cost (STRESS_r10 §1). Returns
-    * [[semdedupCensus]]'s per-cell verdict frame, MATERIALIZED: the two
-    * O(corpus) stage frames (assignment + probed candidates) are pinned
-    * at [[StageLevels.pinnedFor]]'s level only for the census pass and
-    * unpersisted before returning, so repeated calls accumulate nothing
+    * [[semdedupCensus]]'s per-cell verdict frame, MATERIALIZED: the
+    * O(corpus) stage frames (coarse residuals, assignment and probed
+    * candidates; the latter two pinned at [[StageLevels.pinnedFor]]'s
+    * level) live only for the census pass and are unpersisted before
+    * returning, so repeated calls accumulate nothing
     * (round-11 ADVICE — the per-call cached-frame leak semdedupCensus's
     * own contract forbids). The returned census is the one persisted
     * frame left (O(k) rows — tiny next to the corpus); unpersist it when
@@ -1131,8 +1140,8 @@ object Clustering {
     val n = q.count()
     val k = semdedupK2(n)
     val (k1, k2) = latticeSplit(k)
-    val (cs1, cs2) = kmeansTwoLevelTrainSplit(q, k1, k2, iters)
-    val asg0 = twoLevelCellAssign(q, cs1, cs2)
+    val (cs1, cs2, r) = trainLevels(q, k1, k2, iters)
+    val asg0 = cellsOf(r, cs2)
     val asg = asg0.persist(StageLevels.pinnedFor(asg0))
     val cand0 = twoLevelProbeCellAssign(q, cs1, cs2, 2, 2)
     val cand = cand0.persist(StageLevels.pinnedFor(cand0))
@@ -1142,7 +1151,7 @@ object Clustering {
           .persist(StageLevels.pinned(q.sparkSession))
       census.count()
       census
-    } finally { asg.unpersist(); cand.unpersist(); () }
+    } finally { asg.unpersist(); cand.unpersist(); r.unpersist(); () }
   }
 
   /** Semantic dedup through the TWO-LEVEL quantizer, oracle-checked:

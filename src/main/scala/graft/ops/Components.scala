@@ -464,17 +464,6 @@ object Components {
         when($"is_val0" =!= $"is_val", 1L).otherwise(0L))
   }
 
-  /** [[clusterSplitVerdicts]] from the raw documents frame: the MinHash
-    * pair stage is computed once and shared — the composed form a
-    * production pipeline runs instead of two standalone passes. */
-  def neardupClustersAndSplit(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    clusterSplitVerdicts(docs,
-      TextOps.minhashNeardupPairs(docs, StageLevels.pinnedFor(docs))
-        .select($"doc_a", $"doc_b"))
-  }
-
   val all: Seq[QueryDef] =
     Seq(neardupClusters, neardupKeepBest, leakageSafeSplit)
 }

@@ -244,14 +244,12 @@ object Pq {
       case Some(rows) => codebookOf(rows, pqCbm(rows.length))
       case None => sampledCodebook(base, pqCbm(base.count()))
     }
-    encode(base, cb)
+    val scored = encode(base, cb)
       .crossJoin(broadcast(luts(base.where($"vec_id" % 25 === 0), cb)))
       .where($"vec_id" =!= $"qid")
       .select($"qid", $"vec_id".as("cid"),
         (-adcD2($"codes", $"luts")).cast(DoubleType).as("nega"))
-      .groupBy($"qid")
-      .agg(Kit.cosTopK($"nega", $"cid", 5).as("top"))
-      .select($"qid", explode($"top").as("t"))
+    Kit.topKRows(scored, "qid", $"nega", $"cid", 5)
       .select($"qid", $"t.cid".as("cid"),
         (-$"t.cos").cast(LongType).as("adc_d2"))
   }
@@ -291,22 +289,8 @@ object Pq {
         |short AS (
         |  SELECT qid, cid FROM adc
         |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc_d2, cid) <= 20),
-        |rdots AS (
-        |  SELECT s.qid, s.cid, CAST(SUM(fa.v * fb.v) AS BIGINT) AS dot
-        |  FROM short s
-        |  JOIN flat fa ON fa.vec_id = s.qid
-        |  JOIN flat fb ON fb.vec_id = s.cid AND fb.i = fa.i
-        |  GROUP BY 1, 2),
-        |rsims AS (
-        |  SELECT qid, cid,
-        |    CAST(dot AS DOUBLE)
-        |      / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE))) AS cos
-        |  FROM rdots
-        |  JOIN norms na ON na.vec_id = qid
-        |  JOIN norms nb ON nb.vec_id = cid)
-        |SELECT qid, cid, CAST(FLOOR(cos * 1000000) AS BIGINT) AS cos_q6
-        |FROM rsims
-        |QUALIFY row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) <= 5""".stripMargin) { (s, dir) =>
+        |""".stripMargin + Similarity.cosSql("r", Some(("short", "s"))) + "\n" +
+      Similarity.topkSql("r", 5)) { (s, dir) =>
     val base = Similarity.quantized(s, dir)
     ivfpqFrom(base, base.count())
   }
@@ -321,15 +305,15 @@ object Pq {
   private[ops] def ivfpqFrom(base: DataFrame, n: Long): DataFrame = {
     val s = base.sparkSession
     import s.implicits._
+    val qs = base.where($"vec_id" % 25 === 0)
     val (assign, probes) =
-      Similarity.ivfAssignProbes(base, Similarity.ivfModulus(n), 25, 2)
+      Similarity.ivfAssignProbes(base, qs, Similarity.ivfModulus(n), 2)
     val cb = sampledCodebook(base, pqCbm(n))
     val cand = probes.join(codedAssign(assign, base, cb), Seq("cell"))
       .where($"vec_id" =!= $"qid")
       .select($"qid", $"vec_id".as("cid"), $"codes")
-    val short =
-      adcShortlistCoded(cand, base.where($"vec_id" % 25 === 0), cb, 20)
-    Similarity.scoreCandidates(short, base, k = 5)
+    val short = adcShortlistCoded(cand, qs, cb, 20)
+    Similarity.scoreCandidates(short, base, qs, k = 5)
       .select($"qid", $"cid", Kit.quantize($"cos", 6).as("cos_q6"))
   }
 
@@ -386,12 +370,10 @@ object Pq {
     def shot(qs: DataFrame): DataFrame = {
       val q = withSubs(qs.select($"vec_id", $"qe"))
         .withColumnRenamed("vec_id", "qid")
-      candCoded
+      Kit.topKRows(candCoded
         .join(broadcast(q), Seq("qid"))
-        .select($"qid", $"cid", (-d2).cast(DoubleType).as("nega"))
-        .groupBy($"qid")
-        .agg(Kit.cosTopK($"nega", $"cid", r).as("top"))
-        .select($"qid", explode($"top").as("t"))
+        .select($"qid", $"cid", (-d2).cast(DoubleType).as("nega")),
+        "qid", $"nega", $"cid", r)
         .select($"qid", $"t.cid".as("cid"))
     }
     val qn = queries.select($"vec_id").count()
@@ -456,13 +438,7 @@ object Pq {
     * principles in SQL. */
   val pqIngestDedup: QueryDef = QueryDef.sql(
     "pq_ingest_dedup",
-    """WITH flat0 AS (
-      |  SELECT vec_id, i,
-      |    CAST(FLOOR(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT) AS v
-      |  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i)),
-      |poff AS (
-      |  SELECT GREATEST(1000000, COALESCE(MAX(vec_id), 0) + 1) AS o
-      |  FROM embeddings),
+    Similarity.plantBaseSql + """,
       |aflat AS (
       |  SELECT vec_id + (SELECT o FROM poff) AS vec_id, i,
       |    v + CASE WHEN (i - 1) % 7 = 0 THEN 5000 ELSE 0 END AS v
@@ -487,13 +463,9 @@ object Pq {
         |  JOIN icents c ON true
         |  JOIN flat g ON g.vec_id = c.cent_id AND g.i = f.i
         |  GROUP BY 1, 2),
-        |iccos AS (
-        |  SELECT d.vec_id, d.cent_id,
-        |    CAST(d.dot AS DOUBLE)
-        |      / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE))) AS cos
-        |  FROM icd d
-        |  JOIN norms na ON na.vec_id = d.vec_id
-        |  JOIN norms nb ON nb.vec_id = d.cent_id),
+        |""".stripMargin +
+      Similarity.simsSql("iccos", "icd", "vec_id", "cent_id", "d") +
+      """,
         |iassign AS (
         |  SELECT vec_id, cent_id AS cell FROM iccos
         |  WHERE vec_id < (SELECT o FROM poff)
@@ -535,19 +507,8 @@ object Pq {
         |ishort AS (
         |  SELECT qid, cid FROM iadc
         |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc_d2, cid) <= 4),
-        |irdots AS (
-        |  SELECT s.qid, s.cid, CAST(SUM(fa.v * fb.v) AS BIGINT) AS dot
-        |  FROM ishort s
-        |  JOIN flat fa ON fa.vec_id = s.qid
-        |  JOIN flat fb ON fb.vec_id = s.cid AND fb.i = fa.i
-        |  GROUP BY 1, 2),
-        |irsims AS (
-        |  SELECT qid, cid,
-        |    CAST(dot AS DOUBLE)
-        |      / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE))) AS cos
-        |  FROM irdots
-        |  JOIN norms na ON na.vec_id = qid
-        |  JOIN norms nb ON nb.vec_id = cid),
+        |""".stripMargin + Similarity.cosSql("ir", Some(("ishort", "s"))) +
+      """,
         |ibest AS (
         |  SELECT qid, cid, cos FROM irsims
         |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) = 1)
@@ -562,7 +523,7 @@ object Pq {
     val existing = Similarity.quantized(s, dir)
     val nEx = existing.count()
     val arrivals = ingestArrivals(existing)
-    val (assign, probes) = Similarity.ivfAssignProbesFor(
+    val (assign, probes) = Similarity.ivfAssignProbes(
       existing, arrivals, Similarity.ivfModulus(nEx), 2)
     // (qid, cid) unique by construction; qid/cid sets are DISJOINT, so
     // no self-pair filter is needed
@@ -570,7 +531,7 @@ object Pq {
     val cand = probes.join(codedAssign(assign, existing, cb), Seq("cell"))
       .select($"qid", $"vec_id".as("cid"), $"codes")
     val short = adcShortlistCoded(cand, arrivals, cb, 4)
-    val best = Similarity.scoreCandidatesFor(short, existing, arrivals, k = 1)
+    val best = Similarity.scoreCandidates(short, existing, arrivals, k = 1)
     ingestVerdicts(arrivals, best, 0.90)
   }
 

@@ -34,9 +34,6 @@ import graft.sources.Tables
   */
 object Similarity {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Adaptive sign-LSH bucket width for [[annLshTopk]]:
     * b = clamp(⌈log₂(n/256)⌉, 8, 16), so the bucket count tracks n/256
     * and expected bucket SIZE stays ~constant as the corpus grows —
@@ -76,7 +73,7 @@ object Similarity {
     // 1-2 partitions, starving all but 1-2 cores (measured on k-means at
     // 100×: 111 s starved vs 9.4 s floored, same arithmetic).
     val base = ParallelismFloor(
-      t(s, dir, "embeddings").select(
+      Tables.load(s, dir, "embeddings").select(
         $"vec_id",
         expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
           .as("qe")),
@@ -112,6 +109,105 @@ object Similarity {
       |  SELECT vec_id, CAST(SUM(v * v) AS BIGINT) AS nrm
       |  FROM flat GROUP BY vec_id)""".stripMargin
 
+  /** Oracle CTE `name`: the exact cosine of every (`l`, `r`) row of the
+    * `dots` CTE, from the integer `norms`. `alias`, when given, names
+    * `dots` and qualifies its columns. */
+  private[ops] def simsSql(name: String, dots: String, l: String, r: String,
+                           alias: String = ""): String = {
+    val a = if (alias.isEmpty) "" else alias + "."
+    val from = if (alias.isEmpty) dots else s"$dots $alias"
+    s"""$name AS (
+       |  SELECT $a$l, $a$r,
+       |    CAST(${a}dot AS DOUBLE)
+       |      / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE))) AS cos
+       |  FROM $from
+       |  JOIN norms na ON na.vec_id = $a$l
+       |  JOIN norms nb ON nb.vec_id = $a$r)""".stripMargin
+  }
+
+  /** Oracle CTEs `${p}dots` and `${p}sims`: exact (qid, cid) cosines.
+    * `cand` = (CTE, alias) scores a candidate CTE's pairs; `None` scores
+    * every family query (`vec_id % 25 = 0`) against the whole corpus.
+    * `gate` is an extra predicate on the dots scan. */
+  private[ops] def cosSql(p: String, cand: Option[(String, String)],
+                          gate: String = ""): String = {
+    val dots = cand match {
+      case None =>
+        val and = if (gate.isEmpty) "" else s" AND $gate"
+        s"""${p}dots AS (
+           |  SELECT a.vec_id AS qid, b.vec_id AS cid,
+           |    CAST(SUM(a.v * b.v) AS BIGINT) AS dot
+           |  FROM flat a JOIN flat b ON a.i = b.i AND a.vec_id <> b.vec_id
+           |  WHERE a.vec_id % 25 = 0$and
+           |  GROUP BY 1, 2)""".stripMargin
+      case Some((from, c)) =>
+        val where = if (gate.isEmpty) "" else s"\n  WHERE $gate"
+        s"""${p}dots AS (
+           |  SELECT $c.qid, $c.cid, CAST(SUM(fa.v * fb.v) AS BIGINT) AS dot
+           |  FROM $from $c
+           |  JOIN flat fa ON fa.vec_id = $c.qid
+           |  JOIN flat fb ON fb.vec_id = $c.cid AND fb.i = fa.i$where
+           |  GROUP BY 1, 2)""".stripMargin
+    }
+    dots + ",\n" + simsSql(s"${p}sims", s"${p}dots", "qid", "cid")
+  }
+
+  /** The top-`k` (cos DESC, cid) rows per qid of `${p}sims`, cosine
+    * quantized: the final SELECT, or the CTE `out` when one is named. */
+  private[ops] def topkSql(p: String, k: Int, out: String = ""): String = {
+    val rows =
+      s"""SELECT qid, cid, CAST(FLOOR(cos * 1000000) AS BIGINT) AS cos_q6
+         |FROM ${p}sims
+         |QUALIFY row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) <= $k""".stripMargin
+    if (out.isEmpty) rows
+    else s"$out AS (\n" + rows.linesIterator.map("  " + _).mkString("\n") + ")"
+  }
+
+  /** Oracle tail of the band near-dup detectors: distinct colliding
+    * pairs of the `bands` CTE (vec_id, band, bkt), then their exact
+    * cosine, kept at `verifyCos` and up. */
+  private def pairVerifySql(bands: String, verifyCos: String): String =
+    s"""cand AS (
+       |  SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb
+       |  FROM $bands a
+       |  JOIN $bands b ON a.band = b.band AND a.bkt = b.bkt
+       |    AND a.vec_id < b.vec_id),
+       |dots AS (
+       |  SELECT va, vb, CAST(SUM(fa.v * fb.v) AS BIGINT) AS dot
+       |  FROM cand
+       |  JOIN flat fa ON fa.vec_id = va
+       |  JOIN flat fb ON fb.vec_id = vb AND fb.i = fa.i
+       |  GROUP BY va, vb),
+       |""".stripMargin + simsSql("sims", "dots", "va", "vb") +
+      s"""
+         |SELECT va AS vec_a, vb AS vec_b, CAST(FLOOR(cos * 1000000) AS BIGINT) AS cos_q6
+         |FROM sims WHERE cos >= $verifyCos""".stripMargin
+
+  /** (qid, cid, cos) for every family query (`vec_id % 25 = 0`) against
+    * every other corpus vector; `pairing` places the query side
+    * (broadcast, or a shuffle hint). */
+  private def exactCos(base: DataFrame, pairing: DataFrame => DataFrame)
+      : DataFrame = {
+    val s = base.sparkSession
+    import s.implicits._
+    val qs = base.where($"vec_id" % 25 === 0)
+      .select($"vec_id".as("qid"), $"qe".as("qqe"), $"nrm".as("qn"))
+    base.crossJoin(pairing(qs))
+      .where($"vec_id" =!= $"qid")
+      .withColumn("dot", Kit.dotI64($"qe", $"qqe"))
+      .select($"qid", $"vec_id".as("cid"),
+        cosCol($"dot", $"qn", $"nrm").as("cos"))
+  }
+
+  /** Top-`k` of a (qid, cid, cos) stream per qid by the CosTopK fold:
+    * (qid, cid, cos_q6). */
+  private def topkQ6(scored: DataFrame, k: Int): DataFrame = {
+    val s = scored.sparkSession
+    import s.implicits._
+    Kit.topKRows(scored, "qid", $"cos", $"cid", k)
+      .select($"qid", $"t.cid".as("cid"), Kit.quantize($"t.cos", 6).as("cos_q6"))
+  }
+
   /** EXACTNESS BASELINE — VERIFICATION-GRADE, not the production path
     * (same designation as the exact n-gram family in TextOps): brute-force
     * cosine top-k is O(queries × corpus) BY DEFINITION — measured 67× wall
@@ -132,35 +228,10 @@ object Similarity {
     * queries grow with the corpus. */
   val similarityTopk: QueryDef = QueryDef.sql(
     "similarity_topk",
-    oraclePrefix +
-      """,
-        |dots AS (
-        |  SELECT a.vec_id AS qid, b.vec_id AS cid,
-        |    CAST(SUM(a.v * b.v) AS BIGINT) AS dot
-        |  FROM flat a JOIN flat b ON a.i = b.i AND a.vec_id <> b.vec_id
-        |  WHERE a.vec_id % 25 = 0
-        |  GROUP BY 1, 2),
-        |sims AS (
-        |  SELECT qid, cid,
-        |    CAST(dot AS DOUBLE)
-        |      / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE))) AS cos
-        |  FROM dots
-        |  JOIN norms na ON na.vec_id = qid
-        |  JOIN norms nb ON nb.vec_id = cid)
-        |SELECT qid, cid, CAST(FLOOR(cos * 1000000) AS BIGINT) AS cos_q6
-        |FROM sims
-        |QUALIFY row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) <= 10""".stripMargin) { (s, dir) =>
+    oraclePrefix + ",\n" + cosSql("", None) + "\n" + topkSql("", 10)) { (s, dir) =>
     import s.implicits._
-    val base = quantized(s, dir)
-    val qs = base.where($"vec_id" % 25 === 0)
-      .select($"vec_id".as("qid"), $"qe".as("qqe"), $"nrm".as("qn"))
     val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid".asc)
-    base.crossJoin(broadcast(qs))
-      .where($"vec_id" =!= $"qid")
-      .withColumn("dot",
-        Kit.dotI64($"qe", $"qqe"))
-      .select($"qid", $"vec_id".as("cid"),
-        cosCol($"dot", $"qn", $"nrm").as("cos"))
+    exactCos(quantized(s, dir), broadcast(_))
       .withColumn("rk", row_number().over(w))
       .where($"rk" <= 10)
       .select($"qid", $"cid", Kit.quantize($"cos", 6).as("cos_q6"))
@@ -184,29 +255,18 @@ object Similarity {
     *    heaps instead of candidate rows, and the final merge needs no
     *    per-group sort. With q queries and P pair tasks the shuffle is
     *    ≤ P·q·k pairs of primitives regardless of corpus size.
+    *
+    * The body is [[exactTopkFrom]] at k = 10 with the shuffle hint as
+    * its `pairing`; [[AnnRouter]]'s exact branch is the same body with
+    * the broadcast pairing.
     */
   val similarityTopkBigq: QueryDef = QueryDef(
     "similarity_topk_bigq",
-    (s, dir) => {
-      import s.implicits._
-      val base = quantized(s, dir)
-      // Corpus-side parallelism comes from the [[quantized]] cache's
-      // scan-bytes floor (P=2 vs P=32 measured 95.8 vs 6.6 s on the 10×
-      // corpus's block product — ShuffleProbe/STRESS_r08.md §2).
-      val corpus = base
-      val qs = base.where($"vec_id" % 25 === 0)
-        .select($"vec_id".as("qid"), $"qe".as("qqe"), $"nrm".as("qn"))
-      corpus.crossJoin(qs.hint("shuffle_replicate_nl"))
-        .where($"vec_id" =!= $"qid")
-        .withColumn("dot", Kit.dotI64($"qe", $"qqe"))
-        .select($"qid", $"vec_id".as("cid"),
-          cosCol($"dot", $"qn", $"nrm").as("cos"))
-        .groupBy($"qid")
-        .agg(Kit.cosTopK($"cos", $"cid", 10).as("top"))
-        .select($"qid", explode($"top").as("t"))
-        .select($"qid", $"t.cid".as("cid"),
-          Kit.quantize($"t.cos", 6).as("cos_q6"))
-    },
+    // Corpus-side parallelism comes from the [[quantized]] cache's
+    // scan-bytes floor (P=2 vs P=32 measured 95.8 vs 6.6 s on the 10×
+    // corpus's block product — ShuffleProbe/STRESS_r08.md §2).
+    (s, dir) => exactTopkFrom(quantized(s, dir), 10,
+      _.hint("shuffle_replicate_nl")),
     similarityTopk.oracle)
 
   /** ANN top-k via sign-random-projection bucketing (SimHash over axis
@@ -256,16 +316,8 @@ object Similarity {
         |  JOIN flat fa ON fa.vec_id = a.vec_id
         |  JOIN flat fb ON fb.vec_id = b.vec_id AND fb.i = fa.i
         |  GROUP BY 1, 2),
-        |sims AS (
-        |  SELECT qid, cid,
-        |    CAST(dot AS DOUBLE)
-        |      / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE))) AS cos
-        |  FROM dots
-        |  JOIN norms na ON na.vec_id = qid
-        |  JOIN norms nb ON nb.vec_id = cid)
-        |SELECT qid, cid, CAST(FLOOR(cos * 1000000) AS BIGINT) AS cos_q6
-        |FROM sims
-        |QUALIFY row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) <= 5""".stripMargin) { (s, dir) =>
+        |""".stripMargin + simsSql("sims", "dots", "qid", "cid") + "\n" +
+      topkSql("", 5)) { (s, dir) =>
     import s.implicits._
     val base0 = quantized(s, dir)
     // adaptive bucket width (see scaladoc): same clamp formula as the
@@ -292,96 +344,24 @@ object Similarity {
     // stream, and the exchange moves serialized heaps
     val cand = und.select($"va".as("qid"), $"vb".as("cid"))
       .union(und.select($"vb".as("qid"), $"va".as("cid")))
-    cand
+    topkQ6(cand
       .join(base.select($"vec_id".as("qid"), $"qe".as("qa"), $"nrm".as("na")),
         Seq("qid"))
       .join(base.select($"vec_id".as("cid"), $"qe".as("qb"), $"nrm".as("nb")),
         Seq("cid"))
-      .withColumn("dot",
-        Kit.dotI64($"qa", $"qb"))
-      .select($"qid", $"cid", cosCol($"dot", $"na", $"nb").as("cos"))
-      .groupBy($"qid")
-      .agg(Kit.cosTopK($"cos", $"cid", 5).as("top"))
-      .select($"qid", explode($"top").as("t"))
-      .select($"qid", $"t.cid".as("cid"), Kit.quantize($"t.cos", 6).as("cos_q6"))
-  }
-
-  /** CALIBRATION BASELINE — UNREGISTERED (retired from the query surface
-    * in round 6). Embedding-cosine near-duplicate pairs via 8 bands × 4
-    * raw sign bits at cos ≥ 0.40: a 4-bit band collides for ~1/16 of ALL
-    * random pairs, and the 10× stress run measured the consequence —
-    * 1.02 s → 101.9 s (100×, quadratic; STRESS_r05.md). That is not a
-    * tuning miss but the S-curve's arithmetic: at θ = 0.40 the
-    * per-hyperplane agreement p = 1 − arccos(0.40)/π ≈ 0.63 barely
-    * separates from a random pair's 0.5, so NO banding both enumerates
-    * θ = 0.40 pairs with high recall and stays sub-quadratic. Kept only
-    * as the recall-calibration baseline for the registered detectors
-    * ([[embeddingNeardupStrict]], [[embeddingNeardupProj]],
-    * [[embeddingNeardupAuto]]), the same demotion as the exact n-gram
-    * family in TextOps. */
-  val embeddingNeardup: QueryDef = QueryDef.sql(
-    "embedding_neardup",
-    oraclePrefix +
-      """,
-        |bands AS (
-        |  SELECT vec_id, (i - 1) // 4 AS band,
-        |    CAST(SUM(CASE WHEN v > 0 THEN 1 << CAST((i - 1) % 4 AS INT) ELSE 0 END) AS BIGINT) AS bkt
-        |  FROM flat WHERE i <= 32
-        |  GROUP BY 1, 2),
-        |cand AS (
-        |  SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb
-        |  FROM bands a
-        |  JOIN bands b ON a.band = b.band AND a.bkt = b.bkt
-        |    AND a.vec_id < b.vec_id),
-        |dots AS (
-        |  SELECT va, vb, CAST(SUM(fa.v * fb.v) AS BIGINT) AS dot
-        |  FROM cand
-        |  JOIN flat fa ON fa.vec_id = va
-        |  JOIN flat fb ON fb.vec_id = vb AND fb.i = fa.i
-        |  GROUP BY va, vb),
-        |sims AS (
-        |  SELECT va, vb,
-        |    CAST(dot AS DOUBLE)
-        |      / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE))) AS cos
-        |  FROM dots
-        |  JOIN norms na ON na.vec_id = va
-        |  JOIN norms nb ON nb.vec_id = vb)
-        |SELECT va AS vec_a, vb AS vec_b, CAST(FLOOR(cos * 1000000) AS BIGINT) AS cos_q6
-        |FROM sims WHERE cos >= 0.40""".stripMargin) { (s, dir) =>
-    import s.implicits._
-    val base = quantized(s, dir)
-    val bktExpr = (0 until 4).map(j =>
-      s"CASE WHEN qe[4 * band + $j] > 0 THEN ${1 << j} ELSE 0 END").mkString(" + ")
-    val bands = base
-      .select($"vec_id", $"qe", explode(expr("sequence(0, 7)")).as("band"))
-      .withColumn("bkt", expr(s"CAST($bktExpr AS BIGINT)"))
-      .select($"vec_id", $"band".cast(LongType).as("band"), $"bkt")
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        $"a.band" === $"b.band" && $"a.bkt" === $"b.bkt" &&
-          $"a.vec_id" < $"b.vec_id")
-      .select($"a.vec_id".as("va"), $"b.vec_id".as("vb"))
-      .distinct()
-    val left = base.select($"vec_id".as("va"), $"qe".as("qa"), $"nrm".as("na"))
-    val right = base.select($"vec_id".as("vb"), $"qe".as("qb"), $"nrm".as("nb"))
-    cand.join(left, Seq("va")).join(right, Seq("vb"))
-      .withColumn("dot",
-        Kit.dotI64($"qa", $"qb"))
-      .select($"va".as("vec_a"), $"vb".as("vec_b"),
-        cosCol($"dot", $"na", $"nb").as("cos"))
-      .where($"cos" >= 0.40)
-      .select($"vec_a", $"vec_b", Kit.quantize($"cos", 6).as("cos_q6"))
+      .withColumn("dot", Kit.dotI64($"qa", $"qb"))
+      .select($"qid", $"cid", cosCol($"dot", $"na", $"nb").as("cos")), 5)
   }
 
   /** PRODUCTION-configured embedding near-dup: 4 bands × 16 sign bits
-    * (all 64 dims) at cos ≥ 0.90 — the scale-safe sibling of
-    * [[embeddingNeardup]]. The band width is the candidate-volume dial:
-    * a 4-bit band collides for ~1/16 of ALL random pairs (measured 100×
-    * wall-time at a 10× corpus — quadratic, see STRESS_r05.md), a
-    * 16-bit band for ~1/65536 — candidate volume drops from corpus² to
-    * ~planted-duplicate density. The price is the LSH S-curve: recall
-    * ≈ 89% for near-identical pairs (cos ≥ 0.99), ~43% at 0.93, ~30% at
-    * the 0.90 boundary — the right trade for DEDUP, where targets are
+    * (all 64 dims) at cos ≥ 0.90 — the scale-safe replacement for the
+    * retired 8 bands × 4 bits at cos ≥ 0.40. The band width is the
+    * candidate-volume dial: a 4-bit band collides for ~1/16 of ALL
+    * random pairs (measured 100× wall-time at a 10× corpus — quadratic,
+    * see STRESS_r05.md), a 16-bit band for ~1/65536 — candidate volume
+    * drops from corpus² to ~planted-duplicate density. The price is the
+    * LSH S-curve: recall ≈ 89% for near-identical pairs (cos ≥ 0.99),
+    * ~43% at 0.93, ~30% at the 0.90 boundary — the right trade for DEDUP, where targets are
     * re-encoded/rescaled copies near cos 1.0 and boundary pairs are
     * judgement calls. (Boundary-recall-critical deployments add
     * independent random-projection bands; raw sign bits keep this
@@ -395,27 +375,7 @@ object Similarity {
         |    CAST(SUM(CASE WHEN v > 0 THEN 1 << CAST((i - 1) % 16 AS INT) ELSE 0 END) AS BIGINT) AS bkt
         |  FROM flat
         |  GROUP BY 1, 2),
-        |cand AS (
-        |  SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb
-        |  FROM bands a
-        |  JOIN bands b ON a.band = b.band AND a.bkt = b.bkt
-        |    AND a.vec_id < b.vec_id),
-        |dots AS (
-        |  SELECT va, vb, CAST(SUM(fa.v * fb.v) AS BIGINT) AS dot
-        |  FROM cand
-        |  JOIN flat fa ON fa.vec_id = va
-        |  JOIN flat fb ON fb.vec_id = vb AND fb.i = fa.i
-        |  GROUP BY va, vb),
-        |sims AS (
-        |  SELECT va, vb,
-        |    CAST(dot AS DOUBLE)
-        |      / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE))) AS cos
-        |  FROM dots
-        |  JOIN norms na ON na.vec_id = va
-        |  JOIN norms nb ON nb.vec_id = vb)
-        |SELECT va AS vec_a, vb AS vec_b, CAST(FLOOR(cos * 1000000) AS BIGINT) AS cos_q6
-        |FROM sims WHERE cos >= 0.90""".stripMargin) { (s, dir) =>
-    import s.implicits._
+        |""".stripMargin + pairVerifySql("bands", "0.90")) { (s, dir) =>
     embeddingNeardupStrictPairs(quantized(s, dir))
   }
 
@@ -430,18 +390,29 @@ object Similarity {
       .select($"vec_id", $"qe", explode(expr("sequence(0, 3)")).as("band"))
       .withColumn("bkt", expr(s"CAST($bktExpr AS BIGINT)"))
       .select($"vec_id", $"band".cast(LongType).as("band"), $"bkt")
-    // skew-aware band self-join (see BandJoin): identical pair set,
-    // hot buckets salted across salt² shuffle keys
+    // scale telemetry, as in the text near-dup stages
+    verifyPairs(bands, base, 0.90, "strict_candidates")
+  }
+
+  /** The band detectors' shared tail: band-collision (va, vb) pairs of
+    * `bands` (vec_id, band, bkt) via the skew-aware [[BandJoin]]
+    * (identical pair set, hot buckets salted across salt² shuffle keys),
+    * counted under the `obs` observation, then each pair's exact
+    * quantized cosine from `base`, kept at `verifyCos` and up:
+    * (vec_a, vec_b, cos_q6). */
+  private def verifyPairs(bands: DataFrame, base: DataFrame,
+                          verifyCos: Double, obs: String): DataFrame = {
+    val s = base.sparkSession
+    import s.implicits._
     val cand = BandJoin.selfCandidates(bands)
-      // scale telemetry, as in the text near-dup stages
-      .observe("strict_candidates", count(lit(1)).as("n_pairs"))
+      .observe(obs, count(lit(1)).as("n_pairs"))
     val left = base.select($"vec_id".as("va"), $"qe".as("qa"), $"nrm".as("na"))
     val right = base.select($"vec_id".as("vb"), $"qe".as("qb"), $"nrm".as("nb"))
     cand.join(left, Seq("va")).join(right, Seq("vb"))
       .withColumn("dot", Kit.dotI64($"qa", $"qb"))
       .select($"va".as("vec_a"), $"vb".as("vec_b"),
         cosCol($"dot", $"na", $"nb").as("cos"))
-      .where($"cos" >= 0.90)
+      .where($"cos" >= verifyCos)
       .select($"vec_a", $"vec_b", Kit.quantize($"cos", 6).as("cos_q6"))
   }
 
@@ -537,26 +508,26 @@ object Similarity {
     val prefix = if (!plant) oraclePrefix else plantedOraclePrefix
     QueryDef.sql(
       name,
-      prefix +
-        s""",
-          |w AS (
-          |  SELECT b, t, d,
-          |    CAST(concat('0x', substring(md5(
-          |      concat(CAST(b AS VARCHAR), '_', CAST(t AS VARCHAR), '_', CAST(d AS VARCHAR))
-          |    ), 1, 15)) AS BIGINT) % 2001 - 1000 AS wv
-          |  FROM range($bands) r1(b), range($bits) r2(t), range($dim) r3(d)),
-          |""".stripMargin + projOracleTail(verifyCos)) { (s, dir) =>
+      prefix + ",\n" + projOracleTail(
+        s"range($bands) r1(b), range($bits) r2(t), range($dim) r3(d)",
+        verifyCos)) { (s, dir) =>
       val base = if (plant) plantedQuantized(s, dir) else quantized(s, dir)
       projPipeline(base, bands, bits, verifyCos.toDouble, obs)
     }
   }
 
   /** Oracle CTE tail shared by the fixed and adaptive projection
-    * detectors: project (a `w` hyperplane CTE must already be in
-    * scope), pack band buckets, band-collision candidates, exact
-    * quantized-cosine verify at `verifyCos`. */
-  private def projOracleTail(verifyCos: String): String =
-    s"""projs AS (
+    * detectors: the md5 hyperplane weights `w` (b, t, d, wv) over the
+    * `ranges` FROM list, project, pack band buckets, band-collision
+    * candidates, exact quantized-cosine verify at `verifyCos`. */
+  private def projOracleTail(ranges: String, verifyCos: String): String =
+    s"""w AS (
+       |  SELECT b, t, d,
+       |    CAST(concat('0x', substring(md5(
+       |      concat(CAST(b AS VARCHAR), '_', CAST(t AS VARCHAR), '_', CAST(d AS VARCHAR))
+       |    ), 1, 15)) AS BIGINT) % 2001 - 1000 AS wv
+       |  FROM $ranges),
+       |projs AS (
       |  SELECT f.vec_id, w.b, w.t,
       |    CASE WHEN SUM(w.wv * f.v) > 0 THEN 1 ELSE 0 END AS bit
       |  FROM flat f JOIN w ON w.d = f.i - 1
@@ -565,26 +536,20 @@ object Similarity {
       |  SELECT vec_id, b AS band,
       |    CAST(SUM(bit << CAST(t AS INT)) AS BIGINT) AS bkt
       |  FROM projs GROUP BY vec_id, b),
-      |cand AS (
-      |  SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb
-      |  FROM bkts a
-      |  JOIN bkts b ON a.band = b.band AND a.bkt = b.bkt
-      |    AND a.vec_id < b.vec_id),
-      |dots AS (
-      |  SELECT va, vb, CAST(SUM(fa.v * fb.v) AS BIGINT) AS dot
-      |  FROM cand
-      |  JOIN flat fa ON fa.vec_id = va
-      |  JOIN flat fb ON fb.vec_id = vb AND fb.i = fa.i
-      |  GROUP BY va, vb),
-      |sims AS (
-      |  SELECT va, vb,
-      |    CAST(dot AS DOUBLE)
-      |      / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE))) AS cos
-      |  FROM dots
-      |  JOIN norms na ON na.vec_id = va
-      |  JOIN norms nb ON nb.vec_id = vb)
-      |SELECT va AS vec_a, vb AS vec_b, CAST(FLOOR(cos * 1000000) AS BIGINT) AS cos_q6
-      |FROM sims WHERE cos >= $verifyCos""".stripMargin
+      |""".stripMargin + pairVerifySql("bkts", verifyCos)
+
+  /** The planted corpora's shared oracle head: the fixture's quantized
+    * flat rows `flat0` and the plant offset `poff` (see
+    * [[plantedOraclePrefix]]); [[Pq]]'s ingest oracle plants its
+    * arrival batch on the same head. */
+  private[ops] val plantBaseSql: String =
+    """WITH flat0 AS (
+      |  SELECT vec_id, i,
+      |    CAST(FLOOR(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT) AS v
+      |  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i)),
+      |poff AS (
+      |  SELECT GREATEST(1000000, COALESCE(MAX(vec_id), 0) + 1) AS o
+      |  FROM embeddings)""".stripMargin
 
   /** The planted-corpus oracle prefix: the fixture's quantized flat
     * rows ∪ the planted copies (see [[plantedQuantized]]), plus norms.
@@ -599,13 +564,7 @@ object Similarity {
     * 1,999,999, so copy-of-0 took id 1,000,000 = a real vector). Both
     * engines compute the same rule, so the driver compare stays exact. */
   private[ops] val plantedOraclePrefix: String =
-    """WITH flat0 AS (
-      |  SELECT vec_id, i,
-      |    CAST(FLOOR(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT) AS v
-      |  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i)),
-      |poff AS (
-      |  SELECT GREATEST(1000000, COALESCE(MAX(vec_id), 0) + 1) AS o
-      |  FROM embeddings),
+    plantBaseSql + """,
       |flat AS (
       |  SELECT vec_id, i, v FROM flat0
       |  UNION ALL
@@ -674,18 +633,7 @@ object Similarity {
     val bandsDf = withBkts
       .select($"vec_id", posexplode($"bks").as(Seq("band", "bkt")))
       .select($"vec_id", $"band".cast(LongType).as("band"), $"bkt")
-    // skew-aware band self-join (see BandJoin): identical pair set,
-    // hot buckets salted across salt² shuffle keys
-    val cand = BandJoin.selfCandidates(bandsDf)
-      .observe(obs, count(lit(1)).as("n_pairs"))
-    val left = base.select($"vec_id".as("va"), $"qe".as("qa"), $"nrm".as("na"))
-    val right = base.select($"vec_id".as("vb"), $"qe".as("qb"), $"nrm".as("nb"))
-    cand.join(left, Seq("va")).join(right, Seq("vb"))
-      .withColumn("dot", Kit.dotI64($"qa", $"qb"))
-      .select($"va".as("vec_a"), $"vb".as("vec_b"),
-        cosCol($"dot", $"na", $"nb").as("cos"))
-      .where($"cos" >= verifyCos)
-      .select($"vec_a", $"vec_b", Kit.quantize($"cos", 6).as("cos_q6"))
+    verifyPairs(bandsDf, base, verifyCos, obs)
   }
 
   /** The hand-tuned 8 × 16-bit random-projection detector at cos ≥ 0.90
@@ -696,9 +644,10 @@ object Similarity {
     projNeardup("embedding_neardup_proj", 8, 16, "0.90", "proj_candidates")
 
   /** THRESHOLD-DERIVED near-dup — the round-6 replacement for the retired
-    * quadratic [[embeddingNeardup]]: same verification contract (report
-    * candidate pairs down to cos ≥ 0.40, the calibration regime), but
-    * the band geometry comes from [[projBands]] instead of hand tuning —
+    * quadratic 8 bands × 4 raw sign bits detector: same verification
+    * contract (report candidate pairs down to cos ≥ 0.40, the calibration
+    * regime), but the band geometry comes from [[projBands]] instead of
+    * hand tuning —
     * B = 24-bit bands hold the random-pair collision budget at
     * R·2⁻²⁴ of all pairs (density-proportional candidates at any corpus
     * the fixture family reaches), and R = projBands(0.95, 24, 0.99)
@@ -706,7 +655,11 @@ object Similarity {
     * threshold (≈100% at 0.99, ~79% at 0.90, fading below — the
     * S-curve). Pairs reported between 0.40 and ~0.90 are therefore a
     * calibration SAMPLE, not an enumeration; enumerating cos-0.40 pairs
-    * is provably quadratic (see [[embeddingNeardup]]'s demotion note). */
+    * is provably quadratic: a 4-bit band collides for ~1/16 of ALL random
+    * pairs (1.02 s → 101.9 s at a 10× corpus, STRESS_r05.md), and at
+    * θ = 0.40 the per-hyperplane agreement p = 1 − arccos(0.40)/π ≈ 0.63
+    * barely separates from a random pair's 0.5, so no banding both
+    * enumerates cos-0.40 pairs with high recall and stays sub-quadratic. */
   val embeddingNeardupAuto: QueryDef =
     projNeardup("embedding_neardup_auto", projBands(0.95, 24, 0.99), 24,
       "0.40", "auto_candidates")
@@ -756,14 +709,9 @@ object Similarity {
           |  FROM (
           |    SELECT GREATEST(16, LEAST(32, LENGTH(bin(
           |      GREATEST((SELECT COUNT(*) FROM norms) * 8 // 25, 2) - 1)))) AS bits)),
-          |w AS (
-          |  SELECT b, t, d,
-          |    CAST(concat('0x', substring(md5(
-          |      concat(CAST(b AS VARCHAR), '_', CAST(t AS VARCHAR), '_', CAST(d AS VARCHAR))
-          |    ), 1, 15)) AS BIGINT) % 2001 - 1000 AS wv
-          |  FROM range(99) r1(b), range(32) r2(t), range(64) r3(d), geo
-          |  WHERE b < geo.bands AND t < geo.bits),
-          |""".stripMargin + projOracleTail("0.90")) { (s, dir) =>
+          |""".stripMargin + projOracleTail(
+          "range(99) r1(b), range(32) r2(t), range(64) r3(d), geo\n" +
+            "  WHERE b < geo.bands AND t < geo.bits", "0.90")) { (s, dir) =>
       val base = plantedQuantized(s, dir)
       // ONE count job over the (cached-underneath) corpus prices the
       // geometry; at 100 TB this is the metadata the embedding table's
@@ -785,13 +733,8 @@ object Similarity {
       |  JOIN cents c ON true
       |  JOIN flat g ON g.vec_id = c.cent_id AND g.i = f.i
       |  GROUP BY 1, 2),
-      |ccos AS (
-      |  SELECT d.vec_id, d.cent_id,
-      |    CAST(d.dot AS DOUBLE)
-      |      / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE))) AS cos
-      |  FROM cdots d
-      |  JOIN norms na ON na.vec_id = d.vec_id
-      |  JOIN norms nb ON nb.vec_id = d.cent_id),
+      |""".stripMargin + simsSql("ccos", "cdots", "vec_id", "cent_id", "d") +
+      """,
       |assign AS (
       |  SELECT vec_id, cent_id AS cell FROM ccos
       |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cent_id) = 1),
@@ -830,23 +773,8 @@ object Similarity {
         |  SELECT DISTINCT p.qid, a.vec_id AS cid
         |  FROM probes p JOIN assign a ON a.cell = p.cell
         |  WHERE a.vec_id <> p.qid),
-        |dots AS (
-        |  SELECT c.qid, c.cid, CAST(SUM(fa.v * fb.v) AS BIGINT) AS dot
-        |  FROM cand c
-        |  JOIN flat fa ON fa.vec_id = c.qid
-        |  JOIN flat fb ON fb.vec_id = c.cid AND fb.i = fa.i
-        |  GROUP BY 1, 2),
-        |sims AS (
-        |  SELECT qid, cid,
-        |    CAST(dot AS DOUBLE)
-        |      / (SQRT(CAST(na.nrm AS DOUBLE)) * SQRT(CAST(nb.nrm AS DOUBLE))) AS cos
-        |  FROM dots
-        |  JOIN norms na ON na.vec_id = qid
-        |  JOIN norms nb ON nb.vec_id = cid)
-        |SELECT qid, cid, CAST(FLOOR(cos * 1000000) AS BIGINT) AS cos_q6
-        |FROM sims
-        |QUALIFY row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) <= 5""".stripMargin) { (s, dir) =>
-    import s.implicits._
+        |""".stripMargin + cosSql("", Some(("cand", "c"))) + "\n" +
+      topkSql("", 5)) { (s, dir) =>
     val base = quantized(s, dir)
     ivfTopkFrom(base, base.count())
   }
@@ -870,56 +798,37 @@ object Similarity {
   private[ops] def ivfTopkFrom(base: DataFrame, n: Long): DataFrame = {
     val s = base.sparkSession
     import s.implicits._
-    val (assign, probes) = ivfAssignProbes(base, ivfModulus(n), 25, 2)
+    val qs = base.where($"vec_id" % 25 === 0)
+    val (assign, probes) = ivfAssignProbes(base, qs, ivfModulus(n), 2)
     val cand = probes.join(assign, Seq("cell"))
       .where($"vec_id" =!= $"qid")
       .select($"qid", $"vec_id".as("cid"))
-    scoreCandidates(cand, base, k = 5)
+    scoreCandidates(cand, base, qs, k = 5)
       .select($"qid", $"cid", Kit.quantize($"cos", 6).as("cos_q6"))
   }
 
-  /** Exact cosine top-`k` over an already-quantized corpus, in the
-    * [[similarityTopkBigq]] plan shape (CosTopK aggregation, no rank
-    * window) but with a BROADCAST query side — [[AnnRouter]]'s
-    * small-corpus branch, where by construction the whole corpus (and a
-    * fortiori its n/25 query subset) is far under the broadcast
-    * threshold. */
-  private[ops] def exactTopkFrom(base: DataFrame, k: Int): DataFrame = {
-    val s = base.sparkSession
-    import s.implicits._
-    val qs = base.where($"vec_id" % 25 === 0)
-      .select($"vec_id".as("qid"), $"qe".as("qqe"), $"nrm".as("qn"))
-    base.crossJoin(broadcast(qs))
-      .where($"vec_id" =!= $"qid")
-      .withColumn("dot", Kit.dotI64($"qe", $"qqe"))
-      .select($"qid", $"vec_id".as("cid"),
-        cosCol($"dot", $"qn", $"nrm").as("cos"))
-      .groupBy($"qid")
-      .agg(Kit.cosTopK($"cos", $"cid", k).as("top"))
-      .select($"qid", explode($"top").as("t"))
-      .select($"qid", $"t.cid".as("cid"), Kit.quantize($"t.cos", 6).as("cos_q6"))
-  }
+  /** Exact cosine top-`k` over an already-quantized corpus by the
+    * CosTopK fold (no rank window) — the one body behind
+    * [[similarityTopkBigq]] (k = 10, `pairing` a SHUFFLE_REPLICATE_NL
+    * hint) and [[AnnRouter]]'s small-corpus branch (k = 5, the default
+    * BROADCAST query side: by construction the whole corpus, and a
+    * fortiori its n/25 query subset, is far under the broadcast
+    * threshold). */
+  private[ops] def exactTopkFrom(base: DataFrame, k: Int,
+                                 pairing: DataFrame => DataFrame = broadcast(_))
+      : DataFrame =
+    topkQ6(exactCos(base, pairing), k)
 
   /** Exact-cosine scoring of a (qid, cid) candidate stream → top-`k`
-    * per query: corpus vectors fetched by ONE cid equi-join, query
-    * vectors broadcast (the family's n/25 query subset), cosine
-    * projected before the CosTopK partial — no vector ever rides a
-    * pair-stream exchange (see ivfTopk's round-9 1000× note). Returns
-    * (qid, cid, cos). */
-  private[ops] def scoreCandidates(cand: DataFrame, base: DataFrame,
-                                   k: Int): DataFrame = {
-    val s = base.sparkSession
-    import s.implicits._
-    scoreCandidatesFor(cand, base, base.where($"vec_id" % 25 === 0), k)
-  }
-
-  /** The split form of [[scoreCandidates]]: candidate `cid`s are fetched
-    * from `corpus`, query vectors broadcast from an arbitrary `queries`
-    * frame (the ingest-dedup path scores arrivals against the existing
-    * corpus, which the modulus convention cannot express). */
-  private[ops] def scoreCandidatesFor(cand: DataFrame, corpus: DataFrame,
-                                      queriesDf: DataFrame, k: Int,
-                                      broadcastCand: Boolean = false)
+    * per query: candidate `cid`s fetched from `corpus` by ONE equi-join,
+    * query vectors broadcast from `queriesDf` (the family's n/25 query
+    * subset, or the arrivals the ingest-dedup path scores against the
+    * existing corpus), cosine projected before the CosTopK partial — no
+    * vector ever rides a pair-stream exchange (see ivfTopk's round-9
+    * 1000× note). Returns (qid, cid, cos). */
+  private[ops] def scoreCandidates(cand: DataFrame, corpus: DataFrame,
+                                   queriesDf: DataFrame, k: Int,
+                                   broadcastCand: Boolean = false)
       : DataFrame = {
     val s = corpus.sparkSession
     import s.implicits._
@@ -934,33 +843,14 @@ object Similarity {
     // q·shortlist candidate volume outgrows a broadcast at large query
     // counts.
     val candSide = if (broadcastCand) broadcast(cand) else cand
-    candSide
+    val scored = candSide
       .join(corpus.select($"vec_id".as("cid"), $"qe".as("qb"), $"nrm".as("nb")),
         Seq("cid"))
       .join(broadcast(queries), Seq("qid"))
       .select($"qid", $"cid",
         cosCol(Kit.dotI64($"qa", $"qb"), $"na", $"nb").as("cos"))
-      .groupBy($"qid")
-      .agg(Kit.cosTopK($"cos", $"cid", k).as("top"))
-      .select($"qid", explode($"top").as("t"))
+    Kit.topKRows(scored, "qid", $"cos", $"cid", k)
       .select($"qid", $"t.cid".as("cid"), $"t.cos".as("cos"))
-  }
-
-  /** IVF cell structures shared by [[ivfTopk]] and [[Pq]]'s IVF-PQ
-    * pipeline: cosine assignment of every vector to its nearest of the
-    * K ≈ √n sampled centroids (`vec_id % m == 0`), and the top-`nprobe`
-    * probe cells for every query (`vec_id % queryEvery == 0`). Both are
-    * CosTopK aggregations over one broadcast of the centroid table —
-    * the n·K assignment stream folds map-side into O(k) state per
-    * vector; no window shuffle, no per-task sort. Returns
-    * (assign: (vec_id, cell), probes: (qid, cell)). */
-  private[ops] def ivfAssignProbes(base: DataFrame, m: Long,
-                                   queryEvery: Int, nprobe: Int)
-      : (DataFrame, DataFrame) = {
-    val s = base.sparkSession
-    import s.implicits._
-    ivfAssignProbesFor(base, base.where($"vec_id" % queryEvery === 0),
-      m, nprobe)
   }
 
   /** Repartition `df` so each map task holds well under the object-hash
@@ -982,7 +872,7 @@ object Similarity {
     * ((cent_id, ce, cn) — read back from a stored index rather than
     * re-sampled from the corpus): one broadcast of the centroid table,
     * CosTopK fold per query, (qid, cell) out — the probe half of
-    * [[ivfAssignProbesFor]] with the centroid SOURCE decoupled, which is
+    * [[ivfAssignProbes]] with the centroid SOURCE decoupled, which is
     * what [[AnnIndex]]'s query path needs (its centroids come from a
     * warehouse table written at build time; the corpus is never scanned
     * to find them). Same tie-breaking (cos DESC, cent_id) as everywhere
@@ -992,41 +882,46 @@ object Similarity {
                               nprobe: Int): DataFrame = {
     val s = queries.sparkSession
     import s.implicits._
-    queries.crossJoin(broadcast(cents))
-      .select($"vec_id", $"cent_id",
-        cosCol(Kit.dotI64($"qe", $"ce"), $"nrm", $"cn").as("cos"))
-      .groupBy($"vec_id")
-      .agg(Kit.cosTopK($"cos", $"cent_id", nprobe).as("top"))
-      .select($"vec_id".as("qid"), explode($"top").as("t"))
+    Kit.topKRows(centroidCos(queries, cents), "vec_id", $"cos", $"cent_id",
+      nprobe, out = "qid")
       .select($"qid", $"t.cid".as("cell"))
   }
 
-  /** The split form: centroids are sampled from (and members assigned
-    * over) `corpus`; probe cells are computed for an arbitrary `queries`
-    * frame — [[Pq]]'s ingest-dedup path probes ARRIVALS against an index
-    * built on the EXISTING corpus only, which the queryEvery-modulus
-    * form cannot express. Both frames carry (vec_id, qe, nrm). */
-  private[ops] def ivfAssignProbesFor(corpus: DataFrame, queries: DataFrame,
-                                      m: Long, nprobe: Int)
+  /** (vec_id, cent_id, cos) of every row of `df` against every centroid
+    * of the broadcast `cents` table (cent_id, ce, cn). */
+  private def centroidCos(df: DataFrame, cents: DataFrame): DataFrame = {
+    val s = df.sparkSession
+    import s.implicits._
+    df.crossJoin(broadcast(cents))
+      .select($"vec_id", $"cent_id",
+        cosCol(Kit.dotI64($"qe", $"ce"), $"nrm", $"cn").as("cos"))
+  }
+
+  /** IVF cell structures shared by [[ivfTopk]] and [[Pq]]'s IVF-PQ
+    * pipelines: cosine assignment of every `corpus` vector to its
+    * nearest of the K ≈ √n centroids sampled from it (`vec_id % m == 0`),
+    * and the top-`nprobe` probe cells ([[probeCells]]) of every row of
+    * `queries` — the family's `vec_id % 25` subset, or ARRIVALS probed
+    * against an index built on the EXISTING corpus only (ingest dedup).
+    * Both are CosTopK folds over one broadcast of the centroid table —
+    * the n·K assignment stream folds map-side into O(k) state per
+    * vector; no window shuffle, no per-task sort. Both frames carry
+    * (vec_id, qe, nrm). Returns (assign: (vec_id, cell), probes:
+    * (qid, cell)). */
+  private[ops] def ivfAssignProbes(corpus: DataFrame, queries: DataFrame,
+                                   m: Long, nprobe: Int)
       : (DataFrame, DataFrame) = {
     val s = corpus.sparkSession
     import s.implicits._
     val cents = corpus.select($"vec_id".as("cent_id"), $"qe".as("ce"),
       $"nrm".as("cn")).where($"cent_id" % m === 0)
-    def cos(df: DataFrame): DataFrame = df.crossJoin(broadcast(cents))
-      .select($"vec_id", $"cent_id",
-        cosCol(Kit.dotI64($"qe", $"ce"), $"nrm", $"cn").as("cos"))
     // bound groups-per-task through the corpus-wide fold (m = ⌈√n⌉, so
     // m² estimates the corpus rows without an extra count)
-    val assign = cos(boundedGroups(corpus, m * m)).groupBy($"vec_id")
+    val assign = centroidCos(boundedGroups(corpus, m * m), cents)
+      .groupBy($"vec_id")
       .agg(Kit.cosTopK($"cos", $"cent_id", 1).as("top"))
       .select($"vec_id", $"top"(0)("cid").as("cell"))
-    val probes = cos(queries)
-      .groupBy($"vec_id")
-      .agg(Kit.cosTopK($"cos", $"cent_id", nprobe).as("top"))
-      .select($"vec_id".as("qid"), explode($"top").as("t"))
-      .select($"qid", $"t.cid".as("cell"))
-    (assign, probes)
+    (assign, probeCells(queries, cents, nprobe))
   }
 
   /** Multimodal-column plumbing: treat content as an opaque binary column
@@ -1047,7 +942,7 @@ object Similarity {
       |  CAST(octet_length(encode(text)) % 251 AS BIGINT) AS f3
       |FROM documents""") { (s, dir) =>
     import s.implicits._
-    t(s, dir, "documents").select(
+    Tables.load(s, dir, "documents").select(
       $"doc_id",
       octet_length($"text").cast(LongType).as("n_bytes"),
       md5($"text").as("content_md5"),

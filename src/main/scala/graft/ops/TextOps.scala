@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -372,6 +372,16 @@ object TextOps {
     * shingles of each surviving candidate pair. */
   private val DF_CAP = 50
 
+  /** The word-3-gram shingle CTEs every text near-dup oracle starts
+    * from: `tok` (doc_id, ts) and `sh` (doc_id, s), one row per distinct
+    * shingle of a document. */
+  private val shingleCteSql: String =
+    """tok AS (
+      |  SELECT doc_id, string_split(lower(text), ' ') AS ts FROM documents),
+      |sh AS (
+      |  SELECT DISTINCT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS s
+      |  FROM tok, UNNEST(range(1, greatest(len(ts) - 1, 1))) AS t(i))""".stripMargin
+
   /** Exact n-gram Jaccard near-dup detection, shingle-bucketed with a
     * document-frequency cap (see [[DF_CAP]]): explode distinct word-3-
     * grams, keep shingles with df ≤ cap, and emit each rare shingle's
@@ -385,30 +395,8 @@ object TextOps {
     * DF_CAP²/2 per shingle, and pair dedup is a two-column distinct. */
   val ngramJaccardNeardup: QueryDef = QueryDef.sql(
     "ngram_jaccard_neardup",
-    s"""WITH tok AS (
-      |  SELECT doc_id, string_split(lower(text), ' ') AS ts FROM documents),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS s
-      |  FROM tok, UNNEST(range(1, greatest(len(ts) - 1, 1))) AS t(i)),
-      |rare AS (
-      |  SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= $DF_CAP),
-      |cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM sh a JOIN rare r ON a.s = r.s
-      |  JOIN sh b ON b.s = a.s AND a.doc_id < b.doc_id),
-      |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      |inter AS (
-      |  SELECT doc_a, doc_b, COUNT(*) AS n_both
-      |  FROM cand
-      |  JOIN sh fa ON fa.doc_id = doc_a
-      |  JOIN sh fb ON fb.doc_id = doc_b AND fb.s = fa.s
-      |  GROUP BY doc_a, doc_b)
-      |SELECT doc_a, doc_b,
-      |  CAST(FLOOR(CAST(n_both AS DOUBLE) / (sa.n + sb.n - n_both) * 1000000) AS BIGINT) AS jaccard_q6
-      |FROM inter
-      |JOIN sizes sa ON sa.doc_id = doc_a
-      |JOIN sizes sb ON sb.doc_id = doc_b
-      |WHERE CAST(n_both AS DOUBLE) / (sa.n + sb.n - n_both) >= 0.30""".stripMargin) { (s, dir) =>
+    exactNeardupSql("CAST(n_both AS DOUBLE) / (sa.n + sb.n - n_both)",
+      "jaccard_q6", "0.30")) { (s, dir) =>
     jaccardNeardupPairs(t(s, dir, "documents"))
   }
 
@@ -417,32 +405,37 @@ object TextOps {
     * thresholds miss by construction. */
   val containmentNeardup: QueryDef = QueryDef.sql(
     "containment_neardup",
-    s"""WITH tok AS (
-      |  SELECT doc_id, string_split(lower(text), ' ') AS ts FROM documents),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS s
-      |  FROM tok, UNNEST(range(1, greatest(len(ts) - 1, 1))) AS t(i)),
-      |rare AS (
-      |  SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= $DF_CAP),
-      |cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM sh a JOIN rare r ON a.s = r.s
-      |  JOIN sh b ON b.s = a.s AND a.doc_id < b.doc_id),
-      |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      |inter AS (
-      |  SELECT doc_a, doc_b, COUNT(*) AS n_both
-      |  FROM cand
-      |  JOIN sh fa ON fa.doc_id = doc_a
-      |  JOIN sh fb ON fb.doc_id = doc_b AND fb.s = fa.s
-      |  GROUP BY doc_a, doc_b)
-      |SELECT doc_a, doc_b,
-      |  CAST(FLOOR(CAST(n_both AS DOUBLE) / least(sa.n, sb.n) * 1000000) AS BIGINT) AS containment_q6
-      |FROM inter
-      |JOIN sizes sa ON sa.doc_id = doc_a
-      |JOIN sizes sb ON sb.doc_id = doc_b
-      |WHERE CAST(n_both AS DOUBLE) / least(sa.n, sb.n) >= 0.80""".stripMargin) { (s, dir) =>
+    exactNeardupSql("CAST(n_both AS DOUBLE) / least(sa.n, sb.n)",
+      "containment_q6", "0.80")) { (s, dir) =>
     containmentNeardupPairs(t(s, dir, "documents"))
   }
+
+  /** Oracle of the exact shingle-overlap detectors: rare-shingle
+    * candidates, exact intersection sizes, and the pairs whose `score`
+    * (over n_both, sa.n, sb.n) reaches `threshold`, quantized as `out`. */
+  private def exactNeardupSql(score: String, out: String,
+                              threshold: String): String =
+    "WITH " + shingleCteSql +
+      s""",
+        |rare AS (
+        |  SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= $DF_CAP),
+        |cand AS (
+        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        |  FROM sh a JOIN rare r ON a.s = r.s
+        |  JOIN sh b ON b.s = a.s AND a.doc_id < b.doc_id),
+        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+        |inter AS (
+        |  SELECT doc_a, doc_b, COUNT(*) AS n_both
+        |  FROM cand
+        |  JOIN sh fa ON fa.doc_id = doc_a
+        |  JOIN sh fb ON fb.doc_id = doc_b AND fb.s = fa.s
+        |  GROUP BY doc_a, doc_b)
+        |SELECT doc_a, doc_b,
+        |  CAST(FLOOR($score * 1000000) AS BIGINT) AS $out
+        |FROM inter
+        |JOIN sizes sa ON sa.doc_id = doc_a
+        |JOIN sizes sb ON sb.doc_id = doc_b
+        |WHERE $score >= $threshold""".stripMargin
 
   /** The exact-Jaccard near-dup detector over ANY (doc_id, text) frame —
     * unit-testable on literal documents; the registered query applies it
@@ -466,21 +459,10 @@ object TextOps {
     * harness does so between queries; other long-lived callers should
     * `spark.catalog.clearCache()` (or accept the cached stage as
     * reusable state) after materializing results. */
-  def jaccardNeardupPairs(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    val (cand, hsets) = rareShingleCandidates(docs)
-    // |A∩B| ≤ shared_rare + min(hot_a, hot_b); Jaccard is monotone in
-    // |A∩B|, so pairs whose bound misses 0.30 cannot pass exact verify
-    val ub = $"shared_rare" + least($"nhot_a", $"nhot_b")
-    val plausible = cand
-      .where(ub.cast(DoubleType) / ($"na" + $"nb" - ub) >= 0.30)
-      .select($"doc_a", $"doc_b")
-    val jac = $"n_both".cast(DoubleType) / ($"na" + $"nb" - $"n_both")
-    intersectionSizes(plausible, hsets)
-      .where(jac >= 0.30)
-      .select($"doc_a", $"doc_b", Kit.quantize(jac, 6).as("jaccard_q6"))
-  }
+  def jaccardNeardupPairs(docs: DataFrame): DataFrame =
+    overlapNeardupPairs(docs,
+      n => n.cast(DoubleType) / (col("na") + col("nb") - n), 0.30,
+      "jaccard_q6")
 
   /** CONTAINMENT near-dup detection — |A∩B| / min(|A|,|B|) ≥ 0.80: the
     * subset-duplication case (a document quoted or re-published inside a
@@ -491,18 +473,30 @@ object TextOps {
     * by the SMALLER set. Same scale designation as
     * [[jaccardNeardupPairs]]: verification-grade at 100 TB — the
     * production path is the MinHash/SimHash sketch family. */
-  def containmentNeardupPairs(docs: DataFrame): DataFrame = {
+  def containmentNeardupPairs(docs: DataFrame): DataFrame =
+    overlapNeardupPairs(docs,
+      n => n.cast(DoubleType) / least(col("na"), col("nb")), 0.80,
+      "containment_q6")
+
+  /** The one body of the exact family: `score` maps an intersection
+    * size (with the pair's `na`/`nb` set sizes in scope) to the metric.
+    * Every score here is monotone in |A∩B| ≤ shared_rare +
+    * min(hot_a, hot_b), so pairs whose bound misses `threshold` cannot
+    * pass exact verify and are pruned before it; survivors are
+    * verified exactly and quantized as `out`. */
+  private def overlapNeardupPairs(docs: DataFrame, score: Column => Column,
+                                  threshold: Double, out: String): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     val (cand, hsets) = rareShingleCandidates(docs)
     val ub = $"shared_rare" + least($"nhot_a", $"nhot_b")
     val plausible = cand
-      .where(ub.cast(DoubleType) / least($"na", $"nb") >= 0.80)
+      .where(score(ub) >= threshold)
       .select($"doc_a", $"doc_b")
-    val contain = $"n_both".cast(DoubleType) / least($"na", $"nb")
+    val exact = score($"n_both")
     intersectionSizes(plausible, hsets)
-      .where(contain >= 0.80)
-      .select($"doc_a", $"doc_b", Kit.quantize(contain, 6).as("containment_q6"))
+      .where(exact >= threshold)
+      .select($"doc_a", $"doc_b", Kit.quantize(exact, 6).as(out))
   }
 
   /** The shared candidate stage of the exact near-dup family: bounded
@@ -691,11 +685,8 @@ object TextOps {
     val bandsSql = (0 until MH_BANDS).map { bd =>
       s"SELECT doc_id, $bd AS band, concat_ws('_', m${2 * bd}, m${2 * bd + 1}) AS k FROM sig"
     }.mkString("\n  UNION ALL ")
-    s"""tok AS (
-      |  SELECT doc_id, string_split(lower(text), ' ') AS ts FROM documents),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS s
-      |  FROM tok, UNNEST(range(1, greatest(len(ts) - 1, 1))) AS t(i)),
+    shingleCteSql +
+      s""",
       |hs AS (
       |  SELECT doc_id,
       |    CAST(('0x' || substr(md5(s), 1, 12)) AS BIGINT) % $MH_P AS h
@@ -865,11 +856,8 @@ object TextOps {
       .mkString("\n      |  UNION ALL ")
     QueryDef.sql(
       "simhash_neardup",
-      s"""WITH tok AS (
-        |  SELECT doc_id, string_split(lower(text), ' ') AS ts FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS s
-        |  FROM tok, UNNEST(range(1, greatest(len(ts) - 1, 1))) AS t(i)),
+      "WITH " + shingleCteSql +
+        s""",
         |hs AS (
         |  SELECT doc_id, CAST(('0x' || substr(md5(s), 1, 12)) AS BIGINT) AS h
         |  FROM sh),
@@ -945,30 +933,11 @@ object TextOps {
     * extends), so ingest cost scales with the batch, not the corpus: only
     * incoming documents are shingled and hashed, and the join touches
     * only buckets an incoming signature lands in. */
-  val incrementalNeardup: QueryDef = {
-    val sigColsSql = MH_AB.zipWithIndex.map { case ((a, b), i) =>
-      s"MIN(($a * h + $b) % $MH_P) AS m$i"
-    }.mkString(",\n      |    ")
-    val bandsSql = (0 until MH_BANDS).map { bd =>
-      s"SELECT doc_id, $bd AS band, concat_ws('_', m${2 * bd}, m${2 * bd + 1}) AS k FROM sig"
-    }.mkString("\n      |  UNION ALL ")
+  val incrementalNeardup: QueryDef =
     QueryDef.sql(
       "incremental_neardup",
-      s"""WITH tok AS (
-        |  SELECT doc_id, string_split(lower(text), ' ') AS ts FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS s
-        |  FROM tok, UNNEST(range(1, greatest(len(ts) - 1, 1))) AS t(i)),
-        |hs AS (
-        |  SELECT doc_id,
-        |    CAST(('0x' || substr(md5(s), 1, 12)) AS BIGINT) % $MH_P AS h
-        |  FROM sh),
-        |sig AS (
-        |  SELECT doc_id,
-        |    $sigColsSql
-        |  FROM hs GROUP BY doc_id),
-        |bands AS (
-        |  $bandsSql),
+      "WITH " + mhPairsBaseCteSql +
+      s""",
         |src AS (
         |  SELECT doc_id, source IN ('${IncSources.mkString("','")}') AS is_inc
         |  FROM documents),
@@ -1005,7 +974,6 @@ object TextOps {
         |LEFT JOIN dups ON dups.doc_id = d.doc_id""".stripMargin) { (s, dir) =>
       incrementalNeardupReport(t(s, dir, "documents"), IncSources)
     }
-  }
 
   /** The dedup-on-ingest detector over ANY (doc_id, source, text) frame;
     * rows whose source is in `incomingSources` form the batch, the rest

@@ -264,7 +264,10 @@ class ChunkShardSemdedupSpec extends SparkTestBase {
     import spark.implicits._
     val q = Similarity.plantedQuantized(spark, sfDir).persist()
     val n = q.count()
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val census = Clustering.semdedupTwoLevelAuto(q).collect()
+    // the census is the only frame the call leaves persisted
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore).size === 1)
     val nPlanted = graft.sources.Tables.load(spark, sfDir, "embeddings")
       .where($"vec_id" % 37 === 0).count()
     assert(census.map(_.getAs[Long]("n_vecs")).sum === n)

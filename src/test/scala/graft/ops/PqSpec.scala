@@ -161,8 +161,8 @@ class PqSpec extends SparkTestBase {
     // ADVICE fix.
     val base = Similarity.quantized(spark, dir)
     val n = base.count()
-    val (assign, probes) =
-      Similarity.ivfAssignProbes(base, Similarity.ivfModulus(n), 25, 2)
+    val (assign, probes) = Similarity.ivfAssignProbes(
+      base, base.where($"vec_id" % 25 === 0), Similarity.ivfModulus(n), 2)
     val cb = Pq.sampledCodebook(base, Pq.pqCbm(n))
     val cand = probes.join(Pq.codedAssign(assign, base, cb), Seq("cell"))
       .where($"vec_id" =!= $"qid")
