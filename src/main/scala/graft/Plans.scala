@@ -198,7 +198,11 @@ object Plans {
         "at any partitioning, which is what lets a DuckDB CTE chain " +
         "oracle it exactly."),
     "kmeans_histogram" ->
-      ("Lloyd iteration at scale: k centroids broadcast out, one corpus " +
+      ("At sf0.01 (n = 500, under the 16,384-vector LocalTrainGate) the " +
+        "query trains AND labels on the driver from its one gate " +
+        "collect and returns a local relation, so the plan below is a " +
+        "LocalTableScan. Past the gate, Lloyd iteration at scale: k " +
+        "centroids broadcast out, one corpus " +
         "scan per iteration, and the return shuffle carries only " +
         "(cluster, pos, partial-sum) rows — ≤ k·dim per partition, " +
         "independent of corpus size; the corpus itself never shuffles. " +
@@ -279,7 +283,11 @@ object Plans {
         "sub-quadratic candidates and 100% planted recall at 10×-1000× " +
         "(STRESS_r08.md §9)."),
     "pq_topk" ->
-      ("Product quantization's compressed-domain scan (the ADC analogue " +
+      ("At sf0.01 (n = 500, under the 16,384-vector gate) the codebook, " +
+        "codes, LUTs and ADC top-5 come from the one gate collect on the " +
+        "driver, so the plan below is a LocalTableScan; PlanShapeSpec " +
+        "pins the past-gate plan. Past the gate, product " +
+        "quantization's compressed-domain scan (the ADC analogue " +
         "of similarity_topk's exactness-baseline designation): encoding " +
         "is a PURE PROJECTION — per subspace a packed-long aggregate() " +
         "fold over the ~128 KB codebook plan literal (d²·256 + j, ties " +
@@ -319,7 +327,8 @@ object Plans {
         "which is what makes dedup-at-the-door affordable at 10¹¹ " +
         "vectors."),
     "ann_auto_topk" ->
-      ("The ANN router: one corpus COUNT (a driver scalar) dispatches " +
+      ("The ANN router: the corpus size n (the gate collect's row " +
+        "count; a COUNT only past 16,384 vectors) dispatches " +
         "to exact (n ≤ 784 — the arithmetic crossover of the family's " +
         "q = n/25 cost model: n²/25 exact dots vs (28/25)·n^1.5 for " +
         "IVF build+probe+score), IVF probe-2 (784 < n ≤ 500k), or " +
@@ -330,11 +339,13 @@ object Plans {
         "registered plan — AnnRouterSpec asserts row equality against " +
         "the branch bodies, and the DuckDB oracle replays the same " +
         "thresholds from COUNT(*), gating all three branch pipelines on " +
-        "n. At sf0.01 (n = 500) the dispatch lands on the exact branch " +
-        "below: broadcast query subset, one corpus scan, cos_topk " +
-        "aggregation (no rank window) — see ivf_topk / " +
-        "ivfpq_rerank_topk sections for the plans the other two " +
-        "branches reuse."),
+        "n. At sf0.01 (n = 500) the dispatch lands on the exact branch, " +
+        "which at n ≤ 784 finishes on the driver from the collected rows " +
+        "(same i64 dots, double cosine and cos_topk ranking), so the " +
+        "plan below is a LocalTableScan. Past the gate the exact branch " +
+        "is similarity_topk_bigq's cos_topk body with a broadcast query " +
+        "subset; see ivf_topk and ivfpq_rerank_topk for the plans the " +
+        "other two branches reuse."),
     "dup_span_coverage" ->
       ("Exact duplicate-span coverage (Lee et al. ACL 2022 re-expressed " +
         "at w-gram granularity): LINEAR, never pairwise — the hashed " +

@@ -20,16 +20,9 @@ final class TopKHeap(val k: Int) extends Serializable {
   val ids = new Array[Long](math.max(k, 1))
   var n = 0
 
-  // Element i ranks STRICTLY below element j under (score DESC, id ASC).
-  // Total order via Double.compare — `<` on raw doubles is false for any
-  // NaN operand, which would let an under-full-admitted NaN reach the
-  // root and reject every later candidate. Double.compare ranks NaN
-  // above every real score (and -0.0 below 0.0), matching Spark's own
-  // DESC sort order, so the heap keeps window-rank parity on NaN input.
-  private def worse(si: Double, ii: Long, sj: Double, ij: Long): Boolean = {
-    val c = java.lang.Double.compare(si, sj)
-    c < 0 || (c == 0 && ii > ij)
-  }
+  // Element i ranks STRICTLY below element j.
+  private def worse(si: Double, ii: Long, sj: Double, ij: Long): Boolean =
+    TopKHeap.ranksBefore(sj, ij, si, ii)
 
   def insert(s: Double, id: Long): Unit = {
     if (n < k) {
@@ -65,10 +58,23 @@ final class TopKHeap(val k: Int) extends Serializable {
     * order as admission (NaN first, like Spark's DESC sort). */
   def sortedPairs: IndexedSeq[(Double, Long)] =
     (0 until n).map(i => (scores(i), ids(i)))
-      .sortWith { case ((s1, i1), (s2, i2)) =>
-        val c = java.lang.Double.compare(s1, s2)
-        c > 0 || (c == 0 && i1 < i2)
-      }
+      .sortWith { case ((s1, i1), (s2, i2)) => TopKHeap.ranksBefore(s1, i1, s2, i2) }
+}
+
+object TopKHeap {
+
+  /** The one ranking of [[CosTopK]], on the executors and in the
+    * driver-side top-k finishes alike: (`s1`, `i1`) ranks strictly
+    * before (`s2`, `i2`) under (score DESC, id ASC). A total order via
+    * Double.compare — `<` on raw doubles is false for any NaN operand,
+    * which would let an under-full-admitted NaN reach the heap root and
+    * reject every later candidate. Double.compare ranks NaN above every
+    * real score (and -0.0 below 0.0), matching Spark's own DESC sort
+    * order, so the heap keeps window-rank parity on NaN input. */
+  def ranksBefore(s1: Double, i1: Long, s2: Double, i2: Long): Boolean = {
+    val c = java.lang.Double.compare(s1, s2)
+    c > 0 || (c == 0 && i1 < i2)
+  }
 }
 
 /** Exact per-group top-k as a native [[TypedImperativeAggregate]]:

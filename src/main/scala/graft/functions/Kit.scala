@@ -13,7 +13,6 @@ object Kit {
 
   /** F1 — casts mirroring pandas `astype` (`datasources.py:274-275`). */
   def asString(c: Column): Column = c.cast(StringType)
-  def asDouble(c: Column): Column = c.cast(DoubleType)
   def asDate(c: Column): Column = c.cast(DateType)
 
   /** Exact-money cast: fixture money columns are 2-decimal doubles, so this

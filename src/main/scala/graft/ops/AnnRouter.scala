@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.Kit
 
@@ -9,7 +9,8 @@ import graft.functions.Kit
   * knowing which decade they're in (SURVEY §2.10). One registered query,
   * `ann_auto_topk`, whose result IS the chosen branch's result:
   *
-  *   - n ≤ 784        → exact broadcast top-k ([[Similarity.exactTopkFrom]])
+  *   - n ≤ 784        → exact top-k ([[Similarity.exactTopkFrom]]; on
+  *                      the driver from the gate collect's rows)
   *   - 784 < n ≤ 500k → IVF probe-2 + exact scoring ([[Similarity.ivfTopkFrom]])
   *   - n > 500k       → IVF-PQ + exact re-rank ([[Pq.ivfpqFrom]])
   *
@@ -151,10 +152,27 @@ object AnnRouter {
           |UNION ALL
           |SELECT qid, cid, cos_q6 FROM pout
           |WHERE $ivfpq""".stripMargin) { (s, dir) =>
-      val base = Similarity.quantized(s, dir)
-      rederive(base, base.count())
+      annAutoTopkAt(s, dir, Clustering.LocalTrainGate)
     }
   }
+
+  /** The `ann_auto_topk` body with the corpus gate as a parameter (specs
+    * pin parity on both sides of it). n comes from the gate collect
+    * ([[Similarity.gatedCorpus]]): at n ≤ [[T1]] the exact branch
+    * finishes on the driver from those very rows
+    * ([[Similarity.exactTopkLocal]]); up to the gate the re-deriving
+    * plan runs at n = their count; past it a `count()` sizes it, as
+    * before. */
+  private[ops] def annAutoTopkAt(s: SparkSession,
+                                 dir: String, gate: Long): DataFrame =
+    Similarity.gatedCorpus(s, dir, gate) match {
+      case Some(rows) if choose(rows.length) == "exact" =>
+        Similarity.exactTopkLocal(s, rows, 5)
+      case Some(rows) => rederive(Similarity.quantized(s, dir), rows.length)
+      case None =>
+        val base = Similarity.quantized(s, dir)
+        rederive(base, base.count())
+    }
 
   val all: Seq[QueryDef] = Seq(annAutoTopk)
 }

@@ -1,11 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.Kit
-import graft.sources.Tables
 
 /** Distributed k-means over the embedding corpus — the training-data
   * curation primitive behind IVF coarse quantizers, diversity sampling,
@@ -30,9 +29,6 @@ import graft.sources.Tables
   * aggregation), at any scale.
   */
 object Clustering {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Squared L2 distance from quantized vector column `qe` (with cached
     * squared norm `nrm`) to a literal centroid. */
@@ -100,37 +96,64 @@ object Clustering {
     * [[lloydDistributed]], labelled by [[joinLabels]] (`lowId`) or
     * [[nearestLabels]]. */
   private def train(quantized: DataFrame, k: Int, iters: Int,
-                    lowId: Boolean): Seq[Seq[Long]] = {
-    val base0 = withNrm(quantized)
-    val s = base0.sparkSession
-    import s.implicits._
-    DriverLocal.rowsUpTo(base0.select($"vec_id", $"qe").as[(Long, Seq[Long])],
-      LocalTrainGate) match {
-      case Some(rows) =>
-        val init =
-          if (lowId) rows.sortBy(_._1).take(k).map(_._2).toSeq
-          else {
-            val (seed, pool) = seedPoolLocal(rows, k)
-            farthestFirst(seed, pool, k)
-          }
-        lloydLocal(rows.map(_._2.toArray), init, iters)
-      case None =>
-        // reuse the caller's cached (vec_id, qe, nrm) frame if it has one
-        // — re-persisting a superset here would double-cache the corpus
-        val ownCache =
-          base0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-        val base = if (ownCache) base0.persist() else base0
-        try {
-          val init =
-            if (lowId) lowIdInit(base, k)
-            else {
-              val (seed, pool) = seedPoolDistributed(base, k)
-              farthestFirst(seed, pool, k)
-            }
-          lloydDistributed(base, init, iters)(
-            if (lowId) joinLabels else nearestLabels)
-        } finally { if (ownCache) base.unpersist(); () }
+                    lowId: Boolean): Seq[Seq[Long]] =
+    new TrainSet(quantized).train(k, iters, lowId)
+
+  /** A corpus as [[train]] reads it: its (vec_id, qe) rows when it holds
+    * at most [[LocalTrainGate]] vectors (one [[DriverLocal.rowsUpTo]]
+    * job), else only the frame. A caller that sizes k from the corpus
+    * takes n from the same collect ([[n]]), so a gate-sized corpus is
+    * counted by no job of its own. */
+  private final class TrainSet(val q: DataFrame) {
+    val rows: Option[Array[(Long, Seq[Long])]] = {
+      val s = q.sparkSession
+      import s.implicits._
+      DriverLocal.rowsUpTo(q.select($"vec_id", $"qe").as[(Long, Seq[Long])],
+        LocalTrainGate)
     }
+
+    /** The corpus's row count: the collect's length, or a count past the
+      * gate. */
+    lazy val n: Long = rows.fold(q.count())(_.length.toLong)
+
+    def train(k: Int, iters: Int, lowId: Boolean): Seq[Seq[Long]] =
+      rows match {
+        case Some(r) => trainRows(r, k, iters, lowId)
+        case None    => trainDistributed(q, k, iters, lowId)
+      }
+  }
+
+  /** [[train]] over collected (vec_id, qe) rows. */
+  private def trainRows(rows: Array[(Long, Seq[Long])], k: Int, iters: Int,
+                        lowId: Boolean): Seq[Seq[Long]] = {
+    val init =
+      if (lowId) rows.sortBy(_._1).take(k).map(_._2).toSeq
+      else {
+        val (seed, pool) = seedPoolLocal(rows, k)
+        farthestFirst(seed, pool, k)
+      }
+    lloydLocal(rows.map(_._2.toArray), init, iters)
+  }
+
+  /** [[train]] past the gate: the distributed init and Lloyd rounds. */
+  private def trainDistributed(quantized: DataFrame, k: Int, iters: Int,
+                               lowId: Boolean): Seq[Seq[Long]] = {
+    val base0 = withNrm(quantized)
+    // reuse the caller's cached (vec_id, qe, nrm) frame if it has one
+    // — re-persisting a superset here would double-cache the corpus
+    val ownCache =
+      base0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val base = if (ownCache) base0.persist() else base0
+    try {
+      val init =
+        if (lowId) lowIdInit(base, k)
+        else {
+          val (seed, pool) = seedPoolDistributed(base, k)
+          farthestFirst(seed, pool, k)
+        }
+      lloydDistributed(base, init, iters)(
+        if (lowId) joinLabels else nearestLabels)
+    } finally { if (ownCache) base.unpersist(); () }
   }
 
   /** The k lowest vec_ids' vectors in vec_id order — one distributed
@@ -178,7 +201,7 @@ object Clustering {
 
   /** The i64 dot product over the common prefix of `a` and `b` — the
     * [[graft.functions.DotProductI64]] rule, on the driver. */
-  private def dotLocal(a: Array[Long], b: Array[Long]): Long = {
+  private[ops] def dotLocal(a: Array[Long], b: Array[Long]): Long = {
     var acc = 0L; var i = 0
     val n = math.min(a.length, b.length)
     while (i < n) { acc += a(i) * b(i); i += 1 }
@@ -261,14 +284,7 @@ object Clustering {
       var vi = 0
       while (vi < vecs.length) {
         val v = vecs(vi)
-        var best = 0
-        var bestD = Long.MaxValue
-        var c = 0
-        while (c < k) {
-          val d = nrms(vi) - 2L * dotLocal(v, centroids(c)) + cnorms(c)
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
+        val best = nearestLocal(v, nrms(vi), centroids, cnorms)
         var i = 0
         while (i < v.length) {
           sums(best)(i) += v(i)
@@ -289,6 +305,22 @@ object Clustering {
       }.toArray
     }
     centroids.map(_.toSeq).toSeq
+  }
+
+  /** Index of the centroid nearest to `v` (squared norm `nrm`) by
+    * `nrm − 2·⟨v,c⟩ + |c|²` (`cnorms` the centroids' squared norms), ties
+    * to the LOWEST index — [[nearest]]'s argmin, on the driver. */
+  private def nearestLocal(v: Array[Long], nrm: Long,
+      centroids: Array[Array[Long]], cnorms: Array[Long]): Int = {
+    var best = 0
+    var bestD = Long.MaxValue
+    var c = 0
+    while (c < centroids.length) {
+      val d = nrm - 2L * dotLocal(v, centroids(c)) + cnorms(c)
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
   }
 
   /** Assign every vector to its final cluster. */
@@ -412,27 +444,39 @@ object Clustering {
   val kmeansHistogram: QueryDef =
     QueryDef.sql("kmeans_histogram",
       kmeansOracleSql(k = 8, iters = 3, poolMult = 16)) { (s, dir) =>
-      import s.implicits._
-      // ONE cached frame (with norms) shared by training and assignment —
-      // the harness clearCache()s it after the query, like every other
-      // persisted stage table in this repo. Parallelism floor BEFORE the
-      // persist (see [[ParallelismFloor]]): every Lloyd pass is a
-      // compute-bound scan of this cache (k dot products per row + the
-      // partial-sum explode), and a single-file corpus otherwise caches
-      // as 1-2 partitions — measured at 100×: 12 of 13 task threads
-      // parked, 111 s warm; floored, the same loop runs at full width.
-      val q = ParallelismFloor(
-        t(s, dir, "embeddings").select($"vec_id",
-          expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
-            .as("qe")),
-        s"$dir/embeddings.parquet")
-        .withColumn("nrm", graft.functions.Kit.dotI64($"qe", $"qe"))
-        .persist()
-      val centroids = kmeansCentroids(q, k = 8, iters = 3)
-      kmeansAssign(q, centroids)
-        .groupBy($"cluster")
-        .agg(count(lit(1)).as("n_vecs"))
+      kmeansHistogramAt(s, dir, LocalTrainGate)
     }
+
+  /** The `kmeans_histogram` body with the corpus gate as a parameter
+    * (specs pin parity on both sides of it). A gate-sized corpus trains
+    * AND labels on the driver from the gate collect's rows
+    * ([[Similarity.gatedCorpus]]): the final labels are
+    * [[nearestLocal]]'s argmin over [[lloydLocal]]'s centroids, and a
+    * cluster no vector chose has no row, as under `groupBy`. Past the
+    * gate the persisted [[Similarity.quantized]] stage table (norms and
+    * parallelism floor included — every Lloyd pass is a compute-bound
+    * scan of it) is trained and labelled by distributed passes. */
+  private[ops] def kmeansHistogramAt(s: SparkSession, dir: String,
+                                     gate: Long): DataFrame = {
+    import s.implicits._
+    val (k, iters) = (8, 3)
+    Similarity.gatedCorpus(s, dir, gate) match {
+      case Some(rows) =>
+        val vecs = rows.map(_._2.toArray)
+        val cs = trainRows(rows, k, iters, lowId = false).map(_.toArray).toArray
+        val cnorms = cs.map(c => dotLocal(c, c))
+        val sizes = vecs.map(v => nearestLocal(v, dotLocal(v, v), cs, cnorms))
+          .groupBy(identity).toSeq
+          .map { case (cl, members) => Row(cl, members.length.toLong) }
+        s.createDataFrame(java.util.Arrays.asList(sizes: _*), StructType(Seq(
+          StructField("cluster", IntegerType), StructField("n_vecs", LongType))))
+      case None =>
+        val q = Similarity.quantized(s, dir)
+        kmeansAssign(q, trainDistributed(q, k, iters, lowId = false))
+          .groupBy($"cluster")
+          .agg(count(lit(1)).as("n_vecs"))
+    }
+  }
 
   /** Oracle for [[semdedupPrune]]: the planted-corpus flat/norms prefix
     * (shared with the projection near-dup family), the k-means chain
@@ -834,9 +878,9 @@ object Clustering {
     semdedupAdaptiveOracleSql(targetFloor = 64L, iters = 3,
       tau = SemdedupTau)) { (s, dir) =>
     val q = Similarity.plantedQuantized(s, dir).persist()
-    val n = q.count()
-    val k = semdedupK(n, targetClusterSize = 64L)
-    val cs = kmeansCentroidsLowId(q, k, iters = 3)
+    val corpus = new TrainSet(q)
+    val cs = corpus.train(semdedupK(corpus.n, targetClusterSize = 64L),
+      iters = 3, lowId = true)
     val asg = kmeansAssignJoin(q, cs).persist()
     val cand = kmeansProbeAssign(q, cs, 2).persist()
     semdedupCensus(q, asg, SemdedupTau.toDouble, candAsg = Some(cand))
@@ -967,7 +1011,7 @@ object Clustering {
   def kmeansTwoLevelTrain(q: DataFrame, k: Int,
                           iters: Int): (Seq[Seq[Long]], Seq[Seq[Long]]) = {
     val (k1, k2) = twoLevelSplit(k)
-    val (cs1, cs2, r) = trainLevels(q, k1, k2, iters)
+    val (cs1, cs2, r) = trainLevels(new TrainSet(q), k1, k2, iters)
     r.unpersist()
     (cs1, cs2)
   }
@@ -979,12 +1023,12 @@ object Clustering {
     * broadcast), also returning the persisted [[coarseResiduals]] the
     * fine level trained on, so the cell assignment ([[cellsOf]]) reads
     * that frame instead of rebuilding it. The caller unpersists it. */
-  private def trainLevels(q: DataFrame, k1: Int, k2: Int, iters: Int)
+  private def trainLevels(corpus: TrainSet, k1: Int, k2: Int, iters: Int)
       : (Seq[Seq[Long]], Seq[Seq[Long]], DataFrame) = {
     require(k1 <= 32768 && k2 <= 32768,
       s"two-level split $k1 x $k2 exceeds the per-level pack bound")
-    val cs1 = kmeansCentroidsLowId(q, k1, iters)
-    val r = coarseResiduals(q, cs1)
+    val cs1 = corpus.train(k1, iters, lowId = true)
+    val r = coarseResiduals(corpus.q, cs1)
     val cs2 = try kmeansCentroidsLowId(r, k2, iters)
       catch { case e: Throwable => r.unpersist(); throw e }
     (cs1, cs2, r)
@@ -1110,11 +1154,17 @@ object Clustering {
       .select($"vec_id", $"t.cid".cast("int").as("cluster"))
   }
 
-  /** Train + single assignment — the registered-query form. */
+  /** Train + single assignment — the registered query's form (which
+    * runs it over the [[TrainSet]] it also sizes k from). */
   def semdedupTwoLevelAssign(q: DataFrame, k: Int,
+                             iters: Int): DataFrame =
+    twoLevelAssign(new TrainSet(q), k, iters)
+
+  /** [[semdedupTwoLevelAssign]] over a [[TrainSet]]. */
+  private def twoLevelAssign(corpus: TrainSet, k: Int,
                              iters: Int): DataFrame = {
     val (k1, k2) = twoLevelSplit(k)
-    val (_, cs2, r) = trainLevels(q, k1, k2, iters)
+    val (_, cs2, r) = trainLevels(corpus, k1, k2, iters)
     cellsOf(r, cs2)
   }
 
@@ -1137,10 +1187,9 @@ object Clustering {
   def semdedupTwoLevelAuto(q: DataFrame,
                            tau: Double = SemdedupTau.toDouble,
                            iters: Int = 3): DataFrame = {
-    val n = q.count()
-    val k = semdedupK2(n)
-    val (k1, k2) = latticeSplit(k)
-    val (cs1, cs2, r) = trainLevels(q, k1, k2, iters)
+    val corpus = new TrainSet(q)
+    val (k1, k2) = latticeSplit(semdedupK2(corpus.n))
+    val (cs1, cs2, r) = trainLevels(corpus, k1, k2, iters)
     val asg0 = cellsOf(r, cs2)
     val asg = asg0.persist(StageLevels.pinnedFor(asg0))
     val cand0 = twoLevelProbeCellAssign(q, cs1, cs2, 2, 2)
@@ -1168,9 +1217,9 @@ object Clustering {
     semdedupTwoLevelOracleSql(targetFloor = 64L, iters = 3,
       tau = SemdedupTau)) { (s, dir) =>
     val q = Similarity.plantedQuantized(s, dir).persist()
-    val n = q.count()
-    val k = semdedupK(n, targetClusterSize = 64L)
-    val asg = semdedupTwoLevelAssign(q, k, iters = 3).persist()
+    val corpus = new TrainSet(q)
+    val asg = twoLevelAssign(corpus,
+      semdedupK(corpus.n, targetClusterSize = 64L), iters = 3).persist()
     semdedupCensus(q, asg, SemdedupTau.toDouble)
   }
 

@@ -235,23 +235,85 @@ object Pq {
         |  GROUP BY 1, 2)
         |SELECT qid, cid, adc_d2 FROM adc
         |QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc_d2, cid) <= 5""".stripMargin) { (s, dir) =>
+    pqTopkAt(s, dir, Clustering.LocalTrainGate)
+  }
+
+  /** The `pq_topk` body with the corpus gate as a parameter (specs pin
+    * parity on both sides of it). A gate-sized corpus is sized, sampled,
+    * encoded and scored on the driver from the gate collect's rows
+    * ([[pqTopkLocal]]); past it a count sizes the distributed sample and
+    * the codes-against-broadcast-LUTs plan below scores it. */
+  private[ops] def pqTopkAt(s: SparkSession, dir: String,
+                            gate: Long): DataFrame = {
     import s.implicits._
-    val base = Similarity.quantized(s, dir)
-    // a gate-sized corpus is sized and sampled by ONE collect (the
-    // bounded-artifact class of [[Clustering.LocalTrainGate]]); past it,
-    // a count sizes the distributed sample
-    val cb = DriverLocal.rowsUpTo(corpusRows(base), Clustering.LocalTrainGate) match {
-      case Some(rows) => codebookOf(rows, pqCbm(rows.length))
-      case None => sampledCodebook(base, pqCbm(base.count()))
+    Similarity.gatedCorpus(s, dir, gate) match {
+      case Some(rows) => pqTopkLocal(s, rows)
+      case None =>
+        val base = Similarity.quantized(s, dir)
+        val cb = sampledCodebook(base, pqCbm(base.count()))
+        val scored = encode(base, cb)
+          .crossJoin(broadcast(luts(base.where($"vec_id" % 25 === 0), cb)))
+          .where($"vec_id" =!= $"qid")
+          .select($"qid", $"vec_id".as("cid"),
+            (-adcD2($"codes", $"luts")).cast(DoubleType).as("nega"))
+        Kit.topKRows(scored, "qid", $"nega", $"cid", 5)
+          .select($"qid", $"t.cid".as("cid"),
+            (-$"t.cos").cast(LongType).as("adc_d2"))
     }
-    val scored = encode(base, cb)
-      .crossJoin(broadcast(luts(base.where($"vec_id" % 25 === 0), cb)))
-      .where($"vec_id" =!= $"qid")
-      .select($"qid", $"vec_id".as("cid"),
-        (-adcD2($"codes", $"luts")).cast(DoubleType).as("nega"))
-    Kit.topKRows(scored, "qid", $"nega", $"cid", 5)
-      .select($"qid", $"t.cid".as("cid"),
-        (-$"t.cos").cast(LongType).as("adc_d2"))
+  }
+
+  /** Per subspace, the slice of `v` and its squared norm: [[withSubs]]
+    * on the driver (and, over a codebook vector, [[cbEntries]]). */
+  private def subsLocal(v: Seq[Long]): Array[(Array[Long], Long)] =
+    Array.tabulate(M) { m =>
+      val sub = v.slice(m * Ds, (m + 1) * Ds).toArray
+      (sub, sub.foldLeft(0L)((acc, x) => acc + x * x))
+    }
+
+  /** [[entryD2]] on the driver, in ANSI's overflow-checked i64
+    * arithmetic around the wrapping dot of
+    * [[graft.functions.DotProductI64]]. */
+  private def entryD2Local(sub: (Array[Long], Long),
+                           e: (Array[Long], Long)): Long =
+    Math.addExact(Math.subtractExact(sub._2,
+      Math.multiplyExact(2L, Clustering.dotLocal(sub._1, e._1))), e._2)
+
+  /** `pq_topk` over collected (vec_id, qe) rows, returned as a local
+    * relation — [[codebookOf]], then [[encode]]'s packed `d²·256+j`
+    * argmin under its range guard (which raises the same message), the
+    * family queries' [[luts]], and ADC as Σₘ LUT, ranked by CosTopK's
+    * heap on the same negated-double score. */
+  private[ops] def pqTopkLocal(s: SparkSession,
+                               rows: Array[(Long, Seq[Long])]): DataFrame = {
+    val cb = codebookOf(rows, pqCbm(rows.length)).map(subsLocal).toArray
+    val subs = rows.map(r => subsLocal(r._2))
+    val codes = subs.map { v =>
+      Array.tabulate(M) { m =>
+        var packed = Long.MaxValue
+        var j = 0
+        while (j < cb.length) {
+          val d2 = entryD2Local(v(m), cb(j)(m))
+          if (d2 < 0L || d2 > MaxD)
+            throw new IllegalStateException(
+              s"Pq.encode: subspace distance outside packable range " +
+                s"[0, $MaxD] (non-unit-scaled embeddings?): $d2")
+          packed = math.min(packed, d2 * Shift + j)
+          j += 1
+        }
+        (packed % Shift).toInt
+      }
+    }
+    val lut = subs.indices.map { q =>
+      if (rows(q)._1 % 25 != 0) null
+      else Array.tabulate(M, cb.length)((m, j) => entryD2Local(subs(q)(m), cb(j)(m)))
+    }
+    val scored = Similarity.topkLocal(rows.map(_._1), 5) { (q, c) =>
+      var adc = 0L
+      var m = 0
+      while (m < M) { adc += lut(q)(m)(codes(c)(m)); m += 1 }
+      (-adc).toDouble
+    }.map { case (q, c, nega) => (q, c, (-nega).toLong) }
+    Similarity.topkRelation(s, scored, "adc_d2")
   }
 
   /** THE PRODUCTION ANN PIPELINE — IVF cell pruning × PQ compression ×

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -65,19 +65,13 @@ object Similarity {
     * similarity query reads this stage table instead. The harness clears
     * the cache between queries. */
   private[graft] def quantized(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     // Parallelism floor BEFORE the persist (see [[ParallelismFloor]]):
     // every family member's compute-bound corpus pass — ivf_topk's n·√n
     // assignment dots, ann_lsh bucket projection, the block products —
     // reads THIS cache, and a single-file fixture otherwise caches as
     // 1-2 partitions, starving all but 1-2 cores (measured on k-means at
     // 100×: 111 s starved vs 9.4 s floored, same arithmetic).
-    val base = ParallelismFloor(
-      Tables.load(s, dir, "embeddings").select(
-        $"vec_id",
-        expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
-          .as("qe")),
-      s"$dir/embeddings.parquet")
+    val base = ParallelismFloor(quantizedScan(s, dir), s"$dir/embeddings.parquet")
       .withColumn("nrm", Kit.dotI64(col("qe"), col("qe")))
     // SIZE the persist against the source (the stage-table doctrine,
     // StageLevels.pinnedFor) — found missing here by the 2000×-vector
@@ -92,6 +86,70 @@ object Similarity {
     graft.ops.StageLevels.tuneCacheBatchFor(s, lvl)
     base.persist(lvl)
   }
+
+  /** (vec_id, qe): the embeddings scan with every element quantized to
+    * floor(x·10⁶) as int64 — the family's one spelling of the
+    * quantization, unpersisted. */
+  private def quantizedScan(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "embeddings").select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
+        .as("qe"))
+
+  /** The quantized corpus of `dir` as (vec_id, qe) rows when it holds at
+    * most `gate` vectors ([[Clustering.LocalTrainGate]] in production),
+    * decided and collected by one [[DriverLocal.rowsUpTo]] job straight
+    * off the scan; `None` past the gate. Nothing is persisted here: only
+    * a caller's distributed branch reads (and so persists) the
+    * [[quantized]] stage table, as [[PageRank.pageRank]] does. */
+  private[ops] def gatedCorpus(s: SparkSession, dir: String, gate: Long)
+      : Option[Array[(Long, Seq[Long])]] = {
+    import s.implicits._
+    DriverLocal.rowsUpTo(quantizedScan(s, dir).as[(Long, Seq[Long])], gate)
+  }
+
+  /** The [[Kit.topKRows]] fold on the driver, over collected rows: for
+    * every family query (`vec_id % 25 = 0`) among `ids`, the `k` best
+    * `score(q, c)` over every row `c` with another id, kept by
+    * CosTopK's own heap (score DESC, id ASC). (qid, cid, score) rows. */
+  private[ops] def topkLocal(ids: Array[Long], k: Int)(
+      score: (Int, Int) => Double): Seq[(Long, Long, Double)] =
+    ids.indices.filter(ids(_) % 25 == 0).flatMap { q =>
+      val heap = new graft.functions.TopKHeap(k)
+      var c = 0
+      while (c < ids.length) {
+        if (ids(c) != ids(q)) heap.insert(score(q, c), ids(c))
+        c += 1
+      }
+      heap.sortedPairs.map { case (sc, cid) => (ids(q), cid, sc) }
+    }
+
+  /** [[exactTopkFrom]] (default pairing) over collected (vec_id, qe)
+    * rows, returned as a local relation: the same i64 dot and norms,
+    * [[cosCol]]'s `dot / (√qn · √nrm)` in doubles and [[Kit.quantize]]'s
+    * `floor(cos · 10⁶)`. A null vector scores no pair, as a null cosine
+    * never enters the aggregate; a zero norm raises like ANSI division. */
+  private[ops] def exactTopkLocal(s: SparkSession,
+      rows: Array[(Long, Seq[Long])], k: Int): DataFrame = {
+    val live = rows.filter(_._2 != null)
+    val vecs = live.map(_._2.toArray)
+    val nrms = vecs.map(v => Clustering.dotLocal(v, v).toDouble)
+    val scored = topkLocal(live.map(_._1), k) { (q, c) =>
+      val den = math.sqrt(nrms(q)) * math.sqrt(nrms(c))
+      if (den == 0.0) throw new ArithmeticException(
+        s"[DIVIDE_BY_ZERO] Division by zero: zero-norm vector in the cosine of (${live(q)._1}, ${live(c)._1})")
+      Clustering.dotLocal(vecs(c), vecs(q)).toDouble / den
+    }.map { case (q, c, cos) => (q, c, math.floor(cos * 1000000.0).toLong) }
+    topkRelation(s, scored, "cos_q6")
+  }
+
+  /** (qid, cid, `score`) BIGINT rows as a local relation, built from
+    * rows and a schema as [[PageRank]]'s local result is: no encoder
+    * projection is generated for it. */
+  private[ops] def topkRelation(s: SparkSession, rows: Seq[(Long, Long, Long)],
+                                score: String): DataFrame =
+    s.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (q, c, v) => Row(q, c, v) }: _*),
+      StructType(Seq("qid", "cid", score).map(StructField(_, LongType))))
 
   private[ops] def cosCol(dot: Column, na: Column, nb: Column): Column =
     dot.cast(DoubleType) /

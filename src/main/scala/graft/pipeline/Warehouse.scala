@@ -763,8 +763,14 @@ final case class Warehouse(spark: SparkSession, root: String) {
       val survivors =
         if (affectedRel.isEmpty) None
         else {
-          val aff = readSnapshot(dir, table, cur.version, affectedRel,
-            schemaFor(cur, affectedRel))
+          // a file subset infers its partition types from its own paths
+          // (d=1 reads as int where the version reads d as string): cast
+          // them to the version's read types before the union
+          val aff = cur.partitionCols.foldLeft(readSnapshot(dir, table,
+            cur.version, affectedRel, schemaFor(cur, affectedRel))) { (df, c) =>
+            val t = existing.schema(c).dataType
+            if (df.schema(c).dataType == t) df else df.withColumn(c, col(c).cast(t))
+          }
           Some(aff.join(batchKeys, keyCond(aff, batchKeys), "left_anti"))
         }
       val toWrite = survivors

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +23,36 @@ trait SparkTestBase extends AnyFunSuite {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Jobs started by `f` on this thread, counted by a SparkListener. A
+    * sentinel job in a second group flushes the asynchronous listener
+    * bus, so every job `f` started has been seen when it is counted. */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${System.nanoTime()}"
+    val seen = new AtomicInteger()
+    val flushed = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`)                  => seen.incrementAndGet()
+          case Some(g) if g == s"$group-end" => flushed.countDown()
+          case _                              => ()
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "jobs during")
+      val r = f
+      sc.setJobGroup(s"$group-end", "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus never flushed")
+      (r, seen.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
 
   def tmpDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix)

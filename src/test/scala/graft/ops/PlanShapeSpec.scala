@@ -211,7 +211,9 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("pq_topk encodes as a pure projection and scans codes, not vectors") {
-    val p = plan("pq_topk")
+    // the scale path: a gate-sized corpus finishes on the driver, so
+    // plan the n = 500 fixture one past a gate of 499
+    val p = Pq.pqTopkAt(spark, dir, 499L).queryExecution.executedPlan.toString
     // encoding is a per-row packed-long fold over the codebook PLAN
     // LITERAL — no join, no exchange, no aggregation state anywhere in
     // the encode subtree (the round-9 1000× OOM was the collect_list

@@ -2,10 +2,6 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -42,36 +38,6 @@ class SchemaLogSpec extends SparkTestBase {
     val r = w.read(t)
     assert(r.schema == inf.schema, s"$what: read ${r.schema.simpleString}")
     assert(rows(r) == rows(inf), what)
-  }
-
-  /** Jobs started by `f` on this thread, counted by a SparkListener. A
-    * sentinel job in a second group flushes the asynchronous listener
-    * bus, so every job `f` started has been seen when it is counted. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"schema-guard-${System.nanoTime()}"
-    val seen = new AtomicInteger()
-    val flushed = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`)                  => seen.incrementAndGet()
-          case Some(g) if g == s"$group-end" => flushed.countDown()
-          case _                              => ()
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "schema guard")
-      val r = f
-      sc.setJobGroup(s"$group-end", "listener flush")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus never flushed")
-      (r, seen.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
   }
 
   /** Rewrite version `v`'s manifest in the v3 format (no schema= line). */
@@ -267,44 +233,60 @@ class SchemaLogSpec extends SparkTestBase {
     1 -> Gen.const(Compact),
     1 -> Gen.const(ZOrder))
 
-  test("any sequence of commits records exactly the inferred schema") {
+  /** Lands `d=1`, applies `ops` in order and checks parity after each. */
+  private def replay(ops: Seq[Op], where: String): Unit = {
     var serial = 0L
     def rowsOf(n: Int, day: String, extra: Boolean): DataFrame = {
       val b = batch(serial, n, day)
       serial += n
       if (extra) b.withColumn("x", $"k".cast("string")) else b
     }
-    val prop = Prop.forAll(Gen.choose(2, 6).flatMap(Gen.listOfN(_, genOp))) { ops =>
-      val w = Warehouse(spark, tmpDir("schema-prop"))
-      w.load("t", rowsOf(4, "1", extra = false), SinkPolicy.RelandByDate("d"))
-      ops.foreach { op =>
-        val flat = TxnLog.current(Paths.get(w.root, "t")).get.partitionCols.isEmpty
-        op match {
-          case Append(n, d, e, s) =>
-            // `s` swaps the column order: a shape change, inferred
-            val b = rowsOf(n, d, e)
-            val c = if (s) b.select(b.columns.reverse.map(col): _*) else b
-            w.load("t", if (flat) c.drop("d") else c, SinkPolicy.Append)
-          case Reland(d, e) if !flat =>
-            w.load("t", rowsOf(3, d, e), SinkPolicy.RelandByDate("d"))
-          case Reland(_, _) => ()
-          case Overwrite(n) => w.load("t", rowsOf(n, "1", extra = false)
-            .drop("d"), SinkPolicy.Overwrite)
-          case Upsert(lo, pick) =>
-            // an existing partition value: it casts to the read type of d
-            val days = w.currentFiles("t").flatMap(TxnLog.partitionSegments)
-              .map(_.stripPrefix("d=")).distinct.sorted
-            val b = batch(lo.toLong, 3, if (flat) "1" else days(pick % days.size))
-            w.upsert("t", if (flat) b.drop("d") else b, Seq("k"))
-          case Compact => w.compact("t")
-          case ZOrder  => w.compactZOrder("t", Seq("k", "v"))
-        }
-        assertParity(w, "t", what = s"after $op in $ops")
+    val w = Warehouse(spark, tmpDir(where))
+    w.load("t", rowsOf(4, "1", extra = false), SinkPolicy.RelandByDate("d"))
+    ops.foreach { op =>
+      val flat = TxnLog.current(Paths.get(w.root, "t")).get.partitionCols.isEmpty
+      op match {
+        case Append(n, d, e, s) =>
+          // `s` swaps the column order: a shape change, inferred
+          val b = rowsOf(n, d, e)
+          val c = if (s) b.select(b.columns.reverse.map(col): _*) else b
+          w.load("t", if (flat) c.drop("d") else c, SinkPolicy.Append)
+        case Reland(d, e) if !flat =>
+          w.load("t", rowsOf(3, d, e), SinkPolicy.RelandByDate("d"))
+        case Reland(_, _) => ()
+        case Overwrite(n) => w.load("t", rowsOf(n, "1", extra = false)
+          .drop("d"), SinkPolicy.Overwrite)
+        case Upsert(lo, pick) =>
+          // an existing partition value: it casts to the read type of d
+          val days = w.currentFiles("t").flatMap(TxnLog.partitionSegments)
+            .map(_.stripPrefix("d=")).distinct.sorted
+          val b = batch(lo.toLong, 3, if (flat) "1" else days(pick % days.size))
+          w.upsert("t", if (flat) b.drop("d") else b, Seq("k"))
+        case Compact => w.compact("t")
+        case ZOrder  => w.compactZOrder("t", Seq("k", "v"))
       }
+      assertParity(w, "t", what = s"after $op in $ops")
+    }
+  }
+
+  test("an upsert into a widened partition casts the survivors' partition types") {
+    // the merged head reads d as string once `x` lands; the upsert's
+    // affected files (d=1, d=2) alone infer d as int, and unioning them
+    // with the batch's d = 'x' must not cast 'x' to a number
+    replay(Seq(Upsert(4, 0), Append(6, "2", extra = true, swap = false),
+      Reland("x", extra = true), Upsert(6, 2)), "schema-upsert-widened")
+  }
+
+  test("any sequence of commits records exactly the inferred schema") {
+    // GRAFT_SCHEMA_SEED replays a draw; every failure prints its seed
+    val seed = sys.env.get("GRAFT_SCHEMA_SEED").map(_.toLong)
+      .getOrElse(scala.util.Random.nextLong())
+    val prop = Prop.forAll(Gen.choose(2, 6).flatMap(Gen.listOfN(_, genOp))) { ops =>
+      replay(ops, "schema-prop")
       true
     }
-    val r = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(8).withWorkers(1), prop)
-    assert(r.passed, r.status.toString)
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8)
+      .withWorkers(1).withInitialSeed(seed), prop)
+    assert(r.passed, s"GRAFT_SCHEMA_SEED=$seed: ${r.status}")
   }
 }
