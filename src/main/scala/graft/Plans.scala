@@ -14,19 +14,23 @@ import scala.util.matching.Regex
 object Plans {
 
   /** One explain string with its run-dependent tokens made stable:
-    * expression ids (`#123`) and exchange ids (`plan_id=45`) renumbered
-    * from 0 in first-seen order; JVM object hashes of array literals
+    * expression ids (`#123`), exchange ids (`plan_id=45`) and the
+    * suffixes of Spark's fresh lambda variable names (`lambda x_18`, from
+    * a JVM-wide counter) renumbered from 0 in first-seen order within the
+    * plan; JVM object hashes of array literals
     * (`[J@1a2b3c`), lambda class names and the writer's random data-file
     * names (`<txn8>-part-00000-<uuid>`) replaced by fixed tokens; and the
     * `tmpRoot` directory written as `<tmp>`. */
   def normalise(plan: String, tmpRoot: String): String = {
-    def renumber(s: String, re: Regex, token: Int => String): String = {
+    def renumber(s: String, re: Regex, token: (Regex.Match, Int) => String): String = {
       val seen = scala.collection.mutable.HashMap.empty[String, Int]
       re.replaceAllIn(s, m => Regex.quoteReplacement(
-        token(seen.getOrElseUpdate(m.group(1), seen.size))))
+        token(m, seen.getOrElseUpdate(m.group(1), seen.size))))
     }
-    val ids = renumber(plan, "#(\\d+)".r, i => s"#$i")
-    val stable = renumber(ids, "plan_id=(\\d+)".r, i => s"plan_id=$i")
+    val ids = renumber(plan, "#(\\d+)".r, (_, i) => s"#$i")
+    val lambdas = renumber(ids, "lambda (([A-Za-z]+)_\\d+)\\b".r,
+      (m, i) => s"lambda ${m.group(2)}_$i")
+    val stable = renumber(lambdas, "plan_id=(\\d+)".r, (_, i) => s"plan_id=$i")
       .replace(tmpRoot, "<tmp>")
     val files = "[0-9a-f]{8}-part-(\\d+)-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}".r
       .replaceAllIn(stable, "txn-part-$1-uuid")

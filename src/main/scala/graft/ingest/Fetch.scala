@@ -1,6 +1,7 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Pluggable page/API fetcher — the engine seam for the reference's
   * `requests.get` calls (`functions/utils/datasources.py:66-73,224`).
@@ -92,7 +93,9 @@ object Fetch {
     }
   }
 
-  /** Successful bodies only — failures stay queryable for monitoring. */
+  /** Successful bodies only — failures stay queryable for monitoring.
+    * A column predicate, not a typed lambda: the lambda would
+    * deserialise every page body into a [[Fetched]] to test one field. */
   def ok(fetched: Dataset[Fetched]): DataFrame =
-    fetched.filter(_.error == null).toDF()
+    fetched.toDF().where(col("error").isNull)
 }

@@ -152,7 +152,7 @@ object AnnRouter {
           |UNION ALL
           |SELECT qid, cid, cos_q6 FROM pout
           |WHERE $ivfpq""".stripMargin) { (s, dir) =>
-      annAutoTopkAt(s, dir, Clustering.LocalTrainGate)
+      annAutoTopkAt(s, dir, DriverLocal.RowGate)
     }
   }
 

@@ -54,7 +54,7 @@ object Clustering {
     train(quantized, k, iters, lowId = false)
 
   /** [[kmeansCentroids]] with LOWEST-vec_id init (cluster i = the
-    * (i+1)-th lowest vec_id's vector) and, past [[LocalTrainGate]], the
+    * (i+1)-th lowest vec_id's vector) and, past [[DriverLocal.RowGate]], the
     * broadcast-join labelling of [[kmeansAssignJoin]] — the large-k
     * form. This init's oracle form stays expressible at DYNAMIC k — one
     * ROW_NUMBER against a k computed from COUNT(*) — where
@@ -86,7 +86,7 @@ object Clustering {
     * smaller than the pool — every unit-test fixture — the pool IS the
     * corpus and the result is exact farthest-first.
     *
-    * Gate-sized corpora ([[LocalTrainGate]], one [[DriverLocal.rowsUpTo]]
+    * Gate-sized corpora ([[DriverLocal.RowGate]], one [[DriverLocal.rowsUpTo]]
     * job) run ALL of it on the collected rows: the init (the k lowest
     * vec_ids, or [[seedPoolLocal]] — the same i64 arithmetic and ties as
     * [[seedPoolDistributed]]) and the Lloyd rounds ([[lloydLocal]]),
@@ -100,7 +100,7 @@ object Clustering {
     new TrainSet(quantized).train(k, iters, lowId)
 
   /** A corpus as [[train]] reads it: its (vec_id, qe) rows when it holds
-    * at most [[LocalTrainGate]] vectors (one [[DriverLocal.rowsUpTo]]
+    * at most [[DriverLocal.RowGate]] vectors (one [[DriverLocal.rowsUpTo]]
     * job), else only the frame. A caller that sizes k from the corpus
     * takes n from the same collect ([[n]]), so a gate-sized corpus is
     * counted by no job of its own. */
@@ -109,7 +109,7 @@ object Clustering {
       val s = q.sparkSession
       import s.implicits._
       DriverLocal.rowsUpTo(q.select($"vec_id", $"qe").as[(Long, Seq[Long])],
-        LocalTrainGate)
+        DriverLocal.RowGate)
     }
 
     /** The corpus's row count: the collect's length, or a count past the
@@ -245,18 +245,6 @@ object Clustering {
     }
     centroids
   }
-
-  /** Corpus-row bound under which [[train]]'s init and Lloyd rounds
-    * run on the driver, decided by one
-    * [[DriverLocal.rowsUpTo]] job whose rows they then train on:
-    * 16,384 vectors × 64 dims × 8 B ≈ 8 MB collected — the bounded-
-    * artifact class of the k-means seed pools (which already collect
-    * 16·k rows). Every distributed round ends in a driver collect of
-    * the new centroids regardless, so below the gate the loop is pure
-    * job latency; above it nothing changes. The registered queries'
-    * fixtures sit under the gate; every stress decade (200k+) runs the
-    * distributed loop it measures. */
-  private[ops] val LocalTrainGate = 16384L
 
   /** Driver-local Lloyd rounds — the IDENTICAL integer arithmetic as
     * [[lloydDistributed]] under either labelling ([[nearestLabels]]'
@@ -444,7 +432,7 @@ object Clustering {
   val kmeansHistogram: QueryDef =
     QueryDef.sql("kmeans_histogram",
       kmeansOracleSql(k = 8, iters = 3, poolMult = 16)) { (s, dir) =>
-      kmeansHistogramAt(s, dir, LocalTrainGate)
+      kmeansHistogramAt(s, dir, DriverLocal.RowGate)
     }
 
   /** The `kmeans_histogram` body with the corpus gate as a parameter

@@ -33,12 +33,15 @@ object Components {
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
 
-  /** Edge-count bound under which [[connectedComponents]] resolves the
-    * labels on the driver instead of running distributed label rounds,
-    * decided and collected by one [[DriverLocal.rowsUpTo]] job.
-    * Same bounded-artifact class as [[PageRank.LocalEdgeGate]] and the
-    * k-means seed pools: ≤ 65,536 (src, dst) longs ≈ 1 MB collected.
-    * At fixture scale every registered near-dup graph has tens of
+  /** Connected components of the undirected graph given by `edges` (two
+    * id columns; direction ignored). Returns (id, cluster_id) for every
+    * vertex that appears in some edge, where cluster_id is the MINIMUM
+    * vertex id of the component — deterministic at any partitioning.
+    * Empty edge sets return an empty frame with that schema.
+    *
+    * Graphs of at most [[DriverLocal.EdgeGate]] edges resolve the labels
+    * on the driver, decided and collected by one [[DriverLocal.rowsUpTo]]
+    * job. At fixture scale every registered near-dup graph has tens of
     * edges, yet the label loop costs 2–4 rounds × (join + agg + two
     * pointer jumps + an eager pin) — pure scheduler latency over frames
     * smaller than one shuffle block (guide §1.2: fix the distributed
@@ -48,13 +51,6 @@ object Components {
     * distributed min-label fixpoint (ComponentsSpec pins parity on the
     * 10k-ring topology). Graphs past the bound, non-long id types, and
     * null endpoints all take the distributed loop unchanged. */
-  private[ops] val LocalEdgeGate = 65536L
-
-  /** Connected components of the undirected graph given by `edges` (two
-    * id columns; direction ignored). Returns (id, cluster_id) for every
-    * vertex that appears in some edge, where cluster_id is the MINIMUM
-    * vertex id of the component — deterministic at any partitioning.
-    * Empty edge sets return an empty frame with that schema. */
   def connectedComponents(edges: DataFrame, maxIters: Int = 40): DataFrame = {
     val s = edges.sparkSession
     val e = edges.toDF("src", "dst")
@@ -64,7 +60,7 @@ object Components {
     // One limit-collect gates the driver path and IS its input
     // ([[DriverLocal.rowsUpTo]]); only the distributed branch pins the
     // edge frame its rounds re-read.
-    else DriverLocal.rowsUpTo(e, LocalEdgeGate) match {
+    else DriverLocal.rowsUpTo(e, DriverLocal.EdgeGate) match {
       case Some(rows) if rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)) =>
         ccLocal(s, rows)
       case _ =>
@@ -106,7 +102,7 @@ object Components {
       StructField("id", LongType), StructField("cluster_id", LongType))))
   }
 
-  /** The distributed label loop — every graph past [[LocalEdgeGate]].
+  /** The distributed label loop — every graph past [[DriverLocal.EdgeGate]].
     * Package-visible so ComponentsSpec / CheckpointModeSpec can exercise
     * the loop (and its pins) directly below the gate. */
   private[ops] def ccDistributed(edges: DataFrame, maxIters: Int = 40,

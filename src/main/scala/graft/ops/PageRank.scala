@@ -31,39 +31,36 @@ import graft.sources.Tables
   */
 object PageRank {
 
-  /** Edge-count bound under which [[pageRank]] runs its fixpoint on the
-    * driver instead of as distributed rounds, decided and collected by
-    * one [[DriverLocal.rowsUpTo]] job. The rank iteration is O(E + V)
-    * integer arithmetic per round; when the AGGREGATED edge list is this
-    * small (≤ 65,536 rows ≈ a few MB collected — the same
-    * bounded-artifact class as the k-means seed pools), ten distributed
-    * rounds are pure scheduler latency: ~30 jobs over frames smaller
-    * than one shuffle block. The local path runs the IDENTICAL
-    * truncating-i64 recurrence (bit-equal ranks — PageRankSpec pins
-    * parity against the distributed loop), so callers see the same
-    * frame either way; graphs past the bound take the distributed loop
-    * unchanged. Type-vocabulary transition graphs (the registered
-    * query) are bounded by |types|² and stay local at ANY corpus scale;
-    * web-scale doc graphs blow the bound and distribute. */
-  private[ops] val LocalEdgeGate = 65536L
-
   /** PageRank over `edges` (src, dst, w) with damping d6/1e6 (default
     * 0.85) for a fixed `rounds`. Returns (id, rank_q6) over every vertex
     * appearing as src or dst. Σ rank_q6 ≤ N·1e6 (truncation + dangling
-    * leak are not redistributed). */
+    * leak are not redistributed).
+    *
+    * An aggregated edge list of at most [[DriverLocal.EdgeGate]] rows
+    * runs the fixpoint on the driver, decided and collected by one
+    * [[DriverLocal.rowsUpTo]] job. The rank iteration is O(E + V)
+    * integer arithmetic per round; at that size ten distributed rounds
+    * are pure scheduler latency: ~30 jobs over frames smaller than one
+    * shuffle block. The local path runs the IDENTICAL truncating-i64
+    * recurrence (bit-equal ranks — PageRankSpec pins parity against the
+    * distributed loop), so callers see the same frame either way; graphs
+    * past the bound take the distributed loop unchanged. Type-vocabulary
+    * transition graphs (the registered query) are bounded by |types|²
+    * and stay local at ANY corpus scale; web-scale doc graphs blow the
+    * bound and distribute. */
   def pageRank(edges: DataFrame, d6: Long = 850000L,
                rounds: Int = 10): DataFrame = {
     val e = edges.toDF("src", "dst", "w")
     // guide §1.2/"the distributed algorithm": don't pay 3 jobs/round on a
     // bounded graph. The gate job IS the local path's collect; only the
     // distributed branch persists the edge list its rounds re-read.
-    DriverLocal.rowsUpTo(localEdges(e), LocalEdgeGate) match {
+    DriverLocal.rowsUpTo(localEdges(e), DriverLocal.EdgeGate) match {
       case Some(rows) => pageRankRows(e, rows, d6, rounds)
       case None => pageRankDistributed(e.persist(), d6, rounds)
     }
   }
 
-  /** The distributed round loop — every graph past [[LocalEdgeGate]].
+  /** The distributed round loop — every graph past [[DriverLocal.EdgeGate]].
     * Takes ownership of the persisted `e` and unpersists it on exit.
     * Package-visible so PageRankSpec can pin local/distributed parity on
     * the same edge frame. */
@@ -116,7 +113,7 @@ object PageRank {
     * recurrence as the distributed loop, in the same truncating 64-bit
     * integer arithmetic (Scala `/` on non-negative longs ≡ Spark `div`),
     * so ranks are bit-equal. One collect of the aggregated edge list
-    * (≤ [[LocalEdgeGate]] rows; under [[pageRank]] it is the gate's own
+    * (≤ [[DriverLocal.EdgeGate]] rows; under [[pageRank]] it is the gate's own
     * [[DriverLocal.rowsUpTo]] job), zero distributed rounds; the result
     * returns as a local relation. */
   private[ops] def pageRankLocal(e: DataFrame, d6: Long,

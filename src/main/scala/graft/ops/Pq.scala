@@ -235,7 +235,7 @@ object Pq {
         |  GROUP BY 1, 2)
         |SELECT qid, cid, adc_d2 FROM adc
         |QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc_d2, cid) <= 5""".stripMargin) { (s, dir) =>
-    pqTopkAt(s, dir, Clustering.LocalTrainGate)
+    pqTopkAt(s, dir, DriverLocal.RowGate)
   }
 
   /** The `pq_topk` body with the corpus gate as a parameter (specs pin

@@ -96,7 +96,7 @@ object Similarity {
         .as("qe"))
 
   /** The quantized corpus of `dir` as (vec_id, qe) rows when it holds at
-    * most `gate` vectors ([[Clustering.LocalTrainGate]] in production),
+    * most `gate` vectors ([[DriverLocal.RowGate]] in production),
     * decided and collected by one [[DriverLocal.rowsUpTo]] job straight
     * off the scan; `None` past the gate. Nothing is persisted here: only
     * a caller's distributed branch reads (and so persists) the

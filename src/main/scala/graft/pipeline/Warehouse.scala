@@ -4,9 +4,16 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftExpr, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.{AnsiTypeCoercion, TypeCoercion}
+import org.apache.spark.sql.catalyst.expressions.{Cast, InSet, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType,
+  StringType, StructType, TimestampNTZType, TimestampType}
+
+import graft.ops.DriverLocal
 
 /** How a batch lands in its target table — the reference's write
   * dispositions re-expressed for a parquet warehouse:
@@ -103,7 +110,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
   def read(table: String): DataFrame = {
     val dir = tableDir(table)
     TxnLog.current(dir) match {
-      case Some(m) => readSnapshot(dir, table, m.version, m.files, schemaFor(m, m.files))
+      case Some(m) => readPinned(dir, table, m, m.files)
       case None =>
         // pre-manifest layout: read only files an external writer left —
         // never a crashed commit's txn-prefixed orphans (those are
@@ -133,7 +140,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
   def readVersion(table: String, version: Long): DataFrame = {
     val dir = tableDir(table)
     val m = TxnLog.readVersion(dir, version)
-    readSnapshot(dir, table, version, m.files, schemaFor(m, m.files))
+    readPinned(dir, table, m, m.files)
   }
 
   /** ZONE-MAP pruned range read: resolve the current snapshot, drop every
@@ -183,7 +190,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
     // READ frame's schema — partition columns exist only there (they are
     // directory segments, not footer columns).
     val files = if (survivors.isEmpty) m.files else survivors
-    val all = readSnapshot(dir, table, m.version, files, schemaFor(m, files))
+    val all = readPinned(dir, table, m, files)
     val out = if (survivors.isEmpty) all.limit(0) else all
     out.where(boxPartsPred(ranges, parts, out.schema))
   }
@@ -305,7 +312,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
       sys.error(s"no such table: $table (no committed manifest)"))
     val survivors = prunedFilesInSet(m, table, column, values)
     val files = if (survivors.isEmpty) m.files.take(1) else survivors
-    val out = readSnapshot(dir, table, m.version, files, schemaFor(m, files))
+    val out = readPinned(dir, table, m, files)
     if (survivors.isEmpty) out.limit(0) else out
   }
 
@@ -384,7 +391,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
       m: Manifest): org.apache.spark.sql.types.StructType = {
     val probe = m.files.find(m.fileStats.contains)
       .map(Seq(_)).getOrElse(m.files)
-    readSnapshot(dir, table, m.version, probe, schemaFor(m, probe)).schema
+    readPinned(dir, table, m, probe).schema
   }
 
   /** Per-file (min, max) of each of `columns` over freshly written
@@ -422,7 +429,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
   /** The one snapshot-reading code path (current read, time travel,
     * legacy fallback): an explicit pinned file list with `basePath` so
     * `col=value` dirs stay partition columns. With a `schema` (see
-    * [[schemaFor]]) the read is planned from it — no footer read, no
+    * [[readPinned]]) the read is planned from it — no footer read, no
     * job; without one, `mergeSchema` infers it from every footer (one
     * job), which is what field addition needs. */
   private def readSnapshot(dir: Path, table: String, version: Long,
@@ -451,18 +458,27 @@ final case class Warehouse(spark: SparkSession, root: String) {
     part.nonEmpty && flat.nonEmpty
   }
 
-  /** The schema to plan a read of `files` — all or some of a version's
-    * files — with, when the version's recorded schema vouches for them:
-    * the whole list reads with the recorded schema; a subset of a
-    * UNIFORM version reads with its data columns, the subset's partition
-    * columns inferred from its paths exactly as a `mergeSchema` read of
-    * it would. A subset of a merged version may predate a field
-    * addition, so it keeps inferring (None). */
-  private def schemaFor(m: Manifest, files: Seq[String]): Option[StructType] =
-    m.schema.collect {
-      case TableSchema(s, _) if files.size == m.files.size => s
-      case TableSchema(s, true) =>
-        StructType(s.filterNot(f => m.partitionCols.contains(f.name)))
+  /** A read of `files` — all or some of version `m`'s — typed as the
+    * version reads: its partition columns always carry the recorded
+    * types, so a subset whose own paths would infer narrower ones
+    * (`d=1` as int where the version reads `d` as string) unions and
+    * compares with the whole. The whole list, and any subset of a
+    * UNIFORM version, plans with the recorded schema — Spark types the
+    * `col=value` paths from it, no job. A subset of a merged version may
+    * predate a field addition, so it keeps inferring its data columns
+    * and casts its partition columns to the recorded types. */
+  private def readPinned(dir: Path, table: String, m: Manifest,
+                         files: Seq[String]): DataFrame =
+    m.schema match {
+      case Some(TableSchema(s, uniform)) if uniform || files.size == m.files.size =>
+        readSnapshot(dir, table, m.version, files, Some(s))
+      case Some(TableSchema(s, _)) =>
+        val df = readSnapshot(dir, table, m.version, files)
+        m.partitionCols.foldLeft(df) { (d, c) =>
+          val t = s(c).dataType
+          if (d.schema(c).dataType == t) d else d.withColumn(c, col(c).cast(t))
+        }
+      case None => readSnapshot(dir, table, m.version, files)
     }
 
   /** Read schema of freshly written `files`: `df`'s columns minus
@@ -675,8 +691,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
       // schema from the current snapshot, zero rows
       read(table).limit(0)
     } else {
-      val m = TxnLog.readVersion(tableDir(table), toVersion)
-      readSnapshot(tableDir(table), table, toVersion, added, schemaFor(m, added))
+      readPinned(tableDir(table), table,
+        TxnLog.readVersion(tableDir(table), toVersion), added)
     }
   }
 
@@ -702,8 +718,16 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * keys the rewrite would silently miss) — re-run on conflict. */
   def upsert(table: String, df: DataFrame, keyCols: Seq[String],
              txnId: Option[String] = None,
-             maxRewriteFiles: Int = Warehouse.DefaultMaxRewriteFiles): LoadResult = {
-    import spark.implicits._
+             maxRewriteFiles: Int = Warehouse.DefaultMaxRewriteFiles): LoadResult =
+    upsertAt(table, df, keyCols, txnId, maxRewriteFiles, DriverLocal.RowGate)
+
+  /** [[upsert]] with the driver gate of its key bookkeeping as a
+    * parameter ([[MergeKeys]]): a batch of at most `gate` keys is
+    * counted, probed and filtered from one collect of its keys; a larger
+    * one runs the distributed census and joins. */
+  private[pipeline] def upsertAt(table: String, df: DataFrame,
+                                 keyCols: Seq[String], txnId: Option[String],
+                                 maxRewriteFiles: Int, gate: Long): LoadResult = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     val dir = tableDir(table)
     adoptLegacyLayout(dir)
@@ -716,36 +740,25 @@ final case class Warehouse(spark: SparkSession, root: String) {
     val curOpt = TxnLog.current(dir)
     if (curOpt.isEmpty) return load(table, df, SinkPolicy.Append, txnId)
     val cur = curOpt.get
-    val batch = df.persist() // read 4×: key census, probe, anti-join, land
+    // read twice under the gate (keys, land), four times past it (key
+    // census, probe, anti-join, land)
+    val batch = df.persist()
     try {
       require(keyCols.forall(batch.columns.contains),
         s"batch lacks key column(s) ${keyCols.filterNot(batch.columns.contains).mkString(",")}")
-      val batchKeys = batch.select(keyCols.map(col): _*)
-      // ONE aggregate answers both the duplicate-key verdict (the largest
-      // per-key count) and the merged-row count (their sum)
-      val census = batchKeys.groupBy(keyCols.map(col): _*).count()
-        .agg(max($"count"), sum($"count")).head()
-      val mergedRows = if (census.isNullAt(1)) 0L else census.getLong(1)
-      require(census.isNullAt(0) || census.getLong(0) <= 1,
-        s"batch has duplicate keys on (${keyCols.mkString(",")}) — " +
-          "latest-wins is undefined within one batch")
+      val keys = new MergeKeys(batch.select(keyCols.map(col): _*), keyCols, gate)
+      val mergedRows = keys.census()
       val existing = read(table) // pinned to `cur`
       require(keyCols.forall(existing.columns.contains),
         s"$table lacks key column(s) ${keyCols.filterNot(existing.columns.contains).mkString(",")}")
-      def keyCond(l: DataFrame, r: DataFrame) =
-        keyCols.map(c => l(c) <=> r(c)).reduce(_ && _)
       // probe: which CURRENT files hold a matched key (reads keys only).
-      // The collect is BOUNDED to maxRewriteFiles + 1 rows — the same
+      // The collect is BOUNDED to maxRewriteFiles + 1 files — the same
       // driver-envelope discipline as the manifest: a batch whose keys
       // touch more files than that is no longer a selective merge but a
       // table rewrite in disguise, and silently collecting ~10^6 paths
       // (then rewriting them all copy-on-write) is the wrong tool for it
-      val probed = existing.select((keyCols.map(col) :+
-        input_file_name().as("__file")): _*)
-      val affectedAbs = probed
-        .join(batchKeys, keyCond(probed, batchKeys), "left_semi")
-        .select($"__file").distinct()
-        .limit(maxRewriteFiles + 1).collect().map(_.getString(0))
+      val affectedAbs = keys.files(existing.select((keyCols.map(col) :+
+        input_file_name().as("__file")): _*), maxRewriteFiles)
       if (affectedAbs.length > maxRewriteFiles)
         throw new IllegalStateException(
           s"upsert batch matches keys in more than $maxRewriteFiles data " +
@@ -762,17 +775,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
       // survivors: unmatched rows of ONLY the affected files
       val survivors =
         if (affectedRel.isEmpty) None
-        else {
-          // a file subset infers its partition types from its own paths
-          // (d=1 reads as int where the version reads d as string): cast
-          // them to the version's read types before the union
-          val aff = cur.partitionCols.foldLeft(readSnapshot(dir, table,
-            cur.version, affectedRel, schemaFor(cur, affectedRel))) { (df, c) =>
-            val t = existing.schema(c).dataType
-            if (df.schema(c).dataType == t) df else df.withColumn(c, col(c).cast(t))
-          }
-          Some(aff.join(batchKeys, keyCond(aff, batchKeys), "left_anti"))
-        }
+        else Some(keys.matching(readPinned(dir, table, cur, affectedRel), hit = false))
       val toWrite = survivors
         .map(_.unionByName(batch, allowMissingColumns = true))
         .getOrElse(batch)
@@ -799,6 +802,115 @@ final case class Warehouse(spark: SparkSession, root: String) {
       LoadResult(table, s"upserted(rewrote=${affectedRel.size} files)",
         mergedRows)
     } finally batch.unpersist()
+  }
+
+  /** An upsert batch's key columns as the merge matches them: NULL-SAFE
+    * (`<=>` on every key column, Spark's grouping equality — nulls equal,
+    * −0.0 = 0.0, NaN = NaN, binary by content). At most `gate` keys are
+    * collected once ([[DriverLocal.rowsUpTo]]) and every question is
+    * answered from those rows: the census counts them on the driver
+    * ([[DriverLocal.groupingKey]]) and a frame's rows match by one
+    * membership predicate over `struct(keys)` ([[inBatch]]), so no job
+    * joins against the batch. Past the gate the census is an aggregate
+    * and matching a semi/anti join, as at any scale. */
+  private final class MergeKeys(batchKeys: DataFrame, keyCols: Seq[String],
+                                gate: Long) {
+    private val local: Option[Array[Row]] = DriverLocal.rowsUpTo(batchKeys, gate)
+
+    /** `struct(keys) INSET (<collected keys>)` over `df`'s key columns.
+      * Each key column takes the type the analyzer would widen the two
+      * sides to (a batch `bigint` key against an `int` column compares
+      * as `bigint`), and the collected keys are cast to it once, here.
+      * `InSet` orders structs field by field with nulls equal, −0.0 = 0.0
+      * and NaN = NaN: `<=>` on every key column. It is built directly
+      * rather than as an `In` of key literals, whose analysis and
+      * optimisation walk one expression per key — at the gate's 16,384
+      * keys that made the driver branch slower than the joins. A single
+      * integer, decimal, timestamp or (binary-collated) string key, whose
+      * hash equality is its grouping equality, skips the struct. */
+    private def inBatch(df: DataFrame): Column = {
+      val coercion = if (SQLConf.get.ansiEnabled) AnsiTypeCoercion else TypeCoercion
+      val common = keyCols.map { c =>
+        val (t, b) = (df.schema(c).dataType, batchKeys.schema(c).dataType)
+        if (t == b) t else coercion.findWiderCommonType(Seq(t, b)).getOrElse(
+          throw new IllegalArgumentException(
+            s"upsert key $c: batch type ${b.sql} does not compare with ${t.sql}"))
+      }
+      // one key whose values hash as they group takes a hash set: one
+      // lookup per probed row instead of the struct set's ordered search.
+      // Narrow integers widen to bigint, which InSet never compiles into
+      // a per-batch switch (the generated class stays the same each day)
+      val hashed = common match {
+        case Seq(ByteType | ShortType | IntegerType | LongType) => Some(LongType)
+        case Seq(t @ (_: DecimalType | TimestampType | TimestampNTZType | StringType)) =>
+          Some(t)
+        case _ => None
+      }
+      val types = hashed.fold(common)(Seq(_))
+      val tz = Option(SQLConf.get.sessionLocalTimeZone)
+      val casts = batchKeys.schema.fields.toSeq.zip(types).map { case (f, t) =>
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(f.dataType)
+        (v: Any) =>
+          if (f.dataType == t) toCatalyst(v)
+          else Cast(Literal(toCatalyst(v), f.dataType), t, tz).eval()
+      }
+      val keyed = keyCols.zip(types).map { case (c, t) => col(c).cast(t).as(c) }
+      def inSet(key: Column, values: Set[Any]) =
+        GraftExpr.column(InSet(GraftExpr.expression(key), values))
+      if (hashed.isDefined) {
+        // InSet answers null for a null key: nulls match by their own test
+        val vs = local.get.iterator.map(r => casts.head(r.get(0))).toSet[Any]
+        val hit = coalesce(inSet(keyed.head, vs - null), lit(false))
+        if (vs.contains(null)) keyed.head.isNull || hit else hit
+      } else inSet(struct(keyed: _*), local.get.iterator.map { r =>
+        InternalRow.fromSeq(casts.indices.map(i => casts(i)(r.get(i))))
+      }.toSet)
+    }
+
+    /** The batch's row count — the rows the caller merges; refuses a
+      * batch with duplicate keys, like Delta's MERGE: "latest" is
+      * undefined inside one unordered batch. */
+    def census(): Long = {
+      val (rows, dup) = local match {
+        case Some(ks) =>
+          (ks.length.toLong,
+            ks.iterator.map(DriverLocal.groupingKey).toSet.size < ks.length)
+        case None =>
+          // ONE aggregate answers both the duplicate-key verdict (the
+          // largest per-key count) and the merged-row count (their sum)
+          val c = batchKeys.groupBy(keyCols.map(col): _*).count()
+            .agg(max(col("count")), sum(col("count"))).head()
+          (if (c.isNullAt(1)) 0L else c.getLong(1),
+            !c.isNullAt(0) && c.getLong(0) > 1)
+      }
+      require(!dup, s"batch has duplicate keys on (${keyCols.mkString(",")}) — " +
+        "latest-wins is undefined within one batch")
+      rows
+    }
+
+    /** The rows of `df` whose key matches a batch key (`hit`), or the
+      * rows whose key matches none. */
+    def matching(df: DataFrame, hit: Boolean): DataFrame =
+      if (local.isDefined) {
+        val in = inBatch(df)
+        df.where(if (hit) in else !in)
+      } else df.join(batchKeys,
+        keyCols.map(c => df(c) <=> batchKeys(c)).reduce(_ && _),
+        if (hit) "left_semi" else "left_anti")
+
+    /** The distinct `__file` values of the rows of `probed` that match a
+      * batch key — at most `cap + 1` of them. Under the gate they come
+      * from one gated collect, de-duplicated here; a probe matching
+      * more rows than the gate, and every probe past it, runs the
+      * distributed `distinct`. */
+    def files(probed: DataFrame, cap: Int): Array[String] =
+      if (local.exists(_.isEmpty)) Array.empty
+      else {
+        val hits = matching(probed, hit = true).select(col("__file"))
+        local.flatMap(_ => DriverLocal.rowsUpTo(hits, gate))
+          .map(_.map(_.getString(0)).distinct)
+          .getOrElse(hits.distinct().limit(cap + 1).collect().map(_.getString(0)))
+      }
   }
 
   /** S2-style secret lookup: `SELECT API_KEY FROM <keysTable> WHERE

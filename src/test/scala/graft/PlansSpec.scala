@@ -33,6 +33,22 @@ class PlansSpec extends AnyFunSuite {
         |Function: graft.ops.Kit$$Lambda""".stripMargin)
   }
 
+  test("lambda variable names normalise per plan, whatever Spark's counter stood at") {
+    // Spark names a higher-order function's variables from one JVM-wide
+    // fresh-name counter: the same plan built later reads x_41 for x_18
+    def hof(x: Int, y: Int) =
+      s"""Output [1]: [transform(v#3, lambdafunction((lambda x_$x#7 + 1), lambda x_$x#7, false)) AS w#8]
+         |Output [1]: [aggregate(w#8, 0, lambdafunction((lambda y_$y#9 + lambda x_$x#10), lambda y_$y#9, lambda x_$x#10, false), lambdafunction(lambda y_$y#9, lambda y_$y#9, false)) AS s#11]""".stripMargin
+    val first = Plans.normalise(hof(18, 19), tmp)
+    assert(first == Plans.normalise(hof(41, 42), tmp))
+    assert(first ==
+      """Output [1]: [transform(v#0, lambdafunction((lambda x_0#1 + 1), lambda x_0#1, false)) AS w#2]
+        |Output [1]: [aggregate(w#2, 0, lambdafunction((lambda y_1#3 + lambda x_0#4), lambda y_1#3, lambda x_0#4, false), lambdafunction(lambda y_1#3, lambda y_1#3, false)) AS s#5]""".stripMargin)
+    // named variables (from SQL text) carry no counter and stay as written
+    val named = "lambdafunction((lambda x#0 + 1), lambda x#0, false)"
+    assert(Plans.normalise(named, tmp) == named)
+  }
+
   test("text without run-dependent tokens passes through unchanged") {
     val s = "== Physical Plan ==\nAdaptiveSparkPlan (14)\n+- Scan parquet  (1)"
     assert(Plans.normalise(s, tmp) == s)

@@ -28,7 +28,7 @@ class CheckpointModeSpec extends SparkTestBase {
       (20L, 21L), (21L, 22L), (20L, 22L),    // triangle -> cluster 20
       (30L, 31L))                            // pair -> cluster 30
     // the distributed loop directly: the public entry point resolves a
-    // 9-edge graph on the driver (LocalEdgeGate) and would never pin
+    // 9-edge graph on the driver (DriverLocal.EdgeGate) and would never pin
     Components.ccDistributed(edges.toDF("src", "dst"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }

@@ -39,7 +39,7 @@ class ClusteringSpec extends SparkTestBase {
   }
 
   test("driver-local Lloyd rounds are centroid-identical to distributed") {
-    // the r12 LocalTrainGate routes gate-sized corpora to lloydLocal;
+    // the r12 DriverLocal.RowGate routes gate-sized corpora to lloydLocal;
     // its rounds must be BIT-equal to the distributed loop from the
     // same init under BOTH labellings (the join form of
     // kmeansCentroidsLowId, the expression form of kmeansCentroids) —

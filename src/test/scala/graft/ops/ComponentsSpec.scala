@@ -74,9 +74,9 @@ class ComponentsSpec extends SparkTestBase {
   }
 
   test("graphs past the local gate still resolve through the distributed loop") {
-    // one chain longer than LocalEdgeGate: the public entry point must
+    // one chain longer than DriverLocal.EdgeGate: the public entry point must
     // take the distributed path and converge inside the round guard
-    val n = Components.LocalEdgeGate + 10
+    val n = DriverLocal.EdgeGate + 10
     val chain = (0L until n).map(i => (i, i + 1))
     val got = cc(chain)
     assert(got.size == n + 1)

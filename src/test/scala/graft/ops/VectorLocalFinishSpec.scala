@@ -76,7 +76,7 @@ class VectorLocalFinishSpec extends SparkTestBase {
   test("ann_auto_topk at n = 784 is the exact branch, finished on the driver") {
     val d = corpusOf(784)
     try {
-      val routed = AnnRouter.annAutoTopkAt(spark, d, Clustering.LocalTrainGate)
+      val routed = AnnRouter.annAutoTopkAt(spark, d, DriverLocal.RowGate)
       assert(local(routed))
       val exact = rows(Similarity.exactTopkFrom(Similarity.quantized(spark, d), 5))
       assert(exact.nonEmpty)
@@ -90,7 +90,7 @@ class VectorLocalFinishSpec extends SparkTestBase {
     val d = corpusOf(785)
     try {
       val (routed, built) = jobsDuring(
-        AnnRouter.annAutoTopkAt(spark, d, Clustering.LocalTrainGate))
+        AnnRouter.annAutoTopkAt(spark, d, DriverLocal.RowGate))
       val ivf = rows(Similarity.ivfTopkFrom(Similarity.quantized(spark, d), 785L))
       assert(ivf.nonEmpty)
       assert(rows(routed) == ivf)

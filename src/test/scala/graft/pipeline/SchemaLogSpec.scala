@@ -143,6 +143,34 @@ class SchemaLogSpec extends SparkTestBase {
     assert(w.read("t").schema("d").dataType.typeName == "string")
   }
 
+  test("subset reads carry the version's partition types") {
+    // d ∈ {1, x} reads as string; a subset of the d=1 files alone would
+    // infer d as int from its own paths
+    def holdsStringOne(df: DataFrame, what: String): Unit = {
+      assert(df.schema("d").dataType.typeName == "string", what)
+      assert(df.select("d").distinct().as[String].collect().toSeq == Seq("1"), what)
+    }
+    val w = Warehouse(spark, tmpDir("schema-subset-ptype"))
+    w.load("t", batch(0, 5, "1"), SinkPolicy.RelandByDate("d"), statsCol = Some("k"))
+    w.load("t", batch(5, 5, "x"), SinkPolicy.Append)
+    val dir = Paths.get(w.root, "t")
+    for (uniform <- Seq(false, true)) {
+      // the append records a merged schema; compact rewrites every file
+      if (uniform) w.compact("t")
+      assert(TxnLog.current(dir).get.schema.exists(_.uniform == uniform))
+      assertParity(w, "t", what = s"uniform=$uniform")
+      holdsStringOne(w.readBox("t", Nil, Seq(("d", "1"))), s"readBox d=1, uniform=$uniform")
+      holdsStringOne(w.readBox("t", Seq(("k", "0", "4"))), s"readBox k, uniform=$uniform")
+      holdsStringOne(w.readInSet("t", "k", Seq(0L, 3L)), s"readInSet, uniform=$uniform")
+    }
+    // the appended d=1 files of a table that already reads d as string
+    val a = Warehouse(spark, tmpDir("schema-subset-cdc"))
+    a.load("t", batch(0, 3, "x"), SinkPolicy.RelandByDate("d"))
+    a.load("t", batch(3, 3, "1"), SinkPolicy.Append)
+    val v = a.currentVersion("t").get
+    holdsStringOne(a.readAppendedBetween("t", v - 1, v), "readAppendedBetween")
+  }
+
   test("a merged head is re-inferred when a commit removes files") {
     // file order decides a merged schema's column order: the first file
     // in path order leads. d=01 holds (v, k), d=02 holds (k, v).
