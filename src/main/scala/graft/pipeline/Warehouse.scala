@@ -10,8 +10,7 @@ import org.apache.spark.sql.catalyst.analysis.{AnsiTypeCoercion, TypeCoercion}
 import org.apache.spark.sql.catalyst.expressions.{Cast, InSet, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType,
-  StringType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.DriverLocal
 
@@ -813,8 +812,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * membership predicate over `struct(keys)` ([[inBatch]]), so no job
     * joins against the batch. Past the gate the census is an aggregate
     * and matching a semi/anti join, as at any scale. */
-  private final class MergeKeys(batchKeys: DataFrame, keyCols: Seq[String],
-                                gate: Long) {
+  private[pipeline] final class MergeKeys(batchKeys: DataFrame,
+                                          keyCols: Seq[String], gate: Long) {
     private val local: Option[Array[Row]] = DriverLocal.rowsUpTo(batchKeys, gate)
 
     /** `struct(keys) INSET (<collected keys>)` over `df`'s key columns.
@@ -822,31 +821,20 @@ final case class Warehouse(spark: SparkSession, root: String) {
       * sides to (a batch `bigint` key against an `int` column compares
       * as `bigint`), and the collected keys are cast to it once, here.
       * `InSet` orders structs field by field with nulls equal, −0.0 = 0.0
-      * and NaN = NaN: `<=>` on every key column. It is built directly
-      * rather than as an `In` of key literals, whose analysis and
-      * optimisation walk one expression per key — at the gate's 16,384
-      * keys that made the driver branch slower than the joins. A single
-      * integer, decimal, timestamp or (binary-collated) string key, whose
-      * hash equality is its grouping equality, skips the struct. */
+      * and NaN = NaN: `<=>` on every key column, for every key type. It
+      * is built directly rather than as an `In` of key literals, whose
+      * analysis and optimisation walk one expression per key — at the
+      * gate's 16,384 keys that made the driver branch slower than the
+      * joins. A struct set is never compiled into a per-batch `switch`:
+      * its generated class is the same for every batch. */
     private def inBatch(df: DataFrame): Column = {
       val coercion = if (SQLConf.get.ansiEnabled) AnsiTypeCoercion else TypeCoercion
-      val common = keyCols.map { c =>
+      val types = keyCols.map { c =>
         val (t, b) = (df.schema(c).dataType, batchKeys.schema(c).dataType)
         if (t == b) t else coercion.findWiderCommonType(Seq(t, b)).getOrElse(
           throw new IllegalArgumentException(
             s"upsert key $c: batch type ${b.sql} does not compare with ${t.sql}"))
       }
-      // one key whose values hash as they group takes a hash set: one
-      // lookup per probed row instead of the struct set's ordered search.
-      // Narrow integers widen to bigint, which InSet never compiles into
-      // a per-batch switch (the generated class stays the same each day)
-      val hashed = common match {
-        case Seq(ByteType | ShortType | IntegerType | LongType) => Some(LongType)
-        case Seq(t @ (_: DecimalType | TimestampType | TimestampNTZType | StringType)) =>
-          Some(t)
-        case _ => None
-      }
-      val types = hashed.fold(common)(Seq(_))
       val tz = Option(SQLConf.get.sessionLocalTimeZone)
       val casts = batchKeys.schema.fields.toSeq.zip(types).map { case (f, t) =>
         val toCatalyst = CatalystTypeConverters.createToCatalystConverter(f.dataType)
@@ -855,16 +843,10 @@ final case class Warehouse(spark: SparkSession, root: String) {
           else Cast(Literal(toCatalyst(v), f.dataType), t, tz).eval()
       }
       val keyed = keyCols.zip(types).map { case (c, t) => col(c).cast(t).as(c) }
-      def inSet(key: Column, values: Set[Any]) =
-        GraftExpr.column(InSet(GraftExpr.expression(key), values))
-      if (hashed.isDefined) {
-        // InSet answers null for a null key: nulls match by their own test
-        val vs = local.get.iterator.map(r => casts.head(r.get(0))).toSet[Any]
-        val hit = coalesce(inSet(keyed.head, vs - null), lit(false))
-        if (vs.contains(null)) keyed.head.isNull || hit else hit
-      } else inSet(struct(keyed: _*), local.get.iterator.map { r =>
-        InternalRow.fromSeq(casts.indices.map(i => casts(i)(r.get(i))))
-      }.toSet)
+      GraftExpr.column(InSet(GraftExpr.expression(struct(keyed: _*)),
+        local.get.iterator.map { r =>
+          InternalRow.fromSeq(casts.indices.map(i => casts(i)(r.get(i))))
+        }.toSet))
     }
 
     /** The batch's row count — the rows the caller merges; refuses a

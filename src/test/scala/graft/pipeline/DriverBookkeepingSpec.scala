@@ -5,7 +5,10 @@ import java.nio.file.Paths
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkTestBase
 
@@ -106,6 +109,25 @@ class DriverBookkeepingSpec extends SparkTestBase {
       None, Some(8L), Some(9L), Some(10L)).map(k => (k, s"n$k"))
     for ((n, ks) <- aroundGate(pool))
       upsertParity(s"wider key, $n rows", setup, ks.toDF("k", "v"), Seq("k"), gate)
+  }
+
+  test("the key set stays a struct InSet through the optimizer: no per-batch switch") {
+    val w = Warehouse(spark, tmpDir("bk-inset"))
+    w.load("t", Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v"), SinkPolicy.Append)
+    // an int batch against the int column, and a bigint one that widens
+    // it: neither may be narrowed back to an int InSet, which codegen
+    // turns into a `switch` over this batch's keys — a new class per batch
+    for (batch <- Seq(Seq(2, 5).toDF("k"), Seq(2L, 5L).toDF("k"))) {
+      val keys = new w.MergeKeys(batch, Seq("k"), gate)
+      val survivors = keys.matching(w.read("t"), hit = false)
+      val sets = survivors.queryExecution.optimizedPlan
+        .flatMap(_.expressions.flatMap(_.collect { case s: InSet => s }))
+      assert(sets.nonEmpty && sets.forall(_.child.dataType.isInstanceOf[StructType]),
+        survivors.queryExecution.optimizedPlan)
+      assert(!codegenStringSeq(survivors.queryExecution.executedPlan)
+        .exists(_._2.contains("switch (")))
+      assert(rows(survivors) == Seq("1|a", "3|c"))
+    }
   }
 
   test("upsert refusals agree: duplicate keys by grouping equality, maxRewriteFiles") {
