@@ -202,8 +202,8 @@ object Plans {
         "at any partitioning, which is what lets a DuckDB CTE chain " +
         "oracle it exactly."),
     "kmeans_histogram" ->
-      ("At sf0.01 (n = 500, under the 16,384-vector LocalTrainGate) the " +
-        "query trains AND labels on the driver from its one gate " +
+      ("At sf0.01 (n = 500, under the 16,384-vector DriverLocal.RowGate) " +
+        "the query trains AND labels on the driver from its one gate " +
         "collect and returns a local relation, so the plan below is a " +
         "LocalTableScan. Past the gate, Lloyd iteration at scale: k " +
         "centroids broadcast out, one corpus " +

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.functions.Kit
 import graft.pipeline.{SinkPolicy, Warehouse}
@@ -9,9 +8,9 @@ import graft.pipeline.{SinkPolicy, Warehouse}
 /** WAREHOUSE-PERSISTED ANN INDEX — the lifecycle form of the IVF-PQ
   * pipeline. [[Pq.ivfpqRerankTopk]] re-derives the index artifacts every
   * run because the oracle must replay the whole computation; production
-  * builds them ONCE per corpus and amortizes across every query batch and
-  * every ingest batch. This component makes that amortization real library surface
-  * instead of a harness note: the four build-time artifacts land as
+  * builds them ONCE per corpus and amortizes across every query batch.
+  * This component makes that amortization real library surface instead
+  * of a harness note: the four build-time artifacts land as
   * versioned warehouse tables and every later operation reads them back —
   * the full-width corpus is touched only by exact re-rank fetches.
   *
@@ -34,24 +33,17 @@ import graft.pipeline.{SinkPolicy, Warehouse}
   *                   vector, the 88 MB-vs-1.1 GB residency gap measured
   *                   at 2M vectors (STRESS_r09 §6), ~1.6 TB at 10¹¹.
   *
-  * Query ([[topk]]) and dedup ([[dedupArrivals]]) read `entries` — never
-  * the corpus — for candidate generation and ADC shortlisting; the
-  * corpus frame the caller passes is hit only by the ≤ shortlist-width
-  * equi-join fetch for exact re-rank. [[ingest]] appends accepted
-  * arrivals' entries txn-tagged (exactly-once under foreachBatch replay,
-  * same guard as [[graft.streaming.Streams]]), so always-on
-  * dedup-at-the-door costs ∝ batch while the index grows with the
-  * corpus.
+  * A query ([[topk]]) reads `entries` — never the corpus — for
+  * candidate generation and ADC shortlisting; the corpus frame the
+  * caller passes is hit only by the ≤ shortlist-width equi-join fetch
+  * for exact re-rank.
   *
-  * STALENESS is first-class because every index parameter is an
-  * adaptive formula of n — Ks(n), cbm(n), ivf modulus ⌈√n⌉ — and rounds
-  * 8–9 measured exactly what happens when such parameters freeze while
-  * the corpus grows (`ann_lsh_topk` 295.8 → 23.6 s, `ivf_topk` 573.0 →
-  * 8.6 s at 100× after un-freezing them). A corpus that doubled has
-  * outgrown its √n cell geometry: [[needsRebuild]] trips at growth ≥ 2×
-  * the built size and [[build]] re-derives everything under the current
-  * formulas (an Overwrite commit — readers on the old version keep
-  * their snapshot, the manifest swap is atomic).
+  * Every index parameter is an adaptive formula of n — Ks(n), cbm(n),
+  * ivf modulus ⌈√n⌉ — evaluated at build time and recorded as
+  * `built_n`: a store whose [[builtN]] is not the corpus size (or whose
+  * format is older) is rebuilt by [[build]] under the current formulas
+  * (an Overwrite commit — readers on the old version keep their
+  * snapshot, the manifest swap is atomic).
   *
   * Reference anchor: the reference stores derived per-source staging
   * tables once and reuses them across pipeline runs
@@ -68,18 +60,12 @@ final case class AnnIndex(wh: Warehouse, name: String) {
     * misread. */
   val Format = "1"
 
-  import AnnIndex.{IngestResult, Meta}
+  import AnnIndex.Meta
 
   private def tMeta = s"${name}_ann_meta"
   private def tCodebook = s"${name}_ann_codebook"
   private def tCentroids = s"${name}_ann_centroids"
   private def tEntries = s"${name}_ann_entries"
-  private def tCells = s"${name}_ann_cells"
-
-  /** Sentinel row key in [[tCells]]: (CensusSentinel, v) records that
-    * the stored census was computed at entries-table version v. A real
-    * cell id is a vec_id (≥ 0), so the sentinel can never collide. */
-  private val CensusSentinel = Long.MinValue
 
   /** The built corpus size, if a current-format index exists. */
   def builtN: Option[Long] =
@@ -90,29 +76,20 @@ final case class AnnIndex(wh: Warehouse, name: String) {
       else None
     }
 
-  def meta: Meta = {
-    val kv = wh.read(tMeta).as[(String, String)].collect().toMap
-    require(kv.get("format").contains(Format),
-      s"ann index $name: stored format ${kv.get("format")} != $Format — rebuild")
-    Meta(kv("built_n").toLong, kv("ks").toInt, kv("cbm").toLong,
-      kv("ivf_modulus").toLong)
-  }
-
   /** Build (or rebuild) every artifact from a quantized corpus frame
     * ((vec_id, qe, nrm) — [[Similarity.quantized]]'s shape). One corpus
     * pass for codes (pure projection against the codebook literal), one
     * n·K assignment pass (CosTopK fold under a centroid broadcast);
-    * both land in a single `entries` table so ingest appends are one
-    * commit. Overwrite policy: rebuilds swap atomically.
+    * both land in a single `entries` table. Overwrite policy: rebuilds
+    * swap atomically.
     *
-    * Cell-count choice, deliberately NOT [[Clustering.semdedupK2]]'s
-    * (n/2)^(2/3) two-level lattice (round-10 verdict #2 asked for that
-    * wiring — examined and declined with the cost model): this index's
+    * Cell-count choice, deliberately NOT the (n/2)^(2/3) two-level
+    * lattice (examined and declined with the cost model): this index's
     * per-batch cost is batch·K assignment dots + batch·(n/K) candidate
     * probes, minimized at K = √n, BECAUSE its assignment against the
     * id-modulus centroids is flat. The finer lattice only wins where a
     * coarse/fine factorization makes assignment n·2√K — the Lloyd-
-    * trained semdedup path, where it IS now the default. Moving this
+    * trained two-level semdedup path. Moving this
     * store to K = n^(2/3) without first factorizing its probe would
     * make every batch's assignment term n^(2/3) > √n — strictly worse
     * at every decade measured. */
@@ -142,12 +119,6 @@ final case class AnnIndex(wh: Warehouse, name: String) {
     val entries =
       wh.read(tAssignTmp).join(Pq.encode(corpus, cb), Seq("vec_id"))
     wh.load(tEntries, entries, SinkPolicy.Overwrite)
-    // seed the maintained census from the landed entries (one O(index)
-    // pass at build time; append paths keep it warm at O(batch))
-    wh.currentVersion(tEntries).foreach { v =>
-      writeCensus(
-        wh.read(tEntries).groupBy($"cell").agg(count(lit(1)).as("cnt")), v)
-    }
     locally {
       val dir = java.nio.file.Paths.get(wh.root, tAssignTmp)
       if (java.nio.file.Files.exists(dir)) {
@@ -177,110 +148,6 @@ final case class AnnIndex(wh: Warehouse, name: String) {
   private def centroids: DataFrame = wh.read(tCentroids)
   private def entries: DataFrame = wh.read(tEntries)
 
-  /** Rows currently indexed (built + ingested since). */
-  def indexedRows: Long = entries.count()
-
-  /** Per-cell entry counts as a MAINTAINED √n-row table — the
-    * "production maintains the counts incrementally" note made real:
-    * every staleness probe (the gate's per-batch [[needsRebuild]], the
-    * grind cap's hot-cell scan, [[repairHotCells]]' detect) used to
-    * aggregate the full 16 B/row entries table, an O(index) pass PER
-    * BATCH that at 10¹¹ rows dwarfs the batch it guards. The census is
-    * a DERIVED CACHE, never a source of truth: a sentinel row records
-    * the entries-table version it was computed at, append paths merge
-    * the landed delta (a CDC read of just the appended files — cost ∝
-    * batch), and ANY version mismatch — a crash between the entries
-    * commit and the census update, an external writer, a pre-census
-    * store — falls back to one full recompute that re-persists. Reads
-    * therefore cost O(√n) when warm and O(index) exactly once after a
-    * disruption. */
-  private[graft] def cellCensus(): DataFrame = {
-    val vNow = wh.currentVersion(tEntries).getOrElse(
-      return Seq.empty[(Long, Long)].toDF("cell", "cnt"))
-    val stored =
-      if (wh.currentFiles(tCells).isEmpty) None
-      else {
-        val df = wh.read(tCells).select($"cell", $"cnt")
-        val v = df.where($"cell" === CensusSentinel)
-          .select($"cnt").as[Long].collect().headOption
-        if (v.contains(vNow)) Some(df.where($"cell" =!= CensusSentinel))
-        else None
-      }
-    stored.getOrElse {
-      val fresh = entries.groupBy($"cell").agg(count(lit(1)).as("cnt"))
-      writeCensus(fresh, vNow)
-      wh.read(tCells).select($"cell", $"cnt")
-        .where($"cell" =!= CensusSentinel)
-    }
-  }
-
-  private def writeCensus(counts: DataFrame, v: Long): Unit = {
-    wh.load(tCells,
-      counts.select($"cell", $"cnt")
-        .unionByName(Seq((CensusSentinel, v)).toDF("cell", "cnt")),
-      SinkPolicy.Overwrite)
-    ()
-  }
-
-  /** Append-path census maintenance: merge the cells of the rows landed
-    * between `preV` and the current version into the stored census —
-    * cost ∝ batch (a [[Warehouse.readAppendedBetween]] CDC read plus a
-    * √n-row merge), valid only when the stored census matches `preV`;
-    * otherwise leave it stale and let the next [[cellCensus]] read
-    * recompute (the self-healing path every crash window lands in). */
-  private def bumpCensusAfterAppend(preV: Option[Long]): Unit = {
-    val postV = wh.currentVersion(tEntries).getOrElse(return)
-    if (preV.contains(postV)) return // replay skip: nothing landed
-    val storedValid = preV.isDefined && wh.currentFiles(tCells).nonEmpty && {
-      wh.read(tCells).where($"cell" === CensusSentinel)
-        .select($"cnt").as[Long].collect().headOption == preV
-    }
-    if (!storedValid) return // stale already; next read recomputes
-    val delta = wh.readAppendedBetween(tEntries, preV.get, postV)
-      .groupBy($"cell").agg(count(lit(1)).as("d"))
-    val merged = wh.read(tCells).where($"cell" =!= CensusSentinel)
-      .select($"cell", $"cnt")
-      .join(delta, Seq("cell"), "full_outer")
-      .select($"cell",
-        (coalesce($"cnt", lit(0L)) + coalesce($"d", lit(0L))).as("cnt"))
-    writeCensus(merged, postV)
-  }
-
-  /** (indexed rows, largest cell) — two scalars off the maintained
-    * census: O(√n) when the census is warm (one aggregation over
-    * cell-count rows, never the entries table). */
-  def cellStats: (Long, Long) = {
-    val r = cellCensus().agg(sum($"cnt"), max($"cnt")).head()
-    if (r.isNullAt(0)) (0L, 0L) else (r.getLong(0), r.getLong(1))
-  }
-
-  /** The adaptive formulas (Ks, cbm, ⌈√n⌉ cells) were evaluated at
-    * built_n; the geometry is stale when either
-    *
-    *   - TOTAL GROWTH: indexed rows ≥ `growth`× built_n — √n cells now
-    *     hold growth·√n members each and probe cost drifts off the
-    *     measured n^1.5 balance; or
-    *   - CELL SKEW: the largest cell ≥ `skew`× the expected √n cell
-    *     size (= the stored ivf modulus). Growth cannot see this one:
-    *     a CORRELATED arrival batch (a same-source crawl, a template
-    *     family) assigns en masse to one stored centroid, and every
-    *     later dedup/query probe into that cell pays |cell| candidates
-    *     — measured at the 1000× decade, a 48.9k-vector correlated
-    *     ingest (+2.4% growth, far under any growth bar) built a
-    *     41,179-member cell (28× the 1,449 average) that turned the
-    *     72.7 s batch-verdict into a ~2·10⁹-candidate grind on ONE
-    *     shuffle key (STRESS_r09 §11). Rebuild repairs it: the modulus
-    *     re-sample drafts ~|cell|/m of the new cluster's own vectors
-    *     as centroids, splitting the hot region.
-    */
-  def needsRebuild(growth: Double = 2.0, skew: Double = 16.0): Boolean =
-    builtN match {
-      case None => true
-      case Some(n0) =>
-        val (rows, maxCell) = cellStats
-        rows >= growth * n0 || maxCell >= skew * meta.ivfModulus
-    }
-
   /** Top-`k` neighbours for `queries` against the STORED index — probe
     * (stored centroids, broadcast) → ADC shortlist (stored codes,
     * equi-joins) → exact re-rank (`corpus` hit only by the shortlist
@@ -301,277 +168,9 @@ final case class AnnIndex(wh: Warehouse, name: String) {
     val short = Pq.adcShortlistCoded(cand, queries, cb, shortlist)
     Similarity.scoreCandidates(short, corpus, queries, k)
   }
-
-  /** Verdict an arrival batch against the stored index —
-    * [[Pq.pqIngestDedup]]'s contract with the index READ BACK instead of
-    * re-derived: probe arrivals into stored cells, ADC-shortlist stored
-    * codes to 4 candidates, exact re-rank the fetched vectors, flag
-    * cos ≥ `threshold`. Arrival `vec_id`s must be disjoint from indexed
-    * ids (the planted-batch offset rule). Cost ∝ batch, never corpus.
-    *
-    * `capPerCell` is the BOUNDED-GRIND guard for stale geometries
-    * (round-9 verdict #1's degraded-mode dial): a hot cell — 28× the
-    * expected size at the 1000× decade (STRESS_r09 §11) — turns a
-    * correlated batch's probe join into ~2·10⁹ candidate pairs through
-    * one shuffle key. With a cap, cells whose entry count exceeds it
-    * are deterministically THINNED to ≈ cap entries (xxhash64 of the
-    * entry id — stable across replays) before the probe join, bounding
-    * the per-batch grind at the cost of dup recall INSIDE the hot cell
-    * until maintenance rebuilds or [[repairHotCells]] splits it.
-    * Healthy cells (2–4× the modulus) pass untouched at any sane cap;
-    * None (the oracle paths) disables the census + thinning entirely.
-    *
-    * SLICED past [[AnnIndex.DedupSliceRows]] arrivals (round-11 verdict
-    * #3): verdicts are per-arrival independent, so a large batch is
-    * split into vec_id-mod slices verdicted one at a time against the
-    * SAME stored generation and unioned — bit-identical results
-    * (spec-pinned with a forced tiny bound), but each slice's resident
-    * footprint (the query-subvector broadcast in
-    * [[Pq.adcShortlistCoded]], the re-rank working sets) is bounded by
-    * the slice, not the batch. At the 8M decade the unsliced 411k-row
-    * batch held ~1 GB of broadcast next to 32 parquet-reader tasks and
-    * OOM'd the default 8 GiB/32-task JVM; slices keep the phase inside
-    * it. Cost: the entries/corpus side is re-scanned once per slice —
-    * narrow 24 B rows (entries) and an equi-join-pruned corpus fetch,
-    * measured well under the verdict compute itself.
-    *
-    * Slices are evaluated SEQUENTIALLY — each is eagerly
-    * `localCheckpoint`ed (one job per slice, verdict rows are ~30 B ×
-    * slice) before the next starts. A lazy union would schedule every
-    * slice's joins inside ONE job with all their broadcasts resident
-    * together, reproducing exactly the peak the slicing exists to
-    * bound (measured: the lazy-union first cut OOM'd the 8M decade's
-    * parquet reader at 8 GiB just like the unsliced shape). The
-    * checkpoint also cuts each slice's lineage, so its query broadcast
-    * becomes collectable while later slices run.
-    *
-    * HEAP GEOMETRY of the remaining constant: the re-rank's corpus
-    * fetch scans the full-width embedding parquet, and the vectored
-    * parquet reader holds ~split-bytes of heap buffer (plus decode
-    * copies) PER CONCURRENT TASK — at 32 tasks/JVM × the default
-    * 128 MB splits that is multi-GB before any operator state, and it
-    * does not shrink with slicing. Deployments running wide
-    * single-JVM task counts over wide-array corpora should size
-    * `spark.sql.files.maxPartitionBytes` so
-    * tasks/JVM × split ≤ heap/4: the 8M-decade evidence run completes
-    * dedup-full at the default 8 GiB/32 tasks with 32 MB splits
-    * (STRESS_r12 §2), where 128 MB splits OOM the reader at any slice
-    * bound. A production 4–8 tasks/JVM executor is inside the rule at
-    * the default split size. */
-  def dedupArrivals(batch: DataFrame, corpus: DataFrame,
-                    threshold: Double = 0.90,
-                    capPerCell: Option[Long] = None,
-                    sliceRows: Long = AnnIndex.DedupSliceRows): DataFrame = {
-    val nArr = batch.select($"vec_id").count()
-    val nSlices = math.max(1L, (nArr + sliceRows - 1) / sliceRows).toInt
-    if (nSlices == 1) dedupSlice(batch, corpus, threshold, capPerCell)
-    else (0 until nSlices).map { i =>
-      dedupSlice(batch.where(pmod($"vec_id", lit(nSlices)) === lit(i)),
-        corpus, threshold, capPerCell)
-        .localCheckpoint(true)
-    }.reduce(_ unionByName _)
-  }
-
-  private def dedupSlice(batch: DataFrame, corpus: DataFrame,
-                         threshold: Double,
-                         capPerCell: Option[Long]): DataFrame = {
-    val cb = codebook()
-    val probes = Similarity.probeCells(batch, centroids, 2)
-    val candEntries = capPerCell match {
-      case None => entries.select($"vec_id", $"cell", $"codes")
-      case Some(cap) =>
-        // per-batch hot-cell scan off the maintained √n census, not an
-        // O(index) entries aggregation (see [[cellCensus]])
-        val hot = cellCensus().where($"cnt" > cap)
-        entries.select($"vec_id", $"cell", $"codes")
-          .join(broadcast(hot), Seq("cell"), "left")
-          .where($"cnt".isNull || pmod(xxhash64($"vec_id"), $"cnt") < cap)
-          .select($"vec_id", $"cell", $"codes")
-    }
-    // arrival ids are disjoint from indexed ids by the offset rule, so
-    // the self-pair filter is a no-op on a first delivery — it exists
-    // for REPLAYS, where the original call's accepted arrivals are
-    // already in the index and would otherwise verdict as duplicates
-    // of themselves (see [[ingest]]'s idempotency note)
-    val cand = probes
-      .join(candEntries, Seq("cell"))
-      .where($"vec_id" =!= $"qid")
-      .select($"qid", $"vec_id".as("cid"), $"codes")
-    val short = Pq.adcShortlistCoded(cand, batch, cb, 4)
-    val best = Similarity.scoreCandidates(short, corpus, batch, k = 1,
-      broadcastCand = true)
-    Pq.ingestVerdicts(batch, best, threshold)
-  }
-
-  /** INCREMENTAL repair of hot cells — the O(|cell|) alternative to an
-    * O(corpus) rebuild when staleness is CELL SKEW rather than growth
-    * (round-9 verdict #4). A correlated arrival batch (same-source
-    * crawl, template family) can concentrate tens of thousands of
-    * entries into ONE stored cell — the 1000×-decade ingest bomb
-    * (STRESS_r09 §11: 41,179 members vs a 1,449 average, every probe
-    * into the cell a 2·10⁹-candidate grind) — and the round-9 remedy,
-    * a full rebuild, paid 95.5 s of corpus pass to fix a defect local
-    * to one cell. This repairs in place:
-    *
-    *   1. find cells ≥ `skew`× the stored modulus (one aggregation over
-    *      the 16 B/row entries — the [[needsRebuild]] census);
-    *   2. fetch ONLY their members' vectors from `corpus` (one
-    *      equi-join — cost ∝ Σ|hot cell|, never n);
-    *   3. draft every modulus-th member (by vec_id rank WITHIN the
-    *      cell — the local analogue of build's `vec_id % m` re-sample)
-    *      as a new centroid, append those to the centroid table;
-    *   4. reassign only the hot members against the updated centroid
-    *      set and rewrite their entries in one keyed copy-on-write
-    *      commit ([[Warehouse.upsert]] — PQ codes carry over unchanged,
-    *      only the cell moves).
-    *
-    * Queries and dedup probe the UPDATED centroid table, so a near-dup
-    * of a reassigned member ranks the same split centroids highly and
-    * finds it (AnnIndexSpec pins the loop; the scale harness measures
-    * the verdict wall back at baseline). Boundary honesty: vectors in
-    * HEALTHY cells keep their assignment even if a new centroid is now
-    * marginally nearer — the same staleness class as ingest-appended
-    * entries, repaired for real by the next full rebuild; probe-2
-    * covers the boundary meanwhile, exactly as it does for ingests.
-    * Returns the number of entries reassigned (0 when nothing is hot). */
-  def repairHotCells(corpus: DataFrame, skew: Double = 16.0): Long = {
-    val m = meta
-    val threshold = math.max(1L, (skew * m.ivfModulus).toLong)
-    // detect off the maintained census (O(√n) warm — the per-batch
-    // economics that let the gate run this check at the top of EVERY
-    // landing; see [[cellCensus]])
-    val hotCells = cellCensus()
-      .where($"cnt" >= threshold).select($"cell").persist()
-    try {
-      if (hotCells.isEmpty) return 0L
-      val hotEntries = entries.join(broadcast(hotCells), Seq("cell"))
-        .select($"vec_id", $"cell", $"codes").persist()
-      try {
-        val members = hotEntries.select($"vec_id")
-          .join(corpus, Seq("vec_id")).persist()
-        try {
-          // rank window over HOT members only — bounded by Σ|hot cell|,
-          // never a corpus window
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy($"cell").orderBy($"vec_id")
-          val ranked = hotEntries.withColumn("rn", row_number().over(w))
-          val draftIds = ranked
-            .where(($"rn" - 1) % m.ivfModulus === 0)
-            .select($"vec_id")
-          val newCents = members.join(draftIds, Seq("vec_id"))
-            .join(centroids.select($"cent_id".as("vec_id")),
-              Seq("vec_id"), "left_anti")
-            .select($"vec_id".as("cent_id"), $"qe".as("ce"), $"nrm".as("cn"))
-          wh.load(tCentroids, newCents, SinkPolicy.Append)
-          // reassign against the UPDATED centroid table (def centroids
-          // re-reads the post-append snapshot); codes carry unchanged
-          val asg = Similarity.probeCells(members, centroids, 1)
-            .select($"qid".as("vec_id"), $"cell")
-          val updated = asg
-            .join(hotEntries.select($"vec_id", $"codes"), Seq("vec_id"))
-          wh.upsert(tEntries, updated, Seq("vec_id"))
-          // repair MOVES entries between cells: recompute the census
-          // once (same O(index) class as the detect this replaces was,
-          // and repair is a rare event) rather than tracking the move
-          // delta through the copy-on-write commit
-          wh.currentVersion(tEntries).foreach { v =>
-            writeCensus(wh.read(tEntries).groupBy($"cell")
-              .agg(count(lit(1)).as("cnt")), v)
-          }
-          members.count()
-        } finally { members.unpersist(); () }
-      } finally { hotEntries.unpersist(); () }
-    } finally { hotCells.unpersist(); () }
-  }
-
-  /** Assign + encode + append `batch`'s entries WITHOUT verdicting —
-    * the generation-cutover catch-up path ([[graft.streaming.VectorGate]]
-    * indexes the stage rows that landed while the next generation was
-    * building) and the raw ingest primitive for callers that did their
-    * own dedup. Encoded with the STORED codebook, assigned to the STORED
-    * centroids (same geometry as [[ingest]]'s accepted-arrival append);
-    * txn-tagged so a crash-replay of the same logical range is a no-op.
-    * Returns rows appended (0 on a replay skip). */
-  def indexVectors(batch: DataFrame, txnId: String): Long = {
-    if (wh.txnLanded(tEntries, txnId)) return 0L
-    val cb = codebook()
-    val asg = Similarity.probeCells(batch, centroids, 1)
-      .select($"qid".as("vec_id"), $"cell")
-    val newEntries = asg.join(Pq.encode(batch, cb), Seq("vec_id"))
-    val preV = wh.currentVersion(tEntries)
-    val rows = wh.load(tEntries, newEntries, SinkPolicy.Append, Some(txnId)).rows
-    bumpCensusAfterAppend(preV)
-    rows
-  }
-
-  /** Dedup-at-the-door + incremental index maintenance, exactly-once:
-    * verdict the batch against the stored index, then append the
-    * ACCEPTED (is_new) arrivals' entries — encoded with the STORED
-    * codebook, assigned to the STORED centroids, so a later near-dup of
-    * an accepted arrival probes into the same cell and is caught
-    * (AnnIndexSpec pins that loop). The txn tag makes foreachBatch
-    * replays no-ops on the index append; callers landing the batch
-    * payload elsewhere reuse the same tag (one logical commit per
-    * micro-batch, the [[graft.streaming.Streams]] discipline). The
-    * caller's `corpus` must include previously accepted arrivals (read
-    * it from the same warehouse the payload lands in). The returned
-    * `verdicts` frame is persisted (it feeds both the duplicate count
-    * and the accepted-set join); callers unpersist it when done — the
-    * repo's clearCache() leak-check convention.
-    *
-    * Replay vs IN-PLACE rebuild: [[Warehouse.txnLanded]] walks every
-    * RETAINED manifest version, and a rebuild's Overwrite supersedes but
-    * does not delete the append's manifest — so a crash-replay that
-    * races a rebuild is still skipped. That skip is only CORRECT when
-    * the rebuild's corpus already contained this batch's accepted
-    * arrivals (i.e. the caller's payload landing had committed before
-    * the rebuild snapshotted); a rebuild from a corpus that predates the
-    * crashed batch would orphan its arrivals behind the skip — the
-    * round-9 ADVICE window. [[graft.streaming.VectorGate]] therefore
-    * never rebuilds this table in place: it builds the next GENERATION
-    * out-of-band and a replay that arrives after the cutover appends
-    * fresh into the new generation's entries (VectorGateSpec pins that
-    * window). Direct users who rebuild in place must land the payload
-    * table FIRST or rebuild from stage ∪ batch. The retained-manifest
-    * walk's exposure window is the warehouse-wide vacuum retention
-    * contract: size retention to the longest possible replay. */
-  def ingest(batch: DataFrame, corpus: DataFrame, txnId: String,
-             threshold: Double = 0.90,
-             capPerCell: Option[Long] = None): IngestResult = {
-    val verdicts = dedupArrivals(batch, corpus, threshold, capPerCell)
-      .persist()
-    val nDup = verdicts.where(!$"is_new").count()
-    if (wh.txnLanded(tEntries, txnId)) {
-      // replay: the index append is skipped (exactly-once is a property
-      // of the STORE) and the verdicts are recomputed — the self-pair
-      // filter in dedupArrivals keeps them equal to the original call's
-      // unless the batch itself contained accepted near-pairs, which now
-      // see each other in the index (AnnIndexSpec pins the common case)
-      return IngestResult(verdicts, 0L, nDup, "skipped-duplicate-txn")
-    }
-    val cb = codebook()
-    val accepted = batch
-      .join(verdicts.where($"is_new").select($"vec_id"), Seq("vec_id"))
-    val asg = Similarity.probeCells(accepted, centroids, 1)
-      .select($"qid".as("vec_id"), $"cell")
-    val newEntries = asg.join(Pq.encode(accepted, cb), Seq("vec_id"))
-    val preV = wh.currentVersion(tEntries)
-    val res = wh.load(tEntries, newEntries, SinkPolicy.Append, Some(txnId))
-    bumpCensusAfterAppend(preV)
-    IngestResult(verdicts, res.rows, nDup, res.action)
-  }
 }
 
 object AnnIndex {
-
-  /** Arrivals-per-slice bound for [[AnnIndex.dedupArrivals]]'s verdict
-    * pass. Calibration: the 4M decade's ~205k batch verdicts clean at
-    * the default 8 GiB/32-task JVM (STRESS_r10 §6) while the 8M
-    * decade's 411k batch OOM'd it (STRESS_r11 §6) — 256k sits between
-    * them, leaves the measured-good decade unsliced, and halves the
-    * failing one. A production executor at 4–8 tasks/JVM has 4–8× the
-    * per-task margin, so the bound is conservative there. */
-  val DedupSliceRows: Long = 262144L
 
   /** FNV-1a 64-bit over a string — the tmp-warehouse path key (64-bit:
     * collisions across a handful of fixture dirs are not a practical
@@ -602,9 +201,6 @@ object AnnIndex {
   }
 
   final case class Meta(builtN: Long, ks: Int, cbm: Long, ivfModulus: Long)
-
-  final case class IngestResult(verdicts: DataFrame, accepted: Long,
-                                duplicates: Long, action: String)
 
   /** The stored-index query path as a REGISTERED, ORACLE-CHECKED query:
     * on first use per fixture dir the index is built into a tmp

@@ -2,8 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.Kit
-
 /** Corpus-stat-driven dispatch across the ANN ladder — the engine picks
   * the decade-appropriate retrieval algorithm instead of the user
   * knowing which decade they're in (SURVEY §2.10). One registered query,
@@ -67,41 +65,6 @@ object AnnRouter {
     * replayed by the oracle's gating predicates. */
   def choose(n: Long): String =
     if (n <= T1) "exact" else if (n <= T2) "ivf" else "ivfpq"
-
-  /** PRODUCTION dispatch (round-9 verdict #3): same thresholds as
-    * [[choose]], but when a current-format, non-stale stored index
-    * ([[AnnIndex]]) covers the corpus, the above-T1 branches serve from
-    * it instead of re-deriving the artifacts per call — the
-    * amortization the lifecycle measured (39.5 s stored vs 149.3 s
-    * re-derive at 2M vectors, AnnIndexScale). Dispatch inspects only
-    * index METADATA (built_n, format, cell census over the 16 B/row
-    * entries) — never the corpus — so routing overhead stays a small
-    * constant at any decade.
-    *
-    *   - `n ≤ T1`: brute force always wins (an index probe costs more
-    *     dots than the whole scan) — never routed to the store.
-    *   - index current (built_n == n, format matches, no staleness
-    *     trip): [[AnnIndex.topk]] — probe stored centroids, ADC over
-    *     stored codes, exact re-rank via the shortlist fetch.
-    *   - index absent/stale/mis-sized: fall back to the re-deriving
-    *     branch of [[choose]] — correctness never waits on maintenance.
-    *
-    * The REGISTERED `ann_auto_topk` keeps re-deriving (the oracle must
-    * replay the whole computation — the honest-cost convention);
-    * AnnRouterSpec pins this form's row-parity against both the stored
-    * path and the fallback, and the scale harness measures the 1000×
-    * dispatch wall. */
-  def routedTopk(idx: AnnIndex, base: DataFrame): DataFrame = {
-    val s = base.sparkSession
-    import s.implicits._
-    val n = base.count()
-    val viaStore = choose(n) != "exact" &&
-      idx.builtN.contains(n) && !idx.needsRebuild()
-    if (viaStore)
-      idx.topk(base.where($"vec_id" % 25 === 0), base, k = 5)
-        .select($"qid", $"cid", Kit.quantize($"cos", 6).as("cos_q6"))
-    else rederive(base, n)
-  }
 
   /** The re-deriving branch of [[choose]] over a quantized corpus of
     * `n` rows — the registered `ann_auto_topk` plan. */

@@ -749,8 +749,7 @@ object Clustering {
     probeAssignScored(quantized, centroids, probes).drop("negd")
 
   /** [[kmeansProbeAssign]] WITH the negated squared distance `negd` of
-    * each probed centroid — the ranked form distance-bound pruning
-    * composes over. */
+    * each probed centroid (the CosTopK score it ranks by). */
   private def probeAssignScored(quantized: DataFrame,
                                 centroids: Seq[Seq[Long]],
                                 probes: Int): DataFrame = {
@@ -878,83 +877,6 @@ object Clustering {
   // Coarse/fine two-level quantizer — past the single-level pack bound
   // ---------------------------------------------------------------------
 
-  /** The measured recall-density floor (STRESS_r12 §5): probe-2×2
-    * census recall holds ≥ 98% at ≥ ~488 vectors/cell and drops below
-    * the bar at ~244; 480 keeps the power-of-two snap's fine end at
-    * the measured-green 488 point (2M → 4,096, 4M → 8,192). */
-  private val LatticeDensityFloor = 480L
-
-  /** Corpus-adaptive cell count for the TWO-LEVEL quantizer — the
-    * measured-optimal lattice of STRESS_r10 §1, promoted to the
-    * production default (round-10 verdict #2). The two-level trainer's
-    * assignment cost is n·2√k (one coarse + one fine broadcast pass),
-    * not the flat n·k, so the census/assignment balance moves from
-    * [[semdedupK]]'s k = √(n/2) to k = (n/2)^(2/3) — census pair
-    * volume divides ∝ 1/k, which is how the probed census reached
-    * ≥98% recall at 0.88× the flat anchor's cost. Since round 12 the
-    * balance is CAPPED BY A MEASURED RECALL-DENSITY FLOOR and snapped
-    * down to a power of TWO (odd exponents allowed — [[latticeSplit]]
-    * factorizes them into a coarse-heavy 2:1 rectangle):
-    * k = 2^⌊log2 min((n/2)^(2/3), n/[[LatticeDensityFloor]])⌋. The
-    * five-point lattice sweep at 2M and 4M vectors (STRESS_r12 §5,
-    * same-day) collapsed onto a density law, not a k law: probe-2×2
-    * recall is ≥ 98% wherever cells hold ≥ ~488 vectors (2M@4,096 =
-    * 98.3%/98.1%, 4M@8,192 = 98.03%, 4M@4,096 = 98.10%) and below the
-    * bar at ~244 (2M@8,192 = 97.85%, 4M@16,384 = 97.46% — the latter
-    * also OOMs the default 8 GiB heap in the unpruned probe phase,
-    * whose expanded fine-assign stream is ∝ n·probes·K2). The density
-    * cap keeps every default inside the measured-green [480, 960)
-    * band — and since the power-of-4 snap's real protection was
-    * accidentally exactly this (64 × 64 at 2M = 488/cell), the law
-    * keeps 2M at 4,096 while unfreezing the mid-band: 4M now gets the
-    * 128 × 64 rectangle (census 0.60× its 64 × 64 wall at equal
-    * recall), 8M gets 128 × 128 at the recall-safe 488/cell. Below
-    * n ≈ 2.8·10⁷ the density cap binds (census cost then grows
-    * LINEARLY in n at ~480–960 pairs/vector); above it the (n/2)^(2/3)
-    * balance binds and densities only get safer. Floors
-    * and caps: the `minClusterSize` cap bounds k ≤ n/min (64 by
-    * default, the registered queries' floor, NOT the flat formula's
-    * 1,024 SemDeDup regime: the finer lattice relies on coarse-probe
-    * recall, measured, not on big cells) — but the absolute k ≥ 8
-    * floor WINS below n = 8·[[LatticeDensityFloor]] = 3,840, so tiny
-    * corpora get cells
-    * smaller than `minClusterSize` (n = 100 → k = 8 → ~12 vecs/cell;
-    * deliberate — at that size the whole corpus fits one census pass
-    * and the floor keeps the two-level mechanism exercised) — and the
-    * side is clamped to [[kmeansAssignJoin]]'s 32,768 per-level pack
-    * bound (k ≤ ~10⁹ cells ≈ 10¹² vectors). The registered
-    * `semdedup_twolevel` keeps [[semdedupK]]'s oracle-pinned formula
-    * byte-identical — this is the harness/production dial. */
-  def semdedupK2(n: Long, minClusterSize: Long = 64L): Int = {
-    val balance = math.pow(n / 2.0, 2.0 / 3.0)
-    val densityCap = n.toDouble / LatticeDensityFloor
-    val k0 = math.min(1L << 30,
-      math.max(8L, java.lang.Long.highestOneBit(
-        math.max(8L, math.min(balance, densityCap).toLong))))
-    val maxK = math.max(8L, n / math.max(1L, minClusterSize))
-    // round the capped value back down to a power of two so
-    // [[latticeSplit]] always factorizes it
-    java.lang.Long.highestOneBit(math.max(8L, math.min(k0, maxK))).toInt
-  }
-
-  /** Split a POWER-OF-TWO cell budget into the measured-lattice factors:
-    * equal sides at even exponents (4,096 → 64 × 64), coarse = 2 × fine
-    * at odd ones (8,192 → 128 × 64) — the coarse side gets the extra
-    * factor because coarse probing is what recovers boundary pairs
-    * (see [[trainLevels]]). Unlike [[twoLevelSplit]]
-    * (⌈√k⌉, any k — the registered query's oracle-replayed form), this
-    * is the DEFAULT-path factorization for [[semdedupK2]] lattices. */
-  def latticeSplit(k: Int): (Int, Int) = {
-    require(k >= 2 && Integer.bitCount(k) == 1,
-      s"latticeSplit needs a power-of-two k, got $k")
-    val b = Integer.numberOfTrailingZeros(k)
-    val k1 = 1 << ((b + 1) / 2)
-    val k2 = k / k1
-    require(k1 <= 32768 && k2 <= 32768,
-      s"lattice split $k1 x $k2 exceeds the per-level pack bound")
-    (k1, k2)
-  }
-
   /** Split a cell budget into the two-level factors: K1 = ⌈√k⌉ coarse,
     * K2 = ⌈k/K1⌉ fine — each within [[kmeansAssignJoin]]'s 32,768 pack
     * bound up to k ≈ 10⁹ cells, i.e. corpora of ~10¹² vectors at the
@@ -968,49 +890,15 @@ object Clustering {
     (k1, k2)
   }
 
-  /** The residual corpus: each vector minus its coarse centroid under
-    * `asg` (vec_id, cluster) — the nearest ([[kmeansAssignJoin]]) or
-    * each probed one — with the coarse cell carried alongside — exact int64
-    * subtraction (`zip_with`), so the fine level trains and assigns in
-    * the same integer-deterministic domain as the coarse. Residual
-    * magnitudes stay far inside the pack-guard bound for unit-quantized
-    * input: |r|² ≤ d(q, nearest coarse) ≤ 4·10¹², so fine distances are
-    * ≤ ~1.6·10¹³ vs the 2.8·10¹⁴ guard. */
-  private def residuals(q: DataFrame, coarse: Seq[Seq[Long]],
-                        asg: DataFrame): DataFrame = {
-    val s = q.sparkSession
-    import s.implicits._
-    val cdf = coarse.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("coarse", "cqe")
-    asg.withColumnRenamed("cluster", "coarse")
-      .join(q.select($"vec_id", $"qe"), Seq("vec_id"))
-      .join(broadcast(cdf), Seq("coarse"))
-      .select($"vec_id", $"coarse",
-        expr("zip_with(qe, cqe, (a, b) -> a - b)").as("qe"))
-      .withColumn("nrm", Kit.dotI64($"qe", $"qe"))
-  }
-
-  /** Train both levels: coarse Lloyd over the corpus, fine Lloyd over
-    * the RESIDUALS (IVF-with-residual-codebook shape — the fine
-    * codebook is GLOBAL, not per-cell, so training is two ordinary
+  /** Train both levels at (K1, K2): coarse Lloyd over the corpus, fine
+    * Lloyd over the RESIDUALS (IVF-with-residual-codebook shape — the
+    * fine codebook is GLOBAL, not per-cell, so training is two ordinary
     * k-means runs instead of K1 independent ones). Lowest-id init at
-    * both levels keeps the whole thing dynamic-k oracle-expressible
-    * (see [[kmeansCentroidsLowId]]). */
-  def kmeansTwoLevelTrain(q: DataFrame, k: Int,
-                          iters: Int): (Seq[Seq[Long]], Seq[Seq[Long]]) = {
-    val (k1, k2) = twoLevelSplit(k)
-    val (cs1, cs2, r) = trainLevels(new TrainSet(q), k1, k2, iters)
-    r.unpersist()
-    (cs1, cs2)
-  }
-
-  /** [[kmeansTwoLevelTrain]] at an EXPLICIT (K1, K2) factorization (the
-    * coarse side gets the larger factor: coarse probing is what recovers
-    * boundary pairs, so coarse granularity is where extra cells pay
-    * recall, and the fine (residual) codebook stays the cheaper
-    * broadcast), also returning the persisted [[coarseResiduals]] the
-    * fine level trained on, so the cell assignment ([[cellsOf]]) reads
-    * that frame instead of rebuilding it. The caller unpersists it. */
+    * both levels keeps the whole thing dynamic-k oracle-expressible (see
+    * [[kmeansCentroidsLowId]]). Also returns the persisted
+    * [[coarseResiduals]] the fine level trained on, so the cell
+    * assignment ([[cellsOf]]) reads that frame instead of rebuilding it.
+    * The caller unpersists it. */
   private def trainLevels(corpus: TrainSet, k1: Int, k2: Int, iters: Int)
       : (Seq[Seq[Long]], Seq[Seq[Long]], DataFrame) = {
     require(k1 <= 32768 && k2 <= 32768,
@@ -1022,21 +910,34 @@ object Clustering {
     (cs1, cs2, r)
   }
 
-  /** The residual corpus under the nearest coarse centroid, persisted
-    * as a stage table: the fine level trains on it and the cell
-    * assignment references it twice (coarse carry + fine assignment) —
-    * the repo's harness-clearCache() convention, same as the BandJoin
-    * stage tables. */
-  private def coarseResiduals(q: DataFrame, cs1: Seq[Seq[Long]]): DataFrame =
-    residuals(q, cs1, kmeansAssignJoin(q, cs1)).persist()
+  /** The residual corpus: each vector minus its nearest coarse centroid
+    * ([[kmeansAssignJoin]]), with the coarse cell carried alongside —
+    * exact int64 subtraction (`zip_with`), so the fine level trains and
+    * assigns in the same integer-deterministic domain as the coarse.
+    * Residual magnitudes stay far inside the pack-guard bound for
+    * unit-quantized input: |r|² ≤ d(q, nearest coarse) ≤ 4·10¹², so fine
+    * distances are ≤ ~1.6·10¹³ vs the 2.8·10¹⁴ guard. Persisted as a
+    * stage table: the fine level trains on it and the cell assignment
+    * references it twice (coarse carry + fine assignment) — the repo's
+    * harness-clearCache() convention, same as the BandJoin stage
+    * tables. */
+  private def coarseResiduals(q: DataFrame, cs1: Seq[Seq[Long]]): DataFrame = {
+    val s = q.sparkSession
+    import s.implicits._
+    val cdf = cs1.zipWithIndex.map { case (c, i) => (i, c) }
+      .toDF("coarse", "cqe")
+    kmeansAssignJoin(q, cs1).withColumnRenamed("cluster", "coarse")
+      .join(q.select($"vec_id", $"qe"), Seq("vec_id"))
+      .join(broadcast(cdf), Seq("coarse"))
+      .select($"vec_id", $"coarse",
+        expr("zip_with(qe, cqe, (a, b) -> a - b)").as("qe"))
+      .withColumn("nrm", Kit.dotI64($"qe", $"qe"))
+      .persist()
+  }
 
   /** Single two-level cell assignment (vec_id, cluster = coarse·K2 +
-    * fine) — both levels broadcast-join packed-long assignments. */
-  def twoLevelCellAssign(q: DataFrame, cs1: Seq[Seq[Long]],
-                         cs2: Seq[Seq[Long]]): DataFrame =
-    cellsOf(coarseResiduals(q, cs1), cs2)
-
-  /** [[twoLevelCellAssign]] over already-built [[coarseResiduals]]. */
+    * fine) over built [[coarseResiduals]] — both levels broadcast-join
+    * packed-long assignments. */
   private def cellsOf(r: DataFrame, cs2: Seq[Seq[Long]]): DataFrame = {
     val s = r.sparkSession
     import s.implicits._
@@ -1048,103 +949,10 @@ object Clustering {
         ($"coarse" * k2 + $"fine").cast("int").as("cluster"))
   }
 
-  /** Each vector against each of its top-`probes` coarse cells: the
-    * residual against THAT probed coarse centroid, under the synthetic
-    * id vec_id·K1 + coarse (see [[twoLevelProbeCellAssign]]) —
-    * (vec_id, qe, nrm) rows for a fine assignment. */
-  private def probedResiduals(q: DataFrame, cs1: Seq[Seq[Long]],
-                              probes: Int): DataFrame =
-    residuals(q, cs1, kmeansProbeAssign(q, cs1, probes))
-      .select((col("vec_id") * cs1.size.toLong + col("coarse")).as("vec_id"),
-        col("qe"), col("nrm"))
-
-  /** COARSE-level multi-probe for the two-level quantizer — the proper
-    * IVF form: each vector explodes into its top-`probes` coarse cells
-    * and the residual is re-derived AGAINST EACH probed coarse centroid
-    * before fine assignment (a residual computed against the wrong
-    * coarse centroid would fine-assign garbage). A near-identical pair
-    * straddling the coarse boundary shares a probed coarse cell, where
-    * both residuals are again near-identical → same fine cell — so
-    * coarse probing recovers two-level recall the way flat probing does
-    * (measured: STRESS_r09.md §5). Implementation detail: the fine
-    * argmin must be per (vec_id, probed-coarse), and [[kmeansAssignJoin]]
-    * groups by vec_id alone — so the pair is packed into a synthetic id
-    * (vec_id·K1 + coarse; ids ≤ 2⁶⁰/K1 guarded by the pack bound there)
-    * and decoded after. `fineProbes` composes the same dial at the FINE
-    * level (a same-coarse-cell pair can still straddle a fine boundary —
-    * measured: coarse-probe-2 alone recovers 64→89% at 2M vectors, the
-    * remaining straddles are fine-level); candidates are
-    * probes·fineProbes rows per vector. Returns (vec_id, cluster) rows —
-    * feed to [[semdedupCensus]]'s `candAsg`. */
-  def twoLevelProbeCellAssign(q: DataFrame, cs1: Seq[Seq[Long]],
-                              cs2: Seq[Seq[Long]], probes: Int,
-                              fineProbes: Int = 1): DataFrame = {
-    val k1 = cs1.size.toLong
-    val k2 = cs2.size
-    val r = probedResiduals(q, cs1, probes)
-    val fine =
-      if (fineProbes == 1) kmeansAssignJoin(r, cs2)
-      else kmeansProbeAssign(r, cs2, fineProbes)
-    fine.select(expr(s"vec_id div $k1").as("vec_id"),
-      expr(s"CAST((vec_id % $k1) * $k2 + cluster AS INT)").as("cluster"))
-  }
-
-  /** [[twoLevelProbeCellAssign]] with RESIDUAL-DISTANCE pruning (round-9
-    * verdict #2): the 2×2 probe ladder pays the full m² candidate
-    * fan-out into the census — 778.9 s at 2M vectors vs 169.0 s for
-    * coarse-probe-2/fine-top-1 (STRESS_r09 §5) — yet for most vectors
-    * most of the 4 probed cells are geometrically hopeless. The key
-    * identity: the fine assignment distance of residual r_c = v − μ_c to
-    * fine centroid ν_j IS the exact composed distance |v − (μ_c + ν_j)|²
-    * — so the probed candidates are directly comparable ACROSS coarse
-    * probes, and a candidate cell whose distance already exceeds the
-    * ceiling can be dropped before the census ever sees it. Two dials,
-    * composable:
-    *
-    *   - `keep`: retain only the `keep` nearest cells per vector
-    *     (census pair volume scales ∝ keep², so keep=2 cuts the 2×2
-    *     census ~4×);
-    *   - `ratio`: additionally drop cells with d > ratio · d_best — the
-    *     adaptive bound (a vector deep inside one cell keeps 1
-    *     candidate; only genuine boundary-straddlers pay for more).
-    *
-    * With keep = probes·fineProbes and ratio = ∞ this reproduces
-    * [[twoLevelProbeCellAssign]] bit-for-bit (spec-pinned). Recall at
-    * the 1000× decade is measured in STRESS_r10.md. Returns (vec_id,
-    * cluster) candidate rows for [[semdedupCensus]]'s `candAsg`. */
-  def twoLevelProbeCellAssignPruned(q: DataFrame, cs1: Seq[Seq[Long]],
-                                    cs2: Seq[Seq[Long]], probes: Int,
-                                    fineProbes: Int, keep: Int,
-                                    ratio: Double = Double.MaxValue)
-      : DataFrame = {
-    val s = q.sparkSession
-    import s.implicits._
-    val k1 = cs1.size.toLong
-    val k2 = cs2.size
-    probeAssignScored(probedResiduals(q, cs1, probes), cs2, fineProbes)
-      .select(expr(s"vec_id div $k1").as("vid"),
-        expr(s"CAST((vec_id % $k1) * $k2 + cluster AS INT)").as("cell"),
-        $"negd")
-      .groupBy($"vid")
-      // CosTopK re-ranks the ≤ probes·fineProbes candidates by composed
-      // distance (best-first); the filter applies the ratio bound
-      // against the per-vector best — both run on O(keep) state. The
-      // sentinel ∞ ratio keeps everything unconditionally (a finite
-      // bound times a d_best of 0 — a vector AT a composed center —
-      // would otherwise keep only exact-distance-0 cells, which is the
-      // intended semantics for finite ratios but not for the sentinel)
-      .agg(Kit.cosTopK($"negd", $"cell".cast("long"), keep).as("top"))
-      .select($"vid".as("vec_id"),
-        explode(if (ratio == Double.MaxValue) $"top"
-          else expr(
-            s"filter(top, t -> -t.cos <= $ratio * -element_at(top, 1).cos)"))
-          .as("t"))
-      .select($"vec_id", $"t.cid".cast("int").as("cluster"))
-  }
-
-  /** Train + single assignment — the registered query's form (which
-    * runs it over the [[TrainSet]] it also sizes k from). */
-  def semdedupTwoLevelAssign(q: DataFrame, k: Int,
+  /** Train + single assignment over a fresh [[TrainSet]] — exactly the
+    * `semdedup_twolevel` body's assignment, for specs that pin its
+    * cells. */
+  private[ops] def semdedupTwoLevelAssign(q: DataFrame, k: Int,
                              iters: Int): DataFrame =
     twoLevelAssign(new TrainSet(q), k, iters)
 
@@ -1154,41 +962,6 @@ object Clustering {
     val (k1, k2) = twoLevelSplit(k)
     val (_, cs2, r) = trainLevels(corpus, k1, k2, iters)
     cellsOf(r, cs2)
-  }
-
-  /** Two-level semantic dedup at the PRODUCTION-DEFAULT geometry — the
-    * entry point a caller who just wants SemDeDup at scale should
-    * reach for (round-10 verdict #2: the measured-optimal lattice must
-    * not hide behind a harness dial). k = [[semdedupK2]](n) (the
-    * (n/2)^(2/3) two-level balance), probe-2 at both levels for
-    * candidate generation — the configuration measured at ≥98% recall
-    * and 0.88× the flat anchor's census cost (STRESS_r10 §1). Returns
-    * [[semdedupCensus]]'s per-cell verdict frame, MATERIALIZED: the
-    * O(corpus) stage frames (coarse residuals, assignment and probed
-    * candidates; the latter two pinned at [[StageLevels.pinnedFor]]'s
-    * level) live only for the census pass and are unpersisted before
-    * returning, so repeated calls accumulate nothing
-    * (round-11 ADVICE — the per-call cached-frame leak semdedupCensus's
-    * own contract forbids). The returned census is the one persisted
-    * frame left (O(k) rows — tiny next to the corpus); unpersist it when
-    * done. */
-  def semdedupTwoLevelAuto(q: DataFrame,
-                           tau: Double = SemdedupTau.toDouble,
-                           iters: Int = 3): DataFrame = {
-    val corpus = new TrainSet(q)
-    val (k1, k2) = latticeSplit(semdedupK2(corpus.n))
-    val (cs1, cs2, r) = trainLevels(corpus, k1, k2, iters)
-    val asg0 = cellsOf(r, cs2)
-    val asg = asg0.persist(StageLevels.pinnedFor(asg0))
-    val cand0 = twoLevelProbeCellAssign(q, cs1, cs2, 2, 2)
-    val cand = cand0.persist(StageLevels.pinnedFor(cand0))
-    try {
-      val census =
-        semdedupCensus(q, asg, tau, candAsg = Some(cand))
-          .persist(StageLevels.pinned(q.sparkSession))
-      census.count()
-      census
-    } finally { asg.unpersist(); cand.unpersist(); r.unpersist(); () }
   }
 
   /** Semantic dedup through the TWO-LEVEL quantizer, oracle-checked:

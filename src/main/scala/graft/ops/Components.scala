@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.sources.Tables
 
@@ -394,8 +393,7 @@ object Components {
     }
 
   /** The provisional-split bit: md5-bucket of the id below [[ValBp]]
-    * basis points → validation. Shared by [[splitVerdicts]] and the
-    * composed [[clusterSplitVerdicts]] so the two can never drift. */
+    * basis points → validation. */
   private def isVal(id: Column): Column =
     when(conv(substring(md5(id.cast("string")), 1, 8), 16, 10)
       .cast("long") % 10000L < ValBp, 1L).otherwise(0L)
@@ -415,47 +413,6 @@ object Components {
     // from the id directly — no second scan, no argmin aggregation
     cl.select($"doc_id", $"cluster_id", $"is_val0",
         isVal($"cluster_id").as("is_val"))
-      .withColumn("moved",
-        when($"is_val0" =!= $"is_val", 1L).otherwise(0L))
-  }
-
-  /** THE AMORTIZED PAIR+CC PASS (round-10 verdict #7): a production
-    * corpus pays the MinHash pair detection and the components closure
-    * ONCE, then derives every downstream group-level verdict from the
-    * same labels — the registered `neardup_clusters` and
-    * `leakage_safe_split` queries each re-derive them standalone only
-    * because the oracle convention wants self-contained SQL. This is
-    * the composed entry point: one frame covering EVERY document with
-    * both queries' verdict columns,
-    *
-    *   (doc_id, cluster_id, n_members, keep, is_val0, is_val, moved)
-    *
-    * where `keep`/`n_members` are [[neardupClusters]]'s semantics
-    * extended to singletons (their own cluster: n_members = 1,
-    * keep = 1 — exactly `WHERE keep = 1` is the deduplicated corpus)
-    * and the split columns are [[splitVerdicts]]'s unchanged. Cost
-    * beyond ONE pair+CC pass: one count per cluster (map-side partial)
-    * and one equi-join of (cluster_id, bit) pairs — nothing rescans
-    * text. Column-level parity with both registered queries is
-    * spec-pinned; the shared-stage wall at 1000× is measured in
-    * STRESS_r11.md. */
-  def clusterSplitVerdicts(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    val cc = connectedComponents(pairs).withColumnRenamed("id", "doc_id")
-    // referenced by the sizes aggregation AND the verdict join — pinned
-    // so the md5 split bits and the CC join run once, not per consumer
-    val cl = LoopState.pin(
-      docs.select($"doc_id", isVal($"doc_id").as("is_val0"))
-        .join(cc, Seq("doc_id"), "left")
-        .select($"doc_id",
-          coalesce($"cluster_id", $"doc_id").as("cluster_id"), $"is_val0"),
-      StageLevels.pinned(s))
-    val sizes = cl.groupBy($"cluster_id").agg(count(lit(1)).as("n_members"))
-    cl.join(sizes, "cluster_id")
-      .select($"doc_id", $"cluster_id", $"n_members",
-        when($"doc_id" === $"cluster_id", 1L).otherwise(0L).as("keep"),
-        $"is_val0", isVal($"cluster_id").as("is_val"))
       .withColumn("moved",
         when($"is_val0" =!= $"is_val", 1L).otherwise(0L))
   }

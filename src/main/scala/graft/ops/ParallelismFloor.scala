@@ -51,10 +51,6 @@ object ParallelismFloor {
     }
   }
 
-  /** Bytes of the table file/directory at `path` (0 when absent). */
-  def scanBytes(s: SparkSession, path: String): Long =
-    scanStats(s, path)._1
-
   /** Total parquet ROW GROUPS under `path` — the true splittable unit of a
     * parquet scan. Spark will happily cut a single-row-group file into N
     * byte-range splits, but every row lands in the ONE split containing

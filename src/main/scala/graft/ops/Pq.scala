@@ -594,24 +594,16 @@ object Pq {
       .select($"qid", $"vec_id".as("cid"), $"codes")
     val short = adcShortlistCoded(cand, arrivals, cb, 4)
     val best = Similarity.scoreCandidates(short, existing, arrivals, k = 1)
-    ingestVerdicts(arrivals, best, 0.90)
-  }
-
-  /** The verdict projection shared by [[pqIngestDedup]] and
-    * [[AnnIndex.dedupArrivals]]: left-join each arrival to its best
-    * match and emit [[TextOps.incrementalNeardup]]'s (vec_id, dup_of,
-    * cos_q6, is_new) shape at `threshold`. */
-  private[ops] def ingestVerdicts(batch: DataFrame, best: DataFrame,
-                                  threshold: Double): DataFrame = {
-    val s = batch.sparkSession
-    import s.implicits._
-    batch.select($"vec_id")
+    // each arrival left-joined to its best match, in
+    // [[TextOps.incrementalNeardup]]'s (vec_id, dup_of, cos_q6, is_new)
+    // shape at cos ≥ 0.90
+    arrivals.select($"vec_id")
       .join(best.select($"qid".as("vec_id"), $"cid", $"cos"), Seq("vec_id"),
         "left")
       .select($"vec_id",
-        when($"cos" >= threshold, $"cid").as("dup_of"),
-        when($"cos" >= threshold, Kit.quantize($"cos", 6)).as("cos_q6"),
-        ($"cos".isNull || $"cos" < threshold).as("is_new"))
+        when($"cos" >= 0.90, $"cid").as("dup_of"),
+        when($"cos" >= 0.90, Kit.quantize($"cos", 6)).as("cos_q6"),
+        ($"cos".isNull || $"cos" < 0.90).as("is_new"))
   }
 
   /** The planted arrival batch over a quantized corpus (the oracle's
@@ -622,7 +614,7 @@ object Pq {
     * collision-free offset rule from [[Similarity.plantedOraclePrefix]]
     * (the two plant families cannot alias each other either: 2o ≥
     * o + max + 1). */
-  private[graft] def ingestArrivals(base: DataFrame): DataFrame = {
+  private def ingestArrivals(base: DataFrame): DataFrame = {
     val s = base.sparkSession
     import s.implicits._
     val off = math.max(1000000L,

@@ -885,23 +885,13 @@ object Similarity {
     * vector ever rides a pair-stream exchange (see ivfTopk's round-9
     * 1000× note). Returns (qid, cid, cos). */
   private[ops] def scoreCandidates(cand: DataFrame, corpus: DataFrame,
-                                   queriesDf: DataFrame, k: Int,
-                                   broadcastCand: Boolean = false)
+                                   queriesDf: DataFrame, k: Int)
       : DataFrame = {
     val s = corpus.sparkSession
     import s.implicits._
     val queries = queriesDf
       .select($"vec_id".as("qid"), $"qe".as("qa"), $"nrm".as("na"))
-    // broadcastCand: when the candidate set is small (the dedup path's
-    // ≤ 4 per sliced arrival — ~16 B narrow rows), broadcasting IT
-    // turns the corpus fetch into a map-side hash join over the corpus
-    // scan: no full-width corpus exchange, no corpus-wide sort — the
-    // shape that kept the 8M dedup-full phase inside the default 8 GiB
-    // heap (STRESS_r12 §2). Left off for the topk paths, whose
-    // q·shortlist candidate volume outgrows a broadcast at large query
-    // counts.
-    val candSide = if (broadcastCand) broadcast(cand) else cand
-    val scored = candSide
+    val scored = cand
       .join(corpus.select($"vec_id".as("cid"), $"qe".as("qb"), $"nrm".as("nb")),
         Seq("cid"))
       .join(broadcast(queries), Seq("qid"))

@@ -126,12 +126,6 @@ final case class Warehouse(spark: SparkSession, root: String) {
   def currentFiles(table: String): Seq[String] =
     TxnLog.current(tableDir(table)).map(_.files).getOrElse(Seq.empty)
 
-  /** The current committed manifest version, if any — the snapshot
-    * anchor incremental consumers pair with [[readVersion]] /
-    * [[readAppendedBetween]] (one manifest stat, no data read). */
-  def currentVersion(table: String): Option[Long] =
-    TxnLog.current(tableDir(table)).map(_.version)
-
   /** TIME TRAVEL: read a specific committed version — free with the
     * manifest log (every version is just a file list), valid until
     * [[vacuum]] reclaims the files it references. The debugging/audit

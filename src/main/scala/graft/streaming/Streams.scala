@@ -56,44 +56,4 @@ object Streams {
     q.awaitTermination()
     q
   }
-
-  /** APPLY CHANGES: drain a stream of keyed updates into a warehouse
-    * table via [[Warehouse.upsert]] — each micro-batch merges latest-wins
-    * per key, txn-tagged for replay safety. When one micro-batch can
-    * carry several updates for the same key (any real CDC feed), pass
-    * `seqCol`: the batch is first reduced to each key's highest-sequence
-    * row (the within-batch "latest"), which is what makes the merge
-    * well-defined — [[Warehouse.upsert]] refuses duplicate keys
-    * otherwise. `seqCol` values must be unique per key within a batch
-    * (sequence numbers / CDC LSNs are); ties would be order-dependent. */
-  def drainUpsert(stream: DataFrame, wh: Warehouse, table: String,
-                  keyCols: Seq[String], checkpointDir: String,
-                  appId: String,
-                  seqCol: Option[String] = None): StreamingQuery = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val txn = s"$appId:$batchId"
-        if (wh.txnLanded(table, txn))
-          batch.foreach(_ => ()) // consume-and-skip — see drainInto
-        else {
-          val latest = seqCol match {
-            case Some(sc) =>
-              val w = Window.partitionBy(keyCols.map(col): _*)
-                .orderBy(col(sc).desc)
-              batch.withColumn("__rn", row_number().over(w))
-                .where(col("__rn") === 1).drop("__rn")
-            case None => batch
-          }
-          wh.upsert(table, latest, keyCols, txnId = Some(txn))
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
 }

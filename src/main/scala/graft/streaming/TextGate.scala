@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.{StageLevels, TextOps}
 import graft.pipeline.{SinkPolicy, Warehouse}
 
-/** TEXT NEAR-DUP AT THE DOOR — [[VectorGate]]'s contract for DOCUMENT
+/** TEXT NEAR-DUP AT THE DOOR — verdict-before-land for DOCUMENT
   * payloads (round-9 verdict #5): every arriving micro-batch of
   * (doc_id, text) rows is verdicted against the landed corpus BEFORE it
   * lands, via the MinHash band family (`TextOps.minhashBands` /
@@ -18,8 +18,9 @@ import graft.pipeline.{SinkPolicy, Warehouse}
   * collisions), never ∝ corpus.
   *
   * Three tables move per micro-batch, each append tagged with the same
-  * txn, the STAGE landing LAST as the replay guard (the [[VectorGate]]
-  * discipline):
+  * txn, the STAGE landing LAST as the replay guard: a batch whose stage
+  * rows are in is fully landed, and any earlier step a crash left
+  * behind replays as a txn-skipped no-op:
   *
   *   - `name_verdicts` (doc_id, n_dup_matches, dup_of, is_new) — the
   *     `incremental_neardup` row shape; dup_of = MIN matching doc_id;
@@ -49,8 +50,9 @@ import graft.pipeline.{SinkPolicy, Warehouse}
   * Jaccard over full shingle sets verifies every reported pair, so
   * banding bounds recall only, exactly as in the batch family.
   *
-  * doc_ids must be globally unique across all drops (the same
-  * id-disjointness rule as [[VectorGate]]). No bootstrap special case:
+  * doc_ids must be globally unique across all drops: a replayed
+  * batch's ids then never collide with another batch's landed rows. No
+  * bootstrap special case:
   * an empty band store simply yields no corpus candidates, and
   * intra-batch duplicates are caught from the first drop.
   *
@@ -62,8 +64,8 @@ import graft.pipeline.{SinkPolicy, Warehouse}
   * distinct bkt values (≤ 8·|batch|, ∝ batch by construction — the only
   * driver-side state the probe needs) through `Warehouse.readInSet`,
   * which opens only the files whose [min, max] can contain a probed
-  * bucket. Against a compacted store (see [[compactBands]] — the same
-  * out-of-band maintenance discipline as [[VectorGate]]'s rebuild) the
+  * bucket. Against a compacted store (see [[compactBands]] — store
+  * maintenance runs out of band, never inside a verdict) the
   * corpus side of the band join reads O(|batch| / bandBuckets · corpus)
   * bytes instead of the table: the store behaves as a disk-backed hash
   * index whose lookup cost follows the BATCH. Pruning is a superset
@@ -236,9 +238,9 @@ final case class TextGate(wh: Warehouse, name: String,
     * store into bkt-disjoint files (`Warehouse.compact` range-clusters on
     * the table's lead zone-map column), restoring the probe's skipping
     * ratio after many small appends have left each bucket scattered
-    * across per-batch files. Run from a maintenance job between batches
-    * — the [[VectorGate]] rebuild discipline; readers pinned to the old
-    * version are unaffected, and a batch that interleaves sees either
+    * across per-batch files. Run from a maintenance job between batches,
+    * never inside a verdict; readers pinned to the old version are
+    * unaffected, and a batch that interleaves sees either
     * snapshot with identical verdicts (pruning is superset-safe over
     * both layouts). */
   def compactBands(targetBytesPerFile: Long = 16L << 20): Unit = {
@@ -271,8 +273,7 @@ final case class TextGate(wh: Warehouse, name: String,
     }.sum / bandBuckets
 
   /** True when append fragmentation has decayed probe pruning enough
-    * that a [[compactBands]] should be scheduled — the [[VectorGate]]
-    * `maintenanceNeeded` contract for the band store. Consulted on the
+    * that a [[compactBands]] should be scheduled. Consulted on the
     * stream path by [[landBatch]] whenever `autoCompactBar` is set
     * (one per-batch manifest-arithmetic probe; compaction fires when it
     * trips — the round-11 self-compacting door); with `autoCompactBar =

@@ -1,34 +1,26 @@
 package graft.ops
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkTestBase
 import graft.pipeline.Warehouse
 
-/** Behavioral proof of the warehouse-persisted ANN index lifecycle:
-  * (1) the stored-index query path is row-for-row the fresh IVF-PQ
+/** The stored-index query path is row-for-row the fresh IVF-PQ
   * pipeline — the store changes WHERE artifacts come from, never WHAT
-  * is computed; (2) dedup-at-the-door verdicts from the store equal the
-  * fresh `pq_ingest_dedup` verdicts; (3) the ingest loop closes — an
-  * accepted arrival becomes part of the index, so its own later
-  * near-dup is caught without any rebuild; (4) ingest replays are
-  * exactly-once no-ops on the entries table; (5) staleness trips at the
-  * documented 2× growth. */
+  * is computed — and the build records the corpus size and geometry
+  * the registered query's rebuild check reads. */
 class AnnIndexSpec extends SparkTestBase {
   import spark.implicits._
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def freshIndex(prefix: String): (AnnIndex, org.apache.spark.sql.DataFrame) = {
-    val wh = Warehouse(spark, tmpDir(prefix))
-    val idx = AnnIndex(wh, "emb")
-    val base = Similarity.quantized(spark, dir)
-    idx.build(base)
-    (idx, base)
-  }
-
   test("stored-index topk == fresh ivfpq_rerank_topk, row for row") {
-    val (idx, base) = freshIndex("annidx-q")
+    val idx = AnnIndex(Warehouse(spark, tmpDir("annidx-q")), "emb")
+    assert(idx.builtN.isEmpty) // no index yet
+    val base = Similarity.quantized(spark, dir)
+    val meta = idx.build(base)
+    assert(idx.builtN.contains(base.count()) && meta.builtN == base.count())
+    // geometry formulas were evaluated at built_n
+    assert(meta.ivfModulus == Similarity.ivfModulus(meta.builtN))
+    assert(meta.cbm == Pq.pqCbm(meta.builtN))
     val stored = idx.topk(base.where($"vec_id" % 25 === 0), base, k = 5)
       .select($"qid", $"cid", graft.functions.Kit.quantize($"cos", 6).as("cos_q6"))
       .as[(Long, Long, Long)].collect().toSet
@@ -36,264 +28,5 @@ class AnnIndexSpec extends SparkTestBase {
       .as[(Long, Long, Long)].collect().toSet
     assert(stored.nonEmpty)
     assert(stored == fresh)
-  }
-
-  test("stored-index dedupArrivals == fresh pq_ingest_dedup verdicts") {
-    val (idx, base) = freshIndex("annidx-d")
-    val arrivals = Pq.ingestArrivals(base)
-    val stored = idx.dedupArrivals(arrivals, base)
-      .as[(Long, Option[Long], Option[Long], Boolean)].collect().toSet
-    val fresh = Pq.pqIngestDedup.fn(spark, dir)
-      .as[(Long, Option[Long], Option[Long], Boolean)].collect().toSet
-    assert(stored.nonEmpty)
-    assert(stored == fresh)
-  }
-
-  test("sliced dedupArrivals verdicts are bit-identical to the one-shot pass") {
-    // Force the >DedupSliceRows path at fixture scale: a slice bound of
-    // 7 splits the arrival batch into many vec_id-mod slices, each
-    // verdicted independently against the same stored index. Verdicts
-    // are per-arrival, so the union must equal the unsliced pass
-    // exactly — the 8 GiB-heap degradation contract (round-11 #3).
-    val (idx, base) = freshIndex("annidx-sl")
-    val arrivals = Pq.ingestArrivals(base)
-    def verdicts(bound: Long): Set[(Long, Option[Long], Option[Long], Boolean)] =
-      idx.dedupArrivals(arrivals, base, sliceRows = bound)
-        .as[(Long, Option[Long], Option[Long], Boolean)].collect().toSet
-    val one = verdicts(Long.MaxValue)
-    val sliced = verdicts(7L)
-    assert(one.nonEmpty)
-    assert(sliced == one,
-      s"sliced verdicts diverged: ${sliced.size} vs ${one.size}")
-  }
-
-  test("ingest loop: an accepted arrival's own near-dup is caught next batch") {
-    val wh = Warehouse(spark, tmpDir("annidx-i"))
-    val idx = AnnIndex(wh, "emb")
-    val base = Similarity.quantized(spark, dir).persist()
-    idx.build(base)
-    val n0 = idx.indexedRows
-
-    // batch 1: one genuinely novel vector (offset id, orthogonal-ish shift)
-    val novel = base.where($"vec_id" === 0)
-      .select(($"vec_id" + 5000000L).as("vec_id"),
-        expr("transform(qe, (x, i) -> x + CASE WHEN i % 2 = 0 " +
-          "THEN CAST(800000 AS BIGINT) ELSE CAST(0 AS BIGINT) END)").as("qe"))
-      .withColumn("nrm", graft.functions.Kit.dotI64($"qe", $"qe"))
-    val r1 = idx.ingest(novel, base, txnId = "b1")
-    assert(r1.accepted == 1L && r1.duplicates == 0L)
-    assert(idx.indexedRows == n0 + 1)
-    val v1 = r1.verdicts.as[(Long, Option[Long], Option[Long], Boolean)]
-      .collect().toSet
-    r1.verdicts.unpersist()
-
-    // the accepted arrival now lives in the warehouse corpus too
-    val corpus2 = base.unionByName(novel)
-
-    // batch 2: a near-identical copy of the batch-1 arrival (+5000 every
-    // 7th dim, cos ~ 0.999) — must be flagged as dup OF THE ARRIVAL,
-    // which only works if ingest indexed it with the stored geometry
-    val echo = novel
-      .select(($"vec_id" + 1L).as("vec_id"),
-        expr("transform(qe, (x, i) -> x + CASE WHEN i % 7 = 0 " +
-          "THEN CAST(5000 AS BIGINT) ELSE CAST(0 AS BIGINT) END)").as("qe"))
-      .withColumn("nrm", graft.functions.Kit.dotI64($"qe", $"qe"))
-    val r2 = idx.ingest(echo, corpus2, txnId = "b2")
-    val v2 = r2.verdicts.as[(Long, Option[Long], Option[Long], Boolean)]
-      .collect()
-    assert(v2.length == 1)
-    val (_, dupOf, _, isNew) = v2.head
-    assert(!isNew && dupOf.contains(5000000L),
-      s"echo must dup to the ingested arrival, got $v2")
-    assert(r2.accepted == 0L && r2.duplicates == 1L)
-    assert(idx.indexedRows == n0 + 1) // duplicate not indexed
-    r2.verdicts.unpersist()
-
-    // replay of batch 1 (foreachBatch crash-replay): entries untouched,
-    // and the verdicts equal the original call's — the self-pair filter
-    // keeps the now-indexed arrival from flagging itself
-    val r1b = idx.ingest(novel, base, txnId = "b1")
-    assert(r1b.action == "skipped-duplicate-txn")
-    assert(idx.indexedRows == n0 + 1)
-    val v1b = r1b.verdicts.as[(Long, Option[Long], Option[Long], Boolean)]
-      .collect().toSet
-    assert(v1b == v1, s"replay verdicts must match the original: $v1b vs $v1")
-    r1b.verdicts.unpersist()
-    base.unpersist()
-  }
-
-  test("needsRebuild trips at 2x growth and after a format change") {
-    val wh = Warehouse(spark, tmpDir("annidx-s"))
-    val idx = AnnIndex(wh, "emb")
-    assert(idx.needsRebuild()) // no index yet
-    val base = Similarity.quantized(spark, dir)
-    val meta = idx.build(base)
-    assert(!idx.needsRebuild())
-    assert(meta.builtN == base.count())
-    // geometry formulas were evaluated at built_n
-    assert(meta.ivfModulus == Similarity.ivfModulus(meta.builtN))
-    assert(meta.cbm == Pq.pqCbm(meta.builtN))
-    // grow the entries table past 2x built_n without rebuilding
-    val clone = wh.read("emb_ann_entries")
-      .withColumn("vec_id", $"vec_id" + 7000000L)
-    wh.load("emb_ann_entries", clone, graft.pipeline.SinkPolicy.Append)
-    assert(idx.needsRebuild(), "2x growth must trip staleness")
-  }
-
-  test("maintained cell census tracks appends at O(batch) and self-heals on any mismatch") {
-    val wh = Warehouse(spark, tmpDir("annidx-cn"))
-    val idx = AnnIndex(wh, "emb")
-    val base = Similarity.quantized(spark, dir).persist()
-    idx.build(base)
-
-    def aggregated(): Map[Long, Long] = wh.read("emb_ann_entries")
-      .groupBy($"cell").count().as[(Long, Long)].collect().toMap
-    def census(): Map[Long, Long] =
-      idx.cellCensus().as[(Long, Long)].collect().toMap
-    assert(census() == aggregated(), "build must seed the census")
-
-    // append through the real path: the census merges the CDC delta
-    // (its sentinel advances with the entries version — no recompute)
-    val batch = base.where($"vec_id" < 40)
-      .select(($"vec_id" + 9000000L).as("vec_id"), $"qe", $"nrm")
-    assert(idx.indexVectors(batch, "cn:1") == 40L)
-    assert(census() == aggregated(), "append must merge the batch delta")
-    val storedV = wh.read("emb_ann_cells")
-      .where($"cell" === Long.MinValue).select($"cnt").as[Long].head()
-    assert(wh.currentVersion("emb_ann_entries").contains(storedV),
-      "census sentinel must sit at the current entries version")
-
-    // a replay skip moves neither the entries nor the census
-    assert(idx.indexVectors(batch, "cn:1") == 0L)
-    assert(census() == aggregated())
-
-    // an EXTERNAL append (no census maintenance — the crash-window /
-    // foreign-writer stand-in) strands the sentinel; the next read
-    // detects the mismatch and recomputes rather than serving stale
-    val clone = wh.read("emb_ann_entries").limit(25)
-      .withColumn("vec_id", $"vec_id" + 8500000L)
-    wh.load("emb_ann_entries", clone, graft.pipeline.SinkPolicy.Append)
-    assert(census() == aggregated(), "mismatch must fall back to recompute")
-    // and the recompute re-persisted: the sentinel is current again
-    val healedV = wh.read("emb_ann_cells")
-      .where($"cell" === Long.MinValue).select($"cnt").as[Long].head()
-    assert(wh.currentVersion("emb_ann_entries").contains(healedV))
-    base.unpersist()
-  }
-
-  test("repairHotCells clears a skew trip touching only the hot cells' rows") {
-    val wh = Warehouse(spark, tmpDir("annidx-rp"))
-    val idx = AnnIndex(wh, "emb")
-    val base = Similarity.quantized(spark, dir).persist()
-    val meta = idx.build(base)
-    val n0 = idx.indexedRows
-
-    // a CORRELATED ingest through the REAL assignment path: near-copies
-    // of vector 0 all land in its cell (the STRESS_r09 §11 bomb in
-    // miniature) — under the growth bar but over the skew bar
-    val v0 = base.where($"vec_id" === 0).select($"qe").as[Seq[Long]].head()
-    val nFlood = (16 * meta.ivfModulus).toInt + 8
-    val flood = spark.range(nFlood.toLong)
-      .select(($"id" + 8000000L).as("vec_id"), typedLit(v0).as("qe0"))
-      .select($"vec_id", expr(
-        "transform(qe0, (x, i) -> x + CASE WHEN i % 8 = CAST(vec_id % 8 AS INT) " +
-          "THEN CAST(500 + (vec_id % 29) * 100 AS BIGINT) " +
-          "ELSE CAST(0 AS BIGINT) END)").as("qe"))
-      .withColumn("nrm", graft.functions.Kit.dotI64($"qe", $"qe"))
-      .persist()
-    assert(idx.indexVectors(flood, "flood") == nFlood.toLong)
-    assert(idx.indexedRows < 2 * meta.builtN, "stay under the growth bar")
-    assert(idx.needsRebuild(), "the correlated ingest must trip cell skew")
-
-    val corpus2 = base.unionByName(flood)
-    val reassigned = idx.repairHotCells(corpus2)
-    assert(reassigned >= nFlood.toLong,
-      s"repair must touch at least the flooded rows, got $reassigned")
-    assert(idx.indexedRows == n0 + nFlood,
-      "repair rewrites assignments, never adds or drops entries")
-    assert(!idx.needsRebuild(), "repair must clear the skew trip")
-
-    // a replay of the repair is a pure no-op on the census
-    assert(idx.repairHotCells(corpus2) == 0L)
-
-    // the repaired geometry still catches a near-dup of a flood member
-    // at the door — reassigned entries stay findable through the split
-    // centroids
-    val echo = flood.where($"vec_id" === 8000005L)
-      .select(($"vec_id" + 100000L).as("vec_id"),
-        expr("transform(qe, (x, i) -> x + CASE WHEN i % 7 = 0 " +
-          "THEN CAST(3000 AS BIGINT) ELSE CAST(0 AS BIGINT) END)").as("qe"))
-      .withColumn("nrm", graft.functions.Kit.dotI64($"qe", $"qe"))
-    val v = idx.dedupArrivals(echo, corpus2)
-      .as[(Long, Option[Long], Option[Long], Boolean)].collect()
-    assert(v.length == 1 && !v.head._4,
-      s"near-dup of a repaired entry must be flagged: ${v.toSeq}")
-    flood.unpersist()
-    base.unpersist()
-  }
-
-  test("bounded-grind cap: a thinned hot cell still verdicts near-dups, bounded") {
-    val wh = Warehouse(spark, tmpDir("annidx-cap"))
-    val idx = AnnIndex(wh, "emb")
-    val base = Similarity.quantized(spark, dir).persist()
-    val meta = idx.build(base)
-    // flood one cell through the real assignment path (as the repair
-    // test), but verdict WITHOUT repairing — the degraded-mode window
-    val v0 = base.where($"vec_id" === 0).select($"qe").as[Seq[Long]].head()
-    val nFlood = (16 * meta.ivfModulus).toInt + 8
-    val flood = spark.range(nFlood.toLong)
-      .select(($"id" + 8000000L).as("vec_id"), typedLit(v0).as("qe0"))
-      .select($"vec_id", expr(
-        "transform(qe0, (x, i) -> x + CASE WHEN i % 8 = CAST(vec_id % 8 AS INT) " +
-          "THEN CAST(500 + (vec_id % 29) * 100 AS BIGINT) " +
-          "ELSE CAST(0 AS BIGINT) END)").as("qe"))
-      .withColumn("nrm", graft.functions.Kit.dotI64($"qe", $"qe"))
-      .persist()
-    idx.indexVectors(flood, "flood")
-    assert(idx.needsRebuild(), "hot cell must be live for this test")
-    val corpus2 = base.unionByName(flood)
-    // a tiny cap forces the thinning branch on the flooded cell; the
-    // echo is near-identical to EVERY flood member (they differ
-    // pairwise by ~2 dims), so any surviving member flags it
-    val echo = flood.where($"vec_id" === 8000003L)
-      .select(($"vec_id" + 100000L).as("vec_id"),
-        expr("transform(qe, (x, i) -> x + CASE WHEN i % 7 = 0 " +
-          "THEN CAST(3000 AS BIGINT) ELSE CAST(0 AS BIGINT) END)").as("qe"))
-      .withColumn("nrm", graft.functions.Kit.dotI64($"qe", $"qe"))
-    val v = idx.dedupArrivals(echo, corpus2,
-        capPerCell = Some(meta.ivfModulus))
-      .as[(Long, Option[Long], Option[Long], Boolean)].collect()
-    assert(v.length == 1 && !v.head._4,
-      s"thinned hot cell must still flag the echo: ${v.toSeq}")
-    // and an uncapped call agrees on the verdict (cap trades candidate
-    // volume, not the decision, when any near member survives)
-    val vFull = idx.dedupArrivals(echo, corpus2)
-      .as[(Long, Option[Long], Option[Long], Boolean)].collect()
-    assert(!vFull.head._4)
-    flood.unpersist()
-    base.unpersist()
-  }
-
-  test("needsRebuild trips on cell skew long before the growth bar") {
-    val wh = Warehouse(spark, tmpDir("annidx-k"))
-    val idx = AnnIndex(wh, "emb")
-    val base = Similarity.quantized(spark, dir)
-    val meta = idx.build(base)
-    assert(!idx.needsRebuild())
-    // a correlated batch floods ONE cell: 16x the expected sqrt(n) cell
-    // size, but well under 2x total growth (the 1000x-decade failure
-    // mode — a hot cell that makes every later probe quadratic)
-    val hot = wh.read("emb_ann_entries").limit(1).head()
-    val hotCell = hot.getAs[Long]("cell")
-    val nHot = (16 * meta.ivfModulus).toInt
-    val flood = spark.range(nHot)
-      .select(($"id" + 8000000L).as("vec_id"), lit(hotCell).as("cell"),
-        typedLit(Seq(0, 0, 0, 0)).as("codes"))
-    wh.load("emb_ann_entries", flood, graft.pipeline.SinkPolicy.Append)
-    assert(idx.indexedRows < 2 * meta.builtN, "stay under the growth bar")
-    assert(idx.needsRebuild(), "a 16x hot cell must trip staleness")
-    // rebuild from the current corpus clears it
-    idx.build(base)
-    assert(!idx.needsRebuild())
   }
 }

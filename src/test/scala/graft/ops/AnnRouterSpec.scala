@@ -52,47 +52,4 @@ class AnnRouterSpec extends SparkTestBase {
       assert(routed.nonEmpty)
     } finally spark.catalog.clearCache()
   }
-
-  test("routedTopk serves from a current stored index and falls back when stale") {
-    import org.apache.spark.sql.functions.col
-    val dir = "/root/testdata/sf0.1" // n = 2000: above-T1 regime
-    val wh = graft.pipeline.Warehouse(spark, tmpDir("router-idx"))
-    val idx = AnnIndex(wh, "emb")
-    val base = Similarity.quantized(spark, dir).persist()
-    try {
-      val n = base.count()
-      assert(AnnRouter.choose(n) == "ivf")
-      val fresh = rows(Similarity.ivfTopkFrom(base, n))
-
-      // no index built yet: the router must re-derive, not fail
-      assert(rows(AnnRouter.routedTopk(idx, base)) == fresh)
-
-      // current index: routed IS the stored path, row for row
-      idx.build(base)
-      val stored = rows(idx.topk(base.where(col("vec_id") % 25 === 0), base, k = 5)
-        .select(col("qid"), col("cid"),
-          graft.functions.Kit.quantize(col("cos"), 6).as("cos_q6")))
-      val routed = rows(AnnRouter.routedTopk(idx, base))
-      assert(routed == stored && routed.nonEmpty)
-
-      // stale index (2x growth): correctness never waits on maintenance
-      val clone = wh.read("emb_ann_entries")
-        .withColumn("vec_id", col("vec_id") + 7000000L)
-      wh.load("emb_ann_entries", clone, graft.pipeline.SinkPolicy.Append)
-      assert(idx.needsRebuild())
-      assert(rows(AnnRouter.routedTopk(idx, base)) == fresh)
-    } finally { base.unpersist(); spark.catalog.clearCache() }
-  }
-
-  test("routedTopk never routes the exact regime to the store") {
-    val dir = "/root/testdata/sf0.001" // n = 500 <= T1
-    val wh = graft.pipeline.Warehouse(spark, tmpDir("router-ex"))
-    val idx = AnnIndex(wh, "emb")
-    val base = Similarity.quantized(spark, dir)
-    try {
-      idx.build(base) // even with a current index, brute force wins below T1
-      assert(rows(AnnRouter.routedTopk(idx, base)) ==
-        rows(Similarity.exactTopkFrom(base, 5)))
-    } finally spark.catalog.clearCache()
-  }
 }

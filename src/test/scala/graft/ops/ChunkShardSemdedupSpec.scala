@@ -217,66 +217,6 @@ class ChunkShardSemdedupSpec extends SparkTestBase {
       Clustering.twoLevelSplit(Int.MaxValue))
   }
 
-  test("semdedupK2: the (n/2)^(2/3) two-level balance, snapped to the measured lattice") {
-    // round-12 law (STRESS_r12 §5): the (n/2)^(2/3) balance capped by
-    // the measured recall-density floor (≥ ~480 vecs/cell), snapped to
-    // a power of two — every default sits in the measured-green
-    // [480, 960) density band: 2M stays at 64×64, 4M unfreezes to the
-    // 128×64 rectangle, 8M steps to 128×128
-    assert(Clustering.semdedupK2(1000000) === 2048)
-    assert(Clustering.semdedupK2(2000000) === 4096)
-    assert(Clustering.semdedupK2(4000000) === 8192)
-    assert(Clustering.semdedupK2(8000000) === 16384)
-    // density-cap-bound regime (n below ~28M): density lands in the
-    // measured-green [480, 960) band; in the balance-bound regime
-    // beyond, densities only get safer (larger)
-    for (n <- Seq(1000000L, 2000000L, 4000000L, 8000000L)) {
-      val d = n.toDouble / Clustering.semdedupK2(n)
-      assert(d >= 480 && d < 960, s"density $d out of the measured band at n=$n")
-    }
-    for (n <- Seq(64000000L, 1000000000L))
-      assert(n.toDouble / Clustering.semdedupK2(n) >= 480, s"n=$n")
-    // strictly finer than the flat balance wherever both apply — the
-    // whole point: census volume divides ∝ 1/k at n·2√k train cost
-    for (n <- Seq(1000000L, 4000000L, 64000000L, 1000000000L))
-      assert(Clustering.semdedupK2(n) > Clustering.semdedupK(n), s"n=$n")
-    // at fixture scale the k >= 8 floor wins (n < 8·480); cells are
-    // large, the two-level mechanism still exercised
-    val kSmall = Clustering.semdedupK2(2048)
-    assert(kSmall === 8 && 2048L / kSmall === 256L)
-    // per-level pack bound holds at any n: side clamped to 32,768
-    val (k1, k2) = Clustering.latticeSplit(
-      Clustering.semdedupK2(Long.MaxValue / 4))
-    assert(k1 <= 32768 && k2 <= 32768)
-  }
-
-  test("latticeSplit: equal sides at even exponents, coarse-heavy rectangle at odd") {
-    assert(Clustering.latticeSplit(4096) === ((64, 64)))
-    assert(Clustering.latticeSplit(8192) === ((128, 64)))
-    assert(Clustering.latticeSplit(16384) === ((128, 128)))
-    assert(Clustering.latticeSplit(32) === ((8, 4)))
-    // non-power-of-two budgets must refuse loudly — they belong to
-    // twoLevelSplit (the registered query's oracle-replayed ceil-sqrt)
-    assertThrows[IllegalArgumentException](Clustering.latticeSplit(6000))
-  }
-
-  test("semdedupTwoLevelAuto: the default-lattice production path drops every plant") {
-    import spark.implicits._
-    val q = Similarity.plantedQuantized(spark, sfDir).persist()
-    val n = q.count()
-    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val census = Clustering.semdedupTwoLevelAuto(q).collect()
-    // the census is the only frame the call leaves persisted
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore).size === 1)
-    val nPlanted = graft.sources.Tables.load(spark, sfDir, "embeddings")
-      .where($"vec_id" % 37 === 0).count()
-    assert(census.map(_.getAs[Long]("n_vecs")).sum === n)
-    // probe-2×2 candidates recover any boundary straddle at this scale:
-    // the verdict is exactly the plant count, same as the pinned forms
-    assert(census.map(_.getAs[Long]("n_dropped")).sum === nPlanted)
-    spark.catalog.clearCache()
-  }
-
   test("two-level semantic dedup drops every planted duplicate, conserves counts") {
     import spark.implicits._
     val q = Similarity.plantedQuantized(spark, sfDir).persist()
@@ -297,68 +237,9 @@ class ChunkShardSemdedupSpec extends SparkTestBase {
     // count is exactly the plant count (random vectors never pair at
     // cos ≥ 0.90)
     assert(census.map(_.getAs[Long]("n_dropped")).sum === nPlanted)
-    spark.catalog.clearCache()
-  }
-
-  test("two-level coarse probing: probe-1 equals the single assignment, " +
-    "probe-2 drops a superset") {
-    import spark.implicits._
-    val q = Similarity.plantedQuantized(spark, sfDir).persist()
-    val n = q.count()
-    val (cs1, cs2) = Clustering
-      .kmeansTwoLevelTrain(q, Clustering.semdedupK(n, 64L), iters = 3)
-    val asg = Clustering.twoLevelCellAssign(q, cs1, cs2).persist()
-    // coarse probe-1 re-derives the residual against the SAME (nearest)
-    // coarse centroid, so it must reproduce the single assignment exactly
-    val p1 = Clustering.twoLevelProbeCellAssign(q, cs1, cs2, 1).collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val a1 = asg.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(p1 === a1)
-    val single = Clustering.semdedupCensus(q, asg, tau = 0.90).collect()
-    val probed = Clustering.semdedupCensus(q, asg, tau = 0.90,
-      candAsg = Some(Clustering.twoLevelProbeCellAssign(q, cs1, cs2, 2)))
-      .collect()
-    def total(c: Array[org.apache.spark.sql.Row], f: String) =
-      c.map(_.getAs[Long](f)).sum
-    assert(total(probed, "n_vecs") === total(single, "n_vecs"))
-    assert(total(probed, "n_dropped") >= total(single, "n_dropped"))
-    spark.catalog.clearCache()
-  }
-
-  test("pruned two-level probing: keep=all reproduces the 2x2 ladder; " +
-    "keep=2 is a bounded subset that still drops every plant") {
-    import spark.implicits._
-    val q = Similarity.plantedQuantized(spark, sfDir).persist()
-    val n = q.count()
-    val (cs1, cs2) = Clustering
-      .kmeansTwoLevelTrain(q, Clustering.semdedupK(n, 64L), iters = 3)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val full = rows(
-      Clustering.twoLevelProbeCellAssign(q, cs1, cs2, 2, fineProbes = 2))
-    // keep = probes·fineProbes, ratio = ∞ → bit-identical candidates
-    assert(rows(Clustering.twoLevelProbeCellAssignPruned(
-      q, cs1, cs2, 2, 2, keep = 4)) == full)
-    // keep = 2: at most 2 cells per vector, always a subset of the
-    // unpruned ladder (pruning can only drop candidates, never invent)
-    val pruned = Clustering.twoLevelProbeCellAssignPruned(
-      q, cs1, cs2, 2, 2, keep = 2).persist()
-    val prs = rows(pruned)
-    assert(prs.subsetOf(full))
-    assert(prs.groupBy(_._1).forall(_._2.size <= 2))
-    // a finite ratio bound prunes further and stays inside keep=2's set
-    val ratioed = rows(Clustering.twoLevelProbeCellAssignPruned(
-      q, cs1, cs2, 2, 2, keep = 2, ratio = 1.5))
-    assert(ratioed.subsetOf(prs))
-    // the census over the pruned candidates still catches every plant:
-    // a planted copy and its source share their BEST composed cell, so
-    // distance-bound pruning cannot separate them on this fixture
-    val asg = Clustering.twoLevelCellAssign(q, cs1, cs2).persist()
-    val census = Clustering.semdedupCensus(q, asg, tau = 0.90,
-      candAsg = Some(pruned)).collect()
-    val nPlanted = graft.sources.Tables.load(spark, sfDir, "embeddings")
-      .where($"vec_id" % 37 === 0).count()
-    assert(census.map(_.getAs[Long]("n_dropped")).sum === nPlanted)
+    // the assignment is the registered semdedup_twolevel's: same census
+    assert(census.toSet ===
+      Clustering.semdedupTwoLevel.fn(spark, sfDir).collect().toSet)
     spark.catalog.clearCache()
   }
 

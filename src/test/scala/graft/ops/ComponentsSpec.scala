@@ -134,42 +134,4 @@ class ComponentsSpec extends SparkTestBase {
       assert(moved == (if (v0 == v) 0L else 1L))
     }
   }
-
-  test("composed clusters+split pass: column-level parity with both standalone operators") {
-    val docs = (0L until 600L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
-    val pairs = (0L until 600L).filter(_ % 3 != 2)
-      .map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val composed = Components.clusterSplitVerdicts(docs, pairs)
-      .as[(Long, Long, Long, Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> r).toMap
-    assert(composed.size == 600, "covers every document")
-
-    // split columns are splitVerdicts' bit-for-bit
-    Components.splitVerdicts(docs, pairs)
-      .as[(Long, Long, Long, Long, Long)].collect()
-      .foreach { case (doc, cl, v0, v, moved) =>
-        val c = composed(doc)
-        assert((c._2, c._5, c._6, c._7) == ((cl, v0, v, moved)),
-          s"split drift at doc $doc")
-      }
-
-    // cluster columns are the registered neardup_clusters semantics on
-    // paired docs, extended to singletons (own cluster, n_members 1)
-    val cc = Components.connectedComponents(pairs)
-      .as[(Long, Long)].collect().toMap
-    val sizes = cc.values.groupBy(identity).view.mapValues(_.size).toMap
-    composed.values.foreach { case (doc, cl, n, keep, _, _, _) =>
-      cc.get(doc) match {
-        case Some(lbl) =>
-          assert(cl == lbl && n == sizes(lbl).toLong, s"cluster drift at $doc")
-        case None =>
-          assert(cl == doc && n == 1L, s"singleton $doc not its own cluster")
-      }
-      assert(keep == (if (doc == cl) 1L else 0L))
-    }
-    // WHERE keep = 1 is the deduplicated corpus: one survivor per cluster
-    val kept = composed.values.filter(_._4 == 1L).map(_._2).toSeq
-    assert(kept.distinct.size == kept.size)
-    assert(kept.toSet == composed.values.map(_._2).toSet)
-  }
 }

@@ -52,7 +52,7 @@ class ParallelismFloorSpec extends SparkTestBase {
     val df = spark.read.parquet(s"$dir/t.parquet")
     // bytesPerTask tuned so floor ≤ file count → trust splits, no shuffle
     val floored = ParallelismFloor(df, s"$dir/t.parquet",
-      bytesPerTask = ParallelismFloor.scanBytes(spark, s"$dir/t.parquet") / 4)
+      bytesPerTask = ParallelismFloor.scanStats(spark, s"$dir/t.parquet")._1 / 4)
     assert(floored.queryExecution.analyzed === df.queryExecution.analyzed)
   }
 

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.SparkTestBase
@@ -167,7 +168,7 @@ class SchemaLogSpec extends SparkTestBase {
     val a = Warehouse(spark, tmpDir("schema-subset-cdc"))
     a.load("t", batch(0, 3, "x"), SinkPolicy.RelandByDate("d"))
     a.load("t", batch(3, 3, "1"), SinkPolicy.Append)
-    val v = a.currentVersion("t").get
+    val v = a.history("t").last.version
     holdsStringOne(a.readAppendedBetween("t", v - 1, v), "readAppendedBetween")
   }
 
@@ -261,8 +262,10 @@ class SchemaLogSpec extends SparkTestBase {
     1 -> Gen.const(Compact),
     1 -> Gen.const(ZOrder))
 
-  /** Lands `d=1`, applies `ops` in order and checks parity after each. */
-  private def replay(ops: Seq[Op], where: String): Unit = {
+  /** Lands `d=1` (with a zone map on `statsCol`), applies `ops` in order
+    * and checks parity after each; returns the warehouse. */
+  private def replay(ops: Seq[Op], where: String,
+                     statsCol: Option[String] = None): Warehouse = {
     var serial = 0L
     def rowsOf(n: Int, day: String, extra: Boolean): DataFrame = {
       val b = batch(serial, n, day)
@@ -270,7 +273,8 @@ class SchemaLogSpec extends SparkTestBase {
       if (extra) b.withColumn("x", $"k".cast("string")) else b
     }
     val w = Warehouse(spark, tmpDir(where))
-    w.load("t", rowsOf(4, "1", extra = false), SinkPolicy.RelandByDate("d"))
+    w.load("t", rowsOf(4, "1", extra = false), SinkPolicy.RelandByDate("d"),
+      statsCol = statsCol)
     ops.foreach { op =>
       val flat = TxnLog.current(Paths.get(w.root, "t")).get.partitionCols.isEmpty
       op match {
@@ -295,6 +299,7 @@ class SchemaLogSpec extends SparkTestBase {
       }
       assertParity(w, "t", what = s"after $op in $ops")
     }
+    w
   }
 
   test("an upsert into a widened partition casts the survivors' partition types") {
@@ -313,6 +318,93 @@ class SchemaLogSpec extends SparkTestBase {
       replay(ops, "schema-prop")
       true
     }
+    info(s"GRAFT_SCHEMA_SEED=$seed")
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8)
+      .withWorkers(1).withInitialSeed(seed), prop)
+    assert(r.passed, s"GRAFT_SCHEMA_SEED=$seed: ${r.status}")
+  }
+
+  // ---- property: any subset selection reads with its version's types ----
+
+  /** One draw of subset selections: a partition value, a key range, a
+    * key set, an append-only segment and an upsert batch (indices pick
+    * among what the table holds). */
+  private case class Selection(part: Int, lo: Int, span: Int, keys: Seq[Int],
+                               segment: Int, upsertLo: Int, upsertPart: Int)
+
+  private val genSelection: Gen[Selection] = for {
+    part <- Gen.choose(0, 3)
+    lo <- Gen.choose(0, 30)
+    span <- Gen.choose(0, 10)
+    keys <- Gen.listOfN(3, Gen.choose(0, 40))
+    segment <- Gen.choose(0, 7)
+    upsertLo <- Gen.choose(0, 30)
+    upsertPart <- Gen.choose(0, 3)
+  } yield Selection(part, lo, span, keys, segment, upsertLo, upsertPart)
+
+  /** Every column `df` reads has the type `version` gives it (a subset
+    * older than a field addition may lack that field). */
+  private def assertTypes(df: DataFrame, version: StructType, what: String): Unit =
+    df.schema.foreach { f =>
+      assert(version.find(_.name == f.name).map(_.dataType).contains(f.dataType),
+        s"$what: ${f.name} reads ${f.dataType.simpleString}, the version " +
+          version.simpleString)
+    }
+
+  /** `s`'s subset reads of `w`'s table carry the head's (or, for an
+    * appended segment, its version's) types, and an upsert into one of
+    * its partitions keeps every survivor. */
+  private def checkSelection(w: Warehouse, s: Selection, what: String): Unit = {
+    val head = w.read("t")
+    val days = w.currentFiles("t").flatMap(TxnLog.partitionSegments)
+      .map(_.stripPrefix("d=")).distinct.sorted
+    if (days.nonEmpty) {
+      val d = days(s.part % days.size)
+      assertTypes(w.readBox("t", Nil, Seq(("d", d))), head.schema,
+        s"readBox d=$d, $what")
+    }
+    val (lo, hi) = (s.lo.toLong, s.lo.toLong + s.span)
+    val box = w.readBox("t", Seq(("k", lo.toString, hi.toString)))
+    assertTypes(box, head.schema, s"readBox k in [$lo, $hi], $what")
+    assert(box.count() == head.where($"k".between(lo, hi)).count(), what)
+    assertTypes(w.readInSet("t", "k", s.keys.map(_.toLong)), head.schema,
+      s"readInSet ${s.keys}, $what")
+    val segments = w.history("t").map(_.version).sliding(2).collect {
+      case Seq(a, b) if w.changedFiles("t", a, b)._2.isEmpty => b
+    }.toSeq
+    if (segments.nonEmpty) {
+      val v = segments(s.segment % segments.size)
+      assertTypes(w.readAppendedBetween("t", v - 1, v),
+        w.readVersion("t", v).schema, s"readAppendedBetween v$v, $what")
+    }
+    // the batch lands in an existing partition: the survivors of the
+    // files it rewrites are unioned with it under the head's types, so
+    // the upsert lands and keeps every survivor. The new version's types
+    // follow its own files (moving every row out of a partition can
+    // narrow d), which parity checks.
+    val upsertKeys = (s.upsertLo.toLong until s.upsertLo + 3L)
+    val survivors = head.where(!$"k".isin(upsertKeys: _*))
+    val kept = rows(survivors)
+    val b = batch(upsertKeys.head, upsertKeys.size,
+      if (days.isEmpty) "1" else days(s.upsertPart % days.size))
+    w.upsert("t", if (days.isEmpty) b.drop("d") else b, Seq("k"))
+    val landed = w.read("t").where(!$"k".isin(upsertKeys: _*))
+      .select(survivors.columns.map(col): _*)
+    assert(rows(landed) == kept, s"upsert survivors of $upsertKeys, $what")
+    assertParity(w, "t", what = s"upsert of $upsertKeys, $what")
+  }
+
+  test("any subset selection reads with its version's types") {
+    // GRAFT_SCHEMA_SEED replays a draw; every failure prints its seed
+    val seed = sys.env.get("GRAFT_SCHEMA_SEED").map(_.toLong)
+      .getOrElse(scala.util.Random.nextLong())
+    val prop = Prop.forAll(Gen.choose(1, 5).flatMap(Gen.listOfN(_, genOp)),
+        genSelection) { (ops, sel) =>
+      checkSelection(replay(ops, "schema-subset-prop", statsCol = Some("k")),
+        sel, s"$sel after $ops")
+      true
+    }
+    info(s"GRAFT_SCHEMA_SEED=$seed")
     val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8)
       .withWorkers(1).withInitialSeed(seed), prop)
     assert(r.passed, s"GRAFT_SCHEMA_SEED=$seed: ${r.status}")
