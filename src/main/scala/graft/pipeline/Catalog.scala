@@ -13,28 +13,23 @@ import scala.util.Using
   *   - last-modified (S4): `DATE(TIMESTAMP_MILLIS(last_modified_time))`
   *     (`functions/utils/datasources.py:394-396`)
   *
-  * A "table" is a directory of parquet part-files under the warehouse
-  * root. On a real cluster these calls would go through
-  * `spark.catalog.tableExists` / Delta history; the filesystem mtime walk
-  * below is the exact parity for a path-addressed parquet warehouse and
-  * is O(#files-in-one-table), never O(warehouse). Directory streams are
-  * closed eagerly (Using) — a polling orchestrator calls these per
-  * schedule check, and GC-reclaimed handles would accumulate toward the
-  * fd ulimit.
+  * A "table" is what [[Warehouse]] commits: a directory under the
+  * warehouse root with a manifest log (see [[TxnLog]]). On a real cluster
+  * these calls would go through `spark.catalog.tableExists` / Delta
+  * history; here both answer from the log directory's LISTING alone —
+  * no manifest is opened — so a polling orchestrator's per-check cost
+  * is one directory list. Directory streams are closed eagerly (Using),
+  * since GC-reclaimed handles would accumulate toward the fd ulimit.
   */
 final case class Catalog(root: String) {
 
   private def tableDir(table: String): Path = Paths.get(root, table)
 
-  /** S3: does the table exist (any committed version, or — for a
-    * pre-manifest legacy layout — any externally-written parquet data)?
-    * Crashed-commit artifacts (staging dirs, txn-prefixed orphans) do
-    * NOT count: an uncommitted write must be invisible here too. */
-  def tableExists(table: String): Boolean = {
-    val dir = tableDir(table)
-    Files.isDirectory(dir) &&
-      (TxnLog.current(dir).isDefined || TxnLog.legacyFiles(dir).nonEmpty)
-  }
+  /** S3: does the table exist, i.e. has any version been committed?
+    * Files without a manifest — a crashed commit's orphans, an external
+    * writer's parquet — do not make a table. */
+  def tableExists(table: String): Boolean =
+    TxnLog.versions(tableDir(table)).nonEmpty
 
   /** All table names present in the warehouse (the `__TABLES__` scan). */
   def listTables(): Seq[String] =
@@ -46,17 +41,9 @@ final case class Catalog(root: String) {
 
   /** S4: last-modified instant of a table = commit time of its current
     * manifest — more faithful than a part-file mtime walk, since it marks
-    * when the version became VISIBLE (and is O(1), not O(#files)).
-    * Pre-manifest legacy layouts fall back to max part-file mtime. */
-  def lastModified(table: String): Option[Instant] = {
-    val dir = tableDir(table)
-    if (!Files.isDirectory(dir)) None
-    else TxnLog.lastCommitTime(dir).orElse {
-      val times = TxnLog.legacyFiles(dir)
-        .map(f => Files.getLastModifiedTime(dir.resolve(f)).toInstant)
-      if (times.isEmpty) None else Some(times.max)
-    }
-  }
+    * when the version became VISIBLE (and is O(1), not O(#files)). */
+  def lastModified(table: String): Option[Instant] =
+    TxnLog.lastCommitTime(tableDir(table))
 
   /** S4 as the reference consumes it: the last-modified *date*
     * (`DATE(TIMESTAMP_MILLIS(last_modified_time))`). */

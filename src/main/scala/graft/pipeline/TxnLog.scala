@@ -24,7 +24,8 @@ final case class TableSchema(read: StructType, uniform: Boolean)
   * ZONE-MAP columns with per-file min/max values (as cast-to-string,
   * cast-back-exactly values, one pair per stats column in `statsCols`
   * order; files without an entry are never pruned), and the version's
-  * recorded read schema (None: readers infer it from the files). */
+  * recorded read schema ([[Warehouse]] records one on every commit and
+  * refuses to read a version without). */
 final case class Manifest(version: Long, partitionCols: Seq[String],
                           files: Seq[String],
                           txnId: Option[String] = None,
@@ -82,15 +83,15 @@ final case class ManifestData(partitionCols: Seq[String],
   * head's delta chain blocks log pruning, so a retention-zero vacuum
   * always collapses the log to one self-contained manifest.
   *
-  * == Recorded schema (format v4) ==
+  * == Recorded schema ==
   *
-  * Every v4 manifest carries a `schema=` header: the version's read
-  * schema as `StructType.json`, prefixed `uniform ` or `merged ` (see
-  * [[TableSchema]]), or empty when none is recorded. Readers plan with
-  * it directly — no footer read, no schema-merge job — which is how a
-  * catalog serves schemas as metadata (the reference's BigQuery tables,
-  * Delta's `metaData` action). [[Warehouse]] derives it at commit time,
-  * against the racing head inside the retry loop, without a job:
+  * Every manifest carries a `schema=` header: the version's read schema
+  * as `StructType.json`, prefixed `uniform ` or `merged ` (see
+  * [[TableSchema]]). Readers plan with it directly — no footer read, no
+  * schema-merge job, no inference of any kind — which is how a catalog
+  * serves schemas as metadata (the reference's BigQuery tables, Delta's
+  * `metaData` action). [[Warehouse]] derives it at commit time, against
+  * the racing head inside the retry loop:
   *
   *   - CARRY the head's schema when the written data columns equal its
   *     data columns (names, order, types; nullability ignored), the
@@ -100,13 +101,15 @@ final case class ManifestData(partitionCols: Seq[String],
   *     S-shaped files join, wherever they sort);
   *   - when the new version lists ONLY this commit's files (new table,
   *     overwrite, full rewrite), take the writer's data schema plus
-  *     Spark's path-only partition inference over the new files;
-  *   - otherwise (a shape change, a pre-v4 head) infer ONCE, at commit,
-  *     with the same `mergeSchema` read a reader would have run.
+  *     Spark's partition inference over the new files' `col=value` paths
+  *     (no listing, no job);
+  *   - otherwise (a shape change) infer ONCE, at commit, with the
+  *     `mergeSchema` read of the version's files. A commit whose files do
+  *     not merge (a column whose type changed) throws before it
+  *     publishes, so every committed version is readable.
   *
-  * Mixed-layout versions (flat and `col=value` files together) record
-  * nothing: their read is a per-layout union readers keep inferring.
-  * v2/v3 manifests stay readable and record nothing either.
+  * A table is exactly what these commits make: the log reads only this
+  * format, and a directory without a log holds no table.
   *
   * Driver-memory envelope: the RESOLVED file list (and the zone-map
   * stats) materialize on the driver — ~100 bytes/file, i.e. ~100 MB at a
@@ -119,23 +122,13 @@ final case class ManifestData(partitionCols: Seq[String],
   */
 object TxnLog {
 
-  // v2: added the stats= header line; v3: added the base= header line
-  // (delta manifests); v4: added the schema= header line. The magic is
-  // the FORMAT version — a reader of this code refuses a manifest written
-  // by a NEWER format outright instead of misparsing its header lines as
-  // file paths; v2 (headerless snapshot form) and v3 files remain
-  // readable and record no schema.
-  private val MagicV2 = "graft-manifest-v2"
-  private val MagicV3 = "graft-manifest-v3"
+  // The magic is the FORMAT version: a reader refuses any other magic
+  // (an older format, or a NEWER one) outright instead of misparsing its
+  // header lines as file paths.
   private val Magic = "graft-manifest-v4"
 
-  /** Header lines of each readable format, by magic. */
-  private def headerLines(magic: String): Option[Int] = magic match {
-    case Magic   => Some(6)
-    case MagicV3 => Some(5)
-    case MagicV2 => Some(4)
-    case _       => None
-  }
+  /** Lines before the body: magic, partition=, txn=, stats=, base=, schema=. */
+  private val HeaderLines = 6
 
   private def schemaLine(s: Option[TableSchema]): String =
     "schema=" + s.fold("")(t =>
@@ -162,12 +155,6 @@ object TxnLog {
 
   private def manifestPath(tableDir: Path, version: Long): Path =
     logDir(tableDir).resolve(f"v$version%012d.manifest")
-
-  /** Where builds before the text-only log published a parquet
-    * checkpoint of a version (a directory). Nothing writes one now;
-    * [[deleteVersion]] still reclaims a leftover with its manifest. */
-  private[pipeline] def checkpointDir(tableDir: Path, version: Long): Path =
-    logDir(tableDir).resolve(f"v$version%012d.checkpoint")
 
   private def claimPath(tableDir: Path, version: Long): Path =
     logDir(tableDir).resolve(f"v$version%012d.claim")
@@ -222,64 +209,43 @@ object TxnLog {
         Some(b)
     }
 
+  /** The one parser of a manifest's header: `lines` are its first
+    * [[HeaderLines]] lines. */
+  private def parseHeader(lines: Seq[String], version: Long,
+                          tableDir: Path): ManifestHeader = {
+    if (lines.headOption.forall(_ != Magic)) throw new IllegalArgumentException(
+      s"unrecognized manifest header in v$version of $tableDir")
+    if (lines.size < HeaderLines) throw new IllegalStateException(
+      s"truncated manifest header in v$version of $tableDir")
+    def field(i: Int, key: String): String = lines(i).stripPrefix(key + "=")
+    def list(s: String): Seq[String] = if (s.isEmpty) Seq.empty else s.split(",").toSeq
+    ManifestHeader(version, list(field(1, "partition")),
+      Some(field(2, "txn")).filter(_.nonEmpty), list(field(3, "stats")),
+      // the base monotonicity guard in parseBase (base < version) is what
+      // makes every chain walk strictly decreasing and thus terminating
+      parseBase(field(4, "base"), version, tableDir),
+      parseSchema(lines(5), version, tableDir))
+  }
+
   /** Header of one version, reading only the leading lines (O(1) in the
     * file count, unlike [[readVersion]]). */
   def readHeader(tableDir: Path, version: Long): ManifestHeader =
     Using.resource(Files.newBufferedReader(
       manifestPath(tableDir, version), StandardCharsets.UTF_8)) { r =>
-      def ln(): String = Option(r.readLine()).getOrElse("")
-      val magic = ln()
-      val nHeader = headerLines(magic).getOrElse(throw new IllegalArgumentException(
-        s"unrecognized manifest header in v$version of $tableDir"))
-      val part = ln().stripPrefix("partition=") match {
-        case "" => Seq.empty[String]
-        case s  => s.split(",").toSeq
-      }
-      val txn = ln().stripPrefix("txn=") match {
-        case "" => None
-        case s  => Some(s)
-      }
-      val stats = ln().stripPrefix("stats=") match {
-        case "" => Seq.empty[String]
-        case s  => s.split(",").toSeq
-      }
-      val base =
-        if (nHeader < 5) None else parseBase(ln().stripPrefix("base="), version, tableDir)
-      val schema =
-        if (nHeader < 6) None else parseSchema(ln(), version, tableDir)
-      ManifestHeader(version, part, txn, stats, base, schema)
+      parseHeader(Iterator.continually(r.readLine()).take(HeaderLines)
+        .takeWhile(_ != null).toSeq, version, tableDir)
     }
 
   private def readRaw(tableDir: Path, version: Long): RawManifest = {
     val lines = Files.readAllLines(
       manifestPath(tableDir, version), StandardCharsets.UTF_8).asScala.toSeq
-    val nHeader = lines.headOption.flatMap(headerLines).getOrElse(
-      throw new IllegalArgumentException(
-        s"unrecognized manifest header in v$version of $tableDir"))
-    val partitionCols = lines(1).stripPrefix("partition=") match {
-      case "" => Seq.empty
-      case s  => s.split(",").toSeq
-    }
-    val txn = lines(2).stripPrefix("txn=") match {
-      case "" => None
-      case s  => Some(s)
-    }
-    val statsCols = lines(3).stripPrefix("stats=") match {
-      case "" => Seq.empty[String]
-      case s  => s.split(",").toSeq
-    }
-    // the base monotonicity guard in parseBase (base < version) is what
-    // makes every chain walk strictly decreasing and thus terminating
-    val base =
-      if (nHeader < 5) None else parseBase(lines(4).stripPrefix("base="), version, tableDir)
-    val schema =
-      if (nHeader < 6) None else parseSchema(lines(5), version, tableDir)
+    val h = parseHeader(lines.take(HeaderLines), version, tableDir)
     // file lines: `path` or `path\tmin\tmax[\tmin\tmax…]` (one zone-map
     // pair per stats column); in a delta manifest adds are `+`-prefixed
     // and removes `-`-prefixed
-    val body = lines.drop(nHeader).filter(_.nonEmpty)
+    val body = lines.drop(HeaderLines).filter(_.nonEmpty)
     val (addLines, removeLines) =
-      if (base.isEmpty) (body, Seq.empty[String])
+      if (h.base.isEmpty) (body, Seq.empty[String])
       else {
         // every delta body line is `+add` or `-remove`; anything else is
         // truncation/corruption and must fail loudly (same posture as the
@@ -299,9 +265,8 @@ object TxnLog {
           s"odd stats field count on '${a.head}' in v$version of $tableDir")
         a.head -> a.tail.grouped(2).map(p => (p(0), p(1))).toSeq
     }.toMap
-    RawManifest(
-      Manifest(version, partitionCols, files, txn, statsCols, stats, schema),
-      base, removeLines)
+    RawManifest(Manifest(version, h.partitionCols, files, h.txnId, h.statsCols,
+      stats, h.schema), h.base, removeLines)
   }
 
   /** The raw manifests a read of `version` resolves through, snapshot
@@ -480,14 +445,10 @@ object TxnLog {
       readHeader(tableDir, v).txnId.contains(txnId))
 
   /** Drop one superseded manifest (vacuum's log-pruning half), plus any
-    * fallback-path claim file and older builds' parquet checkpoint it
-    * left behind. */
+    * fallback-path claim file it left behind. */
   def deleteVersion(tableDir: Path, version: Long): Unit = {
     Files.deleteIfExists(manifestPath(tableDir, version))
     Files.deleteIfExists(claimPath(tableDir, version))
-    val ckpt = checkpointDir(tableDir, version)
-    if (Files.isDirectory(ckpt))
-      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
   }
 
   /** The `col=value` directory segments of a relative file path — the
@@ -508,21 +469,15 @@ object TxnLog {
   /** Could this relative path be a crashed pre-commit writer's leftover?
     * True for in-progress staging dirs (dot-prefixed) and txn-prefixed
     * file names — everything the commit protocol writes before a
-    * manifest references it. Legacy adoption, legacy reads, and catalog
-    * existence checks must all skip these, or an uncommitted write
-    * becomes visible through the no-manifest fallback path. */
+    * manifest references it. On a directory with no log these are the
+    * only files [[Warehouse.vacuum]] may reclaim. */
   def isUncommittedArtifact(relPath: String): Boolean = {
     val segs = relPath.split('/')
     // the full shape our writer produces — `<hex8>-part-…` — not any
     // 8-leading-hex name (a date-stamped external file like
-    // `20260131-batch.parquet` must still count as legacy data)
+    // `20260131-batch.parquet` is someone else's data)
     segs.exists(_.startsWith(".")) || segs.last.matches("^[0-9a-f]{8}-part-.*")
   }
-
-  /** The pre-manifest (externally written) data files of a table dir:
-    * every parquet file that is NOT a commit-protocol artifact. */
-  def legacyFiles(tableDir: Path): Seq[String] =
-    listParquet(tableDir, tableDir).filterNot(isUncommittedArtifact)
 
   /** Merge a REWRITE (compaction) into a log head it may have raced
     * with: `rewritten` are the files the rewrite consumed, `cur` the

@@ -2,12 +2,12 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths}
 
-import scala.util.control.NonFatal
-
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, GraftExpr, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.{AnsiTypeCoercion, TypeCoercion}
 import org.apache.spark.sql.catalyst.expressions.{Cast, InSet, Literal}
+import org.apache.spark.sql.execution.datasources.GraftPartitions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -20,7 +20,9 @@ import graft.ops.DriverLocal
   *   - [[SinkPolicy.Append]]: `WRITE_APPEND` + `ALLOW_FIELD_ADDITION`
   *     (`functions/utils/datasources.py:55-59,554-563,754-767,799-805`).
   *     New columns are allowed; the commit records the widened schema
-  *     (inferred once, with `mergeSchema`) and readers plan with it.
+  *     (inferred once, with `mergeSchema`) and readers plan with it. A
+  *     batch that changes a column's type is refused, as the reference's
+  *     load job refuses it.
   *   - [[SinkPolicy.Overwrite]]: truncate-replace (`WRITE_TRUNCATE`,
   *     `datasources.py:362-366,440-444`). The reference truncates twice
   *     (explicit `TRUNCATE TABLE` + `WRITE_TRUNCATE`, SURVEY §4.1) — here
@@ -56,9 +58,10 @@ object SinkPolicy {
 final case class LoadResult(source: String, action: String, rows: Long)
 
 /** Crash-injection points for the exactly-once landing protocol's fault
-  * evidence (StreamFaultDemo / StreamCrashSpec): [[Warehouse.load]]
-  * invokes these at the two windows a driver death must be recoverable
-  * from — after the transaction-directory DATA write but before the
+  * evidence (StreamFaultDemo / StreamCrashSpec): every [[Warehouse]]
+  * write (load, upsert, compaction) invokes these at the two windows a
+  * driver death must be recoverable from — after the
+  * transaction-directory DATA write but before the
   * MANIFEST commit (bytes on disk, nothing visible), and after the
   * commit but before the caller's streaming checkpoint advances (batch
   * visible, source will re-deliver it). Both default to no-ops and are
@@ -108,21 +111,13 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * read is `read(t).where(...)`: Spark pushes the predicate into the
     * index, which evaluates partition predicates exactly and skips every
     * file whose recorded zone-map [min, max] cannot hold a matching row.
-    * Tables written by pre-manifest layouts are still readable (plain
-    * directory scan, schema inferred). */
+    * A directory with no committed manifest is no table, whatever files
+    * it holds: reading it throws `IllegalArgumentException`. */
   def read(table: String): DataFrame = {
     val dir = tableDir(table)
-    TxnLog.current(dir) match {
-      case Some(m) => readPinned(dir, m, m.files)
-      case None =>
-        // pre-manifest layout: read only files an external writer left —
-        // never a crashed commit's txn-prefixed orphans (those are
-        // uncommitted and must stay invisible until vacuum)
-        val legacy = TxnLog.legacyFiles(dir)
-        require(legacy.nonEmpty, s"no such table: $table (no committed "
-          + s"manifest and no legacy parquet under $dir)")
-        readInferred(dir, legacy, None)
-    }
+    val m = TxnLog.current(dir).getOrElse(throw new IllegalArgumentException(
+      s"no such table: $table (no committed manifest under $dir)"))
+    readPinned(dir, m, m.files)
   }
 
   /** The data files (table-relative) of the current version — the unit
@@ -198,97 +193,51 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * recorded schema, so a subset's partition columns carry the
     * version's types (`d=1` reads as string where the version reads `d`
     * as string) and a subset older than a field addition reads the
-    * added column as NULL. A version that records no schema infers it. */
-  private def readPinned(dir: Path, m: Manifest, files: Seq[String]): DataFrame =
-    m.schema match {
-      case Some(s) => ManifestIndex.scan(spark, dir, files, s.read, m.partitionCols,
-        m.statsCols, m.fileStats)
-      case None => readInferred(dir, files, Some(m))
-    }
-
-  /** A file list with no recorded schema (pre-v4 and mixed-layout
-    * versions, legacy tables): the `mergeSchema` inference such a read
-    * has always paid, then the same index. A MIXED-LAYOUT list — a table
-    * that gained partition columns mid-life lists flat and `col=value`
-    * files — fails partition discovery as one inference, so each layout
-    * is inferred and planned separately and the two align by name: flat
-    * files that carry the column as a DATA column keep their values,
-    * files lacking it read NULL. */
-  private def readInferred(dir: Path, files: Seq[String],
-                           m: Option[Manifest]): DataFrame = {
-    require(files.nonEmpty, s"$dir: a version with no files and no recorded schema")
-    def layout(fs: Seq[String]): DataFrame =
-      ManifestIndex.scan(spark, dir, fs, inferred(dir, fs),
-        TxnLog.partitionSegments(fs.head).map(_.takeWhile(_ != '=')),
-        m.map(_.statsCols).getOrElse(Nil), m.map(_.fileStats).getOrElse(Map.empty))
-    val (part, flat) = files.partition(TxnLog.partitionSegments(_).nonEmpty)
-    if (part.isEmpty || flat.isEmpty) layout(files)
-    else layout(part).unionByName(layout(flat), allowMissingColumns = true)
+    * added column as NULL. A version that records no schema was not
+    * committed by this class and is refused. */
+  private def readPinned(dir: Path, m: Manifest, files: Seq[String]): DataFrame = {
+    val s = m.schema.getOrElse(throw new IllegalStateException(
+      s"v${m.version} of $dir records no schema: not a table this warehouse committed"))
+    ManifestIndex.scan(spark, dir, files, s.read, m.partitionCols, m.statsCols, m.fileStats)
   }
-
-  private def mixedLayout(files: Seq[String]): Boolean = {
-    val (part, flat) = files.partition(TxnLog.partitionSegments(_).nonEmpty)
-    part.nonEmpty && flat.nonEmpty
-  }
-
-  /** Schema inference, the one use of `DataFrameReader` left: `files`
-    * with `basePath` so `col=value` dirs infer as partition columns. Given
-    * the `data` columns, only the partition columns are inferred (from
-    * the paths: no footer read, no job); without, `mergeSchema` reads
-    * every footer (one job), which is what field addition needs. */
-  private def inferred(dir: Path, files: Seq[String],
-                       data: Option[StructType] = None): StructType =
-    data.fold(spark.read.option("mergeSchema", "true"))(spark.read.schema(_))
-      .option("basePath", dir.toString)
-      .parquet(files.map(f => dir.resolve(f).toString): _*)
-      .schema
 
   /** Read schema of freshly written `files`: `df`'s columns minus
-    * `partCols` are the data columns, the partition columns come from
-    * Spark's inference over the paths. No footer read, no job; a flat
-    * write has no partition columns, so it needs no read resolution
-    * either (~20 ms each). */
+    * `partCols` are the data columns, and the partition columns are
+    * typed from the files' `col=value` segments by Spark's own path
+    * inference. No listing, no footer read, no job. */
   private def writtenSchema(dir: Path, files: Seq[String], df: DataFrame,
                             partCols: Seq[String]): StructType = {
-    val data = StructType(df.schema.filterNot(f => partCols.contains(f.name)))
-    if (files.isEmpty) StructType(Nil) // nothing written: nothing to vouch for
-    else if (partCols.isEmpty) org.apache.spark.sql.GraftExpr.nullable(data)
-    else inferred(dir, files, Some(data))
+    val data = GraftExpr.nullable(StructType(df.schema.filterNot(f => partCols.contains(f.name))))
+    if (partCols.isEmpty) data
+    else {
+      val base = new HPath(dir.toString)
+      val root = base.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(base)
+      StructType(data ++ GraftPartitions.schema(root,
+        files.map(f => new HPath(root, f).getParent).distinct, data))
+    }
   }
-
-  /** Infer ONCE, at commit: the `mergeSchema` read a reader would
-    * otherwise run on every read. Mixed layouts record nothing (their
-    * read is a per-layout union), and so does a failed inference
-    * (incompatible files), so readers fail exactly as they would have. */
-  private def inferredSchema(dir: Path, files: Seq[String]): Option[TableSchema] =
-    if (mixedLayout(files)) None
-    else try Some(TableSchema(inferred(dir, files), uniform = false))
-    catch { case NonFatal(_) => None }
 
   /** The schema the next version records, derived against the racing
     * `head` (the rules are [[TxnLog]]'s "Recorded schema"): `files` is
     * the next version's list, `newFiles` this commit's share of it and
-    * `written` their [[writtenSchema]]. */
+    * `written` their [[writtenSchema]]. A shape change is inferred with
+    * `mergeSchema` (one job), which throws when the files' types do not
+    * merge — before anything is published. */
   private def nextSchema(dir: Path, head: Option[Manifest],
                          partCols: Seq[String], files: Seq[String],
                          newFiles: Seq[String],
-                         written: StructType): Option[TableSchema] = {
+                         written: StructType): TableSchema = {
     def parts(s: StructType) = s.filter(f => partCols.contains(f.name))
     def data(s: StructType) = s.filterNot(f => partCols.contains(f.name))
-    val fresh = newFiles.toSet
-    // the paths must yield exactly the declared partition columns, or a
-    // subset read could not split data from partition columns
-    if (files.isEmpty) None
-    else if (mixedLayout(files) ||
-        written.fieldNames.toSeq.takeRight(partCols.size) != partCols)
-      inferredSchema(dir, files)
-    else if (files.forall(fresh)) Some(TableSchema(written, uniform = true))
+    val kept = files.toSet
+    if (files.forall(newFiles.toSet)) TableSchema(written, uniform = true)
     else head.flatMap { h =>
-      val kept = files.toSet
       h.schema.filter(s => h.partitionCols == partCols &&
         data(s.read) == data(written) && parts(s.read) == parts(written) &&
         (s.uniform || h.files.forall(kept)))
-    }.orElse(inferredSchema(dir, files))
+    }.getOrElse(TableSchema(spark.read.option("mergeSchema", "true")
+      .option("basePath", dir.toString)
+      .parquet(files.map(f => dir.resolve(f).toString): _*).schema, uniform = false))
   }
 
   /** The commit history of a table, oldest first: version, commit time,
@@ -328,11 +277,11 @@ final case class Warehouse(spark: SparkSession, root: String) {
            statsCol: Option[String] = None,
            statsCols: Seq[String] = Seq.empty): LoadResult = {
     val dir = tableDir(table)
-    adoptLegacyLayout(dir)
     // idempotent-writer replay guard: a micro-batch that already committed
     // (crash between sink commit and checkpoint advance) must not land twice
     if (txnId.exists(TxnLog.txnCommitted(dir, _)))
       return LoadResult(table, "skipped-duplicate-txn", 0L)
+    val head = TxnLog.current(dir)
     // zone-map columns (`statsCol` is the single-column convenience form;
     // both compose, deduplicated — an overlapping declaration must not
     // write duplicate columns into the manifest, where it would break
@@ -342,7 +291,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
     val declared = (statsCol.toSeq ++ statsCols).distinct
     val effStats =
       if (declared.nonEmpty) declared
-      else TxnLog.current(dir).map(_.statsCols).getOrElse(Seq.empty)
+      else head.map(_.statsCols).getOrElse(Seq.empty)
     effStats.foreach { c =>
       val dt = df.schema(c).dataType
       require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType] ||
@@ -355,24 +304,16 @@ final case class Warehouse(spark: SparkSession, root: String) {
     }
     val partCols = policy match {
       case SinkPolicy.RelandByDate(c) =>
-        val cur = TxnLog.current(dir).map(_.partitionCols)
+        val cur = head.map(_.partitionCols)
         require(cur.forall(_ == Seq(c)),
           s"$table is partitioned by ${cur.get.mkString(",")}, cannot re-land by $c")
         Seq(c)
-      case SinkPolicy.Append =>
-        TxnLog.current(dir).map(_.partitionCols).getOrElse(Seq.empty)
+      case SinkPolicy.Append => head.map(_.partitionCols).getOrElse(Seq.empty)
       case SinkPolicy.Overwrite => Seq.empty
     }
-    val (newFiles, n) = writeTxn(dir, df, partCols)
-    if (n == 0) return LoadResult(table, "skipped-empty", 0L)
-    val written = writtenSchema(dir, newFiles, df, partCols)
-    val newStats =
-      if (effStats.nonEmpty) collectStats(dir, newFiles, written, partCols, effStats)
-      else Map.empty[String, Seq[(String, String)]]
-    CrashHooks.beforeManifestCommit(table)
-    TxnLog.commit(dir, txnId) { cur =>
+    val n = commitWrite(table, df, partCols, effStats, txnId) { (cur, newFiles) =>
       val old = cur.map(_.files).getOrElse(Seq.empty)
-      val files = policy match {
+      policy match {
         case SinkPolicy.Append    => old ++ newFiles
         case SinkPolicy.Overwrite => newFiles
         case SinkPolicy.RelandByDate(_) =>
@@ -382,16 +323,45 @@ final case class Warehouse(spark: SparkSession, root: String) {
           old.filterNot(f =>
             TxnLog.partitionSegments(f).exists(replaced.contains)) ++ newFiles
       }
-      // inherited per-file stats are only valid if they were computed for
-      // the SAME column list — after a stats-column switch, old files
-      // simply carry no stats (never pruned) until rewritten
-      val inherited = cur.filter(_.statsCols == effStats)
-        .map(_.fileStats).getOrElse(Map.empty)
-      ManifestData(partCols, files, effStats, inherited ++ newStats,
-        nextSchema(dir, cur, partCols, files, newFiles, written))
     }
-    CrashHooks.afterCommit(table)
-    LoadResult(table, policy.toString, n)
+    if (n == 0) LoadResult(table, "skipped-empty", 0L)
+    else LoadResult(table, policy.toString, n)
+  }
+
+  /** The one commit path of every write ([[load]], [[upsertAt]],
+    * [[publishRewrite]]): stream `df` into new files ([[writeTxn]]), type
+    * them ([[writtenSchema]]), collect their zone-map stats on
+    * `statsCols`, fire [[CrashHooks]] around the manifest commit, and
+    * publish. Inside the commit's retry loop `nextFiles` gives the next
+    * version's file list from the racing head and the new files (it may
+    * throw to abort); the head's per-file stats carry over when it
+    * records the same stats columns — after a switch, kept files carry
+    * none (never pruned) until rewritten — and [[TxnLog.commit]] drops
+    * the stats of files no longer listed. A write whose schema cannot be
+    * derived throws before it publishes; its files stay unreferenced
+    * until [[vacuum]]. Returns the rows written: 0 for an empty `df`,
+    * which commits nothing. */
+  private def commitWrite(table: String, df: DataFrame, partCols: Seq[String],
+                          statsCols: Seq[String], txnId: Option[String])
+                         (nextFiles: (Option[Manifest], Seq[String]) => Seq[String]): Long = {
+    val dir = tableDir(table)
+    val (newFiles, n) = writeTxn(dir, df, partCols)
+    if (n > 0) {
+      val written = writtenSchema(dir, newFiles, df, partCols)
+      val newStats =
+        if (statsCols.nonEmpty) collectStats(dir, newFiles, written, partCols, statsCols)
+        else Map.empty[String, Seq[(String, String)]]
+      CrashHooks.beforeManifestCommit(table)
+      TxnLog.commit(dir, txnId) { cur =>
+        val files = nextFiles(cur, newFiles)
+        val inherited = cur.filter(_.statsCols == statsCols)
+          .map(_.fileStats).getOrElse(Map.empty)
+        ManifestData(partCols, files, statsCols, inherited ++ newStats,
+          Some(nextSchema(dir, cur, partCols, files, newFiles, written)))
+      }
+      CrashHooks.afterCommit(table)
+    }
+    n
   }
 
   /** Dedup-on-arrival: keep only rows of `df` not already present in
@@ -491,7 +461,6 @@ final case class Warehouse(spark: SparkSession, root: String) {
                                  maxRewriteFiles: Int, gate: Long): LoadResult = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     val dir = tableDir(table)
-    adoptLegacyLayout(dir)
     // same idempotent-writer replay guard as [[load]]: a merge whose
     // commit landed but whose caller died before checkpointing must not
     // apply twice (it WOULD be value-idempotent, but each replay would
@@ -509,7 +478,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
         s"batch lacks key column(s) ${keyCols.filterNot(batch.columns.contains).mkString(",")}")
       val keys = new MergeKeys(batch.select(keyCols.map(col): _*), keyCols, gate)
       val mergedRows = keys.census()
-      val existing = read(table) // pinned to `cur`
+      val existing = readPinned(dir, cur, cur.files)
       require(keyCols.forall(existing.columns.contains),
         s"$table lacks key column(s) ${keyCols.filterNot(existing.columns.contains).mkString(",")}")
       // probe: which CURRENT files hold a matched key (reads keys only).
@@ -540,23 +509,15 @@ final case class Warehouse(spark: SparkSession, root: String) {
       val toWrite = survivors
         .map(_.unionByName(batch, allowMissingColumns = true))
         .getOrElse(batch)
-      val (newFiles, n) = writeTxn(dir, toWrite, cur.partitionCols)
-      if (n == 0) return LoadResult(table, "skipped-empty", 0L)
-      val written = writtenSchema(dir, newFiles, toWrite, cur.partitionCols)
-      val newStats =
-        if (cur.statsCols.nonEmpty)
-          collectStats(dir, newFiles, written, cur.partitionCols, cur.statsCols)
-        else Map.empty[String, Seq[(String, String)]]
-      TxnLog.commit(dir, txnId) { now =>
-        if (now.map(_.version) != Some(cur.version))
-          throw new java.util.ConcurrentModificationException(
-            s"$table changed during upsert (v${cur.version} -> " +
-              s"v${now.map(_.version).getOrElse(0L)}); re-run")
-        val files = TxnLog.mergeRewrite(affectedRel, cur.files, newFiles).get
-        ManifestData(cur.partitionCols, files, cur.statsCols,
-          (cur.fileStats -- affectedRel) ++ newStats,
-          nextSchema(dir, now, cur.partitionCols, files, newFiles, written))
+      val n = commitWrite(table, toWrite, cur.partitionCols, cur.statsCols, txnId) {
+        (now, newFiles) =>
+          if (now.map(_.version) != Some(cur.version))
+            throw new java.util.ConcurrentModificationException(
+              s"$table changed during upsert (v${cur.version} -> " +
+                s"v${now.map(_.version).getOrElse(0L)}); re-run")
+          TxnLog.mergeRewrite(affectedRel, cur.files, newFiles).get
       }
+      if (n == 0) return LoadResult(table, "skipped-empty", 0L)
       // rows = rows the CALLER merged (same contract as load's landed-row
       // count), not the rewrite volume — the carried-over survivors of
       // affected files are an implementation detail of copy-on-write
@@ -704,8 +665,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * [[loadBucketed]] instead. */
   def compact(table: String, targetBytesPerFile: Long = 128L << 20,
               clusterBy: Option[String] = None): LoadResult = {
-    val (dir, cur, nFiles, snapshot) =
-      resolveForRewrite(table, targetBytesPerFile)
+    val (cur, nFiles, snapshot) = resolveForRewrite(table, targetBytesPerFile)
     // clusterBy = Z-ORDER's 1-D case: range-partition + sort on the
     // column so each rewritten file covers a DISJOINT value range, which
     // is what turns the zone-map min/max stats from "every file
@@ -727,7 +687,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
           snapshot.repartitionByRange(nFiles, col(c)).sortWithinPartitions(col(c))
         case None => snapshot.repartition(nFiles)
       }
-    publishRewrite(dir, table, cur, shaped,
+    publishRewrite(table, cur, shaped,
       s"compacted(${if (cur.partitionCols.nonEmpty) "per-partition" else s"$nFiles files"})")
   }
 
@@ -746,8 +706,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
   def compactZOrder(table: String, zCols: Seq[String],
                     targetBytesPerFile: Long = 128L << 20): LoadResult = {
     require(zCols.size >= 2, "z-order needs at least two columns")
-    val (dir, cur, nFiles, snapshot) =
-      resolveForRewrite(table, targetBytesPerFile)
+    val (cur, nFiles, snapshot) = resolveForRewrite(table, targetBytesPerFile)
     zCols.foreach(c => require(snapshot.columns.contains(c),
       s"z-order column $c not in $table"))
     // 15 interior quantiles per column -> 16 equal-population buckets
@@ -782,7 +741,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
           .repartitionByRange(nFiles, col("__z"))
           .sortWithinPartitions(col("__z"))
           .drop("__z")
-    publishRewrite(dir, table, cur, shaped,
+    publishRewrite(table, cur, shaped,
       s"z-ordered(${zCols.mkString(",")},$nFiles files)")
   }
 
@@ -791,49 +750,32 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * path-level rewrite cannot reproduce, resolve the pinned manifest,
     * and size the output file count from current on-disk bytes. */
   private def resolveForRewrite(table: String, targetBytesPerFile: Long)
-      : (Path, Manifest, Int, DataFrame) = {
+      : (Manifest, Int, DataFrame) = {
     require(!spark.catalog.tableExists(table),
       s"$table is a catalog table (possibly bucketed) — rewrite it with loadBucketed, not compact")
     val dir = tableDir(table)
-    adoptLegacyLayout(dir)
     val cur = TxnLog.current(dir).getOrElse(
       throw new IllegalArgumentException(s"no such table: $table"))
     val bytes = cur.files.map(f => Files.size(dir.resolve(f))).sum
     val nFiles = math.max(1, (bytes / targetBytesPerFile).toInt)
-    (dir, cur, nFiles, read(table)) // snapshot pinned to `cur`'s files
+    (cur, nFiles, readPinned(dir, cur, cur.files))
   }
 
   /** The shared rewrite-publish tail of [[compact]]/[[compactZOrder]]:
-    * write the reshaped snapshot, recompute zone-map stats for the new
-    * files, and merge against whatever committed while we rewrote —
-    * concurrent APPENDS are kept alongside the rewrite; a concurrent
-    * removal of a rewritten file (re-land/overwrite/second rewrite)
-    * would make this rewrite resurrect deleted rows, so that aborts
-    * instead of losing data (orphaned rewrite files go to vacuum). */
-  private def publishRewrite(dir: Path, table: String, cur: Manifest,
+    * commit the reshaped snapshot, merged against whatever committed
+    * while we rewrote — concurrent APPENDS are kept alongside the
+    * rewrite; a concurrent removal of a rewritten file (re-land/
+    * overwrite/second rewrite) would make this rewrite resurrect deleted
+    * rows, so that aborts instead of losing data (orphaned rewrite files
+    * go to vacuum). */
+  private def publishRewrite(table: String, cur: Manifest,
                              shaped: DataFrame, label: String): LoadResult = {
-    val (newFiles, n) = writeTxn(dir, shaped, cur.partitionCols)
-    val written = writtenSchema(dir, newFiles, shaped, cur.partitionCols)
-    val newStats =
-      if (cur.statsCols.nonEmpty)
-        collectStats(dir, newFiles, written, cur.partitionCols, cur.statsCols)
-      else Map.empty[String, Seq[(String, String)]]
-    TxnLog.commit(dir) { now =>
-      val head = now.map(_.files).getOrElse(Seq.empty)
-      val merged = TxnLog.mergeRewrite(cur.files, head, newFiles).getOrElse(
-        throw new java.util.ConcurrentModificationException(
-          s"$table changed incompatibly during compaction " +
-            "(a rewritten file was removed concurrently); re-run compact"))
-      // the racing head's per-file stats are only meaningful if it still
-      // records the SAME stats columns — a concurrent load that switched
-      // them would otherwise have its pairs REINTERPRETED under our
-      // column list and prune wrong files; dropping them (files become
-      // unprunable until rewritten) is the conservative merge
-      val inherited = now.filter(_.statsCols == cur.statsCols)
-        .map(_.fileStats).getOrElse(Map.empty)
-      ManifestData(cur.partitionCols, merged, cur.statsCols,
-        inherited ++ newStats,
-        nextSchema(dir, now, cur.partitionCols, merged, newFiles, written))
+    val n = commitWrite(table, shaped, cur.partitionCols, cur.statsCols, None) {
+      (now, newFiles) =>
+        TxnLog.mergeRewrite(cur.files, now.map(_.files).getOrElse(Seq.empty), newFiles)
+          .getOrElse(throw new java.util.ConcurrentModificationException(
+            s"$table changed incompatibly during compaction " +
+              "(a rewritten file was removed concurrently); re-run compact"))
     }
     LoadResult(table, label, n)
   }
@@ -900,9 +842,10 @@ final case class Warehouse(spark: SparkSession, root: String) {
       .flatMap(v => TxnLog.readVersion(dir, v).files).toSet
     val everReferenced = versions
       .flatMap(v => TxnLog.readVersion(dir, v).files).toSet
-    // On a table with NO commit history, only the commit protocol's own
-    // leftovers are reclaimable — unreferenced plain-named parquet there
-    // is pre-adoption legacy data, not garbage.
+    // On a directory with NO commit history, only the commit protocol's
+    // own leftovers are reclaimable — unreferenced plain-named parquet
+    // there is someone else's data (it is no table, and never read), not
+    // garbage.
     val neverRefDeletable: String => Boolean =
       if (versions.isEmpty) TxnLog.isUncommittedArtifact else _ => true
     val doomed = scala.util.Using.resource(Files.walk(dir)) { st =>
@@ -1000,23 +943,6 @@ final case class Warehouse(spark: SparkSession, root: String) {
       case l: Long          => l
       case l: java.lang.Long => l.longValue()
       case other => throw new IllegalStateException(s"bad rows metric: $other")
-    }
-
-  /** A table written by a pre-manifest layout (plain parquet dir, or an
-    * external writer) is adopted on first touch: its existing files
-    * become version 1, partition columns inferred from their `col=value`
-    * directory chain, read schema inferred once (here, not per read).
-    * Idempotent; no data moves. */
-  private def adoptLegacyLayout(dir: Path): Unit =
-    if (TxnLog.current(dir).isEmpty) {
-      // txn-prefixed names and staging dirs are leftovers of a crashed
-      // pre-commit write, not legacy data — never resurrect them
-      val files = TxnLog.legacyFiles(dir)
-      if (files.nonEmpty) {
-        val cols = TxnLog.partitionSegments(files.head).map(_.split("=", 2)(0))
-        TxnLog.commit(dir)(_ => ManifestData(cols, files,
-          schema = inferredSchema(dir, files)))
-      }
     }
 
   /** Remove empty directories bottom-up under `p` (including `p` itself

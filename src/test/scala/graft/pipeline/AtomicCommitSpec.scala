@@ -47,8 +47,8 @@ class AtomicCommitSpec extends SparkTestBase {
     def tmpManifest(tag: String) = {
       val p = Files.createTempFile(TxnLog.logDir(dir), ".tmp-", ".manifest")
       Files.writeString(p,
-        Seq("graft-manifest-v2", "partition=", "txn=", "stats=",
-          s"data/$tag.parquet").mkString("\n"))
+        Seq("graft-manifest-v4", "partition=", "txn=", "stats=", "base=",
+          "schema=", s"data/$tag.parquet").mkString("\n"))
       p
     }
     val (a, b) = (tmpManifest("a"), tmpManifest("b"))
@@ -116,19 +116,20 @@ class AtomicCommitSpec extends SparkTestBase {
       Paths.get(root, ".tmp-orphan")).head
     Files.move(Paths.get(root, ".tmp-orphan", part),
       dir.resolve(s"data/deadbeef-$part"))
-    // invisible everywhere: catalog, read, and legacy adoption
+    // invisible everywhere: catalog, read, and the next load
     assert(!w.catalog.tableExists("t"))
     intercept[IllegalArgumentException](w.read("t"))
     w.load("t", hits("2026-01-02", 2), SinkPolicy.Append)
-    assert(w.read("t").count() == 2) // the orphan's 7 rows were NOT adopted
+    assert(w.read("t").count() == 2) // the orphan's 7 rows were NOT read
   }
 
   test("vacuum on a manifest-less table reclaims crash orphans but never legacy data") {
     val root = tmpDir("at11-wh")
     val w = Warehouse(spark, root)
     val dir = Paths.get(root, "t")
-    // legacy data (external writer) + a crashed first commit's orphan
+    // an external writer's parquet + a crashed first commit's orphan
     hits("2026-01-01", 4).coalesce(1).write.parquet(dir.toString)
+    val external = TxnLog.listParquet(dir, dir)
     hits("2026-01-02", 3).coalesce(1).write.parquet(s"$root/.tmp-o")
     val part = TxnLog.listParquet(Paths.get(root, ".tmp-o"),
       Paths.get(root, ".tmp-o")).head
@@ -139,8 +140,33 @@ class AtomicCommitSpec extends SparkTestBase {
     // simply skips verification when a .crc is absent), never the data
     assert(w.vacuum("t", retention = java.time.Duration.ZERO) >= 1)
     assert(!Files.exists(dir.resolve(s"data/deadbeef-$part")))
-    // the legacy table is intact and adoptable
-    assert(w.read("t").count() == 4)
+    // the external file survives, and a directory without a log is no table
+    assert(external.nonEmpty && TxnLog.listParquet(dir, dir) == external)
+    assert(!w.catalog.tableExists("t"))
+    intercept[IllegalArgumentException](w.read("t"))
+  }
+
+  test("a crash before an upsert's or a compaction's manifest commit leaves the table unchanged") {
+    val w = Warehouse(spark, tmpDir("at13-wh"))
+    (1 to 3).foreach(i => w.load("t", hits(f"2026-01-$i%02d", 4), SinkPolicy.Append))
+    val dir = Paths.get(w.root, "t")
+    def rows = w.read("t").collect().map(_.toString).sorted.toSeq
+    val (head, before, files) = (TxnLog.current(dir).get.version, rows, w.currentFiles("t"))
+    val writes = Seq[(String, () => Any)](
+      "upsert" -> (() => w.upsert("t", hits("2026-01-05", 2), Seq("user"))),
+      "compact" -> (() => w.compact("t")))
+    CrashHooks.beforeManifestCommit = t => throw new RuntimeException(s"injected crash on $t")
+    try writes.foreach { case (what, write) =>
+      val left = TxnLog.listParquet(dir, dir).size
+      assert(intercept[RuntimeException](write()).getMessage == "injected crash on t", what)
+      // the write's files are on disk, and nothing lists them
+      assert(TxnLog.listParquet(dir, dir).size > left, what)
+      assert(TxnLog.current(dir).get.version == head, what)
+      assert(w.currentFiles("t") == files, what)
+      assert(rows == before, what)
+    } finally CrashHooks.reset()
+    assert(w.vacuum("t", retention = java.time.Duration.ZERO) >= 2)
+    assert(TxnLog.listParquet(dir, dir).toSet == files.toSet)
   }
 
   test("default-retention vacuum keeps every file a retained manifest references") {
@@ -185,17 +211,6 @@ class AtomicCommitSpec extends SparkTestBase {
     assert(m.version == 2L)
     assert(TxnLog.current(dir).get.files ==
       Seq("data/a/f1.parquet", "data/b/f2.parquet"))
-  }
-
-  test("a pre-manifest (legacy) parquet table is adopted on first load") {
-    val root = tmpDir("at5-wh")
-    // external writer left a plain parquet directory — no _log
-    hits("2026-01-01", 4).write.parquet(s"$root/t")
-    val w = Warehouse(spark, root)
-    assert(w.catalog.tableExists("t"))
-    w.load("t", hits("2026-01-02", 2), SinkPolicy.Append)
-    assert(w.read("t").count() == 6)       // legacy rows survived adoption
-    assert(TxnLog.versions(Paths.get(root, "t")).size == 2)
   }
 
   test("overwrite leaves a pinned reader on the old version until vacuum") {

@@ -242,16 +242,9 @@ class ManifestChainSpec extends SparkTestBase {
       w.load("t", kbatch(i * 100L, 100).coalesce(1), SinkPolicy.Append,
         statsCol = Some("k")))
     val dir = Paths.get(w.root, "t")
-    // a parquet checkpoint directory as older builds published beside
-    // every SnapshotEvery-th manifest: vacuum reclaims it with v10
-    val leftover = TxnLog.checkpointDir(dir, 10L)
-    Files.createDirectories(leftover)
-    Files.writeString(leftover.resolve("part-00000.parquet"), "stale")
     w.vacuum("t", retention = java.time.Duration.ZERO)
     val Seq(head) = TxnLog.versions(dir)
     assert(TxnLog.chainVersions(dir, head) == Seq(head))
-    assert(!Files.exists(leftover),
-      "a superseded version's leftover checkpoint is reclaimed with it")
     // pruning keeps working off the collapsed snapshot
     val box = w.read("t").where($"k".between(150, 450))
     assert(opened(w, box).size == 4)
@@ -267,6 +260,20 @@ class ManifestChainSpec extends SparkTestBase {
       "\ndata/orphan.parquet", java.nio.file.StandardOpenOption.APPEND)
     val e = intercept[IllegalStateException](TxnLog.readVersion(dir, 3L))
     assert(e.getMessage.contains("corrupt delta line"))
+  }
+
+  test("a manifest of any other format, older or newer, is refused") {
+    val w = Warehouse(spark, tmpDir("mc12-wh"))
+    w.load("t", hits("2026-01-01", 1), SinkPolicy.Append)
+    val dir = Paths.get(w.root, "t")
+    val p = dir.resolve("_log").resolve(f"v${1L}%012d.manifest")
+    val lines = Files.readAllLines(p)
+    for (magic <- Seq("graft-manifest-v3", "graft-manifest-v5")) {
+      lines.set(0, magic)
+      Files.write(p, lines)
+      intercept[IllegalArgumentException](TxnLog.readHeader(dir, 1L))
+      intercept[IllegalArgumentException](w.read("t"))
+    }
   }
 
   test("a replace-heavy mid-cadence commit encodes as a snapshot, not a bloated delta") {

@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Path, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -9,11 +8,12 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.SparkTestBase
 
-/** Guards the recorded read schema of format-v4 manifests (see
-  * [[TxnLog]] "Recorded schema"): reads of a v4 table plan without a
-  * job, and whatever a commit records is EXACTLY what a `mergeSchema`
-  * read of the version's files infers — for every commit shape, random
-  * sequences of them, legacy adoption and pre-v4 manifests. */
+/** Guards the recorded read schema of manifests (see [[TxnLog]]
+  * "Recorded schema"): reads plan without a job, partitioned writes are
+  * typed without a listing, whatever a commit records is EXACTLY what a
+  * `mergeSchema` read of the version's files infers — for every commit
+  * shape and random sequences of them — and a write whose types do not
+  * merge is refused before it publishes. */
 class SchemaLogSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -27,28 +27,16 @@ class SchemaLogSpec extends SparkTestBase {
     df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
   /** Recorded schema == inference, and read() returns the inferred
-    * schema and rows. `recorded` says whether the head must carry one. */
-  private def assertParity(w: Warehouse, t: String, recorded: Boolean = true,
-                           what: String = ""): Unit = {
+    * schema and rows. */
+  private def assertParity(w: Warehouse, t: String, what: String = ""): Unit = {
     val dir = Paths.get(w.root, t)
     val m = TxnLog.current(dir).get
     val inf = inferred(dir, m.files)
-    assert(m.schema.isDefined == recorded, s"$what: recorded ${m.schema}")
-    m.schema.foreach(s => assert(s.read == inf.schema,
-      s"$what: recorded ${s.read.simpleString} != inferred ${inf.schema.simpleString}"))
+    assert(m.schema.exists(_.read == inf.schema),
+      s"$what: recorded ${m.schema.map(_.read.simpleString)} != inferred ${inf.schema.simpleString}")
     val r = w.read(t)
     assert(r.schema == inf.schema, s"$what: read ${r.schema.simpleString}")
     assert(rows(r) == rows(inf), what)
-  }
-
-  /** Rewrite version `v`'s manifest in the v3 format (no schema= line). */
-  private def downgradeToV3(dir: Path, v: Long): Unit = {
-    val p = TxnLog.logDir(dir).resolve(f"v$v%012d.manifest")
-    val lines = Files.readAllLines(p, StandardCharsets.UTF_8)
-    assert(lines.get(0) == "graft-manifest-v4" && lines.get(5).startsWith("schema="))
-    lines.set(0, "graft-manifest-v3")
-    lines.remove(5)
-    Files.write(p, lines)
   }
 
   private def batch(lo: Long, n: Int, day: String) =
@@ -68,10 +56,42 @@ class SchemaLogSpec extends SparkTestBase {
       w.newRowsOnly("t", incoming).schema))
     assert(jobs == 0, s"$jobs job(s) started while planning reads")
     assert(schemas.head.fieldNames.toSeq == Seq("k", "v", "x", "d"))
-    // the same reads of a pre-v4 head infer, so the listener does see jobs
-    downgradeToV3(Paths.get(w.root, "t"), 3L)
-    val (_, legacyJobs) = jobsDuring(w.read("t").schema)
-    assert(legacyJobs > 0, "a v3 read should infer its schema with a job")
+  }
+
+  test("a partitioned load's job count does not grow with its partition count") {
+    // typing the new files' partition columns lists nothing: a listing
+    // of more than 32 paths would start a job of its own
+    def landed(days: Int): (Warehouse, Int) = {
+      val w = Warehouse(spark, tmpDir(s"schema-parts-$days"))
+      val b = (0 until 2 * days).map(i => (i.toLong, i % 7,
+        java.time.LocalDate.of(2026, 1, 1).plusDays(i % days).toString)).toDF("k", "v", "d")
+      (w, jobsDuring(w.load("t", b, SinkPolicy.RelandByDate("d")))._2)
+    }
+    val ((_, two), (w, forty)) = (landed(2), landed(40))
+    assert(w.currentFiles("t").size >= 40)
+    assert(forty <= two, s"40 partitions started $forty job(s), 2 started $two")
+    assertParity(w, "t", what = "40 partitions")
+  }
+
+  test("a write whose column type does not merge is refused before it publishes") {
+    val w = Warehouse(spark, tmpDir("schema-refused"))
+    w.load("t", Seq((1L, 1), (2L, 2)).toDF("k", "v"), SinkPolicy.Append)
+    val dir = Paths.get(w.root, "t")
+    val (head, schema, before) =
+      (TxnLog.current(dir).get.version, w.read("t").schema, rows(w.read("t")))
+    val e = intercept[Exception](
+      w.load("t", Seq((3L, "x")).toDF("k", "v"), SinkPolicy.Append))
+    assert(e.getMessage.toLowerCase.contains("merg"), e.getMessage)
+    assert(TxnLog.current(dir).get.version == head)
+    assert(w.read("t").schema == schema)
+    assert(rows(w.read("t")) == before)
+    // the refused write's files are on disk, unreferenced: vacuum reclaims them
+    val referenced = w.currentFiles("t").toSet
+    val refused = TxnLog.listParquet(dir, dir).filterNot(referenced)
+    assert(refused.nonEmpty)
+    assert(w.vacuum("t", java.time.Duration.ZERO) == refused.size)
+    assert(TxnLog.listParquet(dir, dir).toSet == referenced)
+    assert(rows(w.read("t")) == before)
   }
 
   test("box reads of a table past a snapshot boundary start no job") {
@@ -187,57 +207,6 @@ class SchemaLogSpec extends SparkTestBase {
     w.upsert("t", batch(10, 3, "2026-01-03").select("v", "k", "d"), Seq("k"))
     assertParity(w, "t", what = "upsert that removes the leading file")
     assert(w.read("t").columns.toSeq == Seq("k", "v", "d"))
-  }
-
-  test("legacy adoption, mixed layout and v2/v3 manifests") {
-    // legacy: a plain partitioned parquet dir adopted on first touch
-    val root = tmpDir("schema-legacy")
-    batch(0, 10, "2026-01-01").write.partitionBy("d")
-      .parquet(Paths.get(root, "lg").toString)
-    val w = Warehouse(spark, root)
-    w.load("lg", batch(10, 10, "2026-01-02"), SinkPolicy.Append)
-    val dir = Paths.get(root, "lg")
-    val v1 = TxnLog.readVersion(dir, 1L)
-    assert(v1.schema.exists(_.read == inferred(dir, v1.files).schema),
-      "adoption records the inferred schema")
-    assertParity(w, "lg", what = "append after adoption")
-
-    // v3 head: still reads (inferring); the next commit infers once
-    downgradeToV3(dir, 2L)
-    assert(TxnLog.current(dir).get.schema.isEmpty)
-    assert(w.read("lg").count() == 20)
-    w.load("lg", batch(20, 10, "2026-01-03"), SinkPolicy.Append)
-    assertParity(w, "lg", what = "append on a v3 head")
-
-    // v2 head (headerless snapshot form) reads too
-    val p = TxnLog.logDir(dir).resolve(f"v${3L}%012d.manifest")
-    val lines = Files.readAllLines(p, StandardCharsets.UTF_8)
-    val files = TxnLog.readVersion(dir, 3L).files
-    Files.write(p, java.util.Arrays.asList(
-      (Seq("graft-manifest-v2", lines.get(1), "txn=", "stats=") ++ files): _*))
-    assert(TxnLog.current(dir).get.schema.isEmpty)
-    assert(w.read("lg").schema == inferred(dir, files).schema)
-    assert(w.read("lg").count() == 30)
-
-    // mixed layout: flat files plus a grafted col=value file record
-    // nothing, and keep reading through the per-layout union
-    val mw = Warehouse(spark, tmpDir("schema-mixed"))
-    mw.load("m", Seq(("a", 1L)).toDF("d", "v").coalesce(1), SinkPolicy.Append)
-    val stage = Paths.get(tmpDir("schema-mixed-stage"))
-    Seq(("b", 2L)).toDF("d", "v").coalesce(1).write.mode("overwrite")
-      .partitionBy("d").parquet(stage.toString)
-    val part = Files.walk(stage).filter(_.toString.endsWith(".parquet"))
-      .findFirst().get()
-    val mdir = Paths.get(mw.root, "m")
-    Files.createDirectories(mdir.resolve("d=b"))
-    Files.move(part, mdir.resolve("d=b/" + part.getFileName),
-      StandardCopyOption.ATOMIC_MOVE)
-    TxnLog.commit(mdir)(cur =>
-      ManifestData(Seq("d"), cur.get.files :+ s"d=b/${part.getFileName}"))
-    mw.load("m", Seq(("c", 3L)).toDF("d", "v").coalesce(1), SinkPolicy.Append)
-    assert(TxnLog.current(mdir).get.schema.isEmpty)
-    assert(mw.read("m").select("d", "v").as[(String, Long)].collect().sorted.toSeq ==
-      Seq(("a", 1L), ("b", 2L), ("c", 3L)))
   }
 
   // ---- property: any commit sequence keeps recorded == inferred ----
